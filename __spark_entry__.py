@@ -99,71 +99,67 @@ _WINDOW_EXEMPT_CHANGED: dict[str, str] = {
 }
 
 _DRIVER_WINDOW = [
-    # Round-14 rotation (tools/freshness.py --plan, adopted verbatim):
-    # (a) 8 changed entries — stream_tumbling_window_counts is the one
-    #     REAL plan-affecting change this round (state_partitions 8->4,
-    #     measured, output-identical); json_codec_roundtrip's span was
-    #     crossed by the adjacent stream-staging-memo rework;
-    #     aliccp_silver_to_gold_e2e, the ANN family and
-    #     multimodal_embed_topk are promoted through the call-graph
-    #     reverse closure over this round's lifecycle-only edits
-    #     (register_persisted wrapping / memo re-key — the module
-    #     exemptions above document why the other 50+ dependents are
-    #     exempted rather than windowed; these six carry causes the
-    #     closure attributes to non-exempt modules, so they rotate in
-    #     as the conservative answer).
-    # (b) the oldest unchanged driver rows, oldest-first: the remaining
-    #     r08 cohort, the full r09 cohort, and the two oldest r10 rows.
-    "json_codec_roundtrip",  # changed
-    "stream_tumbling_window_counts",  # changed
-    "aliccp_silver_to_gold_e2e",  # changed
+    # Similarity-core rotation (tools/freshness.py --plan, adopted
+    # verbatim): (a) 20 changed entries — the ANN family, promoted
+    # through operators/similarity.py's rebuild onto one candidate
+    # generator × scorer × top-k core (outputs bit-identical); the
+    # catalog edits to ann_quantized_topk, hybrid_rrf_retrieval and the
+    # shared LSH oracle CTEs (oracle strings byte-identical); the
+    # streaming entries, promoted through streaming/pipeline.py
+    # (OnlineStore.upsert_batch now removes its staging dir; values
+    # unchanged); graph_pagerank_trade_network, promoted through a
+    # docstring-only edit to functions/vectors.py::norm_int8;
+    # (b) the oldest unchanged window rows, oldest-first: the r10 cohort.
     "ann_brute_force_topk",  # changed
+    "ann_index_occupancy_audit",  # changed
+    "ann_lsh_bucketed_topk",  # changed
+    "ann_quantized_topk",  # changed
+    "hybrid_rrf_retrieval",  # changed
     "ann_ivf_portable_topk",  # changed
     "ann_ivf_topk",  # changed
-    "ann_lsh_bucketed_topk",  # changed
+    "dedup_semantic_embedding",  # changed
+    "embedding_threshold_pairs",  # changed
+    "graph_pagerank_trade_network",  # changed
+    "kmeans_lloyd_step",  # changed
     "multimodal_embed_topk",  # changed
-    "dedup_semantic_embedding",  # r08
-    "embedding_random_projection",  # r08
-    "embedding_threshold_pairs",  # r08
-    "feature_standard_scale",  # r08
-    "feature_winsorize",  # r08
-    "group_percentile_exact",  # r08
-    "heavy_hitter_tokens",  # r08
-    "histogram_order_values",  # r08
-    "jdbc_roundtrip_derby",  # r08
-    "layout_zorder_clustering",  # r08
-    "pareto_revenue_concentration",  # r08
-    "q12_priority_line_mix",  # r08
-    "q13_customer_order_distribution",  # r08
-    "agg_pivot_user_event_values",  # r09
-    "attribution_first_vs_last_touch",  # r09
-    "dq_event_order_cadence",  # r09
-    "feature_correlations",  # r09
-    "feature_quantile_normalize",  # r09
-    "histogram_percentile_estimate",  # r09
-    "markov_event_transitions",  # r09
-    "online_lookup_latest_features",  # r09
-    "path_top_event_sequences",  # r09
-    "proj_select_cast",  # r09
-    "q14_promo_revenue_share",  # r09
-    "q15_top_revenue_supplier",  # r09
-    "q21_sole_late_suppliers",  # r09
-    "q4_late_order_priority",  # r09
-    "q5_local_supplier_volume",  # r09
-    "q7_nation_volume_shipping",  # r09
-    "q8_market_share",  # r09
-    "q9_product_type_profit",  # r09
-    "quality_unigram_logprob",  # r09
-    "scalar_math_funcs",  # r09
-    "scd2_interval_lookup",  # r09
-    "scd2_user_event_history",  # r09
-    "stream_checkpoint_restart",  # r09
-    "stream_online_upsert",  # r09
-    "token_count_bpe",  # r09
-    "window_running_user_spend",  # r09
-    "window_value_functions",  # r09
-    "asof_join_with_ttl",  # r10
-    "asof_last_view_before_click",  # r10
+    "stream_asof_enrich",  # changed
+    "stream_dedup_exact",  # changed
+    "stream_interval_join_attribution",  # changed
+    "stream_online_upsert",  # changed
+    "stream_session_window_stats",  # changed
+    "stream_sliding_window_counts",  # changed
+    "stream_topk_trending",  # changed
+    "stream_tumbling_window_counts",  # changed
+    "assoc_event_type_pairs",  # r10
+    "bpe_merge_pair_counts",  # r10
+    "chunk_documents_rag",  # r10
+    "cooccurrence_skipgram_pairs",  # r10
+    "dedup_winnow_containment",  # r10
+    "dict_encode_event_type",  # r10
+    "doc_fingerprint",  # r10
+    "dq_feature_leakage_audit",  # r10
+    "ewma_user_value",  # r10
+    "feature_store_historical_retrieval",  # r10
+    "gdpr_forget_cascade",  # r10
+    "graph_bfs_trade_hops",  # r10
+    "graph_triangle_count",  # r10
+    "ids_stable_assign",  # r10
+    "inverted_index_postings",  # r10
+    "itemsim_copurchase_topk",  # r10
+    "join_full_outer_reconcile",  # r10
+    "join_null_safe_eq",  # r10
+    "latest_event_per_user",  # r10
+    "negative_sampling_pairs",  # r10
+    "q20_dominant_part_suppliers",  # r10
+    "q2_min_cost_supplier",  # r10
+    "rfm_customer_segments",  # r10
+    "sample_weighted_bernoulli",  # r10
+    "schema_evolution_union_read",  # r10
+    "sketch_countmin_freqs",  # r10
+    "sort_global_topn",  # r10
+    "text_token_entropy",  # r10
+    "tfidf_top_terms_per_doc",  # r10
+    "topk_orders_per_priority",  # r10
 ]
 
 

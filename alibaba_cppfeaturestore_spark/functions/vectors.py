@@ -136,7 +136,7 @@ def norm_int8(qv: Column) -> Column:
     ``dot_int8(a, b) / greatest(na * nb, 1e-12)``: the same doubles
     ``cosine_int8`` divides by (same fold, same sqrt), so cosines are
     bit-identical at one interpreted HOF fold per pair instead of three
-    (the r13 ``_topk_by_cosine`` lesson applied to the int8 tier)."""
+    (``operators/similarity.py``'s ``INT8`` scorer)."""
     return F.sqrt(
         F.aggregate(
             qv["q"], F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")

@@ -1,23 +1,159 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k is the exact baseline: broadcast the (small)
-query set against the corpus — one scan, no corpus shuffle, top-k via
-window over (query, corpus-partition) partial results. The LSH-bucketed
-variant is the 100 TB path: sign-bit signatures put each vector in a
-bucket; only same-bucket (or neighboring-band) pairs are compared.
+Every top-k path is one composition of three parts, each written once:
 
-Hyperplanes for the LSH signatures are derived deterministically from
-xxhash64 — no RNG state, so signatures are reproducible across runs and
-between batch/streaming.
+- **Candidate generator** — which (query, neighbor) pairs get scored:
+  ``_all_pairs`` (broadcast queries × ``_spread`` corpus: exact),
+  ``_lsh_pairs`` (multi-table random-hyperplane buckets from
+  ``_lsh_buckets``: an equi-join, never a cross join), or IVF cells
+  (``_cell_pairs``: a query meets the corpus vectors of the cells it
+  probes). IVF cell ids come from a quantizer: learned KMeans centroids
+  (``_kmeans_pairs``), or a centroid table of k-center greedy
+  (``_greedy_pairs``) or smallest-id (``_smallest_id_pairs``) picks,
+  scored against each vector like any other pair (``_table_pairs``).
+- **Scorer** — ``FLOAT`` (float cosine over a per-side ``norm``) or
+  ``INT8`` (int8 cosine over a per-side ``norm_int8``). ``_side``
+  projects each side's id, scored vector and norm once, so a pair costs
+  one dot fold; ``_cos`` is the pair score.
+- **Top-k stage** — ``_top_k``: ``aggregates.top_k_per_group`` on
+  ``cosine_sim`` per query, ties to the smaller neighbor id.
+
+Entry points, and the output contract each composes itself:
+
+- ``brute_force_topk``: all pairs × FLOAT, rounded to 6 places;
+- ``lsh_bucketed_topk``: LSH buckets × FLOAT, rounded, scored before
+  the pair dedup;
+- ``ivf_topk``: IVF with KMeans cells × FLOAT, rounded;
+- ``ivf_portable_topk``: IVF with smallest-id cells × INT8, unrounded;
+- ``ivf_greedy_topk``: IVF with k-center greedy cells × INT8, unrounded.
+
+The catalog composes two more: ``ann_quantized_topk`` (all pairs × INT8,
+rounded) and the dense leg of ``hybrid_rrf_retrieval`` (FLOAT, ranked by
+its own unrounded single-query window).
+
+Hyperplanes for the LSH signatures come from a PRNG seeded by (table,
+plane) and enter plans as literals, so signatures are reproducible
+across runs and between batch/streaming, and the DuckDB oracles embed
+the same matrix.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_similarity
-from .dedup import _spread
+from ..functions.vectors import dot, dot_int8, norm, norm_int8, quantize_int8
+from .aggregates import top_k_per_group
+from .dedup import _spread, portable_hash60
+
+
+class Scorer(NamedTuple):
+    """A pair score: ``prep`` maps a raw vector column to its scored
+    form (``None``: the raw vector is scored as is), ``norm`` is the
+    per-vector constant each side projects ONCE, and
+    ``pair(a, b, norm_a, norm_b)`` scores two scored-form vectors."""
+
+    prep: Callable[[Column], Column] | None
+    norm: Callable[[Column], Column]
+    pair: Callable[[Column, Column, Column, Column], Column]
+
+
+# Float cosine. dot/(na·nb) divides by the product of the SAME doubles
+# ``cosine_similarity`` computes, so scores (and top-k order) are
+# bit-identical to the per-pair form at one dot fold per pair instead
+# of three interpreted array aggregates — higher-order functions never
+# whole-stage-codegen (guide §4 / the minhash_band_index lesson). No
+# epsilon clamp, unlike threshold_pairs.
+FLOAT = Scorer(
+    prep=None,
+    norm=norm,
+    pair=lambda a, b, na, nb: dot(a, b) / (na * nb),
+)
+# Int8 cosine: integer dot over integer norms (the scales cancel). Every
+# partial sum is an exact integer-valued double < 2^53, so aggregation
+# order cannot change a bit — the cross-engine replayable tier.
+INT8 = Scorer(
+    prep=quantize_int8,
+    norm=norm_int8,
+    pair=lambda a, b, na, nb: dot_int8(a, b) / F.greatest(na * nb, F.lit(1e-12)),
+)
+
+# Side roles: (id column, vector/norm column prefix).
+Q = ("query_id", "__q")
+C = ("neighbor_id", "__c")
+K = ("cent_id", "__k")
+
+
+def _side(
+    df: DataFrame,
+    scorer: Scorer,
+    id_col: str,
+    vec_col: str,
+    role: tuple[str, str],
+    *extra: Column,
+) -> DataFrame:
+    """One side of a pair, projected once: the role's id, ``<p>vec`` (the
+    scorer's form of the vector) and ``<p>norm``, plus ``extra`` columns
+    computed from the raw vector (bucket or cell ids)."""
+    rid, p = role
+    raw = F.col(vec_col)
+    if scorer.prep is None:
+        # one projection: a bare rename would sink below a _spread
+        # repartition and leave the norm in a second Project
+        return df.select(
+            F.col(id_col).alias(rid),
+            raw.alias(p + "vec"),
+            scorer.norm(raw).alias(p + "norm"),
+            *extra,
+        )
+    # the norm folds the projected column, not a second prep(raw)
+    return df.select(
+        F.col(id_col).alias(rid), scorer.prep(raw).alias(p + "vec"), *extra
+    ).withColumn(p + "norm", scorer.norm(F.col(p + "vec")))
+
+
+def _relabel(df: DataFrame, src: tuple[str, str], dst: tuple[str, str]) -> DataFrame:
+    """A projected side's (id, vec, norm) columns under another role."""
+    return df.select(
+        F.col(src[0]).alias(dst[0]),
+        F.col(src[1] + "vec").alias(dst[1] + "vec"),
+        F.col(src[1] + "norm").alias(dst[1] + "norm"),
+    )
+
+
+def _cos(scorer: Scorer, a: tuple[str, str] = Q, b: tuple[str, str] = C) -> Column:
+    """The pair score between two projected sides (query × corpus by default)."""
+    return scorer.pair(
+        F.col(a[1] + "vec"), F.col(b[1] + "vec"), F.col(a[1] + "norm"), F.col(b[1] + "norm")
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The one top-k stage over ``(query_id, neighbor_id, cosine_sim)``:
+    each query's k best, ties broken by neighbor id ascending."""
+    return top_k_per_group(scored, ["query_id"], "cosine_sim", k, tiebreak=["neighbor_id"])
+
+
+def _all_pairs(
+    queries: DataFrame,
+    corpus: DataFrame,
+    scorer: Scorer,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Exact generator: every (query, corpus) pair except the self pair.
+
+    The query side is broadcast (ANN queries are few relative to corpus);
+    the corpus is scanned once — ``_spread`` first, so a singly-split
+    embedding file does not serialize the |queries|×|corpus| scoring
+    onto one core (measured 0.92 → 0.65 s at sf0.1; the same small-scan
+    trap as the dedup verify stage, SCALING.md round-5 notes)."""
+    q = F.broadcast(_side(queries, scorer, query_id_col, vec_col, Q))
+    c = _side(_spread(corpus), scorer, id_col, vec_col, C)
+    return q.join(c, F.col("query_id") != F.col("neighbor_id"))
 
 
 def brute_force_topk(
@@ -28,31 +164,13 @@ def brute_force_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Exact cosine top-k: for each query vector the k nearest corpus rows.
-
-    The query side is broadcast (ANN queries are few relative to corpus);
-    the corpus is scanned once — ``_spread`` first, so a singly-split
-    embedding file does not serialize the |queries|×|corpus| cosine
-    evaluation onto one core (measured 0.92 → 0.65 s at sf0.1; the same
-    small-scan trap as the dedup verify stage, SCALING.md round-5
-    notes). Ties broken by corpus id ascending.
-    """
-    from ..functions.vectors import norm
-
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("__qvec"),
-            norm(F.col(vec_col)).alias("__qnorm"),
-        )
+    """Exact cosine top-k: for each query vector the k nearest corpus rows
+    (all pairs × FLOAT, rounded to 6 places). Ties broken by corpus id
+    ascending."""
+    pairs = _all_pairs(queries, corpus, FLOAT, id_col, vec_col, query_id_col)
+    return _top_k(
+        pairs.select("query_id", "neighbor_id", F.round(_cos(FLOAT), 6).alias("cosine_sim")), k
     )
-    c = _spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        norm(F.col(vec_col)).alias("__cnorm"),
-    )
-    candidates = q.join(c, F.col("query_id") != F.col("neighbor_id"))
-    return _topk_by_cosine(candidates, k)
 
 
 def _plane_signs(table: int, plane: int, dim: int) -> list[float]:
@@ -65,36 +183,15 @@ def _plane_signs(table: int, plane: int, dim: int) -> list[float]:
     return [1.0 if rng.getrandbits(1) else -1.0 for _ in range(dim)]
 
 
-def _lsh_bit(vec: Column, table: int, plane: int, dim: int) -> Column:
-    """Sign bit of <vec, h_plane>: one fused multiply-add pass over the
-    vector against a literal ±1 array."""
-    signs = F.array(*[F.lit(s) for s in _plane_signs(table, plane, dim)])
-    proj = F.aggregate(
-        F.zip_with(vec, signs, lambda x, s: x.cast("double") * s),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
-
-
-def lsh_signature(vec: Column, num_bits: int, dim: int, table: int = 0) -> Column:
-    """Random-hyperplane signature → int bucket id (num_bits ≤ 31)."""
-    out = F.lit(0)
-    for p in range(num_bits):
-        out = out + F.shiftleft(_lsh_bit(vec, table, p, dim), p)
-    return out
-
-
 def _lsh_buckets(vec: Column, num_bits: int, num_tables: int, dim: int) -> Column:
     """array<struct<table:int,bucket:int>> — one bucket per hash table.
 
     All num_tables×num_bits hyperplanes live in ONE literal matrix and
     project through ONE ``transform`` lambda; inlining a projection
-    expression per plane (the ``lsh_signature`` formulation) overflows
-    generated-code limits at 8×4 planes and drops the scan out of
-    whole-stage codegen. Bucket ids then assemble from the flat sign
-    array with cheap element_at/shift arithmetic (``_let``-bound so the
-    projections evaluate once)."""
+    expression per plane overflows generated-code limits at 8×4 planes
+    and drops the scan out of whole-stage codegen. Bucket ids then
+    assemble from the flat sign array with cheap element_at/shift
+    arithmetic (``_let``-bound so the projections evaluate once)."""
     from ..functions.text import _let
 
     planes = [
@@ -132,6 +229,39 @@ def _lsh_buckets(vec: Column, num_bits: int, num_tables: int, dim: int) -> Colum
     return _let(bits, assemble)
 
 
+def _lsh_pairs(
+    queries: DataFrame,
+    corpus: DataFrame,
+    scorer: Scorer,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    num_bits: int,
+    num_tables: int,
+    dim: int,
+) -> DataFrame:
+    """LSH generator: (query, neighbor) pairs sharing a bucket in at least
+    one of ``num_tables`` tables, once per shared table (callers dedup).
+
+    explode_outer: the bucket array is a computed expression (the _let
+    binding), so an inner explode would re-evaluate all plane
+    projections inside an InferFiltersFromGenerate size/isnotnull
+    filter (see operators/dedup.py); the array is never empty.
+    _spread: the per-vector plane projections (num_tables × num_bits
+    dot products) run in the scan stage — parallelize a singly-split
+    corpus file before them."""
+
+    def side(df: DataFrame, side_id: str, role: tuple[str, str]) -> DataFrame:
+        buckets = _lsh_buckets(F.col(vec_col), num_bits, num_tables, dim)
+        return _side(
+            df, scorer, side_id, vec_col, role, F.explode_outer(buckets).alias("__b")
+        ).select(role[0], role[1] + "vec", role[1] + "norm", "__b.table", "__b.bucket")
+
+    c = side(_spread(corpus), id_col, C)
+    q = F.broadcast(side(queries, query_id_col, Q))
+    return q.join(c, ["table", "bucket"]).filter(F.col("query_id") != F.col("neighbor_id"))
+
+
 def lsh_bucketed_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -143,7 +273,8 @@ def lsh_bucketed_topk(
     num_tables: int = 8,
     dim: int = 64,
 ) -> DataFrame:
-    """Approximate top-k with multi-table random-hyperplane LSH.
+    """Approximate top-k with multi-table random-hyperplane LSH (LSH
+    buckets × FLOAT, rounded to 6 places).
 
     A query is compared only against corpus vectors sharing a bucket in at
     least one of ``num_tables`` tables: recall ≈ 1-(1-p^num_bits)^num_tables
@@ -151,32 +282,8 @@ def lsh_bucketed_topk(
     equi-join on (table, bucket) + dedup, never a cross join. Tune
     num_bits up for selectivity, num_tables up for recall.
     """
-    # explode_outer: the bucket array is a computed expression (the _let
-    # binding), so an inner explode would re-evaluate all plane
-    # projections inside an InferFiltersFromGenerate size/isnotnull
-    # filter (see operators/dedup.py); the array is never empty.
-    # _spread: the per-vector plane projections (num_tables × num_bits
-    # dot products) run in the scan stage — parallelize a singly-split
-    # corpus file before them.
-    from ..functions.vectors import norm
-
-    c = _spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        norm(F.col(vec_col)).alias("__cnorm"),
-        F.explode_outer(
-            _lsh_buckets(F.col(vec_col), num_bits, num_tables, dim)
-        ).alias("__b"),
-    ).select("neighbor_id", "__cvec", "__cnorm", "__b.table", "__b.bucket")
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("__qvec"),
-            norm(F.col(vec_col)).alias("__qnorm"),
-            F.explode_outer(
-                _lsh_buckets(F.col(vec_col), num_bits, num_tables, dim)
-            ).alias("__b"),
-        ).select("query_id", "__qvec", "__qnorm", "__b.table", "__b.bucket")
+    pairs = _lsh_pairs(
+        queries, corpus, FLOAT, id_col, vec_col, query_id_col, num_bits, num_tables, dim
     )
     # Score BEFORE the pair dedup (r13, guide §2.3 "shuffle keys and
     # metadata instead of payloads"): a (query, neighbor) pair recurring
@@ -189,68 +296,10 @@ def lsh_bucketed_topk(
     # sf0.1: 1.27×), paid map-side where partial-aggregate collapse
     # already touched every occurrence anyway; wall-clock measured
     # neutral-to-better at sf0.1 (1.73 → 1.49 s avg, outputs identical).
-    from ..functions.vectors import dot
-
-    candidates = (
-        q.join(c, ["table", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("__qvec"), F.col("__cvec"))
-                / (F.col("__qnorm") * F.col("__cnorm")),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return _topk_scored(candidates, k)
-
-
-def _topk_by_cosine(candidates: DataFrame, k: int) -> DataFrame:
-    """Shared tail: score candidate (query, neighbor) pairs and keep the
-    top-k per query (ties broken by neighbor id).
-
-    When the candidate frame carries ``__qnorm``/``__cnorm`` (norms
-    projected per SIDE before the candidate join — the documented
-    ``threshold_pairs`` shape, extended to every top-k caller in r13),
-    scoring costs ONE dot fold per pair instead of three interpreted
-    array aggregates: higher-order functions never whole-stage-codegen
-    (guide §4 / the minhash_band_index lesson), so norm(q) was being
-    re-folded once per corpus row and norm(c) once per query.
-    ``dot/(qnorm·cnorm)`` divides by the product of the SAME doubles
-    ``cosine_similarity`` computes, so scores — and top-k order — are
-    bit-identical (no epsilon clamp here, unlike threshold_pairs)."""
-    if "__qnorm" in candidates.columns:
-        from ..functions.vectors import dot
-
-        score = dot(F.col("__qvec"), F.col("__cvec")) / (
-            F.col("__qnorm") * F.col("__cnorm")
-        )
-    else:
-        score = cosine_similarity(F.col("__qvec"), F.col("__cvec"))
-    scored = candidates.select(
-        "query_id",
-        "neighbor_id",
-        F.round(score, 6).alias("cosine_sim"),
-    )
-    return _topk_scored(scored, k)
-
-
-def _topk_scored(scored: DataFrame, k: int) -> DataFrame:
-    """Top-k per query over an already-scored
-    ``(query_id, neighbor_id, cosine_sim)`` frame (ties → neighbor id).
-    Split out of ``_topk_by_cosine`` so callers that score before a
-    pair dedup (``lsh_bucketed_topk``) share the identical window."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    scored = pairs.select(
+        "query_id", "neighbor_id", F.round(_cos(FLOAT), 6).alias("cosine_sim")
+    ).dropDuplicates(["query_id", "neighbor_id"])
+    return _top_k(scored, k)
 
 
 # Fitted-centroid memo: (plan semantic hash, vec_col, k, fraction, seed,
@@ -343,6 +392,41 @@ def _nearest_centroid_ids(vec: Column, centroids: list[list[float]], n: int) -> 
     return F.transform(F.slice(ranked, 1, n), lambda s: s["cid"])
 
 
+def _cell_pairs(q: DataFrame, c: DataFrame) -> DataFrame:
+    """IVF generator: query and corpus sides carrying ``__cell`` ids
+    equi-join on the cell — corpus compared ≈ n_probe/n_cells of a cross
+    join."""
+    return q.join(c, "__cell").filter(F.col("query_id") != F.col("neighbor_id"))
+
+
+def _kmeans_pairs(
+    queries: DataFrame,
+    corpus: DataFrame,
+    scorer: Scorer,
+    centroids: list[list[float]],
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """IVF cells from literal (KMeans) centroids: each corpus vector sits
+    in its nearest centroid's cell, each query probes its ``n_probe``
+    nearest cells (squared L2 on the raw vectors, whatever the scorer)."""
+    c = _side(
+        corpus, scorer, id_col, vec_col, C,
+        F.element_at(_nearest_centroid_ids(F.col(vec_col), centroids, 1), 1).alias("__cell"),
+    )
+    # explode_outer: an inner explode of this computed array would get
+    # an InferFiltersFromGenerate size/isnotnull filter that re-runs the
+    # per-centroid distance scan twice; the probe list is never empty,
+    # so no null rows to drop
+    q = _side(
+        queries, scorer, query_id_col, vec_col, Q,
+        F.explode_outer(_nearest_centroid_ids(F.col(vec_col), centroids, n_probe)).alias("__cell"),
+    )
+    return _cell_pairs(F.broadcast(q), c)
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -357,10 +441,9 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: KMeans coarse quantizer,
     corpus assigned to its nearest centroid, each query probes its
-    ``n_probe`` nearest cells. The candidate join is an equi-join on
-    centroid id — corpus compared ≈ n_probe/n_centroids of a cross join.
-    Pass precomputed ``centroids`` to reuse a fitted quantizer (the
-    batch↔stream / fit-once-serve-many path).
+    ``n_probe`` nearest cells (IVF with KMeans cells × FLOAT, rounded to
+    6 places). Pass precomputed ``centroids`` to reuse a fitted quantizer
+    (the batch↔stream / fit-once-serve-many path).
 
     IVF vs hyperplane LSH (``lsh_bucketed_topk``): IVF adapts cells to the
     data distribution (better candidate quality on clustered embeddings)
@@ -369,52 +452,19 @@ def ivf_topk(
     cents = centroids or ivf_fit_centroids(
         corpus, vec_col, n_centroids, sample_fraction
     )
-    if not cents:
+    if cents:
+        pairs = _kmeans_pairs(
+            queries, corpus, FLOAT, cents, n_probe, id_col, vec_col, query_id_col
+        )
+    else:
         # no quantizer cells (empty corpus): an empty, correctly-typed
         # result — limit(0) inputs keep id/vector types without a scan
-        empty = (
-            queries.limit(0)
-            .select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(vec_col).alias("__qvec"),
-            )
-            .crossJoin(
-                corpus.limit(0).select(
-                    F.col(id_col).alias("neighbor_id"),
-                    F.col(vec_col).alias("__cvec"),
-                )
-            )
-            .select("query_id", "neighbor_id", "__qvec", "__cvec")
+        pairs = _all_pairs(
+            queries.limit(0), corpus.limit(0), FLOAT, id_col, vec_col, query_id_col
         )
-        return _topk_by_cosine(empty, k)
-    from ..functions.vectors import norm
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        norm(F.col(vec_col)).alias("__cnorm"),
-        F.element_at(_nearest_centroid_ids(F.col(vec_col), cents, 1), 1).alias("__cell"),
+    return _top_k(
+        pairs.select("query_id", "neighbor_id", F.round(_cos(FLOAT), 6).alias("cosine_sim")), k
     )
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("__qvec"),
-            norm(F.col(vec_col)).alias("__qnorm"),
-            # explode_outer: an inner explode of this computed array
-            # would get an InferFiltersFromGenerate size/isnotnull
-            # filter that re-runs the per-centroid distance scan twice;
-            # the probe list is never empty, so no null rows to drop
-            F.explode_outer(
-                _nearest_centroid_ids(F.col(vec_col), cents, n_probe)
-            ).alias("__cell"),
-        )
-    )
-    candidates = (
-        q.join(c, "__cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "__qvec", "__cvec", "__qnorm", "__cnorm")
-    )
-    return _topk_by_cosine(candidates, k)
 
 
 def threshold_pairs(
@@ -428,8 +478,6 @@ def threshold_pairs(
 
     Optionally blocked on ``block_col``; unblocked is |corpus|² — at scale
     pair it with LSH buckets (see ``lsh_bucketed_topk``) instead."""
-    from ..functions.vectors import dot, norm
-
     cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("v")]
     if block_col:
         cols.append(F.col(block_col).alias("blk"))
@@ -461,6 +509,70 @@ def threshold_pairs(
     )
 
 
+def _table_cells(
+    side: DataFrame, cents: DataFrame, scorer: Scorer, role: tuple[str, str], n: int
+) -> DataFrame:
+    """The side's rows, each once per cell among its ``n`` best-scoring
+    centroids (``__cell``; ties → smaller centroid id)."""
+    scored = side.crossJoin(cents).select(
+        *side.columns, "cent_id", _cos(scorer, role, K).alias("__cs")
+    )
+    return top_k_per_group(scored, [role[0]], "__cs", k=n, tiebreak=["cent_id"]).select(
+        *side.columns, F.col("cent_id").alias("__cell")
+    )
+
+
+def _table_pairs(
+    c: DataFrame, cents: DataFrame, scorer: Scorer, n_queries: int, nprobe: int
+) -> DataFrame:
+    """IVF cells from a centroid table (role K, scored like any pair):
+    each corpus vector sits in its best centroid's cell, and the corpus
+    vectors with id < ``n_queries`` probe their ``nprobe`` best cells.
+    Broadcast centroids, cell equi-join, no stage touching |corpus|²
+    rows."""
+    cents = F.broadcast(cents)
+    # assigned has two consumers (query extraction, candidate join), but
+    # persisting it MEASURED SLOWER (7.6 s -> 11.2 s at sf0.01): the
+    # cache is data-sized (it carries the quantized vectors) and the
+    # InMemoryTableScan breaks whole-stage codegen, while the recompute
+    # is one narrow scan + a 16-row broadcast score. The scan-economy
+    # rule (SCALING.md): cache-by-default is as wrong as
+    # recompute-by-default — this one stays recomputed.
+    assigned = _table_cells(c, cents, scorer, C, 1)
+    queries = _relabel(assigned.filter(F.col("neighbor_id") < n_queries), C, Q)
+    probes = _table_cells(queries, cents, scorer, Q, nprobe)
+    # a vector sits in exactly one cell, so no candidate dedup needed
+    return _cell_pairs(probes, assigned)
+
+
+def _smallest_id_pairs(
+    emb: DataFrame,
+    scorer: Scorer,
+    n_queries: int,
+    nlist: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """IVF cells whose centroids are the ``nlist`` smallest-id vectors.
+
+    NULL-id gate (the winnow precedent: an unattributable member is
+    unactionable): this quantizer is ID-KEYED — centroids are the nlist
+    smallest-id vectors — and an id-less vector cannot hold an
+    id-ordered slot. Without the gate it claims one on exactly ONE
+    engine: Spark's ASC sort default is NULLS FIRST, DuckDB's is NULLS
+    LAST (driver_sim five-way stack find, seed 71: a nulls-fuzzed vec_id
+    became Spark centroid #1 and displaced id 18's slot). As a neighbor
+    or query a NULL id already drops through the != and < conditions —
+    and through the same conditions in brute-force and LSH top-k, so
+    those operators need no gate (audited r09).
+    _spread: scoring is scan-stage CPU work; parallelize a singly-split
+    corpus file before it."""
+    c = _side(_spread(emb.where(F.col(id_col).isNotNull())), scorer, id_col, vec_col, C)
+    cents = _relabel(c.orderBy("neighbor_id").limit(nlist), C, K)
+    return _table_pairs(c, cents, scorer, n_queries, nprobe)
+
+
 def ivf_portable_topk(
     emb: DataFrame,
     n_queries: int = 5,
@@ -476,93 +588,72 @@ def ivf_portable_topk(
     carry no geometry) int8-quantized, assignment/probing/scoring are
     integer dot products (every partial sum is an exact integer-valued
     double < 2^53, so aggregation order cannot change a bit), and all
-    argmax selections tie-break on ids. Same physical shape as the
-    learned-KMeans path — broadcast centroids, cell equi-join, per-cell
-    top-k — with recall traded for exact cross-engine replayability.
-    Use ``ivf_topk`` (learned centroids) when recall matters more than
-    a value-level audit trail.
+    argmax selections tie-break on ids (IVF with smallest-id cells ×
+    INT8, unrounded). Same physical shape as the learned-KMeans path —
+    broadcast centroids, cell equi-join, per-cell top-k — with recall
+    traded for exact cross-engine replayability. Use ``ivf_topk``
+    (learned centroids) when recall matters more than a value-level
+    audit trail.
     """
-    from ..functions.vectors import dot_int8, norm_int8, quantize_int8
-    from ..operators.aggregates import top_k_per_group
+    pairs = _smallest_id_pairs(emb, INT8, n_queries, nlist, nprobe, id_col, vec_col)
+    return _top_k(pairs.select("query_id", "neighbor_id", _cos(INT8).alias("cosine_sim")), k)
 
-    # NULL-id gate (the winnow precedent: an unattributable member is
-    # unactionable): this quantizer is ID-KEYED — centroids are the
-    # nlist smallest-id vectors — and an id-less vector cannot hold an
-    # id-ordered slot. Without the gate it claims one on exactly ONE
-    # engine: Spark's ASC sort default is NULLS FIRST, DuckDB's is NULLS
-    # LAST (driver_sim five-way stack find, seed 71: a nulls-fuzzed
-    # vec_id became Spark centroid #1 and displaced id 18's slot). As a
-    # neighbor or query a NULL id already drops through the != and <
-    # conditions below — and through the same conditions in brute-force
-    # and LSH top-k, so those operators need no gate (audited r09).
-    emb = emb.where(F.col(id_col).isNotNull())
 
-    # _spread: quantization + per-cell scoring are scan-stage CPU work;
-    # parallelize a singly-split corpus file before them.
-    # "nv" = per-vector integer norm, computed ONCE per row (r13): every
-    # scoring site below divides dot_int8 by the precomputed norms —
-    # the identical doubles cosine_int8 folds per PAIR, so every cs is
-    # bit-identical while the per-pair HOF work drops 3× → 1×.
-    q = _spread(emb).select(
-        F.col(id_col).alias("vid"), quantize_int8(F.col(vec_col)).alias("qv")
-    ).withColumn("nv", norm_int8(F.col("qv")))
-    cents = (
-        q.orderBy("vid")
-        .limit(nlist)
-        .select(
-            F.col("vid").alias("cent_id"),
-            F.col("qv").alias("cent_qv"),
-            F.col("nv").alias("cent_nv"),
+def _greedy_pairs(
+    emb: DataFrame,
+    scorer: Scorer,
+    n_queries: int,
+    nlist: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+    max_fit_rows: int,
+) -> DataFrame:
+    """IVF cells whose centroids are k-center greedy picks over the
+    int8-quantized fit set (the selection rules are in
+    ``ivf_greedy_topk``'s docstring)."""
+    # NULL-id gate, same reason as _smallest_id_pairs: the fit order is
+    # (hash(id), id)-keyed and engine NULL sort defaults differ.
+    emb = _spread(emb.where(F.col(id_col).isNotNull()))
+    fit = (
+        emb.select(
+            F.col(id_col).alias("vid"),
+            quantize_int8(F.col(vec_col)).alias("qv"),
+            portable_hash60(F.col(id_col).cast("string")).alias("h60"),
         )
+        .orderBy("h60", "vid")
+        .limit(max_fit_rows)
+        .collect()
     )
+    sel = []
+    if fit:
+        import numpy as np
 
-    def _cs(d_a, d_b, n_a, n_b):
-        return dot_int8(d_a, d_b) / F.greatest(n_a * n_b, F.lit(1e-12))
-
-    # cell assignment: best centroid per corpus vector (ties -> smallest id)
-    scored_cells = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "vid", "qv", "nv", "cent_id",
-            _cs(F.col("qv"), F.col("cent_qv"), F.col("nv"), F.col("cent_nv")).alias("cs"),
-        )
+        vids = np.array([r.vid for r in fit], dtype=np.int64)
+        x = np.array([[int(c) for c in r.qv.q] for r in fit], dtype=np.int64)
+        nrm = (x * x).sum(axis=1)
+        sel = [0]  # fit rows arrive (h60, vid)-ordered: row 0 IS the seed
+        dmin = nrm + nrm[0] - 2 * (x @ x[0])
+        while len(sel) < nlist:
+            mx = dmin.max()
+            if mx <= 0:  # every remaining point duplicates a centroid
+                break
+            tied = np.flatnonzero(dmin == mx)
+            j = int(tied[np.argmin(vids[tied])])
+            sel.append(j)
+            dmin = np.minimum(dmin, nrm + nrm[j] - 2 * (x @ x[j]))
+    # Centroids enter as their int8 points' dequantized doubles q·scale.
+    # Every product is exact (an 8-bit q times a 24-bit float scale) and
+    # max|q| = 127, so INT8.prep re-quantizes each to the IDENTICAL scale
+    # and q (127·scale/127 and q·scale·127/(127·scale) are exact): the
+    # table is in either scorer's form without another corpus pass. An
+    # empty fit leaves an empty table, hence an empty typed result.
+    cents = emb.sparkSession.createDataFrame(
+        [(i, [fit[j].qv.scale * q for q in fit[j].qv.q]) for i, j in enumerate(sel)],
+        "cent_id int, v array<double>",
     )
-    # assigned has two consumers (query extraction, candidate join), but
-    # persisting it MEASURED SLOWER (7.6 s -> 11.2 s at sf0.01): the
-    # cache is data-sized (it carries the quantized vectors) and the
-    # InMemoryTableScan breaks whole-stage codegen, while the recompute
-    # is one narrow scan + a 16-row broadcast score. The scan-economy
-    # rule (SCALING.md): cache-by-default is as wrong as
-    # recompute-by-default — this one stays recomputed.
-    assigned = top_k_per_group(scored_cells, ["vid"], "cs", k=1, tiebreak=["cent_id"]).select(
-        "vid", "qv", "nv", F.col("cent_id").alias("cell")
-    )
-    queries = assigned.filter(F.col("vid") < n_queries).select(
-        F.col("vid").alias("query_id"),
-        F.col("qv").alias("q_qv"),
-        F.col("nv").alias("q_nv"),
-    )
-    probes = top_k_per_group(
-        queries.crossJoin(F.broadcast(cents)).select(
-            "query_id", "q_qv", "q_nv", "cent_id",
-            _cs(F.col("q_qv"), F.col("cent_qv"), F.col("q_nv"), F.col("cent_nv")).alias("cs"),
-        ),
-        ["query_id"],
-        "cs",
-        k=nprobe,
-        tiebreak=["cent_id"],
-    ).select("query_id", "q_qv", "q_nv", F.col("cent_id").alias("cell"))
-    cands = (
-        probes.join(assigned, "cell")
-        .filter(F.col("vid") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vid").alias("neighbor_id"),
-            _cs(F.col("q_qv"), F.col("qv"), F.col("q_nv"), F.col("nv")).alias("cosine_sim"),
-        )
-        # a vector sits in exactly one cell, so no candidate dedup needed
-    )
-    return top_k_per_group(cands, ["query_id"], "cosine_sim", k=k, tiebreak=["neighbor_id"])
+    c = _side(emb, scorer, id_col, vec_col, C)
+    return _table_pairs(c, _side(cents, scorer, "cent_id", "v", K), scorer, n_queries, nprobe)
 
 
 def ivf_greedy_topk(
@@ -579,7 +670,8 @@ def ivf_greedy_topk(
     farthest-point (k-center greedy) centroid selection over int8-
     quantized vectors, replacing ``ivf_topk``'s MLlib-KMeans fit (r11
     verdict item 6 — the RNG init and Lloyd float accumulation were the
-    only oracle-less stages left in the catalog).
+    only oracle-less stages left in the catalog). IVF with k-center
+    greedy cells × INT8, unrounded.
 
     Why this is exactly replayable where KMeans is not:
 
@@ -605,102 +697,14 @@ def ivf_greedy_topk(
     Scale shape: the fit collects ≤ ``max_fit_rows`` quantized vectors
     (≈1 MB at the defaults — a bounded driver-side computation, same
     class as MLlib's ``clusterCenters()``); assignment/probe/score are
-    the ``ivf_portable_topk`` tail — broadcast 16-row centroid table,
-    cell equi-join, per-cell top-k, no stage touching |corpus|² rows.
+    the ``ivf_portable_topk`` shape (``_table_pairs``) — broadcast
+    16-row centroid table, cell equi-join, per-cell top-k, no stage
+    touching |corpus|² rows.
     """
-    from ..functions.vectors import dot_int8, norm_int8, quantize_int8
-    from ..operators.aggregates import top_k_per_group
-    from ..operators.dedup import portable_hash60
-
-    # NULL-id gate, same reason as ivf_portable_topk: the fit order is
-    # (hash(id), id)-keyed and engine NULL sort defaults differ.
-    emb = emb.where(F.col(id_col).isNotNull())
-    # "nv": per-vector integer norm, once per row (r13, see
-    # ivf_portable_topk) — every scoring site divides dot_int8 by the
-    # precomputed norms; bit-identical cs at 1 fold per pair instead of 3
-    q = _spread(emb).select(
-        F.col(id_col).alias("vid"), quantize_int8(F.col(vec_col)).alias("qv")
-    ).withColumn("nv", norm_int8(F.col("qv")))
-    fit = (
-        q.select(
-            "vid", "qv", portable_hash60(F.col("vid").cast("string")).alias("h60")
-        )
-        .orderBy("h60", "vid")
-        .limit(max_fit_rows)
-        .collect()
+    pairs = _greedy_pairs(
+        emb, INT8, n_queries, nlist, nprobe, id_col, vec_col, max_fit_rows
     )
-    if not fit:
-        return emb.limit(0).select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(0.0).alias("cosine_sim"),
-        )
-
-    import numpy as np
-
-    vids = np.array([r.vid for r in fit], dtype=np.int64)
-    x = np.array([[int(c) for c in r.qv.q] for r in fit], dtype=np.int64)
-    nrm = (x * x).sum(axis=1)
-    sel = [0]  # fit rows arrive (h60, vid)-ordered: row 0 IS the seed
-    dmin = nrm + nrm[0] - 2 * (x @ x[0])
-    while len(sel) < nlist:
-        mx = dmin.max()
-        if mx <= 0:  # every remaining point duplicates a centroid
-            break
-        tied = np.flatnonzero(dmin == mx)
-        j = int(tied[np.argmin(vids[tied])])
-        sel.append(j)
-        dmin = np.minimum(dmin, nrm + nrm[j] - 2 * (x @ x[j]))
-
-    spark = emb.sparkSession
-    cents = F.broadcast(
-        spark.createDataFrame(
-            [
-                (i, (float(fit[j].qv.scale), [int(c) for c in fit[j].qv.q]))
-                for i, j in enumerate(sel)
-            ],
-            "cent_id int, cent_qv struct<scale:float,q:array<tinyint>>",
-        ).withColumn("cent_nv", norm_int8(F.col("cent_qv")))
-    )
-
-    def _cs(d_a, d_b, n_a, n_b):
-        return dot_int8(d_a, d_b) / F.greatest(n_a * n_b, F.lit(1e-12))
-
-    scored_cells = q.crossJoin(cents).select(
-        "vid", "qv", "nv", "cent_id",
-        _cs(F.col("qv"), F.col("cent_qv"), F.col("nv"), F.col("cent_nv")).alias("cs"),
-    )
-    assigned = top_k_per_group(
-        scored_cells, ["vid"], "cs", k=1, tiebreak=["cent_id"]
-    ).select("vid", "qv", "nv", F.col("cent_id").alias("cell"))
-    queries = assigned.filter(F.col("vid") < n_queries).select(
-        F.col("vid").alias("query_id"),
-        F.col("qv").alias("q_qv"),
-        F.col("nv").alias("q_nv"),
-    )
-    probes = top_k_per_group(
-        queries.crossJoin(cents).select(
-            "query_id",
-            "q_qv",
-            "q_nv",
-            "cent_id",
-            _cs(F.col("q_qv"), F.col("cent_qv"), F.col("q_nv"), F.col("cent_nv")).alias("cs"),
-        ),
-        ["query_id"],
-        "cs",
-        k=nprobe,
-        tiebreak=["cent_id"],
-    ).select("query_id", "q_qv", "q_nv", F.col("cent_id").alias("cell"))
-    cands = (
-        probes.join(assigned, "cell")
-        .filter(F.col("vid") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vid").alias("neighbor_id"),
-            _cs(F.col("q_qv"), F.col("qv"), F.col("q_nv"), F.col("nv")).alias("cosine_sim"),
-        )
-    )
-    return top_k_per_group(cands, ["query_id"], "cosine_sim", k=k, tiebreak=["neighbor_id"])
+    return _top_k(pairs.select("query_id", "neighbor_id", _cos(INT8).alias("cosine_sim")), k)
 
 
 def lloyd_assign(vec: Column, centroids: list[list[float]]) -> Column:

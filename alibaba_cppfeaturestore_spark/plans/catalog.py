@@ -2716,11 +2716,13 @@ def ann_brute_force_topk(spark, sf_dir):
     return SIM.brute_force_topk(emb, queries, k=5, query_id_col="query_id")
 
 
-def _lsh_ann_oracle() -> str:
-    """The LSH hyperplanes are seed-derived literal constants, so the
-    oracle embeds the SAME ±1 matrix and replays bucketing + scoring as
-    plain SQL arithmetic — an exact differential check of the whole
-    approximate pipeline (buckets, candidate join, dedup, scoring)."""
+def _lsh_buckets_sql() -> str:
+    """Opening CTEs shared by the LSH oracles: the id-canonicalized,
+    finite vectors ``e`` and their per-table buckets ``b``. The LSH
+    hyperplanes are seed-derived literal constants, so the oracle embeds
+    the SAME ±1 matrix and replays bucketing as plain SQL arithmetic —
+    an exact differential check of the approximate pipeline (buckets,
+    candidate join, dedup, scoring)."""
     from ..operators.similarity import _plane_signs
 
     rows = ",\n          ".join(
@@ -2742,7 +2744,10 @@ def _lsh_ann_oracle() -> str:
       FROM e, (VALUES
           {rows}) AS p(tbl, plane, w)
       GROUP BY e.vec_id, p.tbl
-    ),
+    ),"""
+
+
+@_q("ann_lsh_bucketed_topk", _lsh_buckets_sql() + """
     cand AS (
       SELECT DISTINCT qb.vec_id AS query_id, cb.vec_id AS neighbor_id
       FROM b qb JOIN b cb ON qb.tbl = cb.tbl AND qb.bucket = cb.bucket
@@ -2757,10 +2762,7 @@ def _lsh_ann_oracle() -> str:
     SELECT query_id, neighbor_id, cosine_sim FROM s
     QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
                                ORDER BY cosine_sim DESC, neighbor_id ASC) <= 5
-    """
-
-
-@_q("ann_lsh_bucketed_topk", _lsh_ann_oracle())
+    """)
 def ann_lsh_bucketed_topk(spark, sf_dir):
     """LSH-bucketed approximate top-k (the 100 TB path: equi-join on
     bucket instead of cross join). The seed-derived hyperplanes are
@@ -5502,38 +5504,18 @@ def ann_quantized_topk(spark, sf_dir):
     The quantize/score math is plain arithmetic (round(x*127/max|x|),
     integer dot / norms), so DuckDB replicates it bit-for-bit — a full
     value oracle, not rows-only. Round-trip error and cosine drift
-    bounds are pinned in tests."""
-    from ..functions.vectors import dot_int8, norm_int8, quantize_int8
-    from ..operators.aggregates import top_k_per_group
-
+    bounds are pinned in tests. All pairs × the int8 scorer
+    (``operators/similarity.py``), rounded to 6 places."""
     emb = _emb_finite(_t(spark, sf_dir, "embeddings"))
-    # per-SIDE integer norms (see functions/vectors.norm_int8): the
-    # per-pair cosine_int8 re-folded both norms per candidate; the
-    # precomputed form divides by the identical doubles, so the scores
-    # are bit-identical and the oracle is untouched
-    q = emb.select("vec_id", quantize_int8(F.col("embedding")).alias("qv"))
-    q = q.withColumn("nv", norm_int8(F.col("qv")))
-    queries = q.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qv").alias("q_qv"),
-        F.col("nv").alias("q_nv"),
+    queries = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
     )
-    scored = (
-        F.broadcast(queries)
-        .crossJoin(q)
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                dot_int8(F.col("q_qv"), F.col("qv"))
-                / F.greatest(F.col("q_nv") * F.col("nv"), F.lit(1e-12)),
-                6,
-            ).alias("cosine_sim"),
-        )
-    )
-    return top_k_per_group(
-        scored, ["query_id"], "cosine_sim", k=5, tiebreak=["neighbor_id"]
+    pairs = SIM._all_pairs(queries, emb, SIM.INT8, "vec_id", "embedding", "query_id")
+    return SIM._top_k(
+        pairs.select(
+            "query_id", "neighbor_id", F.round(SIM._cos(SIM.INT8), 6).alias("cosine_sim")
+        ),
+        5,
     )
 
 
@@ -9553,25 +9535,17 @@ def hybrid_rrf_retrieval(spark, sf_dir):
         .where(F.col("lex_rank") <= 50)
         .select("doc_id", "lex_rank")
     )
-    # query norm projected ONCE on the broadcast side (r13, the
-    # _topk_by_cosine lesson): cosine_similarity would re-fold
-    # norm(__scalar_qv) per corpus row — an interpreted HOF aggregate.
-    # dot/(norm(e)·qnorm) divides by the product of the SAME doubles,
-    # so scores and rank order are bit-identical at 2 folds/row not 3.
+    # the shared float scorer (operators/similarity.py), query norm
+    # projected ONCE on the broadcast side: 2 folds per corpus row, not 3
+    fs, e = SIM.FLOAT, F.col("embedding")
     qv = emb.where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("__scalar_qv"),
-        V.norm(F.col("embedding")).alias("__scalar_qnorm"),
+        e.alias("__scalar_qv"), fs.norm(e).alias("__scalar_qnorm")
     )
+    cos = fs.pair(e, F.col("__scalar_qv"), fs.norm(e), F.col("__scalar_qnorm"))
     scored = (
         emb.where(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            (
-                V.dot(F.col("embedding"), F.col("__scalar_qv"))
-                / (V.norm(F.col("embedding")) * F.col("__scalar_qnorm"))
-            ).alias("cos"),
-        )
+        .select(F.col("vec_id").alias("doc_id"), cos.alias("cos"))
     )
     wvec = Window.orderBy(F.desc("cos"), F.asc("doc_id"))
     vec = (
@@ -11035,29 +11009,7 @@ def ann_recall_audit(spark, sf_dir):
     )
 
 
-def _lsh_occupancy_oracle() -> str:
-    from ..operators.similarity import _plane_signs
-
-    rows = ",\n          ".join(
-        "({t}, {p}, [{w}])".format(
-            t=t, p=p, w=",".join("1" if x > 0 else "-1" for x in _plane_signs(t, p, 64))
-        )
-        for t in range(8)
-        for p in range(4)
-    )
-    return f"""
-    WITH {_EMB_UNIQUE_SQL},
-    -- finite-domain vectors only (see _EMB_FINITE_WHERE)
-    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings_u
-          WHERE {_EMB_FINITE_WHERE}),
-    b AS (
-      SELECT e.vec_id, p.tbl,
-             CAST(SUM(CASE WHEN list_dot_product(e.v, CAST(p.w AS DOUBLE[])) >= 0
-                           THEN (1 << p.plane) ELSE 0 END) AS INTEGER) AS bucket
-      FROM e, (VALUES
-          {rows}) AS p(tbl, plane, w)
-      GROUP BY e.vec_id, p.tbl
-    ),
+@_q("ann_index_occupancy_audit", _lsh_buckets_sql() + """
     occ AS (
       SELECT tbl, bucket, CAST(COUNT(*) AS BIGINT) AS n FROM b GROUP BY tbl, bucket
     )
@@ -11066,10 +11018,7 @@ def _lsh_occupancy_oracle() -> str:
            CAST(MAX(n) AS BIGINT) AS max_bucket,
            MAX(n) / CAST(SUM(n) AS DOUBLE) AS max_share
     FROM occ GROUP BY tbl
-    """
-
-
-@_q("ann_index_occupancy_audit", _lsh_occupancy_oracle())
+    """)
 def ann_index_occupancy_audit(spark, sf_dir):
     """ANN index skew audit — the third leg of the measure-don't-guess
     trio: per-hash-table bucket occupancy of the LSH index (buckets

@@ -26,6 +26,7 @@ real scale the sink adapter would be a KV store write, not a file rewrite.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 from typing import Callable
 
@@ -260,6 +261,9 @@ class OnlineStore:
         latest.write.mode("overwrite").parquet(tmp)
         final = spark.read.parquet(tmp)
         final.write.mode("overwrite").parquet(self.path)
+        # only once the overwrite has landed: until then tmp holds the
+        # one complete copy of the merged table
+        shutil.rmtree(tmp)
 
     def foreach_batch(self) -> Callable[[DataFrame, int], None]:
         return lambda df, epoch: self.upsert_batch(df, epoch)

@@ -381,6 +381,41 @@ def test_ivf_greedy_topk_recall_determinism_and_edges(spark):
     assert set(degraded.columns) == {"query_id", "neighbor_id", "cosine_sim"}
 
 
+def test_scorer_written_once_across_generators(spark):
+    """Every top-k path scores its pairs with the same scorer: for each
+    scorer, each pair an approximate candidate generator returns (LSH
+    buckets, k-center greedy IVF, smallest-id IVF, KMeans IVF) carries a
+    cosine bit-identical to the exact all-pairs generator's score for
+    that pair, and the approximate generators return a strict subset."""
+    from alibaba_cppfeaturestore_spark.operators import similarity as S
+
+    emb = load_table(spark, SF, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    cols = ("vec_id", "embedding")
+    cents = S.ivf_fit_centroids(emb, n_centroids=8)
+    for scorer in (S.FLOAT, S.INT8):
+        def scores(pairs):
+            rows = pairs.select(
+                "query_id", "neighbor_id", S._cos(scorer).alias("s")
+            ).collect()
+            return [((r["query_id"], r["neighbor_id"]), repr(r["s"])) for r in rows]
+
+        exact = dict(scores(S._all_pairs(queries, emb, scorer, *cols, "query_id")))
+        generators = {
+            "lsh": S._lsh_pairs(queries, emb, scorer, *cols, "query_id", 4, 8, 64),
+            "greedy_ivf": S._greedy_pairs(emb, scorer, 10, 8, 3, *cols, 16384),
+            "smallest_id_ivf": S._smallest_id_pairs(emb, scorer, 10, 8, 3, *cols),
+            "kmeans_ivf": S._kmeans_pairs(queries, emb, scorer, cents, 3, *cols, "query_id"),
+        }
+        for name, pairs in generators.items():
+            got = scores(pairs)
+            assert 0 < len(dict(got)) < len(exact), (name, len(got), len(exact))
+            bad = [(pair, s, exact.get(pair)) for pair, s in got if exact.get(pair) != s]
+            assert not bad, f"{name} × {scorer.norm.__name__}: {bad[:3]}"
+
+
 def test_incremental_minhash_matches_full_corpus(spark, docs):
     """Incremental dedup of a batch against a materialized band index ==
     the full-corpus pairs restricted to pairs touching the batch."""

@@ -136,6 +136,8 @@ def test_online_store_upsert_and_restart_idempotency(spark, workdir):
     run_stream_upsert(stream3, store, chk)
     got3 = {r["user_id"]: (r["event_type"], r["value"]) for r in store.read(spark).collect()}
     assert got3 == {1: ("purchase", 9.0), 2: ("view", 3.0)}
+    # no micro-batch leaves its write-then-swap staging dir behind
+    assert not [d for d in os.listdir(workdir) if d.startswith("store__tmp_")]
 
 
 def test_dictionary_shared_batch_and_stream(spark, workdir):
