@@ -75,9 +75,6 @@ _WINDOW_EXEMPT_CHANGED: dict[str, str] = {
         "docstring note; no value or plan-shape change (see block "
         "comment above)."
     ),
-    "alibaba_cppfeaturestore_spark/operators/dictionary.py": (
-        "r14 register_persisted wrapping; no value or plan-shape change."
-    ),
     "alibaba_cppfeaturestore_spark/operators/graph.py": (
         "r14 register_persisted wrapping; no value or plan-shape change."
     ),
@@ -99,25 +96,34 @@ _WINDOW_EXEMPT_CHANGED: dict[str, str] = {
 }
 
 _DRIVER_WINDOW = [
-    # Similarity-core rotation (tools/freshness.py --plan, adopted
-    # verbatim): (a) 20 changed entries — the ANN family, promoted
-    # through operators/similarity.py's rebuild onto one candidate
-    # generator × scorer × top-k core (outputs bit-identical); the
-    # catalog edits to ann_quantized_topk, hybrid_rrf_retrieval and the
-    # shared LSH oracle CTEs (oracle strings byte-identical); the
-    # streaming entries, promoted through streaming/pipeline.py
-    # (OnlineStore.upsert_batch now removes its staging dir; values
-    # unchanged); graph_pagerank_trade_network, promoted through a
-    # docstring-only edit to functions/vectors.py::norm_int8;
-    # (b) the oldest unchanged window rows, oldest-first: the r10 cohort.
+    # Fitted-dictionary rotation (tools/freshness.py --plan, adopted
+    # verbatim): (a) 29 changed entries — the three dictionary entries,
+    # promoted through operators/dictionary.py (the fit is now eager and
+    # returns driver-local (value, index) rows; values unchanged);
+    # aliccp_bronze_to_silver_e2e, promoted through a docstring-only
+    # edit to plans/aliccp.py; four catalog entries whose bare persists
+    # now go through ranks.register_persisted (aliccp_silver_to_gold_e2e
+    # is the fifth) and rfm_customer_segments, whose registration moved
+    # into the persisting statement; the 20 similarity-core / streaming /
+    # vectors entries of the previous rotation; (b) the oldest unchanged
+    # window rows, oldest-first: the r10 cohort.
+    "aliccp_silver_to_gold_e2e",  # changed
     "ann_brute_force_topk",  # changed
     "ann_index_occupancy_audit",  # changed
     "ann_lsh_bucketed_topk",  # changed
     "ann_quantized_topk",  # changed
+    "corpus_mixture_resample",  # changed
+    "dict_encode_event_type",  # changed
     "hybrid_rrf_retrieval",  # changed
+    "interval_overlap_sessions",  # changed
+    "quality_bigram_logprob",  # changed
+    "rfm_customer_segments",  # changed
+    "sketch_countmin_freqs",  # changed
+    "aliccp_bronze_to_silver_e2e",  # changed
     "ann_ivf_portable_topk",  # changed
     "ann_ivf_topk",  # changed
     "dedup_semantic_embedding",  # changed
+    "dict_apply_lang",  # changed
     "embedding_threshold_pairs",  # changed
     "graph_pagerank_trade_network",  # changed
     "kmeans_lloyd_step",  # changed
@@ -135,7 +141,6 @@ _DRIVER_WINDOW = [
     "chunk_documents_rag",  # r10
     "cooccurrence_skipgram_pairs",  # r10
     "dedup_winnow_containment",  # r10
-    "dict_encode_event_type",  # r10
     "doc_fingerprint",  # r10
     "dq_feature_leakage_audit",  # r10
     "ewma_user_value",  # r10
@@ -152,14 +157,6 @@ _DRIVER_WINDOW = [
     "negative_sampling_pairs",  # r10
     "q20_dominant_part_suppliers",  # r10
     "q2_min_cost_supplier",  # r10
-    "rfm_customer_segments",  # r10
-    "sample_weighted_bernoulli",  # r10
-    "schema_evolution_union_read",  # r10
-    "sketch_countmin_freqs",  # r10
-    "sort_global_topn",  # r10
-    "text_token_entropy",  # r10
-    "tfidf_top_terms_per_doc",  # r10
-    "topk_orders_per_priority",  # r10
 ]
 
 

@@ -8,88 +8,89 @@ unspecified, which makes results oracle-unfriendly; this native version pins
 the tie-break (count desc, value asc) so the mapping is a pure function of
 the data — DuckDB-checkable and identical between batch and streaming.
 
-Scale: the dictionary for a column is at most |distinct values| rows —
-small relative to the fact table (Ali-CCP's biggest vocab is item_id at
-1.8M, reference ``:161-162``) — so encode joins are broadcast-able. The fit
-is a groupBy (map-side partial aggregation) + a rank over the *aggregated*
-(small) table, not over the raw data. Since round 7 the rank itself is the
-two-phase bucket/offset shape (``operators/ranks.py::two_phase_rank``) —
-no ``Exchange SinglePartition`` even over the vocab table, so the fit
-survives web-scale vocabularies (user_id-class columns whose |vocab|
-grows with the data) instead of merely "small enough" ones.
+A fitted dictionary is DATA, not a plan — the counterpart of the
+reference's saved ``PipelineModel``, fit once and reused by every stream
+micro-batch. ``fit_dictionaries`` runs eagerly: one grouping-sets scan of
+the input, one two-phase rank over the aggregated vocabularies
+(``operators/ranks.py::two_phase_rank``, no ``Exchange SinglePartition``),
+one Arrow collect. Each column comes back as a driver-local
+``(value, index)`` DataFrame (a ``LocalRelation``), so every later encode —
+each Gold write, each micro-batch — broadcasts those rows instead of
+re-running the fit's lineage.
+
+Driver memory: the fit holds Σ|vocab_i| ``(value, index)`` pairs on the
+driver, about 2.8M at full Ali-CCP (the 16 vocabulary sizes in
+BASELINE.md; item_id alone is 1.8M, reference ``:161-162``). The encode's
+broadcast joins put every dictionary on the driver anyway; the collect
+never carries a k-wide row, only one array of pairs per column.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .ranks import register_persisted
+from .ranks import persist_scope, two_phase_rank
 
 
-def _rank_counts(counts: DataFrame, persist: bool = True) -> DataFrame:
-    """(value, cnt) → (value, index): 0-based contiguous indices ordered
-    by (count desc, value asc — NULLS FIRST, matching ``asc()``), via the
-    two-phase global rank (no single-partition window; descending count
-    enters the ascending composite key negated). ``persist=False`` when
-    ``counts`` already sits on a cached upstream (the grouping-sets fit)
-    — double-caching each slice would only burn memory."""
-    from .ranks import two_phase_rank
-
-    ranked = two_phase_rank(
-        counts,
-        [(-F.col("cnt")).cast("long").alias("neg_cnt"), F.col("value")],
-        rank_col="__rank",
-        persist=persist,
-    )
-    return ranked.select("value", (F.col("__rank") - F.lit(1)).cast("int").alias("index"))
+def _local_dictionary(spark: SparkSession, values, dtype: T.DataType) -> DataFrame:
+    """``values`` in index order → driver-local ``(value <dtype>, index
+    int)`` DataFrame, the output contract every fit shares."""
+    table = pa.table({"value": values, "index": pa.array(range(len(values)), pa.int32())})
+    schema = T.StructType([T.StructField("value", dtype), T.StructField("index", T.IntegerType())])
+    return spark.createDataFrame(table, schema)
 
 
 def fit_dictionary(df: DataFrame, column: str) -> DataFrame:
-    """Fit a frequency dictionary: ``(value, index)``, index 0-based,
-    ordered by (count desc, value asc) — deterministic StringIndexer.
-
-    The rank runs over the aggregated vocab table (|vocab| rows), not the
-    input; partial aggregation happens map-side before the shuffle, and
-    the rank is two-phase — no vocab-sized single-partition window.
-    """
-    counts = df.groupBy(F.col(column).alias("value")).agg(F.count("*").alias("cnt"))
-    return _rank_counts(counts)
+    """Fit one frequency dictionary: ``(value, index)``, index 0-based,
+    ordered by (count desc, value asc — NULLS FIRST) — deterministic
+    StringIndexer. See ``fit_dictionaries``."""
+    return fit_dictionaries(df, [column])[column]
 
 
 def fit_dictionaries(df: DataFrame, columns: list[str]) -> dict[str, DataFrame]:
-    """Fit dictionaries for many columns in ONE pass over ``df``: a
-    GROUPING SETS aggregation ((c1), (c2), …, (ck)) computes every
-    column's vocabulary counts in a single scan (Spark expands grouping
-    sets map-side), where per-column ``fit_dictionary`` calls would scan
-    the input k times — at 100 TB the difference between one read of the
-    fact table and sixteen. The combined (Σ|vocab_i|)-row result is
-    persisted (every column's slice consumes it); each slice then ranks
-    under the same (count desc, value asc) window as the single-column
-    fit, so the output dictionaries are IDENTICAL to k independent fits
-    (asserted in tests/test_gold_and_sampling.py)."""
-    if len(columns) == 1:
-        return {columns[0]: fit_dictionary(df, columns[0])}
-    from pyspark import StorageLevel
+    """Fit dictionaries for many columns in ONE pass over ``df`` and
+    return them as driver-local ``(value, index)`` DataFrames.
 
-    k = len(columns)
-    agg = register_persisted(
-        df.groupingSets(
-            [[F.col(c)] for c in columns], *[F.col(c) for c in columns]
-        )
-        .agg(F.count("*").alias("cnt"), F.grouping_id().alias("__gid"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    A GROUPING SETS aggregation ((c1), (c2), …, (ck)) counts every
+    column's vocabulary in a single scan (Spark expands grouping sets
+    map-side) — at 100 TB one read of the fact table instead of k. ONE
+    two-phase rank then orders the aggregate by (__gid, count desc, c1, …,
+    ck): inside grouping set i every other column is NULL, so each slice
+    keeps its exact (count desc, value asc, NULLS FIRST) order, and a
+    column's index is its rank minus the first rank of its set. The rank
+    runs inside ``persist_scope()``, so the fit leaves no cached blocks.
+
+    Eager: the ranked vocabularies are collected once, through Arrow, as
+    one row of k ``collect_list(struct(c_i, rank))`` arrays — Σ|vocab_i|
+    pairs on the driver (module docstring), never a k-wide row and never
+    a collect per column. Each dictionary's ``value`` keeps the input
+    column's type (ints stay ints, NaN survives).
+    """
+    k, cols = len(columns), [F.col(c) for c in columns]
+    agg = df.groupingSets([[c] for c in cols], *cols).agg(
+        F.count("*").alias("cnt"), F.grouping_id().alias("__gid")
     )
-    out = {}
-    for i, c in enumerate(columns):
+    dtypes = [f.dataType for f in agg.schema.fields[:k]]
+    with persist_scope():
+        ranked = two_phase_rank(agg, [F.col("__gid"), (-F.col("cnt")).cast("long"), *cols], rank_col="__rank")
         # grouping_id bit j (MSB-first over the grouping columns) is set
         # when column j is aggregated away → the {c_i}-only set has every
         # bit set except bit i
-        gid = sum(1 << (k - 1 - j) for j in range(k) if j != i)
-        counts = agg.filter(F.col("__gid") == gid).select(
-            F.col(c).alias("value"), "cnt"
-        )
-        out[c] = _rank_counts(counts, persist=False)
+        slices = [F.col("__gid") == (1 << k) - 1 - (1 << (k - 1 - i)) for i in range(k)]
+        vocab = ranked.agg(
+            *[F.collect_list(F.when(s, F.struct(c, "__rank"))) for s, c in zip(slices, cols)]
+        ).toArrow()
+    out = {}
+    for i, c in enumerate(columns):
+        pairs = pc.list_flatten(vocab.column(i))
+        # ranks inside one grouping set are contiguous, so position in
+        # rank order = rank - first rank of the set
+        values = pc.struct_field(pairs, [0]).take(pc.sort_indices(pc.struct_field(pairs, [1])))
+        out[c] = _local_dictionary(df.sparkSession, values, dtypes[i])
     return out
 
 
@@ -106,10 +107,12 @@ def encode_with_dictionaries(
 
     Each dictionary is broadcast — no shuffle of the fact table, the joins
     pipeline inside one stage. The |vocab| fallback index for unseen values
-    is a lazy one-row aggregate cross-joined (broadcast) onto the fact —
-    NOT a driver-side ``count()``, which would run every dictionary's fit
-    lineage eagerly at plan-build time (one extra job per column, then the
-    broadcast re-runs it).
+    is a one-row aggregate over the same dictionary, cross-joined
+    (broadcast) onto the fact. A dictionary from ``fit_dictionaries`` is
+    driver-local, so both broadcasts read its ``LocalRelation`` — the fit
+    never re-runs, at the cost of holding Σ|vocab_i| ``(value, index)``
+    pairs on the driver (module docstring). Any other ``(value, index)``
+    DataFrame works too; a lazy one is evaluated by each broadcast.
     """
     out = df
     for col, d in dictionaries.items():
@@ -169,7 +172,9 @@ def fit_dictionary_mllib(df: DataFrame, column: str) -> DataFrame:
     distinct the two agree exactly (asserted in tests).
 
     The fitted labels are |vocab|-sized driver metadata (same payload an
-    MLlib PipelineModel persists), re-emitted as a DataFrame so
+    MLlib PipelineModel persists), re-emitted as the same driver-local
+    ``(value, index)`` DataFrame ``fit_dictionaries`` returns (``value``
+    is a string: StringIndexer labels are strings), so
     ``encode_with_dictionaries`` / ``decode_with_dictionary`` work
     unchanged on either fit path.
     """
@@ -182,6 +187,4 @@ def fit_dictionary_mllib(df: DataFrame, column: str) -> DataFrame:
         stringOrderType="frequencyDesc",
     ).fit(df.select(column).where(F.col(column).isNotNull()))
     labels = model.labelsArray[0]
-    return df.sparkSession.createDataFrame(
-        [(v, i) for i, v in enumerate(labels)], schema="value string, index int"
-    )
+    return _local_dictionary(df.sparkSession, pa.array(labels, pa.string()), T.StringType())

@@ -14,7 +14,10 @@ Rebuilds the reference's two batch entry points as pure DataFrame plans:
   na.drop (``:83-87``), duplicate raw ids (``:95-96``), dictionary-encode 16
   categorical columns (StringIndexer ``:106-130`` — here the deterministic
   native categorify from ``operators.dictionary``), casts + timestamps
-  (``:132-152``).
+  (``:132-152``). As the reference fits its StringIndexer pipeline once and
+  reuses the saved model, ``fit_dictionaries`` runs once, eagerly, and
+  hands back driver-local dictionaries: the Gold plan broadcasts 16
+  ``LocalRelation`` leaves and never re-runs the fit.
 
 Scale notes: the skeleton↔common join shuffles on common_feature_index; at
 100 TB the common-features side is orders of magnitude smaller than the
@@ -187,8 +190,9 @@ def silver_to_gold(
 ) -> DataFrame:
     """Silver wide table → Gold encoded table (reference Silver→Gold).
 
-    ``dictionaries`` maps column name → dictionary DataFrame fit by
-    ``operators.dictionary.fit_dictionary``. ``clock`` is an injectable
+    ``dictionaries`` maps column name → ``(value, index)`` dictionary
+    DataFrame, normally the driver-local ones
+    ``operators.dictionary.fit_dictionaries`` returns. ``clock`` is an injectable
     timestamp column replacing the reference's nondeterministic
     ``current_timestamp()`` (``batch_process_Silver_to_Gold.py:151-152``) so
     tests and oracles are reproducible.

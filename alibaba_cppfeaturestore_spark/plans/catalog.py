@@ -46,6 +46,7 @@ from ..operators.aggregates import latest_per_key, top_k_per_group, vocab_sizes
 from ..operators.dictionary import fit_dictionary
 from ..operators import joins as JN
 from ..operators.joins import anti_join_not_in, asof_join, online_lookup, semi_join_in
+from ..operators.ranks import register_persisted
 from .views import load_table
 
 
@@ -1458,7 +1459,7 @@ def latest_event_per_user(spark, sf_dir):
     # NULLS FIRST on the value tie-break (proactive class closure with
     # the seed-167 silver_to_gold find): a NULL event_type group's count
     # can tie a real type's, and the fit's pinned order
-    # (_rank_counts: count desc, value asc-nulls-first) must be spelled
+    # (fit_dictionaries: count desc, value asc-nulls-first) must be spelled
     # out — DuckDB's bare ASC is nulls-last.
     """
     WITH counts AS (
@@ -5019,7 +5020,7 @@ def _synth_silver(spark, sf_dir):
       FROM orders JOIN customer ON o_custkey = c_custkey
     ),
     -- value ASC NULLS FIRST: the dictionary fit's pinned order
-    -- (operators/dictionary._rank_counts). r10 six-way find (seed 167):
+    -- (operators/dictionary.fit_dictionaries). r10 six-way find (seed 167):
     -- NULL o_orderkeys make a NULL category group whose count TIES with
     -- regular groups, and the unpinned ASC put it last in DuckDB /
     -- first in Spark — every index past the tie shifted. The NULL rows
@@ -5069,7 +5070,7 @@ def aliccp_silver_to_gold_e2e(spark, sf_dir):
     from ..operators.dictionary import fit_dictionaries
     from .aliccp import silver_to_gold
 
-    silver = _synth_silver(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    silver = register_persisted(_synth_silver(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK))
     dicts = fit_dictionaries(silver, ["user_group", "item_category", "user_age"])
     gold = silver_to_gold(
         silver, dicts, clock=F.to_timestamp(F.lit(_GOLD_CLOCK))
@@ -5175,7 +5176,7 @@ def corpus_mixture_resample(spark, sf_dir):
     # each consumer would rescan the corpus
     from pyspark import StorageLevel
 
-    counts = (
+    counts = register_persisted(
         docs.groupBy("lang")
         .agg(F.count("*").cast("double").alias("c"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -7159,7 +7160,7 @@ def interval_overlap_sessions(spark, sf_dir):
     ).otherwise(0)
     from pyspark import StorageLevel
 
-    spans = (
+    spans = register_persisted(
         ev.withColumn("new_session", new_session)
         .withColumn("session_id", F.sum("new_session").over(cum))
         .groupBy("user_id", "session_id")
@@ -8026,8 +8027,8 @@ def sketch_countmin_freqs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     # toks feeds the exact-count branch AND the sketch build — persist
     # the narrow projection so documents scans once
-    toks = docs.select(F.explode(TX.tokens(F.col("text"))).alias("tok")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    toks = register_persisted(
+        docs.select(F.explode(TX.tokens(F.col("text"))).alias("tok")).persist(StorageLevel.MEMORY_AND_DISK)
     )
     true_c = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("true_count"))
     top = true_c.orderBy(F.desc("true_count"), F.asc("tok")).limit(20)
@@ -9103,7 +9104,7 @@ def rfm_customer_segments(spark, sf_dir):
     oracle's CTE. Decimal-exact sums."""
     from pyspark import StorageLevel
 
-    from ..operators.ranks import ntile_from_rank, register_persisted, two_phase_rank
+    from ..operators.ranks import ntile_from_rank, two_phase_rank
 
     # entity gate: NULL o_custkey is no customer (oracle comment)
     o = _t(spark, sf_dir, "orders").where(F.col("o_custkey").isNotNull())
@@ -9111,7 +9112,7 @@ def rfm_customer_segments(spark, sf_dir):
     # persist=False — the two quintiles differ only in the rank key, so
     # letting each two_phase_rank cache its own keyed copy (the pre-r08
     # shape) double-cached identical data.
-    rfm = (
+    rfm = register_persisted(  # released by harness release_persisted()
         o.groupBy("o_custkey")
         .agg(
             F.max("o_orderdate").alias("last_order"),
@@ -9120,7 +9121,6 @@ def rfm_customer_segments(spark, sf_dir):
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    register_persisted(rfm)  # released by harness release_persisted()
 
     def quintile(key_desc, name):
         ranked = two_phase_rank(
@@ -10476,9 +10476,10 @@ def quality_bigram_logprob(spark, sf_dir):
     # toks feeds THREE consumers (bigrams, unigram counts, vocab size);
     # persist the narrow projection so the raw corpus scans once (the
     # scan-economy discipline, cf. unigram_logprob_scores)
-    toks = docs.select(
-        "doc_id", F.posexplode(TX.tokens(F.col("text"))).alias("pos", "tok")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    toks = register_persisted(
+        docs.select("doc_id", F.posexplode(TX.tokens(F.col("text"))).alias("pos", "tok"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     w = Window.partitionBy("doc_id").orderBy("pos")
     bg = toks.select(
         "doc_id", "pos", F.col("tok").alias("a"), F.lead("tok").over(w).alias("b")

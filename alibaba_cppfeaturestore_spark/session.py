@@ -16,8 +16,9 @@ Centralizes the configuration the whole engine depends on:
   output-file sizing (100k rows/file, ``batch_process_Bronze_to_Silver.py:308-312``).
 
 At cluster scale the same factory applies; only ``master`` and the memory
-settings change. Shuffle partitions default to 2×cores locally; on a real
-cluster leave AQE to coalesce from a high initial number.
+settings change. Shuffle partitions default to one per local core
+(``SPARK_GRAFT_CPUS``, 32 when unset); on a real cluster leave AQE to
+coalesce from a high initial number.
 """
 
 from __future__ import annotations

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from alibaba_cppfeaturestore_spark.plans.catalog import QUERIES
@@ -79,6 +82,101 @@ def test_one_pass_fit_dictionaries_equals_per_column(spark):
         one = {r["value"]: r["index"] for r in fit_dictionary(ev, c).collect()}
         multi = {r["value"]: r["index"] for r in combined[c].collect()}
         assert multi == one, c
+
+
+def _reference_dictionary(values: list) -> list[tuple]:
+    """Pure-Python frequency dictionary with the pinned order: count desc,
+    then value asc with NULL first — and NaN above every other double,
+    as Spark orders it. NaN values are counted as one value."""
+    nan = object()
+    counts = Counter(nan if isinstance(v, float) and math.isnan(v) else v for v in values)
+
+    def order(item):
+        v, n = item
+        plain = v is None or v is nan
+        return (-n, v is not None, v is nan, 0 if plain else v)
+
+    ranked = sorted(counts.items(), key=order)
+    return [(math.nan if v is nan else v, i) for i, (v, _) in enumerate(ranked)]
+
+
+def _comparable(pairs) -> list[tuple]:
+    return [("NaN" if isinstance(v, float) and math.isnan(v) else v, i) for v, i in pairs]
+
+
+def test_fit_dictionaries_matches_python_reference(spark):
+    """Independent oracle for the one fit path: every dictionary equals a
+    Counter-based reference over a string, an int and a double column
+    holding NULLs, NaN and count ties — and the Arrow round trip keeps the
+    input column's type (no widened ints, no dropped NaN)."""
+    from alibaba_cppfeaturestore_spark.operators.dictionary import fit_dictionaries
+
+    nan = float("nan")
+    s = ["b", "a", None, "c", "a", "b", None, "d", "c", "e"] * 3 + ["e", "zz", "zz", "zz"]
+    i = [7, None, 3, 3, 7, -1, None, 12, 0, -1] * 3 + [0, 5, 5, None]
+    d = [1.5, nan, None, -2.0, nan, 1.5, 0.25, None, -2.0, 9.0] * 3 + [nan, 0.25, 4.0, 4.0]
+    df = spark.createDataFrame(list(zip(s, i, d)), "s string, i int, d double")
+    dicts = fit_dictionaries(df, ["s", "i", "d"])
+    for c, values in (("s", s), ("i", i), ("d", d)):
+        got = dicts[c]
+        assert got.schema["value"].dataType == df.schema[c].dataType, c
+        rows = sorted(((r["value"], r["index"]) for r in got.collect()), key=lambda p: p[1])
+        assert _comparable(rows) == _comparable(_reference_dictionary(values)), c
+
+
+def test_fit_leaves_nothing_cached_and_serves_a_stream(spark, tmp_path):
+    """online_serving's sequence: fit, release every cache, then encode a
+    new batch inside a foreachBatch stream. The fit itself leaves no
+    cached blocks and no registered persists, and the stream's encoding
+    equals the one taken before the release."""
+    from alibaba_cppfeaturestore_spark.operators import ranks
+    from alibaba_cppfeaturestore_spark.operators.dictionary import (
+        encode_with_dictionaries,
+        fit_dictionaries,
+    )
+    from alibaba_cppfeaturestore_spark.plans.views import load_table
+    from alibaba_cppfeaturestore_spark.streaming.pipeline import stream_from_parquet
+
+    cols = ["event_type", "user_id"]
+    base = load_table(spark, SF, "events").select("event_id", *cols)
+    ranks.release_persisted(blocking=True)
+    spark.catalog.clearCache()
+    registered = list(ranks._PERSISTED)
+    dicts = fit_dictionaries(base, cols)
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    assert len(infos) == 0, [str(x) for x in infos]
+    assert [id(x) for x in ranks._PERSISTED] == [id(x) for x in registered]
+
+    src = str(tmp_path / "src")
+    batch = base.orderBy("event_id").limit(40).union(
+        spark.createDataFrame([(-1, "unseen-type", -7)], base.schema)
+    )
+    batch.write.parquet(src)
+    batch = spark.read.parquet(src)
+
+    def encoded(df):
+        return sorted(tuple(r) for r in encode_with_dictionaries(df, dicts).collect())
+
+    before = encoded(batch)
+    # the encode reads the fitted rows, not a rank lineage
+    plan = encode_with_dictionaries(batch, dicts)._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "Window" not in plan, plan
+    ranks.release_persisted(blocking=True)
+    spark.catalog.clearCache()
+    captured = []
+    q = (
+        stream_from_parquet(spark, src, schema=batch.schema)
+        .writeStream.foreachBatch(lambda df, epoch: captured.extend(encoded(df)))
+        .option("checkpointLocation", str(tmp_path / "chk"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert sorted(captured) == before
+    assert len(before) == 41
 
 
 def test_weighted_bernoulli_rate_tracks_weight(spark):

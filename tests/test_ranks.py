@@ -182,13 +182,15 @@ def test_operator_persists_are_registered(spark, sf_dir):
     infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     assert len(infos) == 0, [str(i) for i in infos]
     # source-level backstop (AST): every .persist(...) call in operators/
-    # sits inside a register_persisted(...) call, or is the variable
-    # ranks.py itself appends to _PERSISTED right after
+    # and plans/ sits inside a register_persisted(...) call, or is the
+    # variable ranks.py itself appends to _PERSISTED right after
     import ast
     import pathlib
 
-    op_dir = pathlib.Path(DD.__file__).parent
-    for path in sorted(op_dir.glob("*.py")):
+    pkg_dir = pathlib.Path(DD.__file__).parent.parent
+    paths = sorted(pkg_dir.glob("operators/*.py")) + sorted(pkg_dir.glob("plans/*.py"))
+    assert any(p.name == "catalog.py" for p in paths)
+    for path in paths:
         tree = ast.parse(path.read_text())
         reg_spans = [
             (n.lineno, n.end_lineno)
