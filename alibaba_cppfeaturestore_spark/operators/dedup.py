@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import char_shingles, tokens, winnow_fingerprints
-from .ranks import register_persisted
+from ..resources import own
 
 
 def exact_dedup(
@@ -255,7 +255,7 @@ def minhash_lsh_duplicates(
     """
     from pyspark import StorageLevel
 
-    sh = register_persisted(
+    sh = own(
         _spread(df)
         .select(
             F.col(id_col).alias("id"),
@@ -593,7 +593,7 @@ def _exact_verify(
     if shingled is None:
         texts = _spread(texts)
         if prune_texts:
-            est = register_persisted(est.persist(StorageLevel.MEMORY_AND_DISK))
+            est = own(est.persist(StorageLevel.MEMORY_AND_DISK))
             cand_ids = (
                 est.select(F.col("id_a").alias("id"))
                 .unionByName(est.select(F.col("id_b").alias("id")))
@@ -610,7 +610,7 @@ def _exact_verify(
         # the shingles are already computed (shared with the signature
         # stage), so pruning buys only a smaller join side, not skipped
         # shingle work
-        est = register_persisted(est.persist(StorageLevel.MEMORY_AND_DISK))
+        est = own(est.persist(StorageLevel.MEMORY_AND_DISK))
         cand_ids = (
             est.select(F.col("id_a").alias("id"))
             .unionByName(est.select(F.col("id_b").alias("id")))
@@ -692,7 +692,7 @@ def minhash_lsh_duplicates_incremental(
     """
     from pyspark import StorageLevel
 
-    sh_new = register_persisted(
+    sh_new = own(
         _spread(new_df)
         .select(
             F.col(id_col).alias("id"),
@@ -709,7 +709,7 @@ def minhash_lsh_duplicates_incremental(
     # persisted for the same two-sided-self-join reason as
     # minhash_lsh_duplicates: without it the batch is re-hashed (and the
     # index re-read) once per join side
-    union_banded = register_persisted(_cap_buckets(
+    union_banded = own(_cap_buckets(
         index.select("id", "sig", "band", "bucket").withColumn("__new", F.lit(False)).unionByName(new_banded),
         max_bucket_size,
     ).persist(StorageLevel.MEMORY_AND_DISK))
@@ -752,7 +752,7 @@ def minhash_lsh_duplicates_incremental(
         history_texts.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
     )
     if prune_verify_texts:
-        est = register_persisted(est.persist(StorageLevel.MEMORY_AND_DISK))
+        est = own(est.persist(StorageLevel.MEMORY_AND_DISK))
         cand_ids = (
             est.select(F.col("id_a").alias("id"))
             .unionByName(est.select(F.col("id_b").alias("id")))
@@ -892,7 +892,7 @@ def simhash_duplicates(
     sigs = votes.select("id", F.expr(f"CAST({terms} AS BIGINT)").alias("sig"))
     from pyspark import StorageLevel
 
-    chunks = register_persisted(sigs.select(
+    chunks = own(sigs.select(
         "id",
         "sig",
         F.explode(
@@ -1137,7 +1137,7 @@ def _ppjoin_index(
     # collapse, so the aggregate exchange always carried every
     # (id, rank) row anyway.
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    sorted_docs = register_persisted(
+    sorted_docs = own(
         exploded.join(ranks, "tok")
         .repartition(parallelism, "id")
         .groupBy("id")
@@ -1149,7 +1149,7 @@ def _ppjoin_index(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     prefix_len = F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")).cast("int") + 1
-    postings = register_persisted(
+    postings = own(
         sorted_docs.select(
             "id",
             "sz",
@@ -1438,7 +1438,7 @@ def bottomk_sketch_pairs(
 
     # persisted: postings feed both self-join sides (same recompute trap
     # as the minhash band index — the md5 sketch would be built twice)
-    posts = register_persisted(
+    posts = own(
         sk.select("id", F.explode("sketch").alias("h")).persist(
             StorageLevel.MEMORY_AND_DISK
         )

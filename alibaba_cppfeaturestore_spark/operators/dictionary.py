@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .ranks import persist_scope, two_phase_rank
+from ..resources import scope
+from .ranks import two_phase_rank
 
 
 def _local_dictionary(spark: SparkSession, values, dtype: T.DataType) -> DataFrame:
@@ -62,7 +63,7 @@ def fit_dictionaries(df: DataFrame, columns: list[str]) -> dict[str, DataFrame]:
     ck): inside grouping set i every other column is NULL, so each slice
     keeps its exact (count desc, value asc, NULLS FIRST) order, and a
     column's index is its rank minus the first rank of its set. The rank
-    runs inside ``persist_scope()``, so the fit leaves no cached blocks.
+    runs inside ``resources.scope()``, so the fit leaves no cached blocks.
 
     Eager: the ranked vocabularies are collected once, through Arrow, as
     one row of k ``collect_list(struct(c_i, rank))`` arrays — Σ|vocab_i|
@@ -75,7 +76,7 @@ def fit_dictionaries(df: DataFrame, columns: list[str]) -> dict[str, DataFrame]:
         F.count("*").alias("cnt"), F.grouping_id().alias("__gid")
     )
     dtypes = [f.dataType for f in agg.schema.fields[:k]]
-    with persist_scope():
+    with scope():
         ranked = two_phase_rank(agg, [F.col("__gid"), (-F.col("cnt")).cast("long"), *cols], rank_col="__rank")
         # grouping_id bit j (MSB-first over the grouping columns) is set
         # when column j is aggregated away → the {c_i}-only set has every

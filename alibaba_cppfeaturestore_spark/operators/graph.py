@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 from pyspark.storagelevel import StorageLevel
 
-from .ranks import register_persisted
+from ..resources import free, own
 
 
 def connected_components(
@@ -62,10 +62,9 @@ def connected_components(
     # every iteration's join+aggregate would inherit near-serial
     # partitioning from the cache.
     parallelism = edges.sparkSession.sparkContext.defaultParallelism
-    # registered AND self-unpersisted below: the registry is the safety
-    # net for exception paths; the in-function unpersist stays the fast
-    # path (double-unpersist is a no-op)
-    sym = register_persisted(
+    # registered AND freed below: the registry is the safety net for
+    # exception paths; the in-function free stays the fast path
+    sym = own(
         e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
@@ -76,7 +75,7 @@ def connected_components(
     numeric = isinstance(e.schema["src"].dataType, NumericType)
 
     def _checkpoint(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if reliable else df.localCheckpoint()
+        return own(df.checkpoint() if reliable else df.localCheckpoint())
 
     labels = _checkpoint(
         sym.select(F.col("src").alias("id")).distinct().withColumn("lbl", F.col("id"))
@@ -112,18 +111,19 @@ def connected_components(
                 .count()
                 > 0
             )
+        free(labels)  # superseded by the materialized new_labels
         labels = new_labels
         if not changed:
             break
     else:
-        sym.unpersist()
+        free(sym)
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             "iterations — component diameter exceeds the cap; raise "
             "max_iterations"
         )
 
-    sym.unpersist()
+    free(sym)
     return labels.select("id", F.col("lbl").alias("component"))
 
 
@@ -202,7 +202,7 @@ def pagerank_fixedpoint(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
-    nodes = register_persisted(
+    nodes = own(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
@@ -237,7 +237,7 @@ def pagerank_fixedpoint(
         )
         # 25-iteration-deep plans over tiny tables still re-optimize the
         # whole tree each round; truncate lineage like connected_components
-        rank = rank.localCheckpoint(eager=False)
+        rank = own(rank.localCheckpoint(eager=False))
     return rank
 
 
@@ -261,10 +261,10 @@ def bfs_min_hops(
     """
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
     spark = edges.sparkSession
-    visited = spark.createDataFrame([(source, 0)], "node long, hops int").localCheckpoint()
+    visited = own(spark.createDataFrame([(source, 0)], "node long, hops int").localCheckpoint())
     frontier = visited
     for hop in range(1, max_hops + 1):
-        nxt = (
+        nxt = own(
             frontier.join(e, frontier.node == e.src)
             .select(F.col("dst").alias("node"))
             .distinct()
@@ -274,8 +274,10 @@ def bfs_min_hops(
         )
         if nxt.isEmpty():
             break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
+        merged = own(visited.unionByName(nxt).localCheckpoint())
+        free(visited)  # both superseded by the materialized nxt and merge
+        free(frontier)
+        visited, frontier = merged, nxt
     return visited
 
 

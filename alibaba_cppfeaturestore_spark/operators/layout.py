@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..resources import own
+
 
 def zorder_col(x: Column, y: Column, bits: int = 16) -> Column:
     """Morton-interleave the low ``bits`` bits of two non-negative
@@ -115,7 +117,7 @@ def assign_stable_ids(
     # RangePartitioner re-samples per execution. (Production id
     # assignment materializes the ranged table anyway — ids are an
     # artifact you write once, not a view you recompute.)
-    ranged = (
+    ranged = own(
         df.repartitionByRange(num_partitions, *cols)
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint()

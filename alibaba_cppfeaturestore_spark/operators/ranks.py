@@ -40,6 +40,11 @@ window hash partitioning) plus three tiny broadcast joins; no
 (``__scalar_`` contract). Bucket sizes ≈ n/B with binomial variance;
 skew degrades balance, never correctness.
 
+Lifecycle: the persisted keyed input belongs to the session resource
+registry (``resources.py``); the harness's ``release()`` or a caller's
+``scope()`` frees it once the ranked output has materialized.
+``release_persisted`` is kept here as an alias of ``resources.release``.
+
 No reference parity: the reference's StringIndexer fit
 (``batch_process_Silver_to_Gold.py:106-130``) materializes vocab ranks
 on a single node; this is the distributed re-expression its 100 TB
@@ -48,72 +53,15 @@ version needs (``operators/dictionary.py`` consumes it).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..resources import own, release
+
 _KEY, _BKT, _OFF = "__tpr_key", "__tpr_bkt", "__tpr_off"
 
-# DataFrames persisted by two_phase_rank(persist=True). The output is
-# lazy, so the operator cannot know when its consumer materializes —
-# unpersisting inside would just turn the 4-subtree reuse back into 4
-# scans. Instead every cache is registered here and the HARNESS (bench,
-# driver_sim — the places that know an action just completed) calls
-# release_persisted() between queries. Without that call the blocks
-# live for the session (documented leak, bounded by aggregate sizes).
-_PERSISTED: list[DataFrame] = []
-
-
-def register_persisted(df: DataFrame) -> DataFrame:
-    """Public registration point for caller-persisted DataFrames (e.g. a
-    catalog entry that persists an aggregate itself and ranks it with
-    ``persist=False``): the next ``release_persisted()`` unpersists it
-    alongside two_phase_rank's own caches. Returns ``df`` for chaining."""
-    _PERSISTED.append(df)
-    return df
-
-
-def release_persisted(blocking: bool = False) -> int:
-    """Unpersist every DataFrame two_phase_rank cached since the last
-    call; returns how many were released. Safe to call at any time —
-    a consumer materialized later simply recomputes (hash-sampled
-    boundaries are row-local, so recomputation is value-identical).
-
-    This is a GLOBAL sweep for single-threaded harnesses (bench,
-    driver_sim): it releases every registered cache, including ones a
-    concurrent query on the same session still needs (they'd silently
-    recompute). Interleaved callers should wrap their query in
-    ``persist_scope()`` and release only their own caches."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist(blocking=blocking)
-    return n
-
-
-@contextmanager
-def persist_scope(blocking: bool = False):
-    """Scoped alternative to the global ``release_persisted()`` sweep for
-    callers sharing a session with other live queries: on exit, unpersist
-    ONLY the caches registered inside the ``with`` block, leaving caches
-    other queries registered (before or concurrently outside this scope)
-    untouched. Yields nothing; registration stays implicit via
-    ``two_phase_rank(persist=True)`` / ``register_persisted``.
-
-    Caveat: Spark's cache manager keys on the ANALYZED PLAN, so if two
-    scopes persist plan-identical DataFrames they share one cache entry
-    and either scope's exit drops it for both (the survivor recomputes —
-    correct, just slower). Scoping isolates distinct plans, which is the
-    realistic interleaved-queries case."""
-    before = {id(df) for df in _PERSISTED}
-    try:
-        yield
-    finally:
-        own = [df for df in _PERSISTED if id(df) not in before]
-        _PERSISTED[:] = [df for df in _PERSISTED if id(df) in before]
-        for df in own:
-            df.unpersist(blocking=blocking)
+release_persisted = release  # the name perfbench/ imports
 
 
 def _wide_type(dt: T.DataType) -> T.DataType:
@@ -158,19 +106,18 @@ def two_phase_rank(
     4×; at 100 TB that difference dominates everything else here).
     Correctness never depends on it: hash sampling is row-local, so
     re-derivations are identical. Pass False only when the input is
-    already cached or trivially cheap. Each cache is registered in the
-    module-level ``_PERSISTED`` list; call ``release_persisted()`` once
-    the consumer has materialized (bench.py / tools/driver_sim.py do
-    this between queries) so blocks don't accumulate across a long
-    session.
+    already cached or trivially cheap. The cache is registered with the
+    session resource registry (``resources.own``); ``resources.release()``
+    once the consumer has materialized (bench.py / tools/driver_sim.py
+    do this between queries), or a ``resources.scope()`` around the
+    work, frees it, so blocks don't accumulate across a long session.
     """
     running = running or {}
     keyed = df.withColumn(_KEY, F.struct(*[c.alias(f"k{i}") for i, c in enumerate(key)]))
     if persist:
         from pyspark import StorageLevel
 
-        keyed = keyed.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED.append(keyed)
+        keyed = own(keyed.persist(StorageLevel.MEMORY_AND_DISK))
 
     n = keyed.agg(F.count(F.lit(1)).cast("bigint").alias("__scalar_n"))
     mod = F.greatest(F.lit(1).cast("bigint"), (F.col("__scalar_n") / F.lit(n_buckets)).cast("bigint"))

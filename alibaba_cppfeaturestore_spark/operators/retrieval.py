@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text import tokens
-from .ranks import register_persisted
+from ..resources import own
 
 # Lucene-standard BM25 parameters.
 BM25_K1 = 1.2
@@ -294,7 +294,7 @@ def unigram_logprob_scores(
     exploded = corpus.select(
         F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("tok")
     )
-    unigrams = register_persisted(
+    unigrams = own(
         exploded.groupBy("tok")
         .agg(F.count("*").alias("cnt"))
         .persist(StorageLevel.MEMORY_AND_DISK)

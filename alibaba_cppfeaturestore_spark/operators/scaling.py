@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .ranks import register_persisted
+from ..resources import own
 
 
 def fit_standard_scaler(df: DataFrame, columns: list[str]) -> dict[str, dict[str, float]]:
@@ -178,7 +178,7 @@ def fit_target_encoding(
     # on decimal-derived operands: same exact inputs → same bits.
     lab = F.col(label_col).cast("double")
     dec = F.when(~F.isnan(lab), lab.try_cast("decimal(18,6)"))
-    agg = register_persisted(
+    agg = own(
         df.rollup(F.col(cat_col).alias("value"))
         .agg(
             F.sum(dec).alias("s"),

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .ranks import register_persisted
+from ..resources import own
 
 
 def _mg_summarize(capacity: int):
@@ -95,7 +95,7 @@ def heavy_hitters(
     toks = tokens.select(F.col(token_col).alias("token"))
     # ONE sketch scan yields both the candidate union and the exact total
     # (marker rows), then ONE recount scan — the two-pass structural floor
-    summary = register_persisted(toks.mapInPandas(
+    summary = own(toks.mapInPandas(
         _mg_summarize(capacity), schema="token string, part_n long"
     ).persist())
     candidates = summary.filter(F.col("token").isNotNull()).select("token").distinct()

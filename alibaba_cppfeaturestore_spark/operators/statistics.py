@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ranks import register_persisted
+from ..resources import own
 
 DEC = "decimal(18,6)"
 def _half():
@@ -160,7 +160,7 @@ def mad_outliers(
     # the raw isNotNull stays FIRST so it pushes to the parquet scan
     # (plan-asserted); the finite-domain filter on the derived column
     # then drops the (rare) specials scan-side before any shuffle
-    dec = register_persisted(
+    dec = own(
         df.filter(vcol.isNotNull())
         .select(
             *group_cols,
@@ -170,7 +170,7 @@ def mad_outliers(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     med = _exact_median(dec, group_cols, "_v", "_med", "decimal(24,8)", "decimal(22,7)")
-    dev = register_persisted(
+    dev = own(
         dec.join(F.broadcast(med), group_cols)
         .withColumn("_dev", F.abs(F.col("_v") - F.col("_med")).cast("decimal(27,8)"))
         .persist(StorageLevel.MEMORY_AND_DISK)

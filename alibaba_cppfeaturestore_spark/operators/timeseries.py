@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ranks import register_persisted
+from ..resources import own
 
 # measures we can re-aggregate losslessly from partial state
 _REAGG = {"sum", "count", "min", "max"}
@@ -106,7 +106,7 @@ def rollup_cascade(
     # tests/test_txlog_incremental.py::test_rollup_cascade_scans_raw_once.
     tiers = [finest]
     for width in levels[1:]:
-        prev = register_persisted(tiers[-1].persist(StorageLevel.MEMORY_AND_DISK))
+        prev = own(tiers[-1].persist(StorageLevel.MEMORY_AND_DISK))
         tiers[-1] = prev
         tiers.append(
             prev.withColumn("__bucket", time_bucket(F.col("__bucket"), width))

@@ -46,7 +46,7 @@ from ..operators.aggregates import latest_per_key, top_k_per_group, vocab_sizes
 from ..operators.dictionary import fit_dictionary
 from ..operators import joins as JN
 from ..operators.joins import anti_join_not_in, asof_join, online_lookup, semi_join_in
-from ..operators.ranks import register_persisted
+from ..resources import memo, own, tempdir
 from .views import load_table
 
 
@@ -118,42 +118,27 @@ _DOCS_UNIQUE_SQL = """documents_u AS (
 )"""
 
 
-# Key-uniqueness statistic, memoized per (table file, mtime). The
-# canonicalizing window below is the IDENTITY whenever the id column is
-# already unique — the overwhelmingly common case — but Spark still pays
-# its full-row shuffle + md5 pass to prove it. A single-column
-# count/count_distinct aggregate (column-pruned parquet scan, map-side
-# partial agg) answers the question once per dataset for ~0.1 s; real
-# engines keep exactly this NDV statistic in the catalog. The memo keys
-# on file mtime so a regenerated dataset re-probes.
-_KEY_UNIQUE_MEMO: dict[tuple, bool] = {}
-
-
 def _key_is_unique(df: DataFrame, sf_dir: str, table: str, col: str) -> bool:
-    import os
+    """Whether ``col`` is a unique, NULL-free key of ``table``: when it is,
+    the canonicalizing window below is the IDENTITY, but Spark still pays
+    its full-row shuffle + md5 pass to prove it. A single-column
+    count/count_distinct aggregate answers once per dataset for ~0.1 s
+    (``resources.memo``, re-probed when the file is rewritten); real
+    engines keep exactly this NDV statistic in the catalog.
 
-    path = f"{sf_dir.rstrip('/')}/{table}.parquet"
-    try:
-        key = (path, os.path.getmtime(path))
-    except OSError:
-        key = None
-    if key is None or key not in _KEY_UNIQUE_MEMO:
-        # n = TOTAL row count (count(1)), NOT count(col): both count(col)
-        # and count_distinct(col) ignore NULL keys, so a table with
-        # several NULL-id rows and otherwise-unique ids would probe as
-        # "unique" and skip the canonicalization window — while the
-        # DuckDB oracle's window groups NULLs into one partition and
-        # keeps exactly one. With the total count, n == nd also implies
-        # zero NULL keys (count_distinct < count(1) whenever any key is
-        # NULL or duplicated), so the skip is taken only when the window
-        # is provably the identity.
-        n, nd = df.agg(
-            F.count(F.lit(1)).alias("n"), F.count_distinct(col).alias("nd")
-        ).first()
-        if key is None:
-            return n == nd
-        _KEY_UNIQUE_MEMO[key] = bool(n == nd)
-    return _KEY_UNIQUE_MEMO[key]
+    n = TOTAL row count (count(1)), NOT count(col): both count(col) and
+    count_distinct(col) ignore NULL keys, so a table with several
+    NULL-id rows and otherwise-unique ids would probe as "unique" and
+    skip the window — while the DuckDB oracle's window groups NULLs into
+    one partition and keeps exactly one. With the total count, n == nd
+    also implies zero NULL keys, so the skip is taken only when the
+    window is provably the identity."""
+
+    def probe() -> bool:
+        n, nd = df.agg(F.count(F.lit(1)).alias("n"), F.count_distinct(col).alias("nd")).first()
+        return bool(n == nd)
+
+    return memo(df.sparkSession, [f"{sf_dir.rstrip('/')}/{table}.parquet"], ("key_unique", col), probe)
 
 
 def _docs_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2987,58 +2972,22 @@ def json_codec_roundtrip(spark, sf_dir):
 
 
 
-# (mtime_ns, stage dir, schema) per SOURCE PATH: the staging copy and the
-# footer schema read are INPUT PREP for the directory-source shim, not
-# computation — re-copying the same bytes and re-reading the same footer
-# per bench attempt only re-measured the shim (~0.2 s/attempt). Every
-# stream run still reads and processes the staged parquet from scratch.
-# r14 hygiene (r13 verdict item 5 + advice): keyed by path alone with
-# mtime_ns in the value, so a regenerated dataset REPLACES its entry
-# (and its staged dir is removed) instead of leaking one tempdir per
-# (path, mtime); a memo hit re-validates the staged file's existence
-# (an OS tmp reaper would otherwise make later attempts silently stream
-# 0 files); all staged dirs are removed at interpreter exit.
-_STREAM_STAGE_MEMO: dict = {}
-_STREAM_STAGE_ATEXIT_ARMED = False
-
-
-def _stream_stage_cleanup():
-    import shutil
-
-    while _STREAM_STAGE_MEMO:
-        _, (_, stage, _) = _STREAM_STAGE_MEMO.popitem()
-        shutil.rmtree(stage, ignore_errors=True)
-
-
 def _stream_events(spark, sf_dir):
-    """Bounded file-stream over events: the file-stream source requires a
-    DIRECTORY, so stage the single parquet into a temp dir (tiny, test-only
-    shim — production streams read Kafka or a landing directory)."""
-    import atexit
+    """Bounded file-stream over events. The file-stream source reads a
+    DIRECTORY, so a single-file ``events.parquet`` streams from ``sf_dir``
+    through a glob filter admitting only that file (production streams
+    read Kafka or a landing directory). The footer schema read is input
+    prep, memoized per file."""
     import os
-    import shutil
-    import tempfile
 
-    global _STREAM_STAGE_ATEXIT_ARMED
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = os.path.join(sf_dir, "events.parquet")
-    mtime_ns = os.stat(src).st_mtime_ns
-    hit = _STREAM_STAGE_MEMO.get(src)
-    if hit is not None and (
-        hit[0] != mtime_ns
-        or not os.path.exists(os.path.join(hit[1], "events.parquet"))
-    ):
-        shutil.rmtree(hit[1], ignore_errors=True)  # stale or reaped stage
-        hit = None
-    if hit is None:
-        stage = tempfile.mkdtemp(prefix="events_stream_")
-        shutil.copy(src, os.path.join(stage, "events.parquet"))
-        _STREAM_STAGE_MEMO[src] = (mtime_ns, stage, spark.read.parquet(src).schema)
-        if not _STREAM_STAGE_ATEXIT_ARMED:
-            atexit.register(_stream_stage_cleanup)
-            _STREAM_STAGE_ATEXIT_ARMED = True
-    _, stage, raw_schema = _STREAM_STAGE_MEMO[src]
-    stream = spark.readStream.schema(raw_schema).parquet(stage)
+    raw_schema = memo(spark, [src], ("schema",), lambda: spark.read.parquet(src).schema)
+    stream = spark.readStream.schema(raw_schema)
+    if os.path.isdir(src):  # a Spark-written table directory streams as is
+        stream = stream.parquet(src)
+    else:
+        stream = stream.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
     # ts arrives as INT64-nanos (legacy testdata, nanosAsLong), as
     # TIMESTAMP_NTZ (plain parquet timestamp), or as TIMESTAMP — normalize
     # to TIMESTAMP here: watermarks reject NTZ event time
@@ -3122,14 +3071,13 @@ def stream_online_upsert(spark, sf_dir):
     """ST6: foreachBatch latest-per-key upsert into the online store (local
     parquet adapter standing in for Redis), then read the store back."""
     import os
-    import tempfile
 
     from ..streaming.pipeline import OnlineStore, run_stream_upsert
 
     stream = _stream_events(spark, sf_dir).select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
-    workdir = tempfile.mkdtemp(prefix="online_store_")
+    workdir = tempdir("online_store_")
     store = OnlineStore(
         os.path.join(workdir, "store"),
         keys=["user_id"],
@@ -3193,11 +3141,10 @@ def stream_asof_enrich(spark, sf_dir):
     request stream; a store beyond broadcast size flips to a shuffled
     hash join by removing one hint."""
     import os
-    import tempfile
 
     from ..streaming.pipeline import OnlineStore, run_stream_enrich, run_stream_upsert
 
-    workdir = tempfile.mkdtemp(prefix="asof_enrich_")
+    workdir = tempdir("asof_enrich_")
     views = (
         _stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -3281,7 +3228,6 @@ def write_ignore_roundtrip(spark, sf_dir):
     n_events. Decimal-exact sum on both sides (associativity-proof, see
     timeseries_rollup_cascade)."""
     import os
-    import tempfile
 
     from ..sources.writers import write_table
 
@@ -3293,7 +3239,7 @@ def write_ignore_roundtrip(spark, sf_dir):
         # in-domain magnitudes (r12 decimal-edge find, seed 491)
         F.round(F.sum(_dec_value()), 2).cast("double").alias("total_value"),
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="ignore_write_"), "summary")
+    path = os.path.join(tempdir("ignore_write_"), "summary")
     write_table(summary, path, mode="ignore")
     corrupted = summary.withColumn("n_events", F.col("n_events") * 2)
     write_table(corrupted, path, mode="ignore")  # no-op: target exists
@@ -3311,7 +3257,7 @@ def write_ignore_roundtrip(spark, sf_dir):
 def stream_checkpoint_restart(spark, sf_dir):
     """ST3: checkpointed exactly-once file sink proven through a RESTART,
     driver-visible (reference stream_silver_to_gold.py:144's
-    checkpointLocation). The checkpointed append run processes the staged
+    checkpointLocation). The checkpointed append run processes the events
     source once (availableNow); a second start from the SAME checkpoint
     over the SAME source directory must replay zero batches — file-source
     offsets and the sink's _spark_metadata commit log live in the
@@ -3319,26 +3265,12 @@ def stream_checkpoint_restart(spark, sf_dir):
     exactly-once held: a lost/ignored checkpoint would double every row
     (n_events = 2 × n_distinct)."""
     import os
-    import shutil
-    import tempfile
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    workdir = tempfile.mkdtemp(prefix="chk_restart_")
-    stage = os.path.join(workdir, "src")
-    os.makedirs(stage)
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stage, "events.parquet"),
-    )
-    schema = spark.read.parquet(stage).schema
+    workdir = tempdir("chk_restart_")
     sink = os.path.join(workdir, "sink")
     chk = os.path.join(workdir, "chk")
     for _ in range(2):  # initial run + restart from the same checkpoint
-        stream = (
-            spark.readStream.schema(schema)
-            .parquet(stage)
-            .select("event_id", "event_type")
-        )
+        stream = _stream_events(spark, sf_dir).select("event_id", "event_type")
         q = (
             stream.writeStream.format("parquet")
             .option("path", sink)
@@ -3387,7 +3319,6 @@ def txlog_time_travel(spark, sf_dir):
     version 2 = the overwrite. Any torn commit, non-atomic overwrite,
     honored-ignore, or wrong time-travel fold breaks a version's rows."""
     import os
-    import tempfile
 
     from ..sources.txlog import TxTable
 
@@ -3395,7 +3326,7 @@ def txlog_time_travel(spark, sf_dir):
     by_type = lambda df: df.groupBy("event_type").agg(  # noqa: E731
         F.count("*").alias("n_events")
     )
-    t = TxTable(os.path.join(tempfile.mkdtemp(prefix="txlog_"), "table"))
+    t = TxTable(os.path.join(tempdir("txlog_"), "table"))
     assert t.commit(by_type(ev.filter(F.col("event_id") % 2 == 0)), "append") == 0
     # != 0, not == 1: a NEGATIVE odd id's sign-following remainder is -1,
     # so == 1 silently dropped those rows from the append and v1 stopped
@@ -3454,12 +3385,11 @@ def txlog_merge_upsert(spark, sf_dir):
     source rows. Wrong anti-join semantics, an honored delete, or a
     non-atomic version swap each break the row set."""
     import os
-    import tempfile
 
     from ..sources.txlog import TxTable
 
     ev = _t(spark, sf_dir, "events")
-    t = TxTable(os.path.join(tempfile.mkdtemp(prefix="txmerge_"), "table"))
+    t = TxTable(os.path.join(tempdir("txmerge_"), "table"))
     base = (
         ev.filter(F.col("event_id") % 2 == 0)
         .groupBy("user_id")
@@ -3512,13 +3442,12 @@ def txlog_checkpointed_read(spark, sf_dir):
     pointer) — and the oracle recomputes each from raw events, so a
     checkpoint that folded the wrong live set breaks the rows."""
     import os
-    import tempfile
 
     from ..sources.txlog import TxTable
 
     ev = _t(spark, sf_dir, "events")
     t = TxTable(
-        os.path.join(tempfile.mkdtemp(prefix="txlog_ckpt_"), "table"),
+        os.path.join(tempdir("txlog_ckpt_"), "table"),
         checkpoint_interval=4,
     )
     for i in range(10):
@@ -5070,7 +4999,7 @@ def aliccp_silver_to_gold_e2e(spark, sf_dir):
     from ..operators.dictionary import fit_dictionaries
     from .aliccp import silver_to_gold
 
-    silver = register_persisted(_synth_silver(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK))
+    silver = own(_synth_silver(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK))
     dicts = fit_dictionaries(silver, ["user_group", "item_category", "user_age"])
     gold = silver_to_gold(
         silver, dicts, clock=F.to_timestamp(F.lit(_GOLD_CLOCK))
@@ -5176,7 +5105,7 @@ def corpus_mixture_resample(spark, sf_dir):
     # each consumer would rescan the corpus
     from pyspark import StorageLevel
 
-    counts = register_persisted(
+    counts = own(
         docs.groupBy("lang")
         .agg(F.count("*").cast("double").alias("c"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -7160,7 +7089,7 @@ def interval_overlap_sessions(spark, sf_dir):
     ).otherwise(0)
     from pyspark import StorageLevel
 
-    spans = register_persisted(
+    spans = own(
         ev.withColumn("new_session", new_session)
         .withColumn("session_id", F.sum("new_session").over(cum))
         .groupBy("user_id", "session_id")
@@ -7310,7 +7239,6 @@ def jdbc_roundtrip_derby(spark, sf_dir):
     write_ignore_roundtrip arithmetic); Derby DOUBLE round-trips IEEE
     bits unchanged."""
     import os
-    import tempfile
 
     from ..sources.writers import write_jdbc
 
@@ -7332,7 +7260,7 @@ def jdbc_roundtrip_derby(spark, sf_dir):
             ).alias("total_value"),
         )
     )
-    url = f"jdbc:derby:{os.path.join(tempfile.mkdtemp(prefix='jdbc_rt_'), 'db')};create=true"
+    url = f"jdbc:derby:{os.path.join(tempdir('jdbc_rt_'), 'db')};create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     write_jdbc(summary, url, "type_summary", mode="overwrite", properties=props)
     return spark.read.jdbc(url, "type_summary", properties=props).select(
@@ -7355,7 +7283,6 @@ def partition_pruned_read(spark, sf_dir):
     test), and the values match a direct filter of the source. At scale
     this is the difference between scanning 100 TB and scanning the one
     partition the query names."""
-    import tempfile
 
     from ..sources.writers import write_table
 
@@ -7366,7 +7293,7 @@ def partition_pruned_read(spark, sf_dir):
         "value",  # double: parquet write/read preserves the IEEE bits
         "event_type",
     )
-    path = tempfile.mkdtemp(prefix="part_write_") + "/events_by_type"
+    path = tempdir("part_write_") + "/events_by_type"
     write_table(ev, path, partition_by=["event_type"])
     return (
         # declared schema: partition-layout readers must not depend on
@@ -7572,12 +7499,11 @@ def schema_evolution_union_read(spark, sf_dir):
     by name, so old files surface NULL values instead of failing or
     truncating to the first footer's schema. Oracle = the equivalent
     NULL-padded UNION ALL over the source."""
-    import tempfile
 
     from ..sources.readers import read_parquet_evolving
 
     ev = _t(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="schema_evo_")
+    base = tempdir("schema_evo_")
     old, new = base + "/batch_v1", base + "/batch_v2"
     ev.filter(F.col("event_id") % 2 == 0).select("event_id", "user_id").write.parquet(old)
     ev.filter(F.col("event_id") % 2 == 1).select("event_id", "user_id", "value").write.parquet(new)
@@ -8027,7 +7953,7 @@ def sketch_countmin_freqs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     # toks feeds the exact-count branch AND the sketch build — persist
     # the narrow projection so documents scans once
-    toks = register_persisted(
+    toks = own(
         docs.select(F.explode(TX.tokens(F.col("text"))).alias("tok")).persist(StorageLevel.MEMORY_AND_DISK)
     )
     true_c = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("true_count"))
@@ -9112,7 +9038,7 @@ def rfm_customer_segments(spark, sf_dir):
     # persist=False — the two quintiles differ only in the rank key, so
     # letting each two_phase_rank cache its own keyed copy (the pre-r08
     # shape) double-cached identical data.
-    rfm = register_persisted(  # released by harness release_persisted()
+    rfm = own(  # released by harness release_persisted()
         o.groupBy("o_custkey")
         .agg(
             F.max("o_orderdate").alias("last_order"),
@@ -9715,7 +9641,6 @@ def txlog_wap_publish(spark, sf_dir):
     wedged the pipeline on exactly that day). The read-back of the
     published table matches the direct batch oracle iff exactly the
     audited commit became visible."""
-    import tempfile
 
     from ..sources.txlog import TxTable
 
@@ -9737,7 +9662,7 @@ def txlog_wap_publish(spark, sf_dir):
     )
     corrupt = good.unionByName(poison)
 
-    root = tempfile.mkdtemp(prefix="wap_")
+    root = tempdir("wap_")
     published = TxTable(f"{root}/published")
 
     def audit_and_publish(staged_df) -> bool:
@@ -10476,7 +10401,7 @@ def quality_bigram_logprob(spark, sf_dir):
     # toks feeds THREE consumers (bigrams, unigram counts, vocab size);
     # persist the narrow projection so the raw corpus scans once (the
     # scan-economy discipline, cf. unigram_logprob_scores)
-    toks = register_persisted(
+    toks = own(
         docs.select("doc_id", F.posexplode(TX.tokens(F.col("text"))).alias("pos", "tok"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

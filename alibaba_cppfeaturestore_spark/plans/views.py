@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..resources import memo
+
 TESTDATA_TABLES = [
     "region",
     "nation",
@@ -34,37 +36,14 @@ TESTDATA_TABLES = [
 _NANOS_TS_COLUMNS: dict[str, list[str]] = {"events": ["ts"]}
 
 
-# Analyzed-plan memo, keyed on (applicationId, session identity, file
-# path) with the file's mtime_ns stored IN the value. This caches
-# PLANS, never results: every action on the returned DataFrame still
-# scans the parquet. What it removes is the per-call driver work of
-# `spark.read.parquet` — file listing, footer/schema read, analysis
-# (~60-150 ms per table per query build at the bench's scale; the
-# bench re-builds every query per timed attempt, so the tax repeated
-# ~3x per query x |tables|). Real engines keep exactly this state in
-# the session catalog (the guide's §6 file-listing-cache point);
-# `register_views` has always done the same thing via temp views.
-#
-# r14 hygiene (r13 verdict item 5 + advice):
-# - mtime lives in the VALUE, so a regenerated dataset REPLACES its
-#   entry instead of growing the dict one entry per (path, mtime) —
-#   memo size is bounded by |sessions| x |paths| regardless of how
-#   often data is rewritten (unit-tested).
-# - id(spark) joins the key: sibling sessions from spark.newSession()
-#   share one applicationId but have session-scoped confs and temp-view
-#   isolation, so a memo hit must never hand one session a DataFrame
-#   bound to another.
-# - st_mtime_ns (not getmtime's float seconds): second-granularity
-#   filesystems would otherwise serve a stale plan for a same-second
-#   regeneration.
-# - _TABLE_MEMO_CAP backstops pathological session churn: the memo is
-#   cleared outright when it would exceed the cap (rebuilding a plan is
-#   ~100 ms; unbounded driver growth is the real hazard).
-_TABLE_MEMO: dict[tuple, tuple[int, DataFrame]] = {}
-_TABLE_MEMO_CAP = 256
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One TESTDATA table as a DataFrame. The analyzed plan is memoized
+    per session and file (``resources.memo``): PLANS, never results —
+    every action still scans the parquet. What it saves is the per-call
+    driver work of ``spark.read.parquet`` (file listing, footer read,
+    analysis: ~60-150 ms per table per query build at the bench's
+    scale); real engines keep exactly this state in the session
+    catalog, as ``register_views``' temp views do."""
     nanos_cols = _NANOS_TS_COLUMNS.get(name, [])
     if nanos_cols:
         # Runtime-settable; needed because the driver may hand us a session
@@ -72,25 +51,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # consulted at execution, and a caller may have flipped it back.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        key = (spark.sparkContext.applicationId, id(spark), path)
-        mtime_ns = os.stat(path).st_mtime_ns
-    except Exception:
-        key = None
-        mtime_ns = -1
-    if key is not None:
-        hit = _TABLE_MEMO.get(key)
-        if hit is not None and hit[0] == mtime_ns:
-            return hit[1]
-    df = spark.read.parquet(path)
-    for c in nanos_cols:
-        if dict(df.dtypes).get(c) == "bigint":
-            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
-    if key is not None:
-        if key not in _TABLE_MEMO and len(_TABLE_MEMO) >= _TABLE_MEMO_CAP:
-            _TABLE_MEMO.clear()
-        _TABLE_MEMO[key] = (mtime_ns, df)
-    return df
+
+    def read() -> DataFrame:
+        df = spark.read.parquet(path)
+        for c in nanos_cols:
+            if dict(df.dtypes).get(c) == "bigint":
+                df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
+        return df
+
+    return memo(spark, [path], ("table",), read)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -17,8 +17,8 @@ import re
 import sys
 import time
 
-from alibaba_cppfeaturestore_spark.operators.ranks import release_persisted
 from alibaba_cppfeaturestore_spark.plans.catalog import QUERIES
+from alibaba_cppfeaturestore_spark.resources import release
 from alibaba_cppfeaturestore_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -384,11 +384,11 @@ def main() -> None:
     for _ in range(_WARMUP_PASSES):
         for name in headline:
             QUERIES[name].spark(spark, SF_DIR).count()
-            # drop two_phase_rank/catalog caches per warmup query too —
-            # the warmup otherwise accumulates every entry's persisted
-            # blocks at once, and the measured pass inherits the heap
-            # pressure
-            release_persisted()
+            # release the entry's registered resources per warmup query
+            # too — the warmup otherwise accumulates every entry's
+            # persisted blocks at once, and the measured pass inherits
+            # the heap pressure
+            release()
             spark.catalog.clearCache()
     load_pre_measure = round(os.getloadavg()[0], 2)
 
@@ -427,9 +427,9 @@ def main() -> None:
             n = df.count()
             samples.append(time.perf_counter() - t0)
             builds.append(t1 - t0)
-            # clearCache() above already drops the blocks; this empties
-            # two_phase_rank's registry so stale refs don't accumulate.
-            release_persisted()
+            # clearCache() above already drops the cached blocks; this
+            # frees checkpoints and tempdirs and empties the registry.
+            release()
         best = min(samples)
         timings[name] = round(best, 3)
         # Post-adaptive sample spread: the query's own measurement-noise
@@ -485,7 +485,7 @@ def main() -> None:
         t0 = time.perf_counter()
         _canary2_minhash(spark).count()
         c2_samples.append(time.perf_counter() - t0)
-        release_persisted()
+        release()
     canary2 = round(min(c2_samples), 3)
     # canary2's own spread: joins the noise floor when the dual-canary
     # correction flows through it (r13 advice item)

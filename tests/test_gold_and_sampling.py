@@ -129,7 +129,7 @@ def test_fit_leaves_nothing_cached_and_serves_a_stream(spark, tmp_path):
     new batch inside a foreachBatch stream. The fit itself leaves no
     cached blocks and no registered persists, and the stream's encoding
     equals the one taken before the release."""
-    from alibaba_cppfeaturestore_spark.operators import ranks
+    from alibaba_cppfeaturestore_spark import resources
     from alibaba_cppfeaturestore_spark.operators.dictionary import (
         encode_with_dictionaries,
         fit_dictionaries,
@@ -139,13 +139,13 @@ def test_fit_leaves_nothing_cached_and_serves_a_stream(spark, tmp_path):
 
     cols = ["event_type", "user_id"]
     base = load_table(spark, SF, "events").select("event_id", *cols)
-    ranks.release_persisted(blocking=True)
+    resources.release(blocking=True)
     spark.catalog.clearCache()
-    registered = list(ranks._PERSISTED)
+    registered = list(resources._OWNED)
     dicts = fit_dictionaries(base, cols)
     infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     assert len(infos) == 0, [str(x) for x in infos]
-    assert [id(x) for x in ranks._PERSISTED] == [id(x) for x in registered]
+    assert [id(x) for x in resources._OWNED] == [id(x) for x in registered]
 
     src = str(tmp_path / "src")
     batch = base.orderBy("event_id").limit(40).union(
@@ -161,7 +161,7 @@ def test_fit_leaves_nothing_cached_and_serves_a_stream(spark, tmp_path):
     # the encode reads the fitted rows, not a rank lineage
     plan = encode_with_dictionaries(batch, dicts)._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "Window" not in plan, plan
-    ranks.release_persisted(blocking=True)
+    resources.release(blocking=True)
     spark.catalog.clearCache()
     captured = []
     q = (

@@ -277,71 +277,3 @@ def test_null_policy_filters_reach_the_scan(plans):
         "grouped_mode_bucket",
     ]:
         assert "IsNotNull(value)" in plans[n], f"{n}:\n{plans[n]}"
-
-
-def test_table_memo_bounded_and_session_isolated(spark, tmp_path):
-    # r13 verdict item 5 + advice: regenerating a dataset N times holds
-    # the memo size CONSTANT (mtime lives in the value, not the key);
-    # the key carries the session identity so a sibling session never
-    # receives a DataFrame bound to another SparkSession; mtime is
-    # nanosecond-resolution so same-second regenerations re-probe.
-    import os
-    import shutil
-
-    from alibaba_cppfeaturestore_spark.plans import views
-
-    d = tmp_path / "sfmemo"
-    d.mkdir()
-    shutil.copy("/root/testdata/sf0.001/region.parquet", d / "region.parquet")
-    views._TABLE_MEMO.clear()
-    df1 = views.load_table(spark, str(d), "region")
-    assert len(views._TABLE_MEMO) == 1
-    assert views.load_table(spark, str(d), "region") is df1  # memo hit
-    base = os.stat(d / "region.parquet").st_mtime_ns
-    for i in range(5):  # "regenerate" 5 times, sub-second mtime bumps
-        os.utime(d / "region.parquet", ns=(base + i + 1, base + i + 1))
-        dfi = views.load_table(spark, str(d), "region")
-        assert dfi is not df1  # stale plan never served
-        assert len(views._TABLE_MEMO) == 1  # replaced, not accumulated
-    sibling = spark.newSession()
-    df_sib = views.load_table(sibling, str(d), "region")
-    assert df_sib.sparkSession is sibling  # bound to the asking session
-    assert len(views._TABLE_MEMO) == 2  # distinct entry per session
-    # cap backstop: overflow clears rather than growing without bound
-    views._TABLE_MEMO.clear()
-
-
-def test_stream_stage_memo_revalidates_and_replaces(spark, tmp_path):
-    # r13 advice: a reaped/stale staged dir is RE-staged on the next hit
-    # (never silently streaming 0 files), and a regenerated source
-    # replaces its entry and removes the old staged dir.
-    import os
-    import shutil
-
-    from alibaba_cppfeaturestore_spark.plans import catalog as C
-
-    d = tmp_path / "sfstream"
-    d.mkdir()
-    shutil.copy("/root/testdata/sf0.001/events.parquet", d / "events.parquet")
-    src = str(d / "events.parquet")
-    C._STREAM_STAGE_MEMO.pop(src, None)
-    C._stream_events(spark, str(d))
-    _, stage1, _ = C._STREAM_STAGE_MEMO[src]
-    assert os.path.exists(os.path.join(stage1, "events.parquet"))
-    # simulate the OS tmp reaper: memo hit must restage, not stream empty
-    shutil.rmtree(stage1)
-    C._stream_events(spark, str(d))
-    _, stage2, _ = C._STREAM_STAGE_MEMO[src]
-    assert stage2 != stage1 and os.path.exists(os.path.join(stage2, "events.parquet"))
-    # regeneration: entry REPLACED (size constant), old stage dir removed
-    base = os.stat(src).st_mtime_ns
-    for i in range(3):
-        os.utime(src, ns=(base + i + 1, base + i + 1))
-        C._stream_events(spark, str(d))
-    assert sum(1 for k in C._STREAM_STAGE_MEMO if k == src) == 1
-    _, stage3, _ = C._STREAM_STAGE_MEMO[src]
-    assert stage3 != stage2 and not os.path.exists(stage2)
-    # atexit hook is armed exactly once
-    assert C._STREAM_STAGE_ATEXIT_ARMED
-    C._stream_stage_cleanup()
-    assert not os.path.exists(stage3) and len(C._STREAM_STAGE_MEMO) == 0

@@ -135,16 +135,18 @@ def test_plan_has_no_single_partition_window(spark):
 
 
 def test_release_persisted_registry(spark):
-    # persist=True registers the cache; release_persisted unpersists and
-    # empties the registry (the r08 harness contract — bench/driver_sim
-    # call it between queries so blocks don't accumulate)
+    # persist=True registers the cache; release_persisted (the alias of
+    # resources.release that perfbench/ imports) unpersists and empties
+    # the registry (the r08 harness contract — bench/driver_sim call it
+    # between queries so blocks don't accumulate)
+    from alibaba_cppfeaturestore_spark import resources
     from alibaba_cppfeaturestore_spark.operators import ranks
 
     ranks.release_persisted()  # drain anything earlier tests left
     df = spark.createDataFrame(_rows(50, 3), "id long, v long, s string")
     out = two_phase_rank(df, [F.col("v"), F.col("id")], rank_col="rk")
     assert out.count() == 50
-    assert len(ranks._PERSISTED) == 1
+    assert len(resources._OWNED) == 1
     assert ranks.release_persisted() == 1
     assert ranks.release_persisted() == 0  # idempotent, registry empty
     # persist=False registers nothing
@@ -159,90 +161,81 @@ def test_release_persisted_registry(spark):
 
 def test_operator_persists_are_registered(spark, sf_dir):
     # r13 verdict item: every operator-internal persist routes through
-    # ranks.register_persisted, so release_persisted()/persist_scope()
-    # actually cover them — a long-lived session no longer accumulates
-    # MEMORY_AND_DISK blocks until clearCache(). Two witnesses:
-    # the minhash persist (1 shared shingle frame) and the PPJoin index
-    # (sorted_docs + postings), checked end-to-end: after the sweep the
-    # RDD storage list is EMPTY.
+    # the resource registry, so release()/scope() actually cover them —
+    # a long-lived session no longer accumulates MEMORY_AND_DISK blocks
+    # until clearCache(). Two witnesses: the minhash persist (1 shared
+    # shingle frame) and the PPJoin index (sorted_docs + postings),
+    # checked end-to-end: after the sweep the RDD storage list is EMPTY.
+    from alibaba_cppfeaturestore_spark import resources
     from alibaba_cppfeaturestore_spark.operators import dedup as DD
-    from alibaba_cppfeaturestore_spark.operators import ranks
 
-    ranks.release_persisted()
+    resources.release(blocking=True)
     spark.catalog.clearCache()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     assert DD.minhash_lsh_duplicates(docs, num_hashes=8, bands=2).count() >= 0
-    assert ranks.release_persisted(blocking=True) == 1
+    assert resources.release(blocking=True) == 1
     assert DD.ngram_jaccard_pairs_indexed(docs, threshold=0.9).count() >= 0
-    assert ranks.release_persisted(blocking=True) == 2
+    assert resources.release(blocking=True) == 2
     assert DD.simhash_duplicates(docs).count() >= 0
-    assert ranks.release_persisted(blocking=True) == 1
+    assert resources.release(blocking=True) == 1
     # the sweep leaves NO persisted blocks behind (the registry covers
-    # every persist the three operators took)
+    # every persist the three operators took, and every local
+    # checkpoint earlier tests' operators took)
     infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     assert len(infos) == 0, [str(i) for i in infos]
-    # source-level backstop (AST): every .persist(...) call in operators/
-    # and plans/ sits inside a register_persisted(...) call, or is the
-    # variable ranks.py itself appends to _PERSISTED right after
+    # source-level backstop (AST): every .persist(...), .checkpoint(...)
+    # and .localCheckpoint(...) call in operators/ and plans/ sits inside
+    # an own(...) call, and no tempdir is made there except through
+    # resources.tempdir
     import ast
     import pathlib
 
     pkg_dir = pathlib.Path(DD.__file__).parent.parent
     paths = sorted(pkg_dir.glob("operators/*.py")) + sorted(pkg_dir.glob("plans/*.py"))
     assert any(p.name == "catalog.py" for p in paths)
+    def name(call):
+        return getattr(call.func, "attr", getattr(call.func, "id", None))
+
+    n_owned = 0
     for path in paths:
-        tree = ast.parse(path.read_text())
-        reg_spans = [
-            (n.lineno, n.end_lineno)
-            for n in ast.walk(tree)
-            if isinstance(n, ast.Call)
-            and (
-                (isinstance(n.func, ast.Name) and n.func.id == "register_persisted")
-                or (
-                    isinstance(n.func, ast.Attribute)
-                    and n.func.attr in ("register_persisted", "append")
-                )
-            )
-        ]
-        if path.name == "ranks.py":
-            # the registry's own persist is followed by _PERSISTED.append
-            # on the next statement; widen its append span by 5 lines up
-            reg_spans = [(a - 5, b) for a, b in reg_spans]
-        for n in ast.walk(tree):
-            if (
-                isinstance(n, ast.Call)
-                and isinstance(n.func, ast.Attribute)
-                and n.func.attr == "persist"
+        calls = [n for n in ast.walk(ast.parse(path.read_text())) if isinstance(n, ast.Call)]
+        own_spans = [(n.lineno, n.end_lineno) for n in calls if name(n) == "own"]
+        for n in calls:
+            assert name(n) != "mkdtemp", f"tempdir outside the registry in {path.name}:{n.lineno}"
+            if isinstance(n.func, ast.Attribute) and n.func.attr in (
+                "persist", "checkpoint", "localCheckpoint"
             ):
-                covered = any(a <= n.lineno and n.end_lineno <= b for a, b in reg_spans)
-                assert covered, f"unregistered persist in {path.name}:{n.lineno}"
+                covered = any(a <= n.lineno and n.end_lineno <= b for a, b in own_spans)
+                assert covered, f"unregistered {n.func.attr} in {path.name}:{n.lineno}"
+                n_owned += 1
+    assert n_owned >= 30  # the walk really saw the persist/checkpoint sites
 
 
 def test_persist_scope_releases_only_own_caches(spark):
-    # persist_scope (r09, ADVICE find): interleaved callers sharing a
-    # session release only caches registered INSIDE their scope — a
-    # concurrent query's still-needed cache survives, unlike the global
-    # release_persisted() sweep
-    from alibaba_cppfeaturestore_spark.operators import ranks
+    # resources.scope (the r09 persist_scope, ADVICE find): interleaved
+    # callers sharing a session release only caches registered INSIDE
+    # their scope — a concurrent query's still-needed cache survives,
+    # unlike the global release() sweep
+    from alibaba_cppfeaturestore_spark import resources
 
-    ranks.release_persisted()
+    resources.release()
     df = spark.createDataFrame(_rows(50, 3), "id long, v long, s string")
     outer = two_phase_rank(df, [F.col("v"), F.col("id")], rank_col="rk")
     assert outer.count() == 50
-    assert len(ranks._PERSISTED) == 1
-    outer_cache = ranks._PERSISTED[0]
+    assert len(resources._OWNED) == 1
+    outer_cache = resources._OWNED[0]
     # the inner query must be a DIFFERENT plan: Spark's cache manager
     # keys on the analyzed plan, so unpersisting an identical plan would
     # drop the shared entry regardless of which DataFrame handle did it
-    with ranks.persist_scope():
+    with resources.scope():
         inner = two_phase_rank(df, [F.col("id"), F.col("v")], rank_col="rk")
         assert inner.count() == 50
-        assert len(ranks._PERSISTED) == 2
+        assert len(resources._OWNED) == 2
     # scope exit released ONLY the inner cache; the outer one is intact
-    assert [id(d) for d in ranks._PERSISTED] == [id(outer_cache)]
+    assert [id(d) for d in resources._OWNED] == [id(outer_cache)]
     assert outer_cache.storageLevel.useMemory  # still persisted
-    assert ranks.release_persisted() == 1
+    assert resources.release() == 1
     # scope exits cleanly with nothing registered inside it
-    with ranks.persist_scope():
+    with resources.scope():
         pass
-    assert ranks.release_persisted() == 0
+    assert resources.release() == 0

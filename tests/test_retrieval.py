@@ -363,7 +363,7 @@ def test_hybrid_rrf_properties(spark):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_js_divergence_bounds_and_identical_distributions(spark):
+def test_js_divergence_bounds_and_identical_distributions(spark, tmp_path):
     import math
     from alibaba_cppfeaturestore_spark.plans.catalog import QUERIES
 
@@ -379,17 +379,17 @@ def test_js_divergence_bounds_and_identical_distributions(spark):
     )
     docs.createOrReplaceTempView("documents")  # not used by the fn; direct call:
     from alibaba_cppfeaturestore_spark.plans.catalog import QUERIES as Q
-    import tempfile, os
-    d = tempfile.mkdtemp()
+    import os
+    d = str(tmp_path)
     docs.withColumn("lang", F.lit("en")).write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
     [r2] = Q["corpus_drift_js_divergence"].spark(spark, d).collect()
     assert abs(r2.js_divergence) < 1e-15
 
 
-def test_bigram_logprob_repetitive_beats_random(spark):
+def test_bigram_logprob_repetitive_beats_random(spark, tmp_path):
     """A perfectly repetitive doc must out-score shuffled token soup
     under the corpus's own bigram model."""
-    import os, tempfile
+    import os
     from alibaba_cppfeaturestore_spark.plans.catalog import QUERIES
 
     rows = [
@@ -397,7 +397,7 @@ def test_bigram_logprob_repetitive_beats_random(spark):
         (2, "mat the on cat sat the mat on the sat cat the", "en"),
         (3, "the cat sat on the mat again and again and again", "en"),
     ]
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     spark.createDataFrame(rows, "doc_id long, text string, lang string").write.mode(
         "overwrite"
     ).parquet(os.path.join(d, "documents.parquet"))

@@ -1441,15 +1441,15 @@ def main() -> int:
             row["err"] = traceback.format_exc()[-1500:]
         row["sec"] = round(time.time() - t0, 2)
         rows[name] = row
-        # Drop caches registered by two_phase_rank / catalog persist
-        # sites now that this query's output is materialized — without
-        # this the blocks accumulate across the 50-query run.
+        # Release what the entry registered (persists, checkpoints,
+        # tempdirs) now that its output is materialized — without this
+        # they accumulate across the run.
         try:
-            from alibaba_cppfeaturestore_spark.operators.ranks import release_persisted
+            from alibaba_cppfeaturestore_spark.resources import release
 
-            release_persisted()
-        except Exception as exc:  # never fail the gate over cache cleanup
-            print(f"# release_persisted failed for {name}: {exc!r}", flush=True)
+            release()
+        except Exception as exc:  # never fail the gate over cleanup
+            print(f"# release failed for {name}: {exc!r}", flush=True)
         ok = row.get("hash_match")
         tag = "PASS" if ok else ("NO_ORACLE" if row.get("err") == "no_oracle" else "FAIL")
         print(f"{tag:9s} {name:45s} {row['sec']:7.2f}s", flush=True)
