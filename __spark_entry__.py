@@ -69,13 +69,7 @@ _WINDOW_EXEMPT_CHANGED: dict[str, str] = {
     # `driver_sim --strict` run on the r14 close tree (recorded in
     # OPTIMIZATION_r14.md); the one entry with a REAL plan-affecting
     # change this round (stream_tumbling_window_counts,
-    # state_partitions 8->4) is windowed, not exempted. dedup.py's only
-    # other r14 edit is a docstring precondition note.
-    "alibaba_cppfeaturestore_spark/operators/dedup.py": (
-        "r14 register_persisted wrapping (since renamed resources.own) "
-        "+ an incremental-minhash docstring note; no value or plan-shape "
-        "change (see block comment above)."
-    ),
+    # state_partitions 8->4) is windowed, not exempted.
     # The session resource registry + memo module: the r14 persist
     # registry and the four module memos (table plans, key uniqueness,
     # stream schema, IVF centroids) moved into it. Lifecycle and
@@ -112,50 +106,96 @@ _WINDOW_EXEMPT_CHANGED: dict[str, str] = {
         "r14 register_persisted wrapping (since renamed resources.own); "
         "no value or plan-shape change."
     ),
+    # Entries whose only change since the round-close commit is a bare
+    # tempfile.mkdtemp replaced by resources.tempdir in their own span: a
+    # lifecycle change (the directory is now removed on release) with no
+    # value or plan-shape change, the same class as the module
+    # exemptions above. They were windowed while the window had room;
+    # the near-duplicate core's changed entries need it now. Certified by
+    # the full 211-entry `driver_sim --strict` runs recorded in
+    # CHANGES.md.
+    **dict.fromkeys(
+        (
+            "jdbc_roundtrip_derby",
+            "partition_pruned_read",
+            "schema_evolution_union_read",
+            "txlog_checkpointed_read",
+            "txlog_merge_upsert",
+            "txlog_time_travel",
+            "txlog_wap_publish",
+            "write_ignore_roundtrip",
+        ),
+        "bare mkdtemp replaced by resources.tempdir; lifecycle only, no "
+        "value or plan-shape change (see block comment above).",
+    ),
+    # operators/dedup.py's module docstring and imports changed with the
+    # near-duplicate pair core, which promotes every dependent. These
+    # entries' plans are identical before and after (formatted explain
+    # at sf0.01, expression ids and lambda-variable suffixes
+    # normalized), so their values cannot change either; the dedup
+    # entries whose plans did change are windowed.
+    **dict.fromkeys(
+        (
+            "dedup_bottomk_sketch",
+            "dedup_exact",
+            "dedup_exact_substring_scrub",
+            "dedup_exact_substring_spans",
+            "dedup_ngram_jaccard",
+            "dedup_paragraph_exact",
+            "dedup_simhash",
+            "dedup_winnow_containment",
+            "feature_hashing_trick",
+            "ml_fold_assignment",
+            "negative_sampling_pairs",
+            "sample_weighted_bernoulli",
+        ),
+        "dedup.py pair-core rebuild (module preamble or the def it calls "
+        "changed); normalized plan identical before and after.",
+    ),
 }
 
 _DRIVER_WINDOW = [
-    # Resource-registry rotation (tools/freshness.py --plan, adopted
-    # verbatim): (a) 49 changed entries — the catalog entries edited
-    # directly (tempdirs from resources.tempdir, persists through
-    # resources.own, the events stream read in place instead of through
-    # a staging copy; json_codec_roundtrip's span holds that stream
-    # helper), the entries promoted through operator defs that changed
-    # (ranks.two_phase_rank's registered persist; graph.py's registered,
-    # early-freed checkpoint rounds, whose module exemption is retired;
-    # layout.py; similarity.py's centroid memo; dictionary.py's scope),
-    # and the previous rotation's entries, still changed against the
-    # round-close commit; (b) the oldest unchanged window row (r10).
+    # Near-duplicate pair core rotation (tools/freshness.py --plan,
+    # adopted verbatim): (a) 47 changed entries — the dedup entries whose
+    # plans changed with the shared LSH generator / pair expansion /
+    # Jaccard verify (the catalog comment removed from dedup_minhash_lsh
+    # is its only span edit), and the previous rotations' entries still
+    # changed against the round-close commit, minus the tempdir-only
+    # ones exempted above; json_codec_roundtrip is no longer promoted,
+    # because the _stream_events helper after it now attributes to the
+    # stream entries that call it; (b) the three oldest unchanged rows
+    # (r10).
     "aliccp_silver_to_gold_e2e",  # changed
-    "ann_brute_force_topk",  # changed
     "ann_index_occupancy_audit",  # changed
     "ann_lsh_bucketed_topk",  # changed
     "ann_quantized_topk",  # changed
     "corpus_mixture_resample",  # changed
+    "dedup_minhash_lsh",  # changed
     "dict_encode_event_type",  # changed
     "hybrid_rrf_retrieval",  # changed
     "interval_overlap_sessions",  # changed
-    "jdbc_roundtrip_derby",  # changed
-    "json_codec_roundtrip",  # changed
-    "partition_pruned_read",  # changed
     "quality_bigram_logprob",  # changed
     "rfm_customer_segments",  # changed
-    "schema_evolution_union_read",  # changed
     "sketch_countmin_freqs",  # changed
     "stream_asof_enrich",  # changed
     "stream_checkpoint_restart",  # changed
+    "stream_dedup_exact",  # changed
+    "stream_interval_join_attribution",  # changed
     "stream_online_upsert",  # changed
-    "txlog_checkpointed_read",  # changed
-    "txlog_merge_upsert",  # changed
-    "txlog_time_travel",  # changed
-    "txlog_wap_publish",  # changed
-    "write_ignore_roundtrip",  # changed
+    "stream_session_window_stats",  # changed
+    "stream_sliding_window_counts",  # changed
+    "stream_topk_trending",  # changed
+    "stream_tumbling_window_counts",  # changed
     "aliccp_bronze_to_silver_e2e",  # changed
+    "ann_brute_force_topk",  # changed
     "ann_ivf_portable_topk",  # changed
     "ann_ivf_topk",  # changed
     "corpus_data_card",  # changed
     "customer_tier_migration",  # changed
     "dedup_clusters",  # changed
+    "dedup_lsh_recall_audit",  # changed
+    "dedup_minhash_incremental",  # changed
+    "dedup_ngram_jaccard_indexed",  # changed
     "dedup_semantic_embedding",  # changed
     "dict_apply_lang",  # changed
     "embedding_threshold_pairs",  # changed
@@ -166,16 +206,15 @@ _DRIVER_WINDOW = [
     "ids_stable_assign",  # changed
     "kmeans_lloyd_step",  # changed
     "layout_zorder_clustering",  # changed
+    "llm_corpus_curation_e2e",  # changed
+    "llm_corpus_curation_funnel",  # changed
+    "llm_corpus_curation_lsh_counts",  # changed
     "multimodal_embed_topk",  # changed
     "pareto_revenue_concentration",  # changed
-    "stream_dedup_exact",  # changed
-    "stream_interval_join_attribution",  # changed
-    "stream_session_window_stats",  # changed
-    "stream_sliding_window_counts",  # changed
-    "stream_topk_trending",  # changed
-    "stream_tumbling_window_counts",  # changed
     "token_count_bpe",  # changed
     "assoc_event_type_pairs",  # r10
+    "bpe_merge_pair_counts",  # r10
+    "chunk_documents_rag",  # r10
 ]
 
 

@@ -1,19 +1,40 @@
 """Deduplication operators for training-data pipelines.
 
-Exact (hash groupBy), MinHash+LSH, SimHash, and n-gram Jaccard near-dup.
-Not in the reference (tabular data); first-class engine additions per the
-north-star scope. Design target is the 100 TB case:
+Exact (hash groupBy), MinHash+LSH, SimHash, winnowing, bottom-k and
+n-gram Jaccard near-dup. Not in the reference (tabular data); first-class
+engine additions per the north-star scope. Design target is the 100 TB
+case: every candidate source is a shuffle on a hash key, so only
+documents sharing a key ever meet — pair volume is Σ|key group|², never
+|corpus|².
 
-- exact dedup: single shuffle on a 64/256-bit content hash, not the text.
-- MinHash-LSH: shingle → k minhashes → b bands; candidate pairs come from
-  a groupBy on (band, band_hash) — only docs sharing a band bucket are
-  compared, so the join is |bucket|² per bucket, never |corpus|².
-- SimHash: 64-bit signature; banding into 16-bit chunks gives candidates
-  for hamming-distance verification (dups with distance ≤ 3 must share a
-  chunk by pigeonhole).
+Each near-duplicate pair operator is a CANDIDATE GENERATOR × VERIFIER,
+and each part is written once:
 
-All signature computation is native column expressions (xxhash64 +
-higher-order array functions) — deterministic, no Python in the scan.
+- ``minhash_lsh_duplicates``: generator :func:`_lsh_candidates` over the
+  :func:`minhash_band_index` rows (sentinel drop → groupBy(band, bucket)
+  → size cap → :func:`_pairs` expansion with the signature screen
+  inline); verifier :func:`_verify_jaccard` over the same persisted
+  :func:`_shingle_sets` frame the signatures were built from.
+- ``minhash_lsh_duplicates_incremental``: the same generator over
+  ``index ∪ batch`` band rows, keeping pairs that touch the batch;
+  verifier :func:`_verify_jaccard` over the candidate-pruned history
+  shingles ∪ the batch shingles.
+- ``ngram_jaccard_pairs_indexed`` (PPJoin): generator
+  :func:`_ppjoin_candidates`, a prefix-postings equi-join; verifier
+  :func:`_verify_jaccard` over the rank-encoded token sets.
+- ``winnow_containment_pairs``: generator :func:`_pairs` over each
+  fingerprint's posting list; verifier: shared-fingerprint count over
+  the smaller fingerprint set (containment, not Jaccard).
+- ``simhash_duplicates``: 16-bit chunk self-join; verifier: Hamming
+  distance of the two signatures.
+- ``bottomk_sketch_pairs``: sketch-postings self-join; verifier:
+  shared-hash count.
+- ``ngram_jaccard_pairs``: blocked quadratic join; verifier: inline
+  :func:`jaccard`.
+
+All signature computation is native column expressions (xxhash64 or the
+md5-derived :func:`portable_hash60`) — deterministic, no Python in the
+scan.
 
 Duplicate-resolution semantics: "keep smallest doc_id". A row is dropped
 iff it pairs (above threshold) with ANY smaller-id row. Pair-loser
@@ -24,10 +45,17 @@ one canonical row per component) close the pairs with
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import char_shingles, tokens, winnow_fingerprints
+from ..functions.text import (
+    _let,
+    char_shingles,
+    token_shingles,
+    tokens,
+    winnow_fingerprints,
+)
 from ..resources import own
 
 
@@ -106,73 +134,47 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def minhash_signature(
-    text: Column | str,
-    num_hashes: int = 32,
-    shingle_size: int = 5,
-    portable: bool = False,
-) -> Column:
-    """MinHash signature as a per-row Column: array of ``num_hashes``
-    min-over-shingles hashes (each shingle string-hashed exactly once —
-    xxhash64, or :func:`portable_hash60` under ``portable=True`` for
-    DuckDB replay — then the permutations fold inside one ``aggregate``).
-
-    USE :func:`minhash_band_index` FOR CORPUS-SCALE WORK. Higher-order
-    functions are never whole-stage-codegen'd: this fold evaluates
-    interpreted, with boxed arithmetic and two array allocations per
-    shingle — measured ~10× the CPU of the aggregation-shaped signature
-    in ``minhash_band_index`` (explode shingles → scalar hash →
-    ``num_hashes`` codegen'd ``min()`` aggregates), which produces
-    bit-identical values. This Column form remains for single-row /
-    streaming-callback contexts where a groupBy is unavailable and the
-    per-row element count is small."""
-    a, b = _perm_constants(num_hashes)
-    p = F.lit(_MINHASH_PRIME).cast("long")
-    base = portable_hash60 if portable else F.xxhash64
-    hashed = F.transform(
-        F.array_distinct(char_shingles(text, shingle_size)),
-        lambda s: F.pmod(base(s), p),
-    )
-    init = F.array_repeat(p, num_hashes)
-    return F.aggregate(
-        hashed,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.pmod(h * F.lit(ai).cast("long") + F.lit(bi).cast("long"), p)
-                    for ai, bi in zip(a, b)
-                ]
-            ),
-            lambda x, y: F.least(x, y),
-        ),
+def _shingle_sets(
+    df: DataFrame, text_col: str, id_col: str, shingle_size: int
+) -> DataFrame:
+    """``(id, sh)``: each row's DISTINCT character shingles — the one
+    shingling projection behind the MinHash signatures and every
+    exact-verify side. Callers pass the source through ``_spread``
+    first: a small or singly-split source would otherwise shingle on one
+    core, and when AQE broadcasts a verify side its shingle expressions
+    run inside the broadcast collect, serially (round-5 find: 3.4 s →
+    0.6 s at sf0.1 for the identical 253-pair output). The spread stays
+    with the caller because it must sit on the scan: ``_spread`` reads
+    the partition count, which would run any shuffle above it."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.array_distinct(char_shingles(F.col(text_col), shingle_size)).alias("sh"),
     )
 
 
-def minhash_bands(
-    signature: Column, bands: int, rows_per_band: int, portable: bool = False
-) -> Column:
-    """Hash each band of the signature → array<struct<band:int,bucket:long>>.
-    ``portable=True`` buckets with :func:`portable_hash60` over the same
-    comma-joined band string (DuckDB: ``string_agg(v, ',' ORDER BY i)``)."""
-    bucket_hash = portable_hash60 if portable else F.xxhash64
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                bucket_hash(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(signature, b * rows_per_band + r + 1).cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bucket"),
+def _pairs(members: Column, pair) -> Column:
+    """``array(pair(a, b))`` over every two members a, b of one list,
+    a before b in ``array_sort`` order — the ONE pair expansion behind
+    the LSH buckets and winnow's posting lists. A struct list sorts by
+    its first field (the id), so positional slicing emits each unordered
+    pair once with id_a ≤ id_b; callers still filter id_a < id_b where
+    duplicate ids can share a list.
+
+    The sorted list is bound ONCE with ``_let``: written inside the
+    outer lambda, ``array_sort`` re-ran per member — m sorts of an
+    m-member list (one 1,500-member bucket: 10–12 s → 4.5–5.4 s on 4
+    cores, identical 1,124,195 pairs)."""
+    return _let(
+        F.array_sort(members),
+        lambda arr: F.flatten(
+            F.transform(
+                arr,
+                lambda a, i: F.transform(
+                    F.slice(arr, i + 2, F.greatest(F.size(arr) - i - 1, F.lit(0))),
+                    lambda b: pair(a, b),
+                ),
             )
-            for b in range(bands)
-        ]
+        ),
     )
 
 
@@ -181,10 +183,43 @@ def jaccard(a: Column, b: Column) -> Column:
     must pre-``array_distinct``; doing it here would rebuild the hash set
     per pair). |∪| = |a|+|b|-|∩| avoids materializing the union array.
     The duplicated ``array_intersect`` collapses under codegen CSE; hot
-    paths split the projection instead (see ``minhash_lsh_duplicates``)."""
+    paths split the projection instead (see :func:`_verify_jaccard`)."""
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
     return inter / F.greatest(union, F.lit(1))
+
+
+def _verify_jaccard(cand: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """The ONE exact-Jaccard verify: candidate pairs ``(id_a, id_b)``
+    joined to ``sets`` ``(id, sh)`` — distinct-element arrays covering
+    every candidate id — on both sides, scored
+    ``round(|∩| / max(|a|+|b|−|∩|, 1), 6)`` and kept at ≥ ``threshold``.
+    Returns ``(id_a, id_b, jaccard_sim)``.
+
+    |∪| comes from the sizes, so no ``array_union`` (which re-hashes
+    both arrays) is built, and the intersection size sits in its own
+    projection, evaluated once there. The optimizer still pushes the
+    ≥ ``threshold`` filter into the second join's condition, which
+    spells the intersection twice more (measured, left to Spark's
+    join-condition subexpression elimination; see ROADMAP)."""
+    return (
+        cand.join(sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+        .join(sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).alias("__i"),
+            (F.size(F.col("sh_a")) + F.size(F.col("sh_b"))).alias("__t"),
+        )
+        .select(
+            "id_a",
+            "id_b",
+            F.round(
+                F.col("__i") / F.greatest(F.col("__t") - F.col("__i"), F.lit(1)), 6
+            ).alias("jaccard_sim"),
+        )
+        .filter(F.col("jaccard_sim") >= threshold)
+    )
 
 
 def minhash_lsh_duplicates(
@@ -197,17 +232,12 @@ def minhash_lsh_duplicates(
     jaccard_threshold: float = 0.8,
     max_bucket_size: int | None = 10_000,
     portable: bool = False,
-    prune_verify_texts: bool = False,
 ) -> DataFrame:
-    """Candidate generation via LSH banding + exact-Jaccard verification.
-    ``prune_verify_texts``: shingle only candidate rows in the verify
-    stage — enable at scale / low duplicate density (see
-    ``_exact_verify`` for the measured tradeoff; output identical).
+    """Candidate generation via LSH banding (:func:`_lsh_candidates`) +
+    exact-Jaccard verification (:func:`_verify_jaccard`).
 
     Returns duplicate pairs ``(id_a, id_b, jaccard_sim)`` with id_a < id_b.
-    Scale shape: signatures are per-row expressions; candidates come from a
-    shuffle on (band, bucket); verification re-shingles only candidate
-    rows. No corpus-wide cross join anywhere.
+    No corpus-wide cross join anywhere.
 
     Band geometry matters: with ``b`` bands of ``r`` rows the candidate
     threshold is ≈ (1/b)^(1/r); the default 4×8 (≈0.84) is tuned to
@@ -219,152 +249,108 @@ def minhash_lsh_duplicates(
     (boilerplate/empty docs) contributes m² pairs, so one hot key can
     dominate the whole job at scale. Buckets above the cap are dropped
     (their members are still candidates via their other bands); set None
-    to disable. The cap also bounds the per-task memory of the
-    collect_list below (≤ cap × (8 B id + num_hashes × 8 B sig) per
-    group row — ~2.7 MB at the 10 k default).
-
-    Candidate generation is ONE groupBy (band, bucket) → collect_list →
-    per-bucket pair expansion with the signature screen evaluated
-    inline, replacing the earlier index self-join. The self-join shape
-    needed the band index persisted (both join sides), a window-function
-    bucket-size cap (extra shuffle), two join exchanges, and a separate
-    screen pass over materialized (sig_a, sig_b) pairs; this shape is a
-    single shuffle of (id, sig) keyed by bucket, the cap is a free
-    ``size(ms)`` filter, and sub-threshold pairs die inside the
-    projection without ever being exchanged. Pair volume is identical
-    (Σ|bucket|², the LSH guarantee); only the machinery around it is
-    gone — with the verify-stage spread fix below, the full pipeline
-    measured 3.5 s → 2.3 s at sf0.1 with byte-identical output.
+    to disable. The cap also bounds the per-task memory of the bucket's
+    collect_list (≤ cap × (8 B id + num_hashes × 8 B sig) per group row
+    — ~2.7 MB at the 10 k default).
 
     Shingling is ONE persisted pass (r13, guide §2.3: compute the
-    expensive projection once, shuffle/reuse the small thing): the
-    corpus used to be shingled THREE times — once feeding the
-    signature aggregation and once per verify join side (Spark
-    compiles the two sides independently). char_shingles dominates
-    executor CPU (~200 ops/char), so the shared ``(id, sh)`` persist
-    cut the query's task-time ~35% (24 s → 15.5 s at sf0.1) and wall
-    −7% at 32 cores / −14% at 8 cores (interleaved same-JVM A/B; the
-    gap widens as cores drop because the saved CPU stops hiding behind
-    idle threads — the driver's low-core scaling run is the case that
-    matters). The round-4 "persist is neutral-to-worse" measurement
-    (see ``_exact_verify``) only ever persisted the VERIFY pass (2→1);
-    sharing with the signature pass too (3→1) is what flips the sign.
-    The persist is an intermediate of THIS job, released by the
-    harness's ``clearCache()`` between attempts — never a cross-run
-    cache.
+    expensive projection once, shuffle/reuse the small thing): one
+    ``(id, sh)`` frame feeds the signature aggregation and both verify
+    join sides, where the corpus used to be shingled three times (Spark
+    compiles the two verify sides independently). char_shingles
+    dominates executor CPU (~200 ops/char), so sharing it cut the
+    query's task-time ~35% (24 s → 15.5 s at sf0.1) and wall −7% at 32
+    cores / −14% at 8 cores. Persisting the shingles for the verify
+    stage ALONE (2 passes → 1) measured neutral-to-worse (round 4): the
+    persist is a blocking stage, while the duplicate shingle passes ran
+    concurrently on idle threads — sharing with the signature pass too
+    (3 → 1) is what flips the sign. Nor is the verify source pruned to
+    candidate ids: with a near-copy per document (candidates ≈ corpus)
+    the semi-join prunes nothing and blocks on a persisted pair
+    materialization (measured 3.4 s → 6.1 s at sf0.1). The persist is an
+    intermediate of THIS job, owned by ``resources`` — never a
+    cross-run cache.
     """
-    from pyspark import StorageLevel
-
     sh = own(
-        _spread(df)
-        .select(
-            F.col(id_col).alias("id"),
-            F.array_distinct(
-                char_shingles(F.col(text_col), shingle_size)
-            ).alias("sh"),
+        _shingle_sets(_spread(df), text_col, id_col, shingle_size).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    grouped = minhash_bucket_groups(
-        df, text_col, id_col, num_hashes, bands, shingle_size,
-        max_bucket_size, portable=portable, _shingled=sh,
-    )
-    est = _bucket_pair_screen(grouped, num_hashes, jaccard_threshold)
-    return _exact_verify(
-        est, None, shingle_size, jaccard_threshold,
-        prune_texts=prune_verify_texts, shingled=sh,
-    )
-
-
-def minhash_bucket_groups(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 4,
-    shingle_size: int = 5,
-    max_bucket_size: int | None = 10_000,
-    portable: bool = False,
-    _shingled: DataFrame | None = None,
-) -> DataFrame:
-    """LSH buckets with ≥2 members as ``(band, bucket, ms)`` where ``ms``
-    is the member list ``array<struct<id, sig>>`` — the candidate-pair
-    source for ``minhash_lsh_duplicates``. Singleton buckets (the vast
-    majority of a real corpus) are filtered before any pair math;
-    buckets above ``max_bucket_size`` are dropped (skew guard).
-    ``_shingled`` passes a pre-computed shingle frame through to
-    :func:`minhash_band_index` (see there)."""
     banded = minhash_band_index(
         df, text_col, id_col, num_hashes, bands, shingle_size,
-        portable=portable, _shingled=_shingled,
+        portable=portable, _shingled=sh,
     )
-    # Sentinel signatures ([p]*num_hashes — empty/null/too-short texts,
-    # which all share one bucket per band) can never verify: no shingles
-    # ⇒ exact Jaccard 0. Dropping them BEFORE grouping is output-
-    # identical and removes the m² degenerate-bucket pair expansion that
-    # a boilerplate-heavy corpus would otherwise feed the screen (the
-    # skew cap only bounded it). min-hashes are pmod(·, p) < p, so
-    # sig[0] = p identifies the sentinel exactly.
-    banded = banded.filter(F.element_at("sig", 1) < F.lit(_MINHASH_PRIME).cast("long"))
+    cand = _lsh_candidates(banded, num_hashes, jaccard_threshold, max_bucket_size)
+    return _verify_jaccard(cand, sh, jaccard_threshold)
+
+
+def _lsh_candidates(
+    banded: DataFrame,
+    num_hashes: int,
+    jaccard_threshold: float,
+    max_bucket_size: int | None,
+    batch_col: str | None = None,
+) -> DataFrame:
+    """The MinHash-LSH candidate generator: band rows ``(id, sig, band,
+    bucket)`` → distinct screened pairs ``(id_a, id_b)``, id_a < id_b.
+
+    ONE groupBy (band, bucket) → collect_list → per-bucket pair
+    expansion (:func:`_pairs`) with the signature screen evaluated
+    inline — a single shuffle of (id, sig) keyed by bucket, the size
+    cap a free ``size(ms)`` filter, and sub-threshold pairs die inside
+    the projection without ever being exchanged (the earlier index
+    self-join needed a persisted band index, a window-count cap and
+    two join exchanges for the same Σ|bucket|² pair volume).
+
+    - Sentinel signatures (``[p]*num_hashes`` — empty/null/too-short
+      texts, which all share one bucket per band) can never verify: no
+      shingles ⇒ exact Jaccard 0. They are dropped BEFORE grouping,
+      which is output-identical and removes the m² degenerate-bucket
+      expansion. Min-hashes are pmod(·, p) < p, so sig[0] = p
+      identifies the sentinel exactly.
+    - The screen: the fraction of agreeing signature components
+      estimates Jaccard with σ ≈ √(j(1-j)/k), so a 3σ margin below the
+      threshold rejects only (almost surely) sub-threshold pairs — k
+      long comparisons per pair instead of a shingle-set intersection.
+      It is a pure function of the two signatures, so screening before
+      the pair dedup (pairs colliding in several bands) is equivalent
+      and strictly cheaper.
+    - id_a < id_b (not just ≤, which the sort gives): an input with
+      duplicate ids puts two rows of one id in a bucket, and the
+      positional expansion would emit an (x, x) self-pair with est = 1.
+    - ``batch_col`` (the incremental path): a boolean band-row column
+      that rides in the member struct; only pairs with at least one
+      batch member are kept.
+    """
+    members = ["id", "sig"] + ([batch_col] if batch_col else [])
     grouped = (
-        banded.groupBy("band", "bucket")
-        .agg(F.collect_list(F.struct("id", "sig")).alias("ms"))
+        banded.filter(F.element_at("sig", 1) < F.lit(_MINHASH_PRIME).cast("long"))
+        .groupBy("band", "bucket")
+        .agg(F.collect_list(F.struct(*members)).alias("ms"))
         .filter(F.size("ms") >= 2)
     )
     if max_bucket_size is not None:
         grouped = grouped.filter(F.size("ms") <= max_bucket_size)
-    return grouped
-
-
-def _bucket_pair_screen(
-    grouped: DataFrame, num_hashes: int, jaccard_threshold: float
-) -> DataFrame:
-    """Expand each bucket's member list into ordered pairs (id_a < id_b)
-    with the signature-agreement screen applied INLINE: the fraction of
-    agreeing signature components estimates Jaccard with
-    σ ≈ √(j(1-j)/k), so a 3σ margin below the threshold rejects only
-    (almost surely) sub-threshold pairs — 32 long comparisons per pair,
-    evaluated inside the projection, so rejected pairs are never
-    exchanged. dropDuplicates dedups pairs that collide in several
-    bands (the screen is deterministic per pair, so screening before
-    the dedup is equivalent and strictly cheaper)."""
     est_margin = 3.0 * (0.25 / num_hashes) ** 0.5
-    ms = F.array_sort(F.col("ms"))  # struct sort ⇒ by id (first field)
-    pair_arr = F.flatten(
-        F.transform(
-            ms,
-            lambda a, i: F.transform(
-                F.slice(ms, i + F.lit(2), F.greatest(F.size(ms) - i - 1, F.lit(0))),
-                lambda b: F.struct(
-                    a["id"].alias("id_a"),
-                    b["id"].alias("id_b"),
-                    (
-                        F.size(
-                            F.filter(
-                                F.zip_with(a["sig"], b["sig"], lambda x, y: x == y),
-                                lambda e: e,
-                            )
-                        )
-                        / F.lit(num_hashes)
-                    ).alias("est"),
-                ),
-            ),
-        )
-    )
+
+    def pair(a: Column, b: Column) -> Column:
+        agree = F.filter(F.zip_with(a["sig"], b["sig"], lambda x, y: x == y), lambda e: e)
+        fields = [
+            a["id"].alias("id_a"),
+            b["id"].alias("id_b"),
+            (F.size(agree) / F.lit(num_hashes)).alias("est"),
+        ]
+        if batch_col:
+            fields.append((a[batch_col] | b[batch_col]).alias("batch"))
+        return F.struct(*fields)
+
+    keep = (F.col("est") >= jaccard_threshold - est_margin) & (F.col("id_a") < F.col("id_b"))
+    if batch_col:
+        keep = keep & F.col("batch")
     return (
-        grouped.select(F.explode(pair_arr).alias("p"))
-        .select("p.id_a", "p.id_b", "p.est")
-        # id_a < id_b (not just ≤, which the array_sort already gives):
-        # an input carrying duplicate ids — the library operator has no
-        # unique-id precondition; only the catalog entries canonicalize —
-        # puts two rows of the same id in one bucket, and the positional
-        # expansion would emit a (x, x) self-pair with est = 1 that
-        # survives exact verify. The old self-join's a.id < b.id guard,
-        # restored as a free filter inside the same projection stage.
-        .filter(
-            (F.col("est") >= jaccard_threshold - est_margin)
-            & (F.col("id_a") < F.col("id_b"))
-        )
+        grouped.select(F.explode(_pairs(F.col("ms"), pair)).alias("p"))
+        .select("p.*")
+        .filter(keep)
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -388,59 +374,46 @@ def minhash_band_index(
     Banding shuffles only (id, sig, band, bucket) — never the document
     text: at 100 TB the banded exchange is |corpus|×bands small rows.
 
-    The signature is computed as a CODEGEN'D AGGREGATION, not the
-    per-row higher-order fold of :func:`minhash_signature`: explode the
-    distinct shingles, hash each once in a scalar projection, then
-    groupBy(id) with ``num_hashes`` ``min()`` aggregates — one per
-    permutation — exactly the shape the DuckDB oracle spells
-    (``MIN((h0*pa+pb) %% p) ... GROUP BY id, i``). Spark NEVER
-    whole-stage-codegens higher-order functions (aggregate/zip_with/
-    transform are interpreted, with per-element boxing and array
-    allocation): the HOF fold burned ~21 s of executor CPU at sf0.1
+    The signature is computed as a CODEGEN'D AGGREGATION, not a per-row
+    higher-order fold: explode the distinct shingles, hash each once in
+    a scalar projection, then groupBy(id) with ``num_hashes`` ``min()``
+    aggregates — one per permutation — exactly the shape the DuckDB
+    oracle spells (``MIN((h0*pa+pb) %% p) ... GROUP BY id, i``). Spark
+    NEVER whole-stage-codegens higher-order functions (aggregate/
+    zip_with/transform are interpreted, with per-element boxing and
+    array allocation): a HOF fold burned ~21 s of executor CPU at sf0.1
     where this aggregation burns ~2 s for bit-identical signatures.
     The extra groupBy(id) exchange is |corpus| rows of 32 longs — and
     map-side partial aggregation collapses the exploded shingles before
-    the shuffle, so the exchange is the same size the old shape paid
-    anyway. Empty/too-short texts (no shingles) keep the
+    the shuffle. Empty/too-short texts (no shingles) keep the
     ``[p]*num_hashes`` sentinel signature via explode_outer + coalesce
     (the base hash is NULL-guarded — xxhash64(NULL)=42 would otherwise
     defeat the coalesce); null texts get the same sentinel — either way
-    those rows die at the signature screen or the exact verify (a
-    null/empty text has no shingles, so its verified Jaccard can never
-    reach the threshold), matching the oracle, which never emits them.
+    those rows are dropped before bucket grouping (a null/empty text has
+    no shingles, so its verified Jaccard can never reach the threshold),
+    matching the oracle, which never emits them.
 
     Duplicate ids: the groupBy(id) aggregation produces ONE signature
-    per id over the UNION of all its rows' shingles (the old per-row
-    fold emitted one signature per row). The operator has no unique-id
-    precondition, so this per-id semantics is the contract: rows
-    sharing an id are treated as one logical document — matching the
-    oracle's ``GROUP BY id`` shape (pinned in
+    per id over the UNION of all its rows' shingles. The operator has no
+    unique-id precondition, so this per-id semantics is the contract:
+    rows sharing an id are treated as one logical document — matching
+    the oracle's ``GROUP BY id`` shape (pinned in
     tests/test_dedup_similarity.py::test_minhash_duplicate_ids_*).
 
-    ``_shingled`` (private, for :func:`minhash_lsh_duplicates`): a
-    pre-computed — typically persisted — frame ``(id, sh)`` where
-    ``sh = array_distinct(char_shingles(text_col, shingle_size))`` over
-    the same rows; when given, the shingle projection here is skipped
-    and the exploded source reads it instead (bit-identical values: the
-    expression tree is the same, only evaluated once and shared with
-    the verify stage).
+    ``_shingled`` (private, for the two MinHash dedup paths): the
+    :func:`_shingle_sets` frame of the same rows, typically persisted;
+    when given, it is read instead of shingling here (bit-identical
+    values: the same expression tree, evaluated once and shared with the
+    verify stage).
     """
     rows_per_band = num_hashes // bands
     a, b = _perm_constants(num_hashes)
     p = _MINHASH_PRIME
     base = portable_hash60 if portable else F.xxhash64
 
-    if _shingled is not None:
-        exploded = _shingled.select(
-            "id", F.explode_outer("sh").alias("__s")
-        )
-    else:
-        exploded = _spread(df).select(
-            F.col(id_col).alias("id"),
-            F.explode_outer(
-                F.array_distinct(char_shingles(F.col(text_col), shingle_size))
-            ).alias("__s"),
-        )
+    if _shingled is None:
+        _shingled = _shingle_sets(_spread(df), text_col, id_col, shingle_size)
+    exploded = _shingled.select("id", F.explode_outer("sh").alias("__s"))
     h0 = (
         exploded
         .select(
@@ -449,11 +422,8 @@ def minhash_band_index(
             # xxhash64(NULL) = 42 (a real hash, not NULL), so without the
             # guard every empty/null-text row would share a 42-derived
             # signature instead of the documented [p]*num_hashes sentinel
-            # (divergence from minhash_signature's per-row fold; round-7
-            # advisor find). Final pairs were unchanged (such pairs die
-            # at exact verify), but degenerate docs co-bucketed with
-            # est=1.0 — with max_bucket_size=None that passed m² junk
-            # pairs into verify.
+            # (round-7 advisor find) and, with max_bucket_size=None,
+            # co-bucket with est=1.0 into m² junk pairs.
             F.when(
                 F.col("__s").isNotNull(),
                 F.pmod(base(F.col("__s")), F.lit(p).cast("long")),
@@ -476,7 +446,9 @@ def minhash_band_index(
     )
     # Banding straight off the aggregate's flat columns (no element_at
     # on an intermediate array — column references are free), sig
-    # re-assembled as an array only for the output schema.
+    # re-assembled as an array only for the output schema. Portable
+    # buckets hash the same comma-joined band string with
+    # portable_hash60 (DuckDB: ``string_agg(v, ',' ORDER BY i)``).
     def _bucket_sql(bb: int) -> str:
         cols = ", ".join(
             f"CAST(__m{bb * rows_per_band + r} AS STRING)"
@@ -501,144 +473,6 @@ def minhash_band_index(
     ).select("id", "sig", "bb.band", "bb.bucket")
 
 
-def _cap_buckets(banded: DataFrame, max_bucket_size: int | None) -> DataFrame:
-    if max_bucket_size is None:
-        return banded
-    w = Window.partitionBy("band", "bucket")
-    return (
-        banded.withColumn("__bsz", F.count("*").over(w))
-        .filter(F.col("__bsz") <= max_bucket_size)
-        .drop("__bsz")
-    )
-
-
-def _signature_screen(
-    cand: DataFrame, num_hashes: int, jaccard_threshold: float
-) -> DataFrame:
-    """Cheap screen before exact verification: the fraction of agreeing
-    signature components estimates Jaccard with σ ≈ √(j(1-j)/k) (≈0.07
-    for k=32), so a 3σ margin below the threshold rejects only pairs
-    that are (almost surely) sub-threshold — comparing 32 longs instead
-    of intersecting ~|text| shingle sets per candidate."""
-    est_margin = 3.0 * (0.25 / num_hashes) ** 0.5
-    return (
-        cand.withColumn(
-            "__est",
-            F.size(
-                F.filter(
-                    F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-                    lambda eq: eq,
-                )
-            )
-            / F.lit(num_hashes),
-        )
-        .filter(F.col("__est") >= jaccard_threshold - est_margin)
-        .select("id_a", "id_b")
-    )
-
-
-def _exact_verify(
-    est: DataFrame,
-    texts: DataFrame | None,
-    shingle_size: int,
-    jaccard_threshold: float,
-    prune_texts: bool = False,
-    shingled: DataFrame | None = None,
-) -> DataFrame:
-    """Exact shingle-Jaccard verification of candidate pairs against a
-    ``(id, text)`` source covering every candidate id.
-
-    The text source is ``_spread`` before shingling — the round-5 find:
-    a small/singly-split text source flows into the verify joins as ONE
-    partition, and when AQE broadcasts that side the shingle expressions
-    are evaluated inside the broadcast-exchange collect — serially, on
-    one core, once per join side. Measured at sf0.1: 3.4 s → 0.6 s for
-    the identical 253-pair output just by repartitioning the text
-    before the shingle projection. At 100 TB the scan has thousands of
-    splits and the spread is a no-op; it exists for the small-corpus /
-    collapsed-partition edge (same trap as SCALING.md §Parallelism
-    pinning).
-
-    ``prune_texts`` picks the verify shape by CANDIDATE DENSITY:
-
-    - False (default): shingle the full text source and hash-join the
-      candidate stream through it. Costs two full shingle passes (one
-      per join side — Spark compiles them independently), but
-      everything pipelines and nothing blocks. Right when candidates ≈
-      corpus (the 7.7%-duplicate bench corpus).
-    - True: persist the candidate pairs, semi-join the text source down
-      to candidate ids, shingle only those. Right when candidates ≪
-      corpus — the 100 TB production case (dup density a few %), where
-      two FULL shingle passes are the dominant cost and the pruned scan
-      touches a tiny fraction of rows. The pair OUTPUT is identical
-      either way (asserted in tests/test_dedup_similarity.py).
-
-    ``shingled``: a pre-computed (typically persisted) ``(id, sh)``
-    frame covering every candidate id; when given, ``texts`` is ignored
-    and no shingling happens here at all. This is how
-    ``minhash_lsh_duplicates`` shares ONE shingle pass between its
-    signature aggregation and both verify join sides (r13; see its
-    docstring for the measurement).
-
-    Measured non-lever (round 4, sf0.1, re-confirmed after the spread
-    fix): persisting the shingled frame *only for this stage* (2 passes
-    → 1) is neutral-to-worse end-to-end — the persist is a blocking
-    stage that serializes ~8M small shingle strings, while the
-    "duplicate" shingle passes run concurrently on otherwise-idle
-    threads. Sharing with the SIGNATURE pass too (3 → 1, the
-    ``shingled`` param) is what flips the sign — don't re-add a
-    verify-only persist without re-measuring."""
-    from pyspark import StorageLevel
-
-    if shingled is None:
-        texts = _spread(texts)
-        if prune_texts:
-            est = own(est.persist(StorageLevel.MEMORY_AND_DISK))
-            cand_ids = (
-                est.select(F.col("id_a").alias("id"))
-                .unionByName(est.select(F.col("id_b").alias("id")))
-                .distinct()
-            )
-            # no broadcast hint: candidate ids can be huge at 100 TB; AQE
-            # downgrades the semi-join to broadcast when they are small.
-            texts = texts.join(cand_ids, "id", "left_semi")
-        shingled = texts.select(
-            "id",
-            F.array_distinct(char_shingles(F.col("text"), shingle_size)).alias("sh"),
-        )
-    elif prune_texts:
-        # the shingles are already computed (shared with the signature
-        # stage), so pruning buys only a smaller join side, not skipped
-        # shingle work
-        est = own(est.persist(StorageLevel.MEMORY_AND_DISK))
-        cand_ids = (
-            est.select(F.col("id_a").alias("id"))
-            .unionByName(est.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        shingled = shingled.join(cand_ids, "id", "left_semi")
-    return (
-        est.join(shingled.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(shingled.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        # intersection size in its own projection: referenced twice below,
-        # so CollapseProject keeps it evaluated once per pair.
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).alias("__i"),
-            (F.size(F.col("sh_a")) + F.size(F.col("sh_b"))).alias("__t"),
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("__i") / F.greatest(F.col("__t") - F.col("__i"), F.lit(1)), 6
-            ).alias("jaccard_sim"),
-        )
-        .filter(F.col("jaccard_sim") >= jaccard_threshold)
-    )
-
-
 def minhash_lsh_duplicates_incremental(
     new_df: DataFrame,
     index: DataFrame,
@@ -651,123 +485,65 @@ def minhash_lsh_duplicates_incremental(
     jaccard_threshold: float = 0.8,
     max_bucket_size: int | None = 10_000,
     portable: bool = False,
-    prune_verify_texts: bool = True,
 ) -> DataFrame:
     """Dedup an INGEST BATCH against an already-materialized LSH band
     index (``minhash_band_index`` output) plus within itself — the
     daily-ingestion pattern: history is never re-hashed, and its text is
-    scanned only for the candidate ids the band join surfaces.
+    scanned only for the candidate ids the buckets surface.
 
     Returns pairs (id_a, id_b, jaccard_sim), id_a < id_b, where at least
     one side is a new document. Ids must be unique across history ∪ new —
-    in particular history and batch id sets are assumed DISJOINT. That
-    assumption also scopes the r13 screen-before-dedup rewrite's
-    "output identical" claim (r13 advice): an id present in BOTH the
-    index and the batch with edited text carries two different
-    signatures through ``union_banded``, and the screen-first order
-    keeps a pair if ANY of its signature combinations passes where the
-    old dedup-first order screened one arbitrary surviving occurrence.
-    Under the documented disjointness precondition each id has exactly
-    one signature and the two orders are bit-identical.
+    in particular history and batch id sets are assumed DISJOINT (an id
+    in both, with edited text, carries two signatures into its buckets,
+    and a pair is kept if any signature combination passes the screen).
     ``history_texts`` is the historical ``(id_col, text_col)`` source used
-    for exact verification (candidate-id join → pruned/bloom-filtered
-    scan, not a full pass). The hash parameters MUST match the ones the
+    for exact verification. The hash parameters MUST match the ones the
     index was built with.
 
     Equivalence: on history H and batch N, this returns exactly the
-    pairs of ``minhash_lsh_duplicates(H ∪ N)`` that touch N (modulo the
-    bucket cap, which here applies to the union's bucket sizes the same
-    way). Proven in tests.
+    pairs of ``minhash_lsh_duplicates(H ∪ N)`` that touch N, bucket cap
+    included — it IS that path's generator (:func:`_lsh_candidates`)
+    over ``index ∪ batch`` band rows, with a batch flag riding in each
+    bucket member. Proven in tests.
 
-    The NEW batch is shingled ONCE (r13, the ``minhash_lsh_duplicates``
-    shared-persist lesson applied to the incremental path): one
-    persisted ``(id, sh)`` frame feeds the band-index signature
-    aggregation (``_shingled=``) and both exact-verify join sides, where
-    the batch previously re-shingled at the band index and once per
-    verify side for its candidate rows. History shingling is unchanged:
-    its shingles are not stored in the index, so the verify stage still
-    shingles exactly the candidate history rows (semi-join pruned when
-    ``prune_verify_texts``). Values are bit-identical — the same
-    expression tree, evaluated once.
+    Verify (:func:`_verify_jaccard`): the batch is shingled ONCE — one
+    persisted :func:`_shingle_sets` frame feeds the band-index
+    signatures and the verify. History shingles are not stored in the
+    index, so the candidate pairs are persisted and the history text is
+    semi-joined down to candidate ids before it is shingled: every pair
+    touches the small batch, so candidates ≪ history and "history text
+    is scanned only for candidate ids" holds literally (no broadcast
+    hint: candidate ids can be huge at 100 TB; AQE downgrades the
+    semi-join to broadcast when they are small).
     """
-    from pyspark import StorageLevel
-
     sh_new = own(
-        _spread(new_df)
-        .select(
-            F.col(id_col).alias("id"),
-            F.array_distinct(
-                char_shingles(F.col(text_col), shingle_size)
-            ).alias("sh"),
+        _shingle_sets(_spread(new_df), text_col, id_col, shingle_size).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    new_banded = minhash_band_index(
-        new_df, text_col, id_col, num_hashes, bands, shingle_size,
-        portable=portable, _shingled=sh_new,
-    ).withColumn("__new", F.lit(True))
-    # persisted for the same two-sided-self-join reason as
-    # minhash_lsh_duplicates: without it the batch is re-hashed (and the
-    # index re-read) once per join side
-    union_banded = own(_cap_buckets(
-        index.select("id", "sig", "band", "bucket").withColumn("__new", F.lit(False)).unionByName(new_banded),
-        max_bucket_size,
-    ).persist(StorageLevel.MEMORY_AND_DISK))
-    a = union_banded.alias("a")
-    b = union_banded.alias("b")
-    # The signature screen runs BEFORE the pair dedup (r13, the
-    # simhash/LSH-top-k lesson, guide §2.3): the agreement estimate is
-    # a pure function of the two signatures, so every band-duplicate
-    # occurrence of a pair carries the identical value and filtering
-    # first is output-identical. The dedup exchange then carries
-    # (id_a, id_b) — 16 B of screen-passing ids — instead of two
-    # 32-long signature arrays (~530 B) for EVERY co-bucketed pair,
-    # and the dedup itself becomes a hash-aggregable distinct (array
-    # first() buffers forced a SortAggregate + extra Sort before).
-    est = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id"))
-            & (F.col("a.__new") | F.col("b.__new")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .transform(lambda c: _signature_screen(c, num_hashes, jaccard_threshold))
-        .dropDuplicates(["id_a", "id_b"])
+    banded = index.select("id", "sig", "band", "bucket").withColumn(
+        "__new", F.lit(False)
+    ).unionByName(
+        minhash_band_index(
+            new_df, text_col, id_col, num_hashes, bands, shingle_size,
+            portable=portable, _shingled=sh_new,
+        ).withColumn("__new", F.lit(True))
     )
-    # The verify side is assembled HERE (not via _exact_verify's
-    # texts/prune path) so the batch half reads the sh_new persist while
-    # the history half keeps the prune-then-shingle order:
-    # prune_verify_texts defaults True HERE (unlike the full-corpus
-    # path) — every candidate pair touches the small batch, so
-    # candidates ≪ history and the semi-join makes "history text is
-    # scanned only for candidate ids" literally true.
-    hist_texts = _spread(
-        history_texts.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+    cand = own(
+        _lsh_candidates(
+            banded, num_hashes, jaccard_threshold, max_bucket_size, batch_col="__new"
+        ).persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if prune_verify_texts:
-        est = own(est.persist(StorageLevel.MEMORY_AND_DISK))
-        cand_ids = (
-            est.select(F.col("id_a").alias("id"))
-            .unionByName(est.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        # no broadcast hint: candidate ids can be huge at 100 TB; AQE
-        # downgrades the semi-join to broadcast when they are small.
-        hist_texts = hist_texts.join(cand_ids, "id", "left_semi")
-    shingled = hist_texts.select(
-        "id",
-        F.array_distinct(char_shingles(F.col("text"), shingle_size)).alias("sh"),
-    ).unionByName(sh_new)
-    return _exact_verify(
-        est, None, shingle_size, jaccard_threshold, shingled=shingled
+    cand_ids = (
+        cand.select(F.col("id_a").alias(id_col))
+        .unionByName(cand.select(F.col("id_b").alias(id_col)))
+        .distinct()
     )
+    hist = _shingle_sets(
+        _spread(history_texts).join(cand_ids, id_col, "left_semi"),
+        text_col, id_col, shingle_size,
+    )
+    return _verify_jaccard(cand, hist.unionByName(sh_new), jaccard_threshold)
 
 
 def minhash_lsh_dedup(
@@ -780,59 +556,6 @@ def minhash_lsh_dedup(
     pairs = minhash_lsh_duplicates(df, text_col, id_col, **kwargs)
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, id_col, "left_anti")
-
-
-def simhash(text: Column | str, hash_bits: int = 64, portable: bool = False) -> Column:
-    """SimHash signature over whitespace tokens → bigint.
-
-    Per-bit vote: each token's xxhash64 contributes +1/-1 to each bit
-    position; the signature sets bits with positive totals.
-    ``portable=True`` votes on :func:`portable_hash60` instead — callers
-    should then pass ``hash_bits=60`` (the portable hash has 60 random
-    bits; bits 60-63 of it are always zero and would vote uniformly).
-
-    USE :func:`simhash_duplicates`'s aggregation-shaped signature for
-    corpus-scale work: this per-row fold is a higher-order function, and
-    HOFs are never whole-stage-codegen'd — the lambda evaluates
-    interpreted with two ``hash_bits``-wide array allocations per token
-    (see ``minhash_band_index`` for the measured 10× CPU gap of the same
-    pattern). The Column form remains for single-row / streaming-callback
-    contexts where a groupBy is unavailable."""
-    base = portable_hash60 if portable else F.xxhash64
-    hashed = F.transform(tokens(text), lambda t: base(t))
-    init = F.array_repeat(F.lit(0), hash_bits)
-
-    def token_bits(h: Column) -> Column:
-        # h is a lambda variable (already-computed long) — the 64 shifts
-        # are cheap integer ops, not 64 re-hashes of the token string.
-        return F.array(
-            *[
-                (F.shiftright(h, p).bitwiseAND(F.lit(1)) * 2 - 1).cast("int")
-                for p in range(hash_bits)
-            ]
-        )
-
-    votes = F.aggregate(
-        hashed, init, lambda acc, h: F.zip_with(acc, token_bits(h), lambda x, y: x + y)
-    )
-    # bit p of the signature = (votes[p] > 0); powers[63] is the sign bit.
-    powers = F.array(
-        *[
-            F.lit(1 << p if p < 63 else -(1 << 63)).cast("long")
-            for p in range(hash_bits)
-        ]
-    )
-    masked = F.zip_with(
-        votes, powers, lambda v, pw: F.when(v > 0, pw).otherwise(F.lit(0).cast("long"))
-    )
-    return F.aggregate(
-        masked, F.lit(0).cast("long"), lambda acc, x: acc.bitwiseOR(x)
-    )
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit signatures (popcount of XOR)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def simhash_duplicates(
@@ -853,14 +576,12 @@ def simhash_duplicates(
 
     The signature is computed as a CODEGEN'D AGGREGATION (explode
     tokens → one hash per row → ``hash_bits`` signed-vote ``sum()``
-    aggregates → one bit-assembly projection), not the per-row
-    :func:`simhash` fold — the same interpreted-HOF rewrite as
-    ``minhash_band_index``: the fold allocates two ``hash_bits``-wide
+    aggregates → one bit-assembly projection), not a per-row
+    higher-order fold — the same interpreted-HOF rewrite as
+    ``minhash_band_index``: a fold allocates two ``hash_bits``-wide
     arrays per token and evaluates ~3×``hash_bits`` boxed ops outside
-    codegen. Identical signatures (the vote math is expression-for-
-    expression the same); null-text rows are filtered up front — under
-    the fold they got a null signature, and null chunk values never
-    equi-join, so they produced no pairs either way."""
+    codegen. Null-text rows are filtered up front: they have no tokens,
+    and their null chunk values would never equi-join anyway."""
     hash_bits = 60 if portable else 64
     base = portable_hash60 if portable else F.xxhash64
     toks = (
@@ -890,8 +611,6 @@ def simhash_duplicates(
         for p in range(hash_bits)
     )
     sigs = votes.select("id", F.expr(f"CAST({terms} AS BIGINT)").alias("sig"))
-    from pyspark import StorageLevel
-
     chunks = own(sigs.select(
         "id",
         "sig",
@@ -909,8 +628,9 @@ def simhash_duplicates(
             )
         ).alias("c"),
     # persisted: the chunk index feeds both self-join sides; without it
-    # every document's signature (a full token-hash vote fold) is
-    # computed twice (no ReusedExchange fires — see minhash note)
+    # every document's signature (a full token-hash vote aggregation) is
+    # computed twice (Spark plans the two sides independently; no
+    # ReusedExchange fires)
     ).select("id", "sig", "c.chunk_idx", "c.chunk_val").persist(
         StorageLevel.MEMORY_AND_DISK
     ))
@@ -932,7 +652,7 @@ def simhash_duplicates(
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            hamming64(F.col("a.sig"), F.col("b.sig")).alias("hamming"),
+            F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
@@ -957,8 +677,6 @@ def ngram_jaccard_pairs(
     documents share nearly all distinct tokens (measured on the synthetic
     corpus: 31-word vocab, 444 of ~125k unrelated doc pairs at token-set
     J ≥ 0.98), while their 5-gram shingle overlap stays ≈ 0."""
-    from ..functions.text import token_shingles
-
     df = _spread(df)
     elems = (
         token_shingles(F.col(text_col), shingle_n)
@@ -1016,8 +734,9 @@ def ngram_jaccard_pairs_indexed(
     tokenize → global token-frequency rank (one agg over exploded
     tokens) → re-assemble each doc's rank-sorted token array → explode
     only the PREFIX into postings → equi-self-join on token (+ size
-    filter) → exact verify on the full sorted arrays. Output is
-    identical to the quadratic formulation — same oracle.
+    filter) → exact verify (:func:`_verify_jaccard`) on the full sorted
+    arrays. Output is identical to the quadratic formulation — same
+    oracle.
 
     The rank-sorted index (``sorted_docs``) and its prefix postings are
     PERSISTED: the index is consumed five times downstream (both sides of
@@ -1033,7 +752,7 @@ def ngram_jaccard_pairs_indexed(
         df, text_col, id_col, threshold, shingle_n, block_cols
     )
     cand = _ppjoin_candidates(postings, bnames, threshold, parallelism)
-    return _ppjoin_verify(sorted_docs, cand, threshold)
+    return _verify_jaccard(cand, sorted_docs, threshold)
 
 
 def _ppjoin_index(
@@ -1045,15 +764,13 @@ def _ppjoin_index(
     block_cols: list[str] | None = None,
 ) -> tuple[DataFrame, DataFrame, list[str], int]:
     """The PPJoin index build: (sorted_docs, prefix postings, block-col
-    names, parallelism). Split out of :func:`ngram_jaccard_pairs_indexed`
-    (pure code motion) so ``tools/scale_probe.py`` can count the
-    operator's ACTUAL intermediate volumes — not a replica's — across
-    scale factors. Both returned frames are persisted; callers that
-    materialize them own the unpersist."""
-    from pyspark import StorageLevel
-
-    from ..functions.text import token_shingles
-
+    names, parallelism). ``sorted_docs`` is ``(id, sh, block cols, sz)``
+    with ``sh`` the rank-encoded token set, the shape
+    :func:`_verify_jaccard` reads. Split out of
+    :func:`ngram_jaccard_pairs_indexed` so ``tools/scale_probe.py`` can
+    count the operator's ACTUAL intermediate volumes — not a replica's —
+    across scale factors. Both returned frames are persisted; callers
+    that materialize them own the unpersist."""
     # ``shingle_n``: compare distinct word-SHINGLE sets instead of token
     # sets (order-sensitive — discriminates where token-set Jaccard
     # saturates; see ngram_jaccard_pairs). ``block_cols``: candidate
@@ -1142,10 +859,10 @@ def _ppjoin_index(
         .repartition(parallelism, "id")
         .groupBy("id")
         .agg(
-            F.array_sort(F.collect_list("rank")).alias("toks"),
+            F.array_sort(F.collect_list("rank")).alias("sh"),
             *[F.first(bn).alias(bn) for bn in bnames],
         )
-        .withColumn("sz", F.size("toks"))
+        .withColumn("sz", F.size("sh"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     prefix_len = F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")).cast("int") + 1
@@ -1154,7 +871,7 @@ def _ppjoin_index(
             "id",
             "sz",
             *bnames,
-            F.explode_outer(F.slice("toks", 1, prefix_len)).alias("tok"),
+            F.explode_outer(F.slice("sh", 1, prefix_len)).alias("tok"),
         )
         .filter(F.col("tok").isNotNull())
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1204,47 +921,6 @@ def _ppjoin_candidates(
     return cand
 
 
-def _ppjoin_verify(
-    sorted_docs: DataFrame, cand: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs against the
-    rank-encoded token arrays."""
-    return (
-        cand.join(
-            sorted_docs.select(
-                F.col("id").alias("id_a"),
-                F.col("toks").alias("t_a"),
-                F.col("sz").alias("__sz_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            sorted_docs.select(
-                F.col("id").alias("id_b"),
-                F.col("toks").alias("t_b"),
-                F.col("sz").alias("__sz_b"),
-            ),
-            "id_b",
-        )
-        # |A∪B| = |A|+|B|−|A∩B| — the sizes already ride the index, so the
-        # verify computes ONE array_intersect per candidate instead of an
-        # intersect AND a union (array_union re-hashes both arrays); on a
-        # dense corpus the verify touches millions of candidates, so
-        # halving the per-pair array work matters.
-        .withColumn("__inter", F.size(F.array_intersect("t_a", "t_b")))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("__inter")
-                / (F.col("__sz_a") + F.col("__sz_b") - F.col("__inter")),
-                6,
-            ).alias("jaccard_sim"),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
-
-
 def winnow_containment_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1278,15 +954,12 @@ def winnow_containment_pairs(
     25-50 for source code) makes incidental collisions rare while any
     ≥ window+k-1 = 19-char shared run still guarantees a match.
     """
-    from ..functions.text import _let
-
     # NULL ids dropped AT THE GATE (r09 five-way-stack find, seed 59):
-    # this is the catalog's ONE pair generator that expands pairs
-    # POSITIONALLY (array_sort + slice) instead of via a join or an
-    # id_a < id_b comparison, so nothing downstream would drop a NULL-id
-    # row the way SQL's NULL-propagating `<` does everywhere else
-    # (minhash's screen filter, bottomk's join condition, the oracles'
-    # a.doc_id < b.doc_id). A pair with an unattributable member is
+    # pairs come from the positional _pairs expansion with no
+    # id_a < id_b comparison after it, so nothing downstream would drop
+    # a NULL-id row the way SQL's NULL-propagating `<` does everywhere
+    # else (minhash's screen filter, bottomk's join condition, the
+    # oracles' a.doc_id < b.doc_id). A pair with an unattributable member is
     # unactionable output; the divergence stayed latent until a NULL-id
     # doc carried a HOT (skew-planted) text — unique-text NULL-id docs
     # never cross the containment threshold with anyone.
@@ -1336,23 +1009,13 @@ def winnow_containment_pairs(
     if max_postings is not None:
         lists = lists.filter(F.size("ps") <= max_postings)
 
-    combos = _let(
-        F.array_sort("ps"),  # canonical id order → id_a < id_b by slicing
-        lambda arr: F.flatten(
-            F.transform(
-                arr,
-                lambda x, i: F.transform(
-                    F.slice(
-                        arr, i + 2, F.greatest(F.size(arr) - i - 1, F.lit(0))
-                    ),
-                    lambda y: F.struct(
-                        x["id"].alias("id_a"),
-                        y["id"].alias("id_b"),
-                        x["n"].alias("n_a"),
-                        y["n"].alias("n_b"),
-                    ),
-                ),
-            )
+    combos = _pairs(
+        F.col("ps"),
+        lambda x, y: F.struct(
+            x["id"].alias("id_a"),
+            y["id"].alias("id_b"),
+            x["n"].alias("n_a"),
+            y["n"].alias("n_b"),
         ),
     )
     return (
@@ -1417,8 +1080,6 @@ def bottomk_sketch_pairs(
     ``max_postings``); leave None when the output must match the
     capless oracle.
     """
-    from ..functions.text import token_shingles
-
     sk = _spread(df).select(
         F.col(id_col).alias("id"),
         F.slice(
@@ -1434,10 +1095,8 @@ def bottomk_sketch_pairs(
             k,
         ).alias("sketch"),
     )
-    from pyspark import StorageLevel
-
     # persisted: postings feed both self-join sides (same recompute trap
-    # as the minhash band index — the md5 sketch would be built twice)
+    # as the simhash chunk index — the md5 sketch would be built twice)
     posts = own(
         sk.select("id", F.explode("sketch").alias("h")).persist(
             StorageLevel.MEMORY_AND_DISK
@@ -1534,8 +1193,6 @@ def substring_gram_postings(
     the quantity ``tools/scale_probe.py`` measures for the linearity
     claim. Factored out so the probe measures the operator's REAL
     intermediate, not a reimplementation."""
-    from ..functions.text import _let
-
     def gram_hash(joined: Column) -> Column:
         return F.md5(joined) if portable else F.xxhash64(joined)
 
@@ -1712,8 +1369,6 @@ def remove_duplicated_spans(
     shuffle. Span counts per document are bounded by |tokens|/k, so the
     collected array can never exceed the document's own size class.
     """
-    from ..functions.text import _let
-
     spans_by_doc = spans.groupBy(F.col(id_col).alias("__sid")).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__sp")
     )

@@ -2434,13 +2434,6 @@ def dedup_minhash_lsh(spark, sf_dir):
         F.concat(F.col("text"), F.lit(" zz qq extra")).alias("text"),
     )
     corpus = docs.unionByName(mutants)
-    # prune_verify_texts stays FALSE here, deliberately (round-6 verdict
-    # item 3 suggested flipping it; measured at sf0.1 it is 3.4 s → 6.1 s
-    # WORSE): this corpus plants a mutant per doc, so candidates ≈ corpus
-    # and the prune semi-join prunes nothing while blocking the pipeline
-    # on a persisted pair materialization. _exact_verify's docstring
-    # documents the density rule — prune only when candidates ≪ corpus
-    # (the 100 TB production case).
     return DD.minhash_lsh_duplicates(
         corpus, text_col="text", id_col="doc_id",
         num_hashes=32, bands=4, jaccard_threshold=0.8, portable=True,

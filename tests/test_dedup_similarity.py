@@ -182,8 +182,8 @@ def test_minhash_degenerate_texts_get_sentinel_signature(spark):
     grouping, so degenerate docs never co-bucket into m² screen pairs."""
     from alibaba_cppfeaturestore_spark.operators.dedup import (
         _MINHASH_PRIME,
+        _lsh_candidates,
         minhash_band_index,
-        minhash_bucket_groups,
     )
 
     rows = [(1, ""), (2, None), (3, "abc"), (4, "x"), (5, "a longer real document text here")]
@@ -195,11 +195,10 @@ def test_minhash_degenerate_texts_get_sentinel_signature(spark):
         for did in (1, 2, 3, 4):  # shorter than the 5-char shingle ⇒ no shingles
             assert sigs[did] == sentinel, (portable, did, sigs[did])
         assert sigs[5] != sentinel
-        grouped = minhash_bucket_groups(
-            df, num_hashes=8, bands=2, portable=portable, max_bucket_size=None
-        )
-        members = [m["id"] for r in grouped.collect() for m in r["ms"]]
-        assert set(members) <= {5}, members
+        # threshold 0 passes every co-bucketed pair through the screen,
+        # so any pair here would be a sentinel bucket's expansion
+        pairs = _lsh_candidates(idx, 8, 0.0, None).collect()
+        assert pairs == [], pairs
 
 
 def test_minhash_no_false_pairs_between_distinct_docs(spark, docs):
@@ -418,7 +417,10 @@ def test_scorer_written_once_across_generators(spark):
 
 def test_incremental_minhash_matches_full_corpus(spark, docs):
     """Incremental dedup of a batch against a materialized band index ==
-    the full-corpus pairs restricted to pairs touching the batch."""
+    the full-corpus pairs restricted to pairs touching the batch — in
+    both hash modes and under a bucket cap small enough to drop the
+    multi-member buckets (the two paths share one generator, so the cap
+    must bite the same buckets)."""
     from alibaba_cppfeaturestore_spark.operators.dedup import (
         minhash_band_index,
         minhash_lsh_duplicates_incremental,
@@ -430,32 +432,167 @@ def test_incremental_minhash_matches_full_corpus(spark, docs):
         (F.col("doc_id") + 10_000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
     )
+    # fresh near-dup trio: 20_002 and 20_003 are identical, so they
+    # share every bucket, and any bucket 20_001 joins has three members
     extra = spark.createDataFrame(
-        [(20_001, "a brand new document " * 30), (20_002, "a brand new document " * 30 + "tail")],
+        [
+            (20_001, "a brand new document " * 30),
+            (20_002, "a brand new document " * 30 + "tail"),
+            (20_003, "a brand new document " * 30 + "tail"),
+        ],
         ["doc_id", "text"],
     )
     batch = batch.unionByName(extra)
-
-    kw = dict(num_hashes=32, bands=4, jaccard_threshold=0.7)
-    full = minhash_lsh_duplicates(history.unionByName(batch), **kw)
     batch_ids = {r["doc_id"] for r in batch.collect()}
-    expected = {
-        (r["id_a"], r["id_b"], r["jaccard_sim"])
-        for r in full.collect()
-        if r["id_a"] in batch_ids or r["id_b"] in batch_ids
-    }
+    results = {}
 
-    index = minhash_band_index(history)
-    got = {
-        tuple(r)
-        for r in minhash_lsh_duplicates_incremental(
-            batch, index, history, **kw
-        ).collect()
+    for portable, cap in [(False, 10_000), (True, 10_000), (False, 2), (True, 2)]:
+        kw = dict(
+            num_hashes=32, bands=4, jaccard_threshold=0.7,
+            max_bucket_size=cap, portable=portable,
+        )
+        full = minhash_lsh_duplicates(history.unionByName(batch), **kw)
+        expected = {
+            (r["id_a"], r["id_b"], r["jaccard_sim"])
+            for r in full.collect()
+            if r["id_a"] in batch_ids or r["id_b"] in batch_ids
+        }
+        index = minhash_band_index(history, portable=portable)
+        got = {
+            tuple(r)
+            for r in minhash_lsh_duplicates_incremental(
+                batch, index, history, **kw
+            ).collect()
+        }
+        assert got == expected, (portable, cap)
+        # no history-history pairs leak in
+        assert all(a in batch_ids or b in batch_ids for a, b, _ in got)
+        results[portable, cap] = got
+    for portable in (False, True):
+        uncapped, capped = results[portable, 10_000], results[portable, 2]
+        assert len(uncapped) >= 11  # 10 cross-pairs + the fresh trio's pairs
+        assert capped < uncapped, portable  # the cap dropped buckets
+
+
+def test_lsh_pair_expansion_sorts_each_bucket_once(spark, docs):
+    """The bucket member list is sorted ONCE per bucket and bound as a
+    lambda variable: an ``array_sort`` written inside the expansion's
+    lambdas re-sorts the whole list per member (m sorts of an m-member
+    bucket). Asserted on the optimized plan's expressions, for the full
+    and the incremental MinHash paths and for winnow's posting lists."""
+    from alibaba_cppfeaturestore_spark.operators.dedup import (
+        minhash_band_index,
+        minhash_lsh_duplicates_incremental,
+        winnow_containment_pairs,
+    )
+
+    history = docs.limit(20)
+    batch = history.limit(5).select(
+        (F.col("doc_id") + 10_000).alias("doc_id"), "text"
+    )
+    frames = {
+        "full": minhash_lsh_duplicates(history),
+        "incremental": minhash_lsh_duplicates_incremental(
+            batch, minhash_band_index(history), history
+        ),
+        "winnow": winnow_containment_pairs(history),
     }
-    assert got == expected
-    assert len(got) >= 11  # 10 cross-pairs + the fresh in-batch pair
-    # no history-history pairs leak in
-    assert all(a in batch_ids or b in batch_ids for a, b, _ in got)
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        # the expansion's Generate (a persisted generator stage prints
+        # once per consumer)
+        lines = [ln for ln in plan.splitlines() if "explode(" in ln and "array_sort(" in ln]
+        assert lines, name
+        for ln in lines:
+            assert ln.count("array_sort(") == 1, (name, ln.count("array_sort("))
+            # the one sort is the argument of the 1-element binding
+            # transform, outside every lambda body
+            assert "transform(array(array_sort(" in ln, name
+
+
+def test_jaccard_verify_written_once_across_generators(spark, docs):
+    """Every MinHash and PPJoin pair carries the exact Jaccard of its two
+    sets: for the full LSH path, the incremental path (char 5-shingle
+    sets) and PPJoin (token sets, plain and shingled), each emitted
+    ``jaccard_sim`` equals a plain-Python set computation rounded
+    HALF_UP at 6 places (Spark's ``round`` on the double's shortest
+    repr). PPJoin is exact, so its pair set must equal the Python
+    all-pairs answer too."""
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from alibaba_cppfeaturestore_spark.functions.text import (
+        TOKEN_SPLIT_REGEX,
+        WS_TRIM_CHARS,
+    )
+    from alibaba_cppfeaturestore_spark.operators.dedup import (
+        minhash_band_index,
+        minhash_lsh_duplicates_incremental,
+        ngram_jaccard_pairs_indexed,
+    )
+
+    history = docs.limit(40)
+    batch = history.limit(15).select(
+        (F.col("doc_id") + 10_000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
+    )
+    corpus = history.unionByName(batch)
+    texts = {r["doc_id"]: r["text"] for r in corpus.collect()}
+
+    def shingles(t, n=5):
+        return {t[i : i + n] for i in range(len(t) - n + 1)}
+
+    def toks(t):
+        return re.split(TOKEN_SPLIT_REGEX, t.strip(WS_TRIM_CHARS))
+
+    def word_shingles(t, n=3):
+        w = toks(t)
+        return {" ".join(w[i : i + n]) for i in range(len(w) - n + 1)}
+
+    def exact(a, b):
+        j = len(a & b) / max(len(a | b), 1)
+        return float(Decimal(repr(j)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+    def check(name, df, sets, threshold, complete):
+        got = {(r["id_a"], r["id_b"]): r["jaccard_sim"] for r in df.collect()}
+        assert got, name
+        bad = {
+            p: (j, exact(sets[p[0]], sets[p[1]])) for p, j in got.items()
+            if j != exact(sets[p[0]], sets[p[1]])
+        }
+        assert not bad, (name, list(bad.items())[:3])
+        assert all(j >= threshold for j in got.values()), name
+        if complete:
+            ids = sorted(sets)
+            want = {
+                (a, b) for k, a in enumerate(ids) for b in ids[k + 1 :]
+                if exact(sets[a], sets[b]) >= threshold
+            }
+            assert set(got) == want, (name, set(got) ^ want)
+        return got
+
+    sh = {i: shingles(t) for i, t in texts.items()}
+    kw = dict(num_hashes=32, bands=4, jaccard_threshold=0.7)
+    full = check("full", minhash_lsh_duplicates(corpus, **kw), sh, 0.7, False)
+    # the planted (doc, doc + 10k) pairs are near-identical: LSH finds them
+    assert len([p for p in full if p[1] - p[0] == 10_000]) >= 12
+    check(
+        "incremental",
+        minhash_lsh_duplicates_incremental(
+            batch, minhash_band_index(history), history, **kw
+        ),
+        sh, 0.7, False,
+    )
+    check(
+        "ppjoin",
+        ngram_jaccard_pairs_indexed(corpus, threshold=0.6),
+        {i: set(toks(t)) for i, t in texts.items()}, 0.6, True,
+    )
+    check(
+        "ppjoin_shingled",
+        ngram_jaccard_pairs_indexed(corpus, threshold=0.6, shingle_n=3),
+        {i: word_shingles(t) for i, t in texts.items()}, 0.6, True,
+    )
 
 
 def test_clean_text_normalization(spark):
@@ -720,30 +857,6 @@ def test_portable_simhash_finds_planted_near_dups(spark, docs):
     recall = len(found & planted) / len(planted)
     assert recall >= 0.5, f"portable simhash recall too low: {recall}"
     assert all(0 <= r["hamming"] <= 3 for r in rows)
-
-
-def test_verify_prune_shape_output_identical(spark, docs):
-    """prune_verify_texts changes the verify PLAN (shingle only
-    candidate rows behind a semi-join) but never the output — the
-    candidate set and the per-pair exact Jaccard are shape-independent."""
-    base = docs.limit(50)
-    mutants = base.select(
-        (F.col("doc_id") + 10_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
-    corpus = base.unionByName(mutants)
-    kw = dict(num_hashes=32, bands=4, jaccard_threshold=0.7)
-    plain = {
-        (r["id_a"], r["id_b"]): r["jaccard_sim"]
-        for r in minhash_lsh_duplicates(corpus, **kw).collect()
-    }
-    pruned = {
-        (r["id_a"], r["id_b"]): r["jaccard_sim"]
-        for r in minhash_lsh_duplicates(
-            corpus, prune_verify_texts=True, **kw
-        ).collect()
-    }
-    assert plain == pruned
 
 
 def test_lloyd_assign_matches_numpy_argmin(spark):

@@ -71,6 +71,71 @@ def test_entry_spans_hermetic():
     assert spans == [(2, 7, "alpha"), (8, 12, "beta")]
 
 
+def test_mid_file_helper_edits_attribute_to_callers():
+    # A helper def or constant defined between two entries sits inside
+    # the previous entry's span; an edit to it must touch the entries
+    # that use it (directly or through another mid-file helper), not
+    # that host span.
+    src = (
+        "@_q(\n"  # 1
+        '    "alpha",\n'
+        ")\n"
+        "def a(spark, sf):\n"
+        "    pass\n"  # 5
+        "\n"
+        "def _stage(x):\n"
+        "    return x\n"  # 8
+        "_SQL = 'SELECT 1'\n"  # 9
+        "def _wrap(x):\n"
+        "    return _stage(x)\n"  # 11
+        "@_q(\n"
+        '    "beta",\n'
+        "    _SQL,\n"
+        ")\n"
+        "def b(spark, sf):\n"
+        "    return _wrap(1)\n"  # 17
+        "@_q(\n"
+        '    "gamma",\n'
+        ")\n"
+        "def c(spark, sf):\n"
+        "    return _stage(2)\n"  # 22
+    )
+    assert freshness.entry_spans(src)[0] == (1, 11, "alpha")
+    assert freshness.entries_for_lines(src, {8}) == {"beta", "gamma"}
+    assert freshness.entries_for_lines(src, {9}) == {"beta"}
+    assert freshness.entries_for_lines(src, {11}) == {"beta"}
+    assert freshness.entries_for_lines(src, {5}) == {"alpha"}
+    assert freshness.entries_for_lines(src, {6}) == set()  # blank separator
+    assert freshness.entries_for_lines(src, {17, 22}) == {"beta", "gamma"}
+
+
+def test_plan_fails_on_untracked_package_module(tmp_path, monkeypatch):
+    # git diff cannot see an untracked module, so --plan must refuse to
+    # plan and name the file instead of silently attributing nothing.
+    import subprocess
+
+    repo = tmp_path / "r"
+    pkg = repo / "alibaba_cppfeaturestore_spark"
+    pkg.mkdir(parents=True)
+    subprocess.run(["git", "init", "-q"], cwd=repo, check=True)
+    (pkg / "m.py").write_text("X = 1\n")
+    (repo / ".gitignore").write_text("__pycache__/\n")
+    subprocess.run(["git", "add", "-A"], cwd=repo, check=True)
+    subprocess.run(
+        ["git", "-c", "user.email=t@t", "-c", "user.name=t",
+         "commit", "-qm", "round 0: base"], cwd=repo, check=True)
+    monkeypatch.setattr(freshness, "REPO", str(repo))
+    assert freshness.untracked_modules() == []
+    (pkg / "new.py").write_text("Y = 2\n")
+    (pkg / "__pycache__").mkdir()
+    (pkg / "__pycache__" / "ignored.py").write_text("")
+    assert freshness.untracked_modules() == ["alibaba_cppfeaturestore_spark/new.py"]
+    monkeypatch.setattr(sys, "argv", ["freshness.py", "--plan"])
+    with pytest.raises(SystemExit) as exc:
+        freshness.main()
+    assert "alibaba_cppfeaturestore_spark/new.py" in str(exc.value.code)
+
+
 def test_entry_spans_name_after_comment():
     # r11 advice: a comment (or blank line) between `@_q(` and the name
     # string must not silently merge the entry into the previous span.
@@ -138,6 +203,11 @@ def test_module_touched_entries_in_window_or_exempt():
     mechanically. A module rel path in _WINDOW_EXEMPT_CHANGED exempts
     dependents whose promotion causes are all exempted (escape hatch
     for wide-blast-radius files, certified by a full strict run)."""
+    untracked = freshness.untracked_modules()
+    assert not untracked, (
+        f"untracked package modules {untracked} are invisible to the "
+        f"git-diff attribution — git add them"
+    )
     base = freshness.last_round_commit()
     if base is None:
         pytest.skip("no round-close commit to diff against")

@@ -115,11 +115,92 @@ def git_touched_entries(ref: str) -> set[str]:
     if not touched:
         return set()
     with open(os.path.join(REPO, CATALOG_REL)) as f:
-        spans = entry_spans(f.read())
+        return entries_for_lines(f.read(), touched)
+
+
+def _stmt_start(node) -> int:
+    return min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", [])])
+
+
+def mid_file_helpers(catalog_src: str) -> dict[str, tuple[int, int, set[str]]]:
+    """name -> (start, end, names it references) for every top-level
+    helper def or constant that sits BETWEEN two entries. Such a helper
+    lies inside the previous entry's span but belongs to the entries
+    that reference it (``_stream_events``, defined after
+    ``json_codec_roundtrip``, is called only by the stream entries), so
+    every attribution here reads entry spans without these lines."""
+    import ast
+
+    spans = entry_spans(catalog_src)
+    if not spans:
+        return {}
+    starts = {start for start, _, _ in spans}
+    helpers: dict[str, tuple[int, int, set[str]]] = {}
+    for node in ast.parse(catalog_src).body:
+        start = _stmt_start(node)
+        if start < spans[0][0] or start in starts:
+            continue
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            bound = [node.name]
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            bound = [t.id for t in targets if isinstance(t, ast.Name)]
+        else:
+            bound = []
+        used = {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+        for name in bound:
+            helpers[name] = (start, node.end_lineno, used - {name})
+    return helpers
+
+
+def _entry_lines(catalog_src: str) -> list[str]:
+    """The catalog's lines with every mid-file helper blanked out, so
+    that a span's text is its own entry's."""
+    lines = catalog_src.splitlines()
+    for s, e, _ in mid_file_helpers(catalog_src).values():
+        lines[s - 1 : e] = [""] * (e - s + 1)
+    return lines
+
+
+def entries_for_lines(catalog_src: str, lines: set[int]) -> set[str]:
+    """Entries that changed catalog ``lines`` (1-based) touch: a line in
+    an entry's own statement touches that entry; a line in a
+    :func:`mid_file_helpers` helper touches every entry whose decorator
+    or body names it, directly or through other mid-file helpers;
+    another statement between entries touches the span it sits in.
+    Blank and comment lines between statements touch nothing (they
+    carry no behavior — a helper edit's separator lines must not promote
+    the host span either). The preamble before the first entry stays
+    unattributed (see ``entry_spans``)."""
+    import ast
+
+    spans = entry_spans(catalog_src)
+    helpers = mid_file_helpers(catalog_src)
+    names_at = {start: name for start, _, name in spans}
+    entry_refs: dict[str, set[str]] = {}
+    in_stmt: set[int] = set()
+    for node in ast.parse(catalog_src).body:
+        start = _stmt_start(node)
+        in_stmt.update(range(start, node.end_lineno + 1))
+        if start in names_at:
+            entry_refs[names_at[start]] = {
+                n.id for n in ast.walk(node) if isinstance(n, ast.Name)
+            }
+    touched = {h for h, (s, e, _) in helpers.items() if any(s <= ln <= e for ln in lines)}
+    grown = True  # helper-uses-helper closure
+    while grown:
+        grown = False
+        for h, (_, _, refs) in helpers.items():
+            if h not in touched and refs & touched:
+                touched.add(h)
+                grown = True
+    in_helper = {ln for s, e, _ in helpers.values() for ln in range(s, e + 1)}
+    own_lines = (lines & in_stmt) - in_helper
     return {
         name
         for start, end, name in spans
-        if any(start <= ln <= end for ln in touched)
+        if any(start <= ln <= end for ln in own_lines)
+        or entry_refs.get(name, set()) & touched
     }
 
 
@@ -367,7 +448,7 @@ def entry_module_deps() -> dict[str, set[str]]:
     with open(os.path.join(REPO, CATALOG_REL)) as f:
         src = f.read()
     spans = entry_spans(src)
-    lines = src.splitlines()
+    lines = _entry_lines(src)
     tree = ast.parse(src)
 
     global_binds: dict[str, str] = {}
@@ -375,7 +456,7 @@ def entry_module_deps() -> dict[str, set[str]]:
 
     def span_of(lineno: int) -> str | None:
         for start, end, name in spans:
-            if start <= lineno <= end:
+            if start <= lineno <= end and lines[lineno - 1]:
                 return name
         return None
 
@@ -533,7 +614,7 @@ def entry_function_deps() -> dict[str, set[tuple[str, str]]]:
     with open(os.path.join(REPO, CATALOG_REL)) as f:
         src = f.read()
     spans = entry_spans(src)
-    lines = src.splitlines()
+    lines = _entry_lines(src)
     tree = ast.parse(src)
     mod_defs = {rel: module_def_spans(s) for rel, s in _module_sources().items()}
 
@@ -558,7 +639,7 @@ def entry_function_deps() -> dict[str, set[tuple[str, str]]]:
 
     def span_of(lineno):
         for s, e, n in spans:
-            if s <= lineno <= e:
+            if s <= lineno <= e and lines[lineno - 1]:
                 return n
         return None
 
@@ -616,6 +697,20 @@ def entry_function_deps() -> dict[str, set[tuple[str, str]]]:
             if hdeps and re.search(rf"\b{re.escape(h)}\b", body):
                 direct[name] |= hdeps
     return direct
+
+
+def untracked_modules() -> list[str]:
+    """Untracked, non-ignored ``.py`` files under the package. Every
+    attribution here diffs against git, so such a file is invisible to
+    it: its dependents would be neither promoted nor reported."""
+    try:
+        out = subprocess.run(
+            ["git", "ls-files", "--others", "--exclude-standard", "--", PKG],
+            cwd=REPO, capture_output=True, text=True, check=True,
+        ).stdout.split()
+    except (OSError, subprocess.CalledProcessError):
+        return []
+    return sorted(p for p in out if p.endswith(".py"))
 
 
 def git_touched_modules(ref: str) -> set[str]:
@@ -697,6 +792,12 @@ def main() -> None:
     ap.add_argument("--plan", action="store_true", help="propose the next window")
     ap.add_argument("--changed", default="", help="comma list of changed entries")
     args = ap.parse_args()
+    untracked = untracked_modules() if args.plan else []
+    if untracked:
+        sys.exit(
+            f"FAIL: untracked package modules {untracked} are invisible to "
+            "the git-diff attribution — git add them before planning"
+        )
 
     import __spark_entry__ as entry
 

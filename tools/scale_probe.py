@@ -119,7 +119,7 @@ def probes(spark, sf_dir):
     out["ppjoin_prefix_postings"] = postings.count()
     cand = DD._ppjoin_candidates(postings, bnames, 0.9, par)
     out["ppjoin_candidates"] = cand.count()
-    out["ppjoin_pairs_out"] = DD._ppjoin_verify(sorted_docs, cand, 0.9).count()
+    out["ppjoin_pairs_out"] = DD._verify_jaccard(cand, sorted_docs, 0.9).count()
     sorted_docs.unpersist()
     postings.unpersist()
 
