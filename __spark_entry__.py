@@ -152,19 +152,39 @@ _WINDOW_EXEMPT_CHANGED: dict[str, str] = {
         "dedup.py pair-core rebuild (module preamble or the def it calls "
         "changed); normalized plan identical before and after.",
     ),
+    # operators/joins.py's module docstring changed with the online
+    # lookup's dead broadcast hint (the hint asked Spark to build the
+    # preserved side of a left join, which it cannot), which promotes
+    # every dependent. These entries do not call online_lookup; their
+    # plans are identical before and after (formatted explain at sf0.01,
+    # expression ids normalized), so their values cannot change either.
+    # online_lookup_latest_features, whose def changed, is windowed.
+    **dict.fromkeys(
+        (
+            "asof_join_with_ttl",
+            "asof_last_view_before_click",
+            "dq_feature_leakage_audit",
+            "join_anti_not_exists",
+            "join_bloom_prefilter",
+            "join_salted_skew_enrich",
+            "join_semi_in_subquery",
+            "range_join_pre_purchase_views",
+            "scd2_interval_lookup",
+        ),
+        "joins.py module docstring only (online lookup hint removal); "
+        "normalized plan identical before and after.",
+    ),
 }
 
 _DRIVER_WINDOW = [
-    # Near-duplicate pair core rotation (tools/freshness.py --plan,
-    # adopted verbatim): (a) 47 changed entries — the dedup entries whose
-    # plans changed with the shared LSH generator / pair expansion /
-    # Jaccard verify (the catalog comment removed from dedup_minhash_lsh
-    # is its only span edit), and the previous rotations' entries still
-    # changed against the round-close commit, minus the tempdir-only
-    # ones exempted above; json_codec_roundtrip is no longer promoted,
-    # because the _stream_events helper after it now attributes to the
-    # stream entries that call it; (b) the three oldest unchanged rows
-    # (r10).
+    # Online-table rotation (tools/freshness.py --plan, adopted
+    # verbatim): (a) 49 changed entries — online_lookup_latest_features
+    # (online_lookup lost its dead broadcast hint; plan identical) and
+    # feature_store_historical_retrieval (FeatureStore.register now
+    # drops the view's held online table; plan identical), plus the previous
+    # rotations' entries still changed against the round-close commit,
+    # minus the tempdir-only, dedup-preamble and joins.py-docstring
+    # entries exempted above; (b) the oldest unchanged row (r10).
     "aliccp_silver_to_gold_e2e",  # changed
     "ann_index_occupancy_audit",  # changed
     "ann_lsh_bucketed_topk",  # changed
@@ -174,6 +194,7 @@ _DRIVER_WINDOW = [
     "dict_encode_event_type",  # changed
     "hybrid_rrf_retrieval",  # changed
     "interval_overlap_sessions",  # changed
+    "online_lookup_latest_features",  # changed
     "quality_bigram_logprob",  # changed
     "rfm_customer_segments",  # changed
     "sketch_countmin_freqs",  # changed
@@ -199,6 +220,7 @@ _DRIVER_WINDOW = [
     "dedup_semantic_embedding",  # changed
     "dict_apply_lang",  # changed
     "embedding_threshold_pairs",  # changed
+    "feature_store_historical_retrieval",  # changed
     "funnel_time_to_convert",  # changed
     "graph_bfs_trade_hops",  # changed
     "graph_pagerank_trade_network",  # changed
@@ -213,8 +235,6 @@ _DRIVER_WINDOW = [
     "pareto_revenue_concentration",  # changed
     "token_count_bpe",  # changed
     "assoc_event_type_pairs",  # r10
-    "bpe_merge_pair_counts",  # r10
-    "chunk_documents_rag",  # r10
 ]
 
 

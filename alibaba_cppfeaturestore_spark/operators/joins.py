@@ -7,8 +7,11 @@ The reference's as-of semantics come from Feast ``get_historical_features``
 (TTL 365 d, ``feast-feature-store/feature-repo/user_features.py:11``).
 Spark 3.x/4.x has no ASOF JOIN, so we compose: key-equi join + range
 predicate + row_number pick. The online lookup
-(``get_fv.py:25-28`` — Redis GET per entity key) becomes a broadcast join of
-the request keys against the materialized latest-per-key table.
+(``get_fv.py:25-28`` — Redis GET per entity key) becomes a left join of the
+request keys against the materialized latest-per-key table, which Spark
+broadcasts while it is under the broadcast threshold (sort-merge join
+otherwise; a key-sorted store probed by a literal ``isin`` is the scale
+path).
 
 Scale notes:
 - The equi-join shuffles both sides on the entity key only; the range
@@ -103,11 +106,15 @@ def online_lookup(
     """Online point lookup: request keys → latest feature vector per key.
 
     Engine-native equivalent of the reference's Redis GETs
-    (``get_fv.py:25-28``): broadcast the (small) request-key set and join
-    against the materialized online table. Missing keys yield NULL features
-    (Feast returns None for unknown entities).
+    (``get_fv.py:25-28``): a left join of the request rows against the
+    materialized online table. The preserved (request) side cannot be a
+    join's build side, so Spark broadcasts the online table while it is
+    under the broadcast threshold and sort-merge joins otherwise; lookups
+    that must not scan a large table need a key-sorted store probed by a
+    literal ``isin``. Missing keys yield NULL features (Feast returns None
+    for unknown entities).
     """
-    return F.broadcast(request_keys).join(online_table, keys, "left")
+    return request_keys.join(online_table, keys, "left")
 
 
 def semi_join_in(df: DataFrame, ids: DataFrame, key: str) -> DataFrame:

@@ -1942,8 +1942,8 @@ def asof_join_with_ttl(spark, sf_dir):
     """,
 )
 def online_lookup_latest_features(spark, sf_dir):
-    """J4 + A4: materialize latest-per-key, then broadcast-join request
-    keys against it (the engine-native Redis GET)."""
+    """J4 + A4: materialize latest-per-key, then left-join request keys
+    against it (the engine-native Redis GET)."""
     ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type", "value")
     # full tie order explicit — mirrors the oracle's QUALIFY (r09 advice)
     online = latest_per_key(

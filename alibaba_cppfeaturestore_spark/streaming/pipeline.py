@@ -235,35 +235,45 @@ def stream_stream_interval_join(
 class OnlineStore:
     """Latest-per-key online table maintained by foreachBatch upserts (ST6).
 
-    Local adapter: a parquet directory (atomic overwrite per micro-batch).
-    The production adapter would push the same ``latest`` frame to Redis —
-    the upsert semantics (newest row per key wins, within and across
-    batches) live here, not in the sink."""
+    Local adapter: a parquet directory. Each upsert merges the batch into
+    the current table, writes the result ONCE into a fresh sibling
+    directory (``<path>__tmp_<id>``), then swaps it in by renames: the
+    live table moves aside, the new one takes ``path``, the old one is
+    removed. ``path`` therefore only ever holds a complete table, and no
+    ``<path>__tmp_*`` sibling outlives an upsert. Reads pass the schema
+    this object last wrote, so they run no parquet schema inference (one
+    Spark job per read); a new object on an existing store (a restart)
+    infers it until its first write. The production adapter would push
+    the same ``latest`` frame to Redis — the upsert semantics (newest row
+    per key wins, within and across batches) live here, not in the sink."""
 
     def __init__(self, path: str, keys: list[str], ts: str, tiebreak: list[str] | None = None):
         self.path = path
         self.keys = keys
         self.ts = ts
         self.tiebreak = tiebreak
+        self.schema = None  # of the last write; None until this object writes
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         if not os.path.exists(self.path):
             return None
-        return spark.read.parquet(self.path)
+        reader = spark.read if self.schema is None else spark.read.schema(self.schema)
+        return reader.parquet(self.path)
 
     def upsert_batch(self, batch_df: DataFrame, epoch_id: int | None = None) -> None:
         spark = batch_df.sparkSession
         existing = self.read(spark)
         merged = batch_df if existing is None else existing.unionByName(batch_df)
         latest = latest_per_key(merged, self.keys, self.ts, self.tiebreak)
-        # Write-then-swap for atomicity of the local adapter.
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        latest.write.mode("overwrite").parquet(tmp)
-        final = spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(self.path)
-        # only once the overwrite has landed: until then tmp holds the
-        # one complete copy of the merged table
-        shutil.rmtree(tmp)
+        fresh = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
+        latest.write.parquet(fresh)
+        if existing is None:
+            os.rename(fresh, self.path)
+        else:
+            os.rename(self.path, f"{fresh}_old")
+            os.rename(fresh, self.path)
+            shutil.rmtree(f"{fresh}_old")
+        self.schema = latest.schema
 
     def foreach_batch(self) -> Callable[[DataFrame, int], None]:
         return lambda df, epoch: self.upsert_batch(df, epoch)

@@ -439,6 +439,155 @@ def test_feature_store_registry_online_and_validation(spark):
         fs.register(FeatureView("bad", ["user_id"], "ts", ["nope"]), src)
 
 
+def _sorted_rows(df):
+    # repr, so a NaN key compares equal to itself
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def test_online_features_match_spark_lookup(spark, tmp_path):
+    # The driver-held lookup returns exactly the Spark join's rows and
+    # schema (names, types, order, nullability) for every request shape,
+    # and serves new data after a re-register or an in-place rewrite.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from alibaba_cppfeaturestore_spark.operators.joins import online_lookup
+    from alibaba_cppfeaturestore_spark.plans.feature_views import (
+        FeatureStore,
+        FeatureView,
+    )
+
+    fs = FeatureStore()
+    src = spark.createDataFrame(
+        [
+            (1, ts("2024-01-01 10:00:00"), 1.0, "a"),
+            (1, ts("2024-01-01 12:00:00"), 2.0, "b"),
+            (2, ts("2024-01-01 11:00:00"), None, "c"),
+            (None, ts("2024-01-01 11:00:00"), 7.0, "n"),
+        ],
+        "user_id bigint, ts timestamp, spend double, tag string",
+    )
+    fs.register(FeatureView("spend", ["user_id"], "ts", ["spend", "tag"]), src)
+    pair = spark.createDataFrame(
+        [(1, "x", ts("2024-01-01 10:00:00"), 3), (1, "y", ts("2024-01-01 10:00:00"), 4)],
+        "user_id int not null, item string, ts timestamp, clicks int",
+    )
+    fs.register(FeatureView("pair", ["user_id", "item"], "ts", ["clicks"]), pair)
+
+    def check(request, name):
+        v = fs.views[name]
+        want = online_lookup(request, fs.materialize_online(name), v.entities)
+        got = fs.get_online_features(request, name)
+        assert got.schema == want.schema  # names, types, order, nullability
+        assert _sorted_rows(got) == _sorted_rows(want)
+        return got
+
+    # unknown and NULL keys, duplicates, an extra column; int vs bigint
+    req = spark.createDataFrame(
+        [(1, "p"), (99, "q"), (None, "r"), (1, "s"), (2, None)],
+        "user_id int, extra string",
+    )
+    got = {r["extra"]: (r["spend"], r["tag"]) for r in check(req, "spend").collect()}
+    assert got == {"p": (2.0, "b"), "q": (None, None), "r": (None, None),
+                   "s": (2.0, "b"), None: (None, "c")}
+    check(spark.createDataFrame([(1,), (3,)], "user_id bigint"), "spend")
+    check(spark.createDataFrame([], "user_id int"), "spend")
+    check(spark.createDataFrame([(1, "x"), (1, "z"), (1, None)], "user_id int not null, item string"), "pair")
+    # a floating key takes the Spark join, with the same contract
+    check(spark.createDataFrame([(1.0,), (float("nan"),)], "user_id double"), "spend")
+
+    # re-register serves the new source
+    fs.register(
+        FeatureView("spend", ["user_id"], "ts", ["spend", "tag"]),
+        src.withColumn("spend", F.col("spend") * 10),
+    )
+    assert {r["user_id"]: r["spend"] for r in check(req.select("user_id"), "spend").collect()} == {
+        1: 20.0, 99: None, None: None, 2: None}
+
+    # a parquet source rewritten in place is re-materialized
+    path = str(tmp_path / "spend.parquet")
+
+    def write(spend: float, n: int) -> None:
+        pq.write_table(pa.table({
+            "user_id": pa.array(range(1, n + 1), pa.int64()),
+            "ts": pa.array([1_700_000_000_000_000] * n, pa.timestamp("us", "UTC")),
+            "spend": [spend] * n,
+        }), path)
+
+    write(1.0, 2)
+    fs.register(FeatureView("disk", ["user_id"], "ts", ["spend"]), spark.read.parquet(path))
+    keys = spark.createDataFrame([(1,), (3,)], "user_id bigint")
+    assert {r["user_id"]: r["spend"] for r in check(keys, "disk").collect()} == {1: 1.0, 3: None}
+    write(5.0, 3)
+    assert {r["user_id"]: r["spend"] for r in check(keys, "disk").collect()} == {1: 5.0, 3: 5.0}
+
+
+def test_online_table_held_once_per_view(spark, tmp_path):
+    # Re-registering a view over freshly named files (as an online store
+    # swap leaves them) replaces its held table rather than adding one,
+    # and nothing lands in the session memo; a sibling session's request
+    # reads the same rows.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from alibaba_cppfeaturestore_spark import resources
+    from alibaba_cppfeaturestore_spark.plans.feature_views import (
+        FeatureStore,
+        FeatureView,
+    )
+
+    fs = FeatureStore()
+    view = FeatureView("spend", ["user_id"], "ts", ["spend"])
+    keys = spark.createDataFrame([(1,), (2,)], "user_id bigint")
+    memo_before = len(resources._MEMO)
+    for i in range(5):
+        path = str(tmp_path / f"store_{i}")
+        pq.write_to_dataset(pa.table({
+            "user_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array([1_700_000_000_000_000] * 2, pa.timestamp("us", "UTC")),
+            "spend": [float(i), float(i)],
+        }), path)
+        fs.register(view, spark.read.parquet(path))
+        got = {r["user_id"]: r["spend"] for r in fs.get_online_features(keys, "spend").collect()}
+        assert got == {1: float(i), 2: float(i)}
+        assert len(fs._online) == 1
+    assert len(resources._MEMO) == memo_before
+    sibling = spark.newSession()
+    other = sibling.createDataFrame([(1,), (2,)], "user_id bigint")
+    assert {r["user_id"]: r["spend"] for r in fs.get_online_features(other, "spend").collect()} == got
+    assert len(fs._online) == 1
+
+
+def test_online_lookup_runs_one_job(spark):
+    # After the first lookup of a registration, a request runs one Spark
+    # job (collecting the request itself) and its answer none.
+    from alibaba_cppfeaturestore_spark.plans.feature_views import (
+        FeatureStore,
+        FeatureView,
+    )
+
+    sc = spark.sparkContext
+    fs = FeatureStore()
+    fs.register(
+        FeatureView("spend", ["user_id"], "ts", ["spend"]),
+        spark.range(100).select(
+            F.col("id").alias("user_id"),
+            F.timestamp_seconds(F.col("id")).alias("ts"),
+            F.col("id").cast("double").alias("spend"),
+        ),
+    )
+    fs.get_online_features(spark.createDataFrame([(1,)], "user_id int"), "spend").collect()
+    group = "test_online_lookup_runs_one_job"
+    sc.setJobGroup(group, group)
+    try:
+        request = spark.createDataFrame([(k,) for k in (3, 5, 500)], "user_id int")
+        rows = fs.get_online_features(request, "spend").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted((r["user_id"], r["spend"]) for r in rows) == [(3, 3.0), (5, 5.0), (500, None)]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+
+
 def test_funnel_ordering_window_and_depth(spark):
     from alibaba_cppfeaturestore_spark.operators.funnel import funnel_conversion
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import sys
+from types import SimpleNamespace
 
 import pytest
 
@@ -23,6 +24,25 @@ sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry  # noqa: E402
 import freshness  # noqa: E402
+
+
+@pytest.fixture(scope="module")
+def live():
+    """The live diff against the last round-close commit, attributed once
+    for every test that reads it: each attribution re-parses the package
+    and rebuilds its call graph."""
+    base = freshness.last_round_commit()
+    module_deps = freshness.entry_module_deps()
+    if base is None:
+        return SimpleNamespace(base=None, module_deps=module_deps)
+    return SimpleNamespace(
+        base=base,
+        module_deps=module_deps,
+        touched_entries=freshness.git_touched_entries(base),
+        touched_modules=freshness.git_touched_modules(base),
+        causes=freshness.module_touch_causes(base),
+        changed=freshness.effectively_changed(base),
+    )
 
 
 def test_window_shape():
@@ -173,11 +193,11 @@ def test_entry_spans_raise_on_unparsed_decorator():
         freshness.entry_spans(src)
 
 
-def test_touched_entries_in_window_or_exempt():
-    base = freshness.last_round_commit()
+def test_touched_entries_in_window_or_exempt(live):
+    base = live.base
     if base is None:
         pytest.skip("no round-close commit to diff against")
-    touched = freshness.git_touched_entries(base)
+    touched = live.touched_entries
     oracles = entry.oracle_sql()
     window = set(entry._DRIVER_WINDOW)
     exempt = entry._WINDOW_EXEMPT_CHANGED
@@ -194,7 +214,7 @@ def test_touched_entries_in_window_or_exempt():
     )
 
 
-def test_module_touched_entries_in_window_or_exempt():
+def test_module_touched_entries_in_window_or_exempt(live):
     """r11 verdict item 4, refined at r12: an entry whose fix lands in
     operators/*.py changes behavior with no catalog span edit — the
     FUNCTION-level attribution (freshness.module_touch_causes: per-def
@@ -208,10 +228,10 @@ def test_module_touched_entries_in_window_or_exempt():
         f"untracked package modules {untracked} are invisible to the "
         f"git-diff attribution — git add them"
     )
-    base = freshness.last_round_commit()
+    base = live.base
     if base is None:
         pytest.skip("no round-close commit to diff against")
-    causes = freshness.module_touch_causes(base)
+    causes = live.causes
     oracles = entry.oracle_sql()
     window = set(entry._DRIVER_WINDOW)
     exempt = entry._WINDOW_EXEMPT_CHANGED
@@ -231,13 +251,13 @@ def test_module_touched_entries_in_window_or_exempt():
     )
 
 
-def test_entry_module_deps_sanity():
+def test_entry_module_deps_sanity(live):
     """The dependency map must attribute the known hard cases: the kv
     entries depend on functions/kv.py, every _t-loading entry on
     plans/views.py (via the preamble helper), the curation funnel on
     the shared mid-file _curation_stages helper's modules, and the
     timeseries entries on operators/timeseries.py."""
-    deps = freshness.entry_module_deps()
+    deps = live.module_deps
     pkg = "alibaba_cppfeaturestore_spark"
     assert f"{pkg}/functions/kv.py" in deps["kv_parse_roundtrip"]
     assert f"{pkg}/plans/views.py" in deps["q1_pricing_summary"]
@@ -249,7 +269,7 @@ def test_entry_module_deps_sanity():
     assert f"{pkg}/functions/kv.py" in deps["aliccp_bronze_to_silver_e2e"]
 
 
-def test_function_level_attribution_on_the_live_diff():
+def test_function_level_attribution_on_the_live_diff(live):
     """Acceptance pins for the r12 function-level refinement, run
     against the real diff vs the last round-close commit (they hold for
     any diff shape by construction; the assertions target invariants,
@@ -260,18 +280,18 @@ def test_function_level_attribution_on_the_live_diff():
       affected modules;
     - a module whose diff touches only ONE def never promotes entries
       that neither use that def nor reach it through the call graph."""
-    base = freshness.last_round_commit()
+    base = live.base
     if base is None:
         pytest.skip("no round-close commit to diff against")
-    touched = freshness.git_touched_modules(base)
+    touched = live.touched_modules
     if not touched:
         pytest.skip("no module diff to attribute")
-    causes = freshness.module_touch_causes(base)
+    causes = live.causes
     coarse = {
-        n for n, deps in freshness.entry_module_deps().items() if deps & touched
+        n for n, deps in live.module_deps.items() if deps & touched
     }
     assert set(causes) <= coarse, "refinement promoted OUTSIDE the coarse set"
-    affected, preamble = freshness.effectively_changed(base)
+    affected, preamble = live.changed
     affected_mods = {m for m, _ in affected} | set(preamble) | touched
     for n, cm in causes.items():
         assert cm <= affected_mods, f"{n} promoted by an unaffected module {cm}"

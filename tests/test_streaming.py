@@ -136,8 +136,25 @@ def test_online_store_upsert_and_restart_idempotency(spark, workdir):
     run_stream_upsert(stream3, store, chk)
     got3 = {r["user_id"]: (r["event_type"], r["value"]) for r in store.read(spark).collect()}
     assert got3 == {1: ("purchase", 9.0), 2: ("view", 3.0)}
-    # no micro-batch leaves its write-then-swap staging dir behind
-    assert not [d for d in os.listdir(workdir) if d.startswith("store__tmp_")]
+    # no micro-batch leaves a sibling of its write-once-then-swap behind
+    assert not [d for d in os.listdir(workdir) if d.startswith("store__")]
+
+    # a restart: a new store object does not know the written schema,
+    # infers it, and reads the same rows and schema
+    restarted = OnlineStore(store_path, keys=["user_id"], ts="ts")
+    assert restarted.schema is None
+    assert restarted.read(spark).schema == store.read(spark).schema
+    got4 = {r["user_id"]: (r["event_type"], r["value"]) for r in restarted.read(spark).collect()}
+    assert got4 == got3
+    # ... and upserts on from there
+    spark.createDataFrame(
+        [(2, ts("2024-01-01T04:00:00"), "purchase", 4.0)],
+        ["user_id", "ts", "event_type", "value"],
+    ).write.mode("append").parquet(src)
+    run_stream_upsert(stream_from_parquet(spark, src), restarted, chk)
+    got5 = {r["user_id"]: (r["event_type"], r["value"]) for r in restarted.read(spark).collect()}
+    assert got5 == {1: ("purchase", 9.0), 2: ("purchase", 4.0)}
+    assert not [d for d in os.listdir(workdir) if d.startswith("store__")]
 
 
 def test_dictionary_shared_batch_and_stream(spark, workdir):
