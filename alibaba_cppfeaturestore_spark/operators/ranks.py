@@ -47,8 +47,9 @@ registry (``resources.py``); the harness's ``release()`` or a caller's
 
 No reference parity: the reference's StringIndexer fit
 (``batch_process_Silver_to_Gold.py:106-130``) materializes vocab ranks
-on a single node; this is the distributed re-expression its 100 TB
-version needs (``operators/dictionary.py`` consumes it).
+on a single node, and so does ``operators/dictionary.py``, whose fit
+brings every vocabulary to the driver anyway; this is the distributed
+re-expression for ranks whose input never leaves the executors.
 """
 
 from __future__ import annotations

@@ -5,6 +5,7 @@ from __future__ import annotations
 import math
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from alibaba_cppfeaturestore_spark.plans.catalog import QUERIES
@@ -106,22 +107,102 @@ def _comparable(pairs) -> list[tuple]:
 
 def test_fit_dictionaries_matches_python_reference(spark):
     """Independent oracle for the one fit path: every dictionary equals a
-    Counter-based reference over a string, an int and a double column
-    holding NULLs, NaN and count ties — and the Arrow round trip keeps the
-    input column's type (no widened ints, no dropped NaN)."""
-    from alibaba_cppfeaturestore_spark.operators.dictionary import fit_dictionaries
+    Counter-based reference over a string, an int and two double columns
+    holding NULLs, NaN, -0.0 and count ties (in ``d``, 0.25 ties NaN at
+    count 7, so NaN must sort above every number) — and the Arrow round
+    trip keeps the input column's type (no widened ints, no dropped NaN).
+    -0.0 and 0.0 are one value: one dictionary entry, one index."""
+    from alibaba_cppfeaturestore_spark.operators.dictionary import (
+        encode_with_dictionaries,
+        fit_dictionaries,
+    )
 
     nan = float("nan")
-    s = ["b", "a", None, "c", "a", "b", None, "d", "c", "e"] * 3 + ["e", "zz", "zz", "zz"]
-    i = [7, None, 3, 3, 7, -1, None, 12, 0, -1] * 3 + [0, 5, 5, None]
-    d = [1.5, nan, None, -2.0, nan, 1.5, 0.25, None, -2.0, 9.0] * 3 + [nan, 0.25, 4.0, 4.0]
-    df = spark.createDataFrame(list(zip(s, i, d)), "s string, i int, d double")
-    dicts = fit_dictionaries(df, ["s", "i", "d"])
-    for c, values in (("s", s), ("i", i), ("d", d)):
+    s = ["b", "a", None, "c", "a", "b", None, "d", "c", "e"] * 3 + ["e", "zz", "zz", "zz", "a", "b", "zz"]
+    i = [7, None, 3, 3, 7, -1, None, 12, 0, -1] * 3 + [0, 5, 5, None, 3, 12, 5]
+    d = [1.5, nan, None, -2.0, nan, 1.5, 0.25, None, -2.0, 9.0] * 3 + [nan, 0.25, 4.0, 4.0, 0.25, 0.25, 0.25]
+    z = [-0.0, 0.0, 2.5, None, 0.0, -1.0, 2.5, -0.0, 3.0, 0.0] * 3 + [-0.0, 2.5, 3.0, None, 0.0, 0.0, -1.0]
+    df = spark.createDataFrame(list(zip(s, i, d, z)), "s string, i int, d double, z double")
+    dicts = fit_dictionaries(df, ["s", "i", "d", "z"])
+    for c, values in (("s", s), ("i", i), ("d", d), ("z", z)):
         got = dicts[c]
         assert got.schema["value"].dataType == df.schema[c].dataType, c
         rows = sorted(((r["value"], r["index"]) for r in got.collect()), key=lambda p: p[1])
         assert _comparable(rows) == _comparable(_reference_dictionary(values)), c
+
+    zero = [r["index"] for r in dicts["z"].collect() if r["value"] == 0.0]
+    assert len(zero) == 1, zero
+    enc = encode_with_dictionaries(df.select(F.col("z").alias("raw"), "z"), {"z": dicts["z"]})
+    signs = {(math.copysign(1.0, r["raw"]), r["z"]) for r in enc.collect() if r["raw"] == 0.0}
+    assert signs == {(-1.0, zero[0]), (1.0, zero[0])}, signs
+
+
+def test_unseen_index_counts_each_dictionary(spark):
+    """The unseen index is |vocab| of the frame actually passed: a fitted
+    dictionary's row count, and for a frame derived from it (a filter) or
+    built lazily, that frame's own count — never the fit's size carried
+    over."""
+    from alibaba_cppfeaturestore_spark.operators.dictionary import (
+        encode_with_dictionaries,
+        fit_dictionaries,
+    )
+
+    df = spark.createDataFrame([("a",), ("a",), ("b",), ("c",)], "s string")
+    fitted = fit_dictionaries(df, ["s"])["s"]
+    filtered = fitted.where("index < 1")
+    lazy = spark.createDataFrame([("a", 0), ("b", 1)], "value string, index int")
+    probe = spark.createDataFrame([("a",), ("c",), ("unseen",)], "s string")
+
+    def encoded(d):
+        return sorted(r["s"] for r in encode_with_dictionaries(probe, {"s": d}).collect())
+
+    assert encoded(fitted) == [0, 2, 3]
+    assert encoded(filtered) == [0, 1, 1]
+    assert encoded(lazy) == [0, 2, 2]
+
+
+def test_fit_rejects_nested_columns(spark):
+    """Array, map and struct columns have no driver-side dictionary
+    order: the fit names the column instead of failing inside Arrow."""
+    from alibaba_cppfeaturestore_spark.operators.dictionary import fit_dictionaries
+
+    df = spark.createDataFrame(
+        [(1, [1, 2], {"k": 1}, (1, "x"))],
+        "id int, arr array<int>, m map<string,int>, st struct<a:int,b:string>",
+    )
+    for c in ("arr", "m", "st"):
+        with pytest.raises(TypeError, match=f"'{c}'"):
+            fit_dictionaries(df, ["id", c])
+
+
+def test_categorify_job_count_is_constant(spark):
+    """The fit runs the same number of Spark jobs for 2 and for 8 columns,
+    and encoding through fitted dictionaries plans no aggregate and no
+    window: |vocab| is a literal, not a one-row count per column."""
+    import uuid
+
+    from alibaba_cppfeaturestore_spark.operators.dictionary import (
+        encode_with_dictionaries,
+        fit_dictionaries,
+    )
+
+    cols = [f"c{j}" for j in range(8)]
+    df = spark.range(400).select("id", *[(F.col("id") % (j + 3)).alias(c) for j, c in enumerate(cols)])
+    sc = spark.sparkContext
+
+    def jobs(columns):
+        group = f"fit-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "categorify job count")
+        try:
+            fit_dictionaries(df, columns)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(cols[:2]) == jobs(cols) > 0
+    dicts = fit_dictionaries(df, cols[:3])
+    plan = encode_with_dictionaries(df, dicts)._jdf.queryExecution().executedPlan().toString()
+    assert "Aggregate" not in plan and "Window" not in plan, plan
 
 
 def test_fit_leaves_nothing_cached_and_serves_a_stream(spark, tmp_path):
