@@ -25,6 +25,12 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["q1_pricing_summary"].spark(spark, "/root/testdata/sf0.001")
 
 
+# The shared reason of the finite-domain guard exemptions below.
+_FINITE_GUARD = (
+    "finite-domain guard now spelled through the helper; oracle AST and "
+    "normalized plan identical"
+)
+
 # The first 50 entries are the driver's check window (the driver runs a
 # 50-query prefix; every one of the 50 carries a DuckDB oracle). Changed
 # entries always outrank merely-stale ones; the rest rotate oldest
@@ -92,7 +98,7 @@ _WINDOW_EXEMPT_CHANGED: dict[str, str] = {
     ),
     "alibaba_cppfeaturestore_spark/operators/scaling.py": (
         "r14 register_persisted wrapping (since renamed resources.own); "
-        "no value or plan-shape change."
+        "no value or plan-shape change. Then: " + _FINITE_GUARD + "."
     ),
     "alibaba_cppfeaturestore_spark/operators/sketches.py": (
         "r14 register_persisted wrapping (since renamed resources.own); "
@@ -100,11 +106,11 @@ _WINDOW_EXEMPT_CHANGED: dict[str, str] = {
     ),
     "alibaba_cppfeaturestore_spark/operators/statistics.py": (
         "r14 register_persisted wrapping (since renamed resources.own); "
-        "no value or plan-shape change."
+        "no value or plan-shape change. Then: " + _FINITE_GUARD + "."
     ),
     "alibaba_cppfeaturestore_spark/operators/timeseries.py": (
         "r14 register_persisted wrapping (since renamed resources.own); "
-        "no value or plan-shape change."
+        "no value or plan-shape change. Then: " + _FINITE_GUARD + "."
     ),
     # Entries whose only change since the round-close commit is a bare
     # tempfile.mkdtemp replaced by resources.tempdir in their own span: a
@@ -116,14 +122,12 @@ _WINDOW_EXEMPT_CHANGED: dict[str, str] = {
     # CHANGES.md.
     **dict.fromkeys(
         (
-            "jdbc_roundtrip_derby",
             "partition_pruned_read",
             "schema_evolution_union_read",
             "txlog_checkpointed_read",
             "txlog_merge_upsert",
             "txlog_time_travel",
             "txlog_wap_publish",
-            "write_ignore_roundtrip",
         ),
         "bare mkdtemp replaced by resources.tempdir; lifecycle only, no "
         "value or plan-shape change (see block comment above).",
@@ -147,7 +151,6 @@ _WINDOW_EXEMPT_CHANGED: dict[str, str] = {
             "feature_hashing_trick",
             "ml_fold_assignment",
             "negative_sampling_pairs",
-            "sample_weighted_bernoulli",
         ),
         "dedup.py pair-core rebuild (module preamble or the def it calls "
         "changed); normalized plan identical before and after.",
@@ -165,14 +168,102 @@ _WINDOW_EXEMPT_CHANGED: dict[str, str] = {
             "asof_last_view_before_click",
             "dq_feature_leakage_audit",
             "join_anti_not_exists",
-            "join_bloom_prefilter",
-            "join_salted_skew_enrich",
             "join_semi_in_subquery",
             "range_join_pre_purchase_views",
             "scd2_interval_lookup",
         ),
         "joins.py module docstring only (online lookup hint removal); "
         "normalized plan identical before and after.",
+    ),
+    # The finite-domain guard (NaN/±Inf/out-of-domain double -> NULL)
+    # moved into functions/finite.py. Each entry below spelled it by hand:
+    # its oracle now calls finite_decimal_sql / finite_double_sql inside
+    # an f-string, its Spark side finite_decimal / finite_double. Every
+    # oracle's DuckDB AST (json_serialize_sql, query locations removed)
+    # and every entry's normalized formatted plan at sf0.01 are
+    # identical before and after (method and counts in CHANGES.md), so
+    # their values cannot change either. operators/aggregates.py only
+    # gained the helper's import in its preamble, which promotes every
+    # dependent; their plans are identical too.
+    **dict.fromkeys(
+        (
+            "ab_test_cuped_adjusted",
+            "ab_test_group_summary",
+            "agg_approx_stats",
+            "agg_cube_event_matrix",
+            "agg_grouping_sets_revenue",
+            "agg_pivot_user_event_values",
+            "agg_quantiles_order_value",
+            "agg_ratio_to_report",
+            "agg_rollup_order_revenue",
+            "anomaly_mad_outliers",
+            "anomaly_seasonal_residuals",
+            "embedding_stats_by_label",
+            "feature_correlations",
+            "feature_impute_missing",
+            "feature_lag_rolling",
+            "feature_quantile_bins",
+            "feature_standard_scale",
+            "feature_target_encoding",
+            "feature_winsorize",
+            "group_percentile_exact",
+            "grouped_mode_bucket",
+            "histogram_order_values",
+            "incremental_agg_maintenance",
+            "join_broadcast_dim_agg",
+            "profile_events_table",
+            "proj_select_cast",
+            "q10_returned_items",
+            "q11_important_part_values",
+            "q14_promo_revenue_share",
+            "q15_top_revenue_supplier",
+            "q17_small_quantity_revenue",
+            "q18_large_orders",
+            "q19_bracketed_revenue",
+            "q20_dominant_part_suppliers",
+            "q22_dormant_high_balance",
+            "q2_min_cost_supplier",
+            "q3_shipping_priority",
+            "q5_local_supplier_volume",
+            "q6_forecast_revenue",
+            "q7_nation_volume_shipping",
+            "q8_market_share",
+            "q9_product_type_profit",
+            "regression_daily_trend",
+            "scalar_math_funcs",
+            "seasonal_decompose_daily",
+            "session_window_stats",
+            "timeseries_rollup_cascade",
+            "timeseries_twap_user",
+            "window_range_moving_avg",
+            "window_running_user_spend",
+            "wow_revenue_change",
+        ),
+        _FINITE_GUARD + ".",
+    ),
+    "alibaba_cppfeaturestore_spark/operators/aggregates.py": (
+        "module preamble imports functions/finite.finite_decimal "
+        "(profile_table's guard); " + _FINITE_GUARD + "."
+    ),
+    "jdbc_roundtrip_derby": (
+        "bare mkdtemp replaced by resources.tempdir (lifecycle only); "
+        "then: " + _FINITE_GUARD + "."
+    ),
+    "write_ignore_roundtrip": (
+        "bare mkdtemp replaced by resources.tempdir (lifecycle only); "
+        "then: " + _FINITE_GUARD + "."
+    ),
+    "sample_weighted_bernoulli": (
+        "dedup.py pair-core rebuild (module preamble changed); normalized "
+        "plan identical. Then: " + _FINITE_GUARD + "."
+    ),
+    "join_bloom_prefilter": (
+        "joins.py module docstring only (online lookup hint removal); "
+        "then: " + _FINITE_GUARD + "."
+    ),
+    "join_salted_skew_enrich": (
+        "joins.py module docstring only (online lookup hint removal); "
+        "then: " + _FINITE_GUARD + "."
     ),
 }
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.finite import finite_decimal
+
 
 def latest_per_key(
     df: DataFrame,
@@ -193,7 +195,7 @@ def profile_table(df: DataFrame, columns: list[str]) -> DataFrame:
     aggs = [F.count("*").alias("__n")]
     for c in columns:
         if dtypes.get(c) in ("double", "float"):
-            mm = F.when(~F.isnan(F.col(c)), F.col(c).try_cast("decimal(30,6)"))
+            mm = finite_decimal(c, "decimal(30,6)")
             mn = F.min(mm).cast("string")
             mx = F.max(mm).cast("string")
         else:

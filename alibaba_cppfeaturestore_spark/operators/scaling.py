@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.finite import finite_decimal
 from ..resources import own
 
 
@@ -176,8 +177,7 @@ def fit_target_encoding(
     # both the sum and the count — and the decimal partials reproduce on
     # ANY aggregation tree. The smoothing arithmetic then runs in DOUBLE
     # on decimal-derived operands: same exact inputs → same bits.
-    lab = F.col(label_col).cast("double")
-    dec = F.when(~F.isnan(lab), lab.try_cast("decimal(18,6)"))
+    dec = finite_decimal(F.col(label_col).cast("double"))
     agg = own(
         df.rollup(F.col(cat_col).alias("value"))
         .agg(

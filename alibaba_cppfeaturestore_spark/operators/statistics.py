@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.finite import finite_decimal
 from ..resources import own
 
 DEC = "decimal(18,6)"
@@ -164,7 +165,7 @@ def mad_outliers(
         df.filter(vcol.isNotNull())
         .select(
             *group_cols,
-            F.when(~F.isnan(vcol), vcol.try_cast("decimal(20,7)")).alias("_v"),
+            finite_decimal(vcol, "decimal(20,7)").alias("_v"),
         )
         .filter(F.col("_v").isNotNull())
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -241,8 +242,8 @@ def cuped_adjusted_means(
     Returns one row per arm: (grp, n_users, mean_y, mean_y_adjusted,
     theta)."""
     per_user = df.groupBy(user_col, grp_col).agg(
-        F.sum(F.when(~F.isnan(F.col(x_col)), F.col(x_col).try_cast(DEC))).cast("decimal(19,6)").alias("x"),
-        F.sum(F.when(~F.isnan(F.col(y_col)), F.col(y_col).try_cast(DEC))).cast("decimal(18,6)").alias("y"),
+        F.sum(finite_decimal(x_col, DEC)).cast("decimal(19,6)").alias("x"),
+        F.sum(finite_decimal(y_col, DEC)).cast("decimal(18,6)").alias("y"),
     )
     pool = per_user.agg(
         F.count(F.lit(1)).cast("decimal(12,0)").alias("__scalar_n"),

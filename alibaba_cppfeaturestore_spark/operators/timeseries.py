@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.finite import finite_decimal
 from ..resources import own
 
 # measures we can re-aggregate losslessly from partial state
@@ -338,12 +339,8 @@ def time_weighted_avg(
     # overflows even (17,0) (r11 advice) — (19,0) has no reachable
     # overflow, and (18,6)×(19,0) is exactly (38,6), inside the cap.
     dt = (F.unix_micros(nxt) - F.unix_micros(ts)).cast("decimal(19,0)")
-    # finite-domain decimal ingestion: NaN/±Inf/out-of-domain magnitudes
-    # become NULL (missing observation) instead of crashing the ANSI cast
-    # (driver_sim --perturb-extremes); identical to CAST for finite
-    # in-domain values
-    vc = F.col(value_col)
-    v = F.when(~F.isnan(vc), vc.try_cast("decimal(18,6)"))
+    # out-of-domain observations are missing, not an ANSI cast error
+    v = finite_decimal(value_col)
     stepped = df.select(
         *group_cols,
         v.alias("_v"),

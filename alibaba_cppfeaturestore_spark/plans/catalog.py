@@ -38,6 +38,12 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..functions import vectors as V
+from ..functions.finite import (
+    finite_decimal,
+    finite_decimal_sql,
+    finite_double,
+    finite_double_sql,
+)
 from ..functions.kv import merge_feature_maps, parse_kv_triplets
 from ..operators import dedup as DD
 from ..operators import graph as GR
@@ -48,29 +54,6 @@ from ..operators import joins as JN
 from ..operators.joins import anti_join_not_in, asof_join, online_lookup, semi_join_in
 from ..resources import memo, own, tempdir
 from .views import load_table
-
-
-
-def _dec_value(col_name: str = "value", typ: str = "decimal(18,6)"):
-    """Finite-domain decimal ingestion of an unbounded double column:
-    NaN / ±Inf / out-of-decimal-domain magnitudes become NULL (missing),
-    so the entry's pinned NULL policy absorbs them; finite in-domain
-    values cast bit-identically to a plain CAST. Oracles spell the same
-    policy as (CASE WHEN NOT isnan(v) THEN TRY_CAST(v AS ...) END) —
-    the isnan guard dodges DuckDB 1.0's TRY_CAST-NaN hole
-    (driver_sim --perturb-extremes)."""
-    c = F.col(col_name)
-    return F.when(~F.isnan(c), c.try_cast(typ))
-
-
-def _finite_value(col_name: str = "value"):
-    """The double itself when inside the finite DECIMAL(18,6) domain,
-    else NULL — the entry-level sanitizer for operators that consume the
-    raw double (fits, moments) but must treat out-of-domain measurements
-    as missing. Oracle spelling (nested CASE — DuckDB's AND is eager):
-    CASE WHEN NOT isnan(v) THEN
-      CASE WHEN TRY_CAST(v AS DECIMAL(18,6)) IS NOT NULL THEN v END END"""
-    return F.when(_dec_value(col_name).isNotNull(), F.col(col_name))
 
 
 @dataclass
@@ -185,7 +168,7 @@ _EMB_UNIQUE_SQL = """embeddings_u AS (
 # policy): a vector with any NaN/±Inf component poisons every downstream
 # similarity (dot/norm/cosine become engine accidents), so the ROW is a
 # corrupt measurement and is excluded — the vector sibling of
-# _dec_value/_finite_value. NULL vectors are excluded by the same
+# finite_decimal/finite_double. NULL vectors are excluded by the same
 # predicate on both engines (NULL comparison -> not kept). DuckDB's
 # isfinite() is false for NaN and ±Inf alike; ±3e38 (float32 extremes)
 # stay in-domain — double accumulation handles them exactly.
@@ -318,14 +301,12 @@ def q1(spark, sf_dir):
 
 @_q(
     "q3_shipping_priority",
-    """
+    f"""
     SELECT l_orderkey,
            -- finite-domain DECIMAL revenue (the q5/q9/q7 discipline):
            -- associative sums reproduce on any aggregation tree
-           CAST(ROUND(SUM((CASE WHEN NOT isnan(l_extendedprice)
-                   THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END)
-               * (1 - (CASE WHEN NOT isnan(l_discount)
-                            THEN TRY_CAST(l_discount AS DECIMAL(8,6)) END))), 2) AS DOUBLE) AS revenue,
+           CAST(ROUND(SUM({finite_decimal_sql('l_extendedprice', 'decimal(15,4)')}
+               * (1 - {finite_decimal_sql('l_discount', 'decimal(8,6)')})), 2) AS DOUBLE) AS revenue,
            o_orderdate
     FROM customer JOIN orders ON c_custkey = o_custkey
                   JOIN lineitem ON l_orderkey = o_orderkey
@@ -360,8 +341,8 @@ def q3(spark, sf_dir):
         .agg(
             F.round(
                 F.sum(
-                    _dec_value("l_extendedprice", "decimal(15,4)")
-                    * (F.lit(1) - _dec_value("l_discount", "decimal(8,6)"))
+                    finite_decimal("l_extendedprice", "decimal(15,4)")
+                    * (F.lit(1) - finite_decimal("l_discount", "decimal(8,6)"))
                 ),
                 2,
             )
@@ -380,18 +361,15 @@ def q3(spark, sf_dir):
 
 @_q(
     "q5_local_supplier_volume",
-    """
+    f"""
     SELECT n_name,
-           -- finite-domain revenue (out-of-domain -> missing, _dec_value
-           -- policy) in DECIMAL arithmetic: decimal addition is
+           -- finite-domain revenue in DECIMAL arithmetic: decimal addition is
            -- associative, so the sum reproduces under ANY aggregation
            -- tree — a double sum flipped a ROUND(,2) cent boundary
            -- under row reorder (order+extremes stack, r08; the q9
            -- lesson applied here)
-           CAST(ROUND(SUM((CASE WHEN NOT isnan(l_extendedprice)
-                                THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END)
-                          * (1 - (CASE WHEN NOT isnan(l_discount)
-                                       THEN TRY_CAST(l_discount AS DECIMAL(8,6)) END))), 2)
+           CAST(ROUND(SUM({finite_decimal_sql('l_extendedprice', 'decimal(15,4)')}
+                          * (1 - {finite_decimal_sql('l_discount', 'decimal(8,6)')})), 2)
                 AS DOUBLE) AS revenue
     FROM customer
       JOIN orders   ON c_custkey = o_custkey
@@ -439,8 +417,8 @@ def q5(spark, sf_dir):
         .agg(
             F.round(
                 F.sum(
-                    _dec_value("l_extendedprice", "decimal(15,4)")
-                    * (F.lit(1) - _dec_value("l_discount", "decimal(8,6)"))
+                    finite_decimal("l_extendedprice", "decimal(15,4)")
+                    * (F.lit(1) - finite_decimal("l_discount", "decimal(8,6)"))
                 ),
                 2,
             )
@@ -452,7 +430,7 @@ def q5(spark, sf_dir):
 
 @_q(
     "proj_select_cast",
-    """
+    f"""
     SELECT l_orderkey, l_linenumber,
            -- finite-domain int feature (r09 ring 2): NaN/±Inf/overflow
            -- quantity has no int representation — NULL, not saturation
@@ -461,9 +439,7 @@ def q5(spark, sf_dir):
            -- finite-domain render: engines disagree on special-value
            -- spelling (Spark 'Infinity' vs DuckDB 'inf'), so an
            -- out-of-domain price renders as NULL, not engine dialect
-           CAST((CASE WHEN NOT isnan(l_extendedprice) THEN
-                   CASE WHEN TRY_CAST(l_extendedprice AS DECIMAL(18,6)) IS NOT NULL
-                        THEN l_extendedprice END END) AS VARCHAR) AS price_str,
+           CAST({finite_double_sql('l_extendedprice')} AS VARCHAR) AS price_str,
            l_returnflag AS flag
     FROM lineitem
     WHERE l_orderkey % 100 = 0
@@ -479,16 +455,15 @@ def proj_select_cast(spark, sf_dir):
     but flips ~50% of rows on perturbed data (caught by
     ``driver_sim --perturb``)."""
     li = _t(spark, sf_dir, "lineitem")
-    qty = F.col("l_quantity")
     return li.filter(F.col("l_orderkey") % 100 == 0).select(
         "l_orderkey",
         "l_linenumber",
-        # isnan guard + try_cast (the _dec_value policy on an int
-        # domain): Spark's try_cast truncates toward zero like the
-        # oracle's TRUNC and NULLs NaN/±Inf/overflow instead of the
-        # ANSI CAST_OVERFLOW error (r09 ring-2 extremes find)
-        F.when(~F.isnan(qty), qty.try_cast("int")).alias("qty_int"),
-        _finite_value("l_extendedprice").cast("string").alias("price_str"),
+        # the finite-domain policy on an int domain: Spark's try_cast
+        # truncates toward zero like the oracle's TRUNC and NULLs
+        # NaN/±Inf/overflow instead of the ANSI CAST_OVERFLOW error
+        # (r09 ring-2 extremes find)
+        finite_decimal("l_quantity", "int").alias("qty_int"),
+        finite_double("l_extendedprice").cast("string").alias("price_str"),
         F.col("l_returnflag").alias("flag"),
     )
 
@@ -585,7 +560,7 @@ def scalar_date_funcs(spark, sf_dir):
 
 @_q(
     "scalar_math_funcs",
-    """
+    f"""
     WITH li AS (
       SELECT l_orderkey, l_linenumber, l_tax,
              -- finite-domain ingestion: LN/SQRT of a special diverge the
@@ -593,13 +568,9 @@ def scalar_date_funcs(spark, sf_dir):
              -- CEIL/FLOOR→BIGINT of a special hard-errors on both (r09
              -- ring 2) — the int feature goes through the guarded
              -- decimal, where CEIL/FLOOR stay exact and in-range
-             CASE WHEN NOT isnan(l_extendedprice) THEN
-               CASE WHEN TRY_CAST(l_extendedprice AS DECIMAL(18,6)) IS NOT NULL
-                    THEN l_extendedprice END END AS ep,
-             (CASE WHEN NOT isnan(l_quantity)
-                   THEN TRY_CAST(l_quantity AS DECIMAL(18,6)) END) AS qd,
-             (CASE WHEN NOT isnan(l_discount)
-                   THEN TRY_CAST(l_discount AS DECIMAL(18,6)) END) AS dd
+             {finite_double_sql('l_extendedprice')} AS ep,
+             {finite_decimal_sql('l_quantity')} AS qd,
+             {finite_decimal_sql('l_discount')} AS dd
       FROM lineitem WHERE l_orderkey % 200 = 0
     )
     SELECT l_orderkey, l_linenumber,
@@ -614,13 +585,13 @@ def scalar_date_funcs(spark, sf_dir):
 )
 def scalar_math_funcs(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 200 == 0)
-    ep = _finite_value("l_extendedprice")
+    ep = finite_double("l_extendedprice")
     return li.select(
         "l_orderkey",
         "l_linenumber",
         F.round(F.abs(ep - 50000), 2).alias("abs_diff"),
-        F.ceil(_dec_value("l_quantity", "decimal(18,6)")).cast("bigint").alias("qty_ceil"),
-        F.floor(_dec_value("l_discount", "decimal(18,6)") * 100).cast("bigint").alias("disc_pct"),
+        F.ceil(finite_decimal("l_quantity")).cast("bigint").alias("qty_ceil"),
+        F.floor(finite_decimal("l_discount") * 100).cast("bigint").alias("disc_pct"),
         F.round(F.sqrt(ep), 4).alias("price_sqrt"),
         F.round(F.log(ep + 1), 6).alias("price_ln"),
         F.round(F.pow(1 + F.col("l_tax"), 2), 6).alias("tax_sq"),
@@ -694,10 +665,9 @@ def join_anti_not_exists(spark, sf_dir):
 @_q(
     "join_broadcast_dim_agg",
     # guarded-decimal price sum (r11 batch, r10 verdict item 2)
-    """
+    f"""
     SELECT p_brand, COUNT(*) AS n_items,
-           CAST(ROUND(SUM(CASE WHEN NOT isnan(l_extendedprice)
-                   THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END), 2)
+           CAST(ROUND(SUM({finite_decimal_sql('l_extendedprice', 'decimal(15,4)')}), 2)
                 AS DOUBLE) AS total_price
     FROM lineitem JOIN part ON l_partkey = p_partkey
     GROUP BY p_brand
@@ -714,7 +684,7 @@ def join_broadcast_dim_agg(spark, sf_dir):
         .groupBy("p_brand")
         .agg(
             F.count("*").alias("n_items"),
-            F.round(F.sum(_dec_value("l_extendedprice", "decimal(15,4)")), 2)
+            F.round(F.sum(finite_decimal("l_extendedprice", "decimal(15,4)")), 2)
             .cast("double")
             .alias("total_price"),
         )
@@ -751,15 +721,13 @@ def agg_vocab_sizes(spark, sf_dir):
     # ±1e300 extremes is ORDER-DEPENDENT (absorption) — run-flaky in
     # the SAME engine — so every aggregation sink converts instead of
     # waiting for a seed to flip it
-    """
+    f"""
     -- the (15,4) gate IS the ingestion domain; the lossless (19,4)
     -- re-cast after it only forces DuckDB's INT128 multiply path (the
     -- INT64 fast path hard-crashes on large in-domain products — r12
     -- decimal-edge finder, seed 491)
-    SELECT CAST(ROUND(SUM(CAST((CASE WHEN NOT isnan(l_extendedprice)
-                   THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END) AS DECIMAL(19,4))
-               * (CASE WHEN NOT isnan(l_discount)
-                       THEN TRY_CAST(l_discount AS DECIMAL(8,6)) END)), 2)
+    SELECT CAST(ROUND(SUM(CAST({finite_decimal_sql('l_extendedprice', 'decimal(15,4)')} AS DECIMAL(19,4))
+               * {finite_decimal_sql('l_discount', 'decimal(8,6)')}), 2)
                 AS DOUBLE) AS revenue,
            CAST(COUNT(*) AS BIGINT) AS n
     FROM lineitem
@@ -784,8 +752,8 @@ def q6_forecast_revenue(spark, sf_dir):
         .agg(
             F.round(
                 F.sum(
-                    _dec_value("l_extendedprice", "decimal(15,4)")
-                    * _dec_value("l_discount", "decimal(8,6)")
+                    finite_decimal("l_extendedprice", "decimal(15,4)")
+                    * finite_decimal("l_discount", "decimal(8,6)")
                 ),
                 2,
             )
@@ -798,19 +766,15 @@ def q6_forecast_revenue(spark, sf_dir):
 
 @_q(
     "q14_promo_revenue_share",
-    """
+    f"""
     -- finite-domain DECIMAL sums (the q5/q9/q7 discipline); the share
     -- is ONE double division of identical decimal-derived operands
     SELECT ROUND(
              100.0 * CAST(SUM(CASE WHEN p_type LIKE 'PROMO%'
-                              THEN (CASE WHEN NOT isnan(l_extendedprice)
-                   THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END)
-               * (1 - (CASE WHEN NOT isnan(l_discount)
-                            THEN TRY_CAST(l_discount AS DECIMAL(8,6)) END)) ELSE 0 END) AS DOUBLE)
-             / CAST(SUM((CASE WHEN NOT isnan(l_extendedprice)
-                   THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END)
-               * (1 - (CASE WHEN NOT isnan(l_discount)
-                            THEN TRY_CAST(l_discount AS DECIMAL(8,6)) END))) AS DOUBLE), 4) AS promo_share
+                              THEN {finite_decimal_sql('l_extendedprice', 'decimal(15,4)')}
+               * (1 - {finite_decimal_sql('l_discount', 'decimal(8,6)')}) ELSE 0 END) AS DOUBLE)
+             / CAST(SUM({finite_decimal_sql('l_extendedprice', 'decimal(15,4)')}
+               * (1 - {finite_decimal_sql('l_discount', 'decimal(8,6)')})) AS DOUBLE), 4) AS promo_share
     FROM lineitem JOIN part ON l_partkey = p_partkey
     WHERE l_shipdate >= TIMESTAMP '1996-01-01'
       AND l_shipdate <  TIMESTAMP '1996-04-01'
@@ -824,8 +788,8 @@ def q14_promo_revenue_share(spark, sf_dir):
         & (F.col("l_shipdate") < F.lit("1996-04-01"))
     )
     p = F.broadcast(_t(spark, sf_dir, "part").select("p_partkey", "p_type"))
-    rev = _dec_value("l_extendedprice", "decimal(15,4)") * (
-        F.lit(1) - _dec_value("l_discount", "decimal(8,6)")
+    rev = finite_decimal("l_extendedprice", "decimal(15,4)") * (
+        F.lit(1) - finite_decimal("l_discount", "decimal(8,6)")
     )
     return (
         li.join(p, F.col("l_partkey") == F.col("p_partkey"))
@@ -852,12 +816,10 @@ def q14_promo_revenue_share(spark, sf_dir):
     # n_name close the order over the full output. Revenue also moves
     # to the guarded-decimal recipe (q3/q20 class): raw double sums are
     # order-dependent under ±1e300 extremes.
-    """
+    f"""
     SELECT c.c_custkey, c.c_name, n.n_name,
-           CAST(ROUND(SUM((CASE WHEN NOT isnan(l_extendedprice)
-                                THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END)
-                          * (1 - (CASE WHEN NOT isnan(l_discount)
-                                       THEN TRY_CAST(l_discount AS DECIMAL(8,6)) END))), 2)
+           CAST(ROUND(SUM({finite_decimal_sql('l_extendedprice', 'decimal(15,4)')}
+                          * (1 - {finite_decimal_sql('l_discount', 'decimal(8,6)')})), 2)
                 AS DOUBLE) AS revenue
     FROM customer c
     JOIN orders o   ON c.c_custkey = o.o_custkey
@@ -893,8 +855,8 @@ def q10_returned_items(spark, sf_dir):
         .agg(
             F.round(
                 F.sum(
-                    _dec_value("l_extendedprice", "decimal(15,4)")
-                    * (F.lit(1) - _dec_value("l_discount", "decimal(8,6)"))
+                    finite_decimal("l_extendedprice", "decimal(15,4)")
+                    * (F.lit(1) - finite_decimal("l_discount", "decimal(8,6)"))
                 ),
                 2,
             )
@@ -918,20 +880,18 @@ def q10_returned_items(spark, sf_dir):
     # ±1e300 extremes (run-flaky in BOTH engines) — and the top-100
     # order extends over the remaining output columns so a duplicate
     # o_orderkey tie can't split at the LIMIT boundary.
-    """
+    f"""
     SELECT c.c_name, c.c_custkey, o.o_orderkey,
            CAST(o.o_orderdate AS TIMESTAMP) AS o_orderdate,
            ROUND(o.o_totalprice, 2) AS o_totalprice,
-           CAST(ROUND(SUM(CASE WHEN NOT isnan(l_quantity)
-                               THEN TRY_CAST(l_quantity AS DECIMAL(18,6)) END), 2)
+           CAST(ROUND(SUM({finite_decimal_sql('l_quantity')}), 2)
                 AS DOUBLE) AS total_qty
     FROM customer c
     JOIN orders o   ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON o.o_orderkey = l.l_orderkey
     WHERE o.o_orderkey IN (
       SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-      HAVING SUM(CASE WHEN NOT isnan(l_quantity)
-                      THEN TRY_CAST(l_quantity AS DECIMAL(18,6)) END) > 210
+      HAVING SUM({finite_decimal_sql('l_quantity')}) > 210
     )
     GROUP BY 1, 2, 3, 4, 5
     -- all ASC tie-breaks pinned NULLS FIRST (r11, r10-advice)
@@ -949,7 +909,7 @@ def q18_large_orders(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
-        .agg(F.sum(_dec_value("l_quantity", "decimal(18,6)")).alias("q"))
+        .agg(F.sum(finite_decimal("l_quantity")).alias("q"))
         .filter(F.col("q") > 210)
         .select("l_orderkey")
     )
@@ -959,7 +919,7 @@ def q18_large_orders(spark, sf_dir):
         .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
         .agg(
-            F.round(F.sum(_dec_value("l_quantity", "decimal(18,6)")), 2)
+            F.round(F.sum(finite_decimal("l_quantity")), 2)
             .cast("double")
             .alias("total_qty")
         )
@@ -986,14 +946,12 @@ def q18_large_orders(spark, sf_dir):
     "q19_bracketed_revenue",
     # guarded-decimal revenue (r11 batch, r10 verdict item 2): raw
     # double SUM over extremes is order-dependent / run-flaky
-    """
+    f"""
     -- lossless (19,4) re-cast after the (15,4) gate: forces DuckDB's
     -- INT128 multiply (INT64 fast path crashes on large in-domain
     -- products — r12 decimal-edge finder, seed 491)
-    SELECT CAST(ROUND(SUM(CAST((CASE WHEN NOT isnan(l_extendedprice)
-                   THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END) AS DECIMAL(19,4))
-               * (1 - (CASE WHEN NOT isnan(l_discount)
-                            THEN TRY_CAST(l_discount AS DECIMAL(8,6)) END))), 2)
+    SELECT CAST(ROUND(SUM(CAST({finite_decimal_sql('l_extendedprice', 'decimal(15,4)')} AS DECIMAL(19,4))
+               * (1 - {finite_decimal_sql('l_discount', 'decimal(8,6)')})), 2)
                 AS DOUBLE) AS revenue,
            CAST(COUNT(*) AS BIGINT) AS n
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
@@ -1027,8 +985,8 @@ def q19_bracketed_revenue(spark, sf_dir):
         .agg(
             F.round(
                 F.sum(
-                    _dec_value("l_extendedprice", "decimal(15,4)")
-                    * (F.lit(1) - _dec_value("l_discount", "decimal(8,6)"))
+                    finite_decimal("l_extendedprice", "decimal(15,4)")
+                    * (F.lit(1) - finite_decimal("l_discount", "decimal(8,6)"))
                 ),
                 2,
             )
@@ -1044,12 +1002,11 @@ def q19_bracketed_revenue(spark, sf_dir):
     # guarded-decimal revenue (r11 batch, r10 verdict item 2): the ()
     # grand-total row sums EVERY order — the widest exposure to
     # order-dependent double absorption in the catalog
-    """
+    f"""
     SELECT CAST(year(o_orderdate) AS INT) AS order_year,
            o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(ROUND(SUM(CASE WHEN NOT isnan(o_totalprice)
-                   THEN TRY_CAST(o_totalprice AS DECIMAL(18,6)) END), 2)
+           CAST(ROUND(SUM({finite_decimal_sql('o_totalprice')}), 2)
                 AS DOUBLE) AS revenue
     FROM orders
     GROUP BY ROLLUP (order_year, o_orderpriority)
@@ -1070,7 +1027,7 @@ def agg_rollup_order_revenue(spark, sf_dir):
         .rollup("order_year", "o_orderpriority")
         .agg(
             F.count("*").alias("n_orders"),
-            F.round(F.sum(_dec_value("o_totalprice")), 2)
+            F.round(F.sum(finite_decimal("o_totalprice")), 2)
             .cast("double")
             .alias("revenue"),
         )
@@ -1080,12 +1037,11 @@ def agg_rollup_order_revenue(spark, sf_dir):
 @_q(
     "agg_cube_event_matrix",
     # guarded-decimal value sums (r11 batch, r10 verdict item 2)
-    """
+    f"""
     SELECT event_type,
            CAST(year(CAST(ts AS TIMESTAMP)) AS INT) AS event_year,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(ROUND(SUM(CASE WHEN NOT isnan(value)
-                   THEN TRY_CAST(value AS DECIMAL(18,6)) END), 2)
+           CAST(ROUND(SUM({finite_decimal_sql('value')}), 2)
                 AS DOUBLE) AS total_value
     FROM events
     GROUP BY CUBE (event_type, event_year)
@@ -1107,7 +1063,7 @@ def agg_cube_event_matrix(spark, sf_dir):
         ev2.cube("event_type", "event_year")
         .agg(
             F.count("*").alias("n"),
-            F.round(F.sum(_dec_value()), 2).cast("double").alias("total_value"),
+            F.round(F.sum(finite_decimal("value")), 2).cast("double").alias("total_value"),
             F.grouping_id().alias("__gid"),
         )
         .filter(F.col("__gid") != 3)  # () row replaced by the global agg
@@ -1116,7 +1072,7 @@ def agg_cube_event_matrix(spark, sf_dir):
     total = (
         ev2.agg(
             F.count("*").alias("n"),
-            F.round(F.sum(_dec_value()), 2).cast("double").alias("total_value"),
+            F.round(F.sum(finite_decimal("value")), 2).cast("double").alias("total_value"),
         )
         .select(
             F.lit(None).cast("string").alias("event_type"),
@@ -1135,17 +1091,14 @@ def agg_cube_event_matrix(spark, sf_dir):
     # reassociation flips a ROUND(,2) boundary between engines (seed-71
     # five-way find: 1/150 rows). Decimal addition is associative;
     # out-of-domain values (NaN/±Inf/overflow) are missing per
-    # _dec_value — they no longer poison a user's whole pivot cell.
-    """
+    # finite_decimal — they no longer poison a user's whole pivot cell.
+    f"""
     SELECT user_id,
-           CAST(ROUND(COALESCE(SUM((CASE WHEN NOT isnan(value)
-                  THEN TRY_CAST(value AS DECIMAL(18,6)) END))
+           CAST(ROUND(COALESCE(SUM({finite_decimal_sql('value')})
                   FILTER (event_type = 'view'), 0), 2) AS DOUBLE) AS view_value,
-           CAST(ROUND(COALESCE(SUM((CASE WHEN NOT isnan(value)
-                  THEN TRY_CAST(value AS DECIMAL(18,6)) END))
+           CAST(ROUND(COALESCE(SUM({finite_decimal_sql('value')})
                   FILTER (event_type = 'click'), 0), 2) AS DOUBLE) AS click_value,
-           CAST(ROUND(COALESCE(SUM((CASE WHEN NOT isnan(value)
-                  THEN TRY_CAST(value AS DECIMAL(18,6)) END))
+           CAST(ROUND(COALESCE(SUM({finite_decimal_sql('value')})
                   FILTER (event_type = 'purchase'), 0), 2) AS DOUBLE) AS purchase_value
     FROM events
     GROUP BY user_id
@@ -1155,13 +1108,13 @@ def agg_pivot_user_event_values(spark, sf_dir):
     """Pivot (long→wide): per-user value totals by event type. With the
     pivot values DECLARED, Spark needs one pass; leaving them out adds a
     distinct-scan job to discover them — always declare at scale.
-    Decimal-summed (finite-domain _dec_value ingestion) so any
+    Decimal-summed (finite_decimal ingestion) so any
     aggregation tree reproduces the cent rounding bit-for-bit."""
     ev = _t(spark, sf_dir, "events")
     p = (
         ev.groupBy("user_id")
         .pivot("event_type", ["view", "click", "purchase"])
-        .agg(F.round(F.sum(_dec_value("value")), 2).cast("double"))
+        .agg(F.round(F.sum(finite_decimal("value")), 2).cast("double"))
     )
     # zero-fill OUTSIDE the pivot: an aggregate inside .agg() never runs
     # for a pivot cell with no source rows (the cell is NULL by
@@ -1180,14 +1133,12 @@ def agg_pivot_user_event_values(spark, sf_dir):
 
 @_q(
     "agg_quantiles_order_value",
-    """
+    f"""
     WITH s AS (
       -- finite-domain measurements only: engines place NaN at opposite
-      -- ends of the percentile order (see _finite_value)
+      -- ends of the percentile order
       SELECT o_orderpriority,
-             CASE WHEN NOT isnan(o_totalprice) THEN
-               CASE WHEN TRY_CAST(o_totalprice AS DECIMAL(18,6)) IS NOT NULL
-                    THEN o_totalprice END END AS tp
+             {finite_double_sql('o_totalprice')} AS tp
       FROM orders
     )
     SELECT o_orderpriority,
@@ -1205,7 +1156,7 @@ def agg_quantiles_order_value(spark, sf_dir):
     variant when groups are huge. Out-of-domain totals (NaN/±Inf/
     overflow) are missing — percentile skips NULL on both engines."""
     o = _t(spark, sf_dir, "orders").select(
-        "o_orderpriority", _finite_value("o_totalprice").alias("__tp")
+        "o_orderpriority", finite_double("o_totalprice").alias("__tp")
     )
     return o.groupBy("o_orderpriority").agg(
         F.round(F.expr("percentile(__tp, 0.5)"), 4).alias("p50"),
@@ -1239,7 +1190,7 @@ def agg_approx_stats(spark, sf_dir):
     # and the quantile sketch place NaN differently, so a single NaN
     # reading would flip the audit boolean for reasons that say nothing
     # about sketch accuracy (driver_sim --perturb-extremes + nulls)
-    ev = _t(spark, sf_dir, "events").withColumn("__vf", _finite_value())
+    ev = _t(spark, sf_dir, "events").withColumn("__vf", finite_double("value"))
     return ev.groupBy("event_type").agg(
         F.count_distinct("user_id").alias("exact_users"),
         (
@@ -1259,14 +1210,12 @@ def agg_approx_stats(spark, sf_dir):
 
 @_q(
     "feature_standard_scale",
-    """
+    f"""
     WITH s AS (
       -- finite-domain fit: one Inf reading would make mean/stddev Inf/NaN
-      -- and zero every other z-score's information (see _finite_value)
+      -- and zero every other z-score's information
       SELECT o_orderkey,
-             CASE WHEN NOT isnan(o_totalprice) THEN
-               CASE WHEN TRY_CAST(o_totalprice AS DECIMAL(18,6)) IS NOT NULL
-                    THEN o_totalprice END END AS o_totalprice
+             {finite_double_sql('o_totalprice')} AS o_totalprice
       FROM orders
     )
     SELECT o_orderkey,
@@ -1283,7 +1232,7 @@ def feature_standard_scale(spark, sf_dir):
     from ..operators.scaling import apply_standard_scaler, fit_standard_scaler
 
     o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", _finite_value("o_totalprice").alias("o_totalprice")
+        "o_orderkey", finite_double("o_totalprice").alias("o_totalprice")
     )
     stats = fit_standard_scaler(o, ["o_totalprice"])
     return apply_standard_scaler(o, stats).select(
@@ -1293,17 +1242,14 @@ def feature_standard_scale(spark, sf_dir):
 
 @_q(
     "feature_quantile_bins",
-    """
+    f"""
     WITH s AS (
       -- finite-domain measurements only (out-of-domain -> missing, so
       -- the fit never sees a NaN whose percentile rank the engines
       -- place differently, and the binned output is NULL like any
       -- other missing value)
       SELECT event_id,
-             CASE WHEN NOT isnan(value) THEN
-               CASE WHEN TRY_CAST(value AS DECIMAL(18,6)) IS NOT NULL
-                    THEN value END
-             END AS value
+             {finite_double_sql('value')} AS value
       FROM events
     ),
     e AS (SELECT quantile_cont(value, [0.25, 0.5, 0.75]) AS q FROM s)
@@ -1324,7 +1270,7 @@ def feature_quantile_bins(spark, sf_dir):
     from ..operators.scaling import apply_quantile_bins, fit_quantile_bins
 
     ev = _t(spark, sf_dir, "events").select(
-        "event_id", _finite_value().alias("value")
+        "event_id", finite_double("value").alias("value")
     )
     edges = fit_quantile_bins(ev, "value", n_bins=4)
     return apply_quantile_bins(ev, "value", edges).select("event_id", "value_bin")
@@ -1332,15 +1278,13 @@ def feature_quantile_bins(spark, sf_dir):
 
 @_q(
     "feature_winsorize",
-    """
+    f"""
     WITH s AS (
-      -- finite-domain fit/apply (see _finite_value); the CASE keeps the
+      -- finite-domain fit/apply; the CASE keeps the
       -- NULL path explicit rather than relying on either engine's
       -- LEAST/GREATEST null semantics
       SELECT o_orderkey,
-             CASE WHEN NOT isnan(o_totalprice) THEN
-               CASE WHEN TRY_CAST(o_totalprice AS DECIMAL(18,6)) IS NOT NULL
-                    THEN o_totalprice END END AS tp
+             {finite_double_sql('o_totalprice')} AS tp
       FROM orders
     ),
     b AS (SELECT quantile_cont(tp, [0.05, 0.95]) AS q FROM s)
@@ -1358,7 +1302,7 @@ def feature_winsorize(spark, sf_dir):
     from ..operators.scaling import fit_winsor_bounds, winsorize
 
     o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", _finite_value("o_totalprice").alias("o_totalprice")
+        "o_orderkey", finite_double("o_totalprice").alias("o_totalprice")
     )
     bounds = fit_winsor_bounds(o, "o_totalprice", 0.05, 0.95)
     return winsorize(o, "o_totalprice", bounds).select(
@@ -1368,7 +1312,7 @@ def feature_winsorize(spark, sf_dir):
 
 @_q(
     "profile_events_table",
-    """
+    f"""
     WITH n AS (SELECT COUNT(*) AS n_rows FROM events)
     SELECT * FROM (
       SELECT 'event_type' AS column, n_rows,
@@ -1391,11 +1335,9 @@ def feature_winsorize(spark, sf_dir):
              -- finite-decimal-domain range, fixed-scale rendering (see
              -- profile_table: raw double->string casts are
              -- engine-specific exactly on the special values)
-             (SELECT CAST(MIN(CASE WHEN NOT isnan(value)
-                                   THEN TRY_CAST(value AS DECIMAL(30,6)) END) AS VARCHAR)
+             (SELECT CAST(MIN({finite_decimal_sql('value', 'decimal(30,6)')}) AS VARCHAR)
               FROM events),
-             (SELECT CAST(MAX(CASE WHEN NOT isnan(value)
-                                   THEN TRY_CAST(value AS DECIMAL(30,6)) END) AS VARCHAR)
+             (SELECT CAST(MAX({finite_decimal_sql('value', 'decimal(30,6)')}) AS VARCHAR)
               FROM events)
       FROM n
     )
@@ -1543,13 +1485,11 @@ def topk_salted_orders_per_priority(spark, sf_dir):
 
 @_q(
     "window_running_user_spend",
-    """
+    f"""
     SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-           -- finite-domain running sum (see _finite_value): one NaN/Inf
+           -- finite-domain running sum: one NaN/Inf
            -- tick would poison the user's entire suffix
-           ROUND(SUM(CASE WHEN NOT isnan(value) THEN
-                       CASE WHEN TRY_CAST(value AS DECIMAL(18,6)) IS NOT NULL
-                            THEN value END END) OVER (
+           ROUND(SUM({finite_double_sql('value')}) OVER (
              -- value in the order key (r09): ts-truncated duplicate-id
              -- rows tie on (ts, event_id); rows still tied carry equal
              -- values, so the running sum is order-invariant. NULLS
@@ -1575,7 +1515,7 @@ def window_running_user_spend(spark, sf_dir):
         "event_id",
         "user_id",
         "ts",
-        F.round(F.sum(_finite_value()).over(w), 2).alias("running_value"),
+        F.round(F.sum(finite_double("value")).over(w), 2).alias("running_value"),
     )
 
 
@@ -2863,19 +2803,16 @@ def dedup_semantic_embedding(spark, sf_dir):
     # guarded-decimal component/norm averages (r11 batch, r10 verdict
     # item 2): raw double AVG over ±3e38 float32 extremes is
     # order-dependent (a +3e38/−3e38 pair cancels or absorbs depending
-    # on reduction order). Per the _dec_value policy an out-of-domain
+    # on reduction order). Per the finite_decimal policy an out-of-domain
     # reading (NaN, ±Inf, |x| ≥ 1e12 — no real embedding component or
     # norm is near that) is a corrupt measurement: missing from both
     # the sum and the count. n_vectors still counts every row.
-    """
+    f"""
     WITH f AS (
       SELECT label,
-             (CASE WHEN NOT isnan(embedding[1])
-                   THEN TRY_CAST(embedding[1] AS DECIMAL(18,6)) END) AS d0,
-             (CASE WHEN NOT isnan(embedding[2])
-                   THEN TRY_CAST(embedding[2] AS DECIMAL(18,6)) END) AS d1,
-             (CASE WHEN NOT isnan(nrm)
-                   THEN TRY_CAST(nrm AS DECIMAL(18,6)) END) AS nrm
+             {finite_decimal_sql('embedding[1]')} AS d0,
+             {finite_decimal_sql('embedding[2]')} AS d1,
+             {finite_decimal_sql('nrm')} AS nrm
       FROM (SELECT label, embedding,
                    SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
                                            CAST(embedding AS DOUBLE[]))) AS nrm
@@ -2895,12 +2832,9 @@ def embedding_stats_by_label(spark, sf_dir):
     ONE double division of identical operands (the q14 ratio recipe)."""
     emb = _t(spark, sf_dir, "embeddings")
 
-    def _g(c):
-        return F.when(~F.isnan(c), c.try_cast("decimal(18,6)"))
-
-    d0 = _g(F.element_at("embedding", 1))
-    d1 = _g(F.element_at("embedding", 2))
-    nrm = _g(V.norm(F.col("embedding")))
+    d0 = finite_decimal(F.element_at("embedding", 1))
+    d1 = finite_decimal(F.element_at("embedding", 2))
+    nrm = finite_decimal(V.norm(F.col("embedding")))
 
     def _avg(c, name):
         return F.round(
@@ -2998,12 +2932,11 @@ def _stream_events(spark, sf_dir):
     # guarded-decimal window sums (r11 batch, r10 verdict item 2):
     # micro-batch boundaries are one more source of summation-order
     # variation on top of shuffle order
-    """
+    f"""
     SELECT time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)) AS window_start,
            event_type,
            COUNT(*) AS n_events,
-           CAST(ROUND(SUM(CASE WHEN NOT isnan(value)
-                   THEN TRY_CAST(value AS DECIMAL(18,6)) END), 2)
+           CAST(ROUND(SUM({finite_decimal_sql('value')}), 2)
                 AS DOUBLE) AS total_value
     FROM events
     -- ts IS NOT NULL (r11 ts-nulls find, seed 337): NULL event time
@@ -3038,7 +2971,7 @@ def stream_tumbling_window_counts(spark, sf_dir):
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            F.round(F.sum(_dec_value()), 2).cast("double").alias("total_value"),
+            F.round(F.sum(finite_decimal("value")), 2).cast("double").alias("total_value"),
         )
     )
     result = run_bounded_to_memory(agg, output_mode="complete", state_partitions=4)
@@ -3196,7 +3129,7 @@ def stream_asof_enrich(spark, sf_dir):
 
 @_q(
     "write_ignore_roundtrip",
-    """
+    f"""
     SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
            -- guarded-decimal sum + ROUND(dec,2) (the cube/session idiom),
            -- replacing the r06 BIGINT micro-rail: SUM(v)*1e6 overflowed
@@ -3204,8 +3137,7 @@ def stream_asof_enrich(spark, sf_dir):
            -- find, seed 491 — ~1e3 rows at 9e9 is 9e18 micro-units,
            -- past the 9.2e18 int64 ceiling; sum headroom is exactly
            -- what the mode exists to probe)
-           CAST(ROUND(SUM(CASE WHEN NOT isnan(value)
-                   THEN TRY_CAST(value AS DECIMAL(18,6)) END), 2)
+           CAST(ROUND(SUM({finite_decimal_sql('value')}), 2)
                 AS DOUBLE) AS total_value
     FROM events GROUP BY event_type
     """,
@@ -3230,7 +3162,7 @@ def write_ignore_roundtrip(spark, sf_dir):
         # ROUND(decimal_sum, 2) -> double, the cube/session idiom: the
         # old BIGINT micro-rail (SUM*1e6 AS BIGINT) overflowed int64 at
         # in-domain magnitudes (r12 decimal-edge find, seed 491)
-        F.round(F.sum(_dec_value()), 2).cast("double").alias("total_value"),
+        F.round(F.sum(finite_decimal("value")), 2).cast("double").alias("total_value"),
     )
     path = os.path.join(tempdir("ignore_write_"), "summary")
     write_table(summary, path, mode="ignore")
@@ -3259,21 +3191,19 @@ def stream_checkpoint_restart(spark, sf_dir):
     (n_events = 2 × n_distinct)."""
     import os
 
+    from ..streaming.pipeline import _run_bounded
+
     workdir = tempdir("chk_restart_")
     sink = os.path.join(workdir, "sink")
     chk = os.path.join(workdir, "chk")
     for _ in range(2):  # initial run + restart from the same checkpoint
         stream = _stream_events(spark, sf_dir).select("event_id", "event_type")
-        q = (
+        _run_bounded(
             stream.writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", chk)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.processAllAvailable()
-        q.stop()
     out = spark.read.parquet(sink)
     return out.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -3521,13 +3451,13 @@ def analytics_percentile_bands(spark, sf_dir):
 
 @_q(
     "incremental_agg_maintenance",
-    """
+    f"""
     WITH g AS (
       SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM((CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END)) * 1000000 AS BIGINT) AS m,
+             CAST(SUM({finite_decimal_sql('value')}) * 1000000 AS BIGINT) AS m,
              -- count the SANITIZED column (out-of-domain = missing),
              -- mirroring the incremental state's count measure
-             CAST(COUNT((CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END)) AS BIGINT) AS cv
+             CAST(COUNT({finite_decimal_sql('value')}) AS BIGINT) AS cv
       FROM events GROUP BY event_type
     )
     SELECT event_type, n,
@@ -3554,7 +3484,7 @@ def incremental_agg_maintenance(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events").withColumn(
-        "value", _dec_value()
+        "value", finite_decimal("value")
     )
     keys = ["event_type"]
     measures = {"total_value": ("value", "sum"), "value_cnt": ("value", "count")}
@@ -3581,13 +3511,13 @@ def incremental_agg_maintenance(spark, sf_dir):
 
 @_q(
     "timeseries_rollup_cascade",
-    """
+    f"""
     WITH src AS (
       -- ts IS NOT NULL (r11 ts-nulls find, seed 337): a reading with no
       -- time belongs to no bucket at any rollup level. Spark's window()
       -- drops such rows structurally; the oracle spells the policy.
       SELECT CAST(ts AS TIMESTAMP) AS ts, event_type,
-             (CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END) AS v
+             {finite_decimal_sql('value')} AS v
       FROM events WHERE ts IS NOT NULL
     ),
     hourly AS (
@@ -3639,7 +3569,7 @@ def timeseries_rollup_cascade(spark, sf_dir):
     from ..operators.timeseries import rollup_cascade
 
     ev = _t(spark, sf_dir, "events").withColumn(
-        "value", _dec_value()
+        "value", finite_decimal("value")
     )
     out = rollup_cascade(
         ev,
@@ -3734,13 +3664,13 @@ def graph_pagerank_trade_network(spark, sf_dir):
 
 @_q(
     "window_range_moving_avg",
-    """
+    f"""
     WITH b AS (
       SELECT event_id, user_id,
-             CAST(SUM((CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END)) OVER w * 1000000 AS BIGINT) AS m,
+             CAST(SUM({finite_decimal_sql('value')}) OVER w * 1000000 AS BIGINT) AS m,
              -- count the SANITIZED column: out-of-domain values are
              -- missing, so they must not inflate the average's denominator
-             CAST(COUNT((CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END)) OVER w AS BIGINT) AS c
+             CAST(COUNT({finite_decimal_sql('value')}) OVER w AS BIGINT) AS c
       FROM events
       WINDOW w AS (PARTITION BY user_id
                    ORDER BY epoch_us(CAST(ts AS TIMESTAMP))
@@ -3763,7 +3693,7 @@ def window_range_moving_avg(spark, sf_dir):
     from ..operators.timeseries import range_moving_agg
 
     ev = _t(spark, sf_dir, "events").withColumn(
-        "vdec", _dec_value()
+        "vdec", finite_decimal("value")
     )
     out = range_moving_agg(
         ev, "user_id", "ts", "vdec", 7 * 86400,
@@ -4012,16 +3942,13 @@ def record_linkage_customers(spark, sf_dir):
 
 @_q(
     "feature_impute_missing",
-    """
+    f"""
     WITH s AS (
       -- finite-domain measurements only: a NaN/±Inf/overflow reading is
       -- MISSING — i.e. it gets imputed, which is exactly what an
       -- imputer is for (driver_sim --perturb-extremes)
       SELECT event_id,
-             CASE WHEN NOT isnan(value) THEN
-               CASE WHEN TRY_CAST(value AS DECIMAL(18,6)) IS NOT NULL
-                    THEN value END
-             END AS value
+             {finite_double_sql('value')} AS value
       FROM events
     ),
     m AS (SELECT quantile_cont(value, 0.5) AS med FROM s WHERE event_id % 7 <> 0)
@@ -4047,7 +3974,7 @@ def feature_impute_missing(spark, sf_dir):
         "event_id",
         # planted nulls + finite-domain sanitization (out-of-domain
         # readings are missing -> imputed; see oracle comment)
-        F.when(F.col("event_id") % 7 == 0, None).otherwise(_finite_value()).alias("value"),
+        F.when(F.col("event_id") % 7 == 0, None).otherwise(finite_double("value")).alias("value"),
     )
     fills = fit_imputer(ev, ["value"], strategy="median")
     return apply_imputer(ev, fills).select(
@@ -4080,11 +4007,10 @@ def feature_one_hot_events(spark, sf_dir):
     # over the finite decimal domain (out-of-domain labels are missing);
     # the smoothing arithmetic is DOUBLE over decimal-derived operands —
     # identical bits in both engines (the q14 ratio recipe)
-    """
+    f"""
     WITH src AS (
       SELECT event_id, event_type,
-             (CASE WHEN NOT isnan(value)
-                   THEN TRY_CAST(value AS DECIMAL(18,6)) END) AS v
+             {finite_decimal_sql('value')} AS v
       FROM events
     ),
     g AS (SELECT CAST(SUM(v) AS DOUBLE) / NULLIF(COUNT(v), 0) AS gm FROM src),
@@ -4143,15 +4069,13 @@ def melt_lineitem_charges(spark, sf_dir):
 
 @_q(
     "wow_revenue_change",
-    """
+    f"""
     WITH weekly AS (
       SELECT time_bucket(INTERVAL 1 WEEK, CAST(o_orderdate AS TIMESTAMP),
                          TIMESTAMP '1970-01-01') AS week_start,
-             -- finite-domain revenue (see _finite_value): one Inf order
+             -- finite-domain revenue: one Inf order
              -- would poison every week-over-week delta downstream
-             SUM(CASE WHEN NOT isnan(o_totalprice) THEN
-                   CASE WHEN TRY_CAST(o_totalprice AS DECIMAL(18,6)) IS NOT NULL
-                        THEN o_totalprice END END) AS revenue
+             SUM({finite_double_sql('o_totalprice')}) AS revenue
       -- o_orderdate IS NOT NULL (r11 --perturb-date-nulls find, seed
       -- 367): an undated order belongs to no week; Spark's window()
       -- drops the row structurally, the oracle spells the policy
@@ -4173,7 +4097,7 @@ def wow_revenue_change(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     weekly = (
         o.groupBy(F.window("o_orderdate", "1 week")["start"].alias("week_start"))
-        .agg(F.sum(_finite_value("o_totalprice")).alias("revenue"))
+        .agg(F.sum(finite_double("o_totalprice")).alias("revenue"))
     )
     w = W.orderBy("week_start")
     prev = F.lag("revenue").over(w)
@@ -4187,24 +4111,16 @@ def wow_revenue_change(spark, sf_dir):
 
 @_q(
     "feature_correlations",
-    """
+    f"""
     WITH s AS (
-      -- finite-domain ingestion (see _finite_value) on EVERY input
+      -- finite-domain ingestion on EVERY input
       -- column (r09 ring 2): DuckDB's corr/STDDEV hard-error on Inf
       -- inputs, Spark's return NaN — neither is a statement about the
       -- data; corr skips NULL pairs on both
-      SELECT CASE WHEN NOT isnan(l_quantity) THEN
-               CASE WHEN TRY_CAST(l_quantity AS DECIMAL(18,6)) IS NOT NULL
-                    THEN l_quantity END END AS l_quantity,
-             CASE WHEN NOT isnan(l_discount) THEN
-               CASE WHEN TRY_CAST(l_discount AS DECIMAL(18,6)) IS NOT NULL
-                    THEN l_discount END END AS l_discount,
-             CASE WHEN NOT isnan(l_tax) THEN
-               CASE WHEN TRY_CAST(l_tax AS DECIMAL(18,6)) IS NOT NULL
-                    THEN l_tax END END AS l_tax,
-             CASE WHEN NOT isnan(l_extendedprice) THEN
-               CASE WHEN TRY_CAST(l_extendedprice AS DECIMAL(18,6)) IS NOT NULL
-                    THEN l_extendedprice END END AS l_extendedprice
+      SELECT {finite_double_sql('l_quantity')} AS l_quantity,
+             {finite_double_sql('l_discount')} AS l_discount,
+             {finite_double_sql('l_tax')} AS l_tax,
+             {finite_double_sql('l_extendedprice')} AS l_extendedprice
       FROM lineitem
     )
     SELECT ROUND(corr(l_quantity, l_extendedprice), 6) AS qty_price,
@@ -4218,10 +4134,10 @@ def feature_correlations(spark, sf_dir):
     aggregation pass (feature-selection screen; no |cols|² shuffle).
     Out-of-domain measurements are missing — corr skips NULL pairs."""
     li = _t(spark, sf_dir, "lineitem").select(
-        _finite_value("l_quantity").alias("l_quantity"),
-        _finite_value("l_discount").alias("l_discount"),
-        _finite_value("l_tax").alias("l_tax"),
-        _finite_value("l_extendedprice").alias("l_extendedprice"),
+        finite_double("l_quantity").alias("l_quantity"),
+        finite_double("l_discount").alias("l_discount"),
+        finite_double("l_tax").alias("l_tax"),
+        finite_double("l_extendedprice").alias("l_extendedprice"),
     )
     return li.agg(
         F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("qty_price"),
@@ -4232,7 +4148,7 @@ def feature_correlations(spark, sf_dir):
 
 @_q(
     "ab_test_group_summary",
-    """
+    f"""
     WITH g AS (
       -- observed FINITE in-domain measurements only: NaN/±Inf/1e300 are
       -- not valid readouts, and n must count what the moments actually
@@ -4243,9 +4159,7 @@ def feature_correlations(spark, sf_dir):
                -- nested CASE, not AND: DuckDB evaluates AND operands
                -- eagerly (vectorized), so TRY_CAST would still see the
                -- NaN its 1.0 build cannot cast; CASE branches are lazy
-               CASE WHEN NOT isnan(value)
-                    THEN TRY_CAST(value AS DECIMAL(18,6))
-               END AS dv
+               {finite_decimal_sql('value')} AS dv
         FROM events WHERE event_type = 'purchase'
       ) WHERE dv IS NOT NULL
     )
@@ -4302,7 +4216,7 @@ def ab_test_group_summary(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     g = ev.select(
         F.when(F.col("user_id") % 2 == 0, "A").otherwise("B").alias("grp"),
-        _dec_value().alias("dv"),
+        finite_decimal("value").alias("dv"),
     ).where(F.col("dv").isNotNull())
     s = g.groupBy("grp").agg(
         F.count("*").alias("n"),
@@ -4327,9 +4241,9 @@ def ab_test_group_summary(spark, sf_dir):
 
 @_q(
     "histogram_order_values",
-    """
+    f"""
     WITH b AS (
-      -- finite-domain bins (see _finite_value): a NaN/±Inf/overflow
+      -- finite-domain bins: a NaN/±Inf/overflow
       -- total has no bin — the row is excluded, not clamped into a tail.
       -- The null-check must wrap the CLAMP: GREATEST/LEAST skip NULLs on
       -- both engines, so an unguarded clamp resurrects every excluded
@@ -4338,9 +4252,7 @@ def ab_test_group_summary(spark, sf_dir):
                   THEN LEAST(GREATEST(raw_bin, 0), 9) END AS bin
       FROM (
         SELECT CAST(FLOOR(
-                 (CASE WHEN NOT isnan(o_totalprice) THEN
-                    CASE WHEN TRY_CAST(o_totalprice AS DECIMAL(18,6)) IS NOT NULL
-                         THEN o_totalprice END END) / 50000) AS INT) AS raw_bin
+                 {finite_double_sql('o_totalprice')} / 50000) AS INT) AS raw_bin
         FROM orders
       )
     )
@@ -4356,7 +4268,7 @@ def histogram_order_values(spark, sf_dir):
     ``profile_table``. Out-of-domain totals have no bin: clamping a
     corrupt reading into a tail bucket would fabricate a count."""
     o = _t(spark, sf_dir, "orders")
-    raw_bin = F.floor(_finite_value("o_totalprice") / 50000).cast("int")
+    raw_bin = F.floor(finite_double("o_totalprice") / 50000).cast("int")
     # null-check wraps the clamp: greatest()/least() skip NULLs on both
     # engines, so an unguarded clamp would resurrect excluded readings
     # as bin 0 (r08 review find)
@@ -5261,7 +5173,7 @@ def text_clean_normalize(spark, sf_dir):
 
 @_q(
     "stream_sliding_window_counts",
-    """
+    f"""
     WITH e AS (
       -- ts IS NOT NULL: see stream_tumbling_window_counts (r11, 337)
       SELECT CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events
@@ -5275,8 +5187,7 @@ def text_clean_normalize(spark, sf_dir):
     SELECT window_start, event_type,
            COUNT(*) AS n_events,
            -- guarded-decimal sums (r11 batch, r10 verdict item 2)
-           CAST(ROUND(SUM(CASE WHEN NOT isnan(value)
-                   THEN TRY_CAST(value AS DECIMAL(18,6)) END), 2)
+           CAST(ROUND(SUM({finite_decimal_sql('value')}), 2)
                 AS DOUBLE) AS total_value
     FROM x GROUP BY 1, 2
     """,
@@ -5292,7 +5203,7 @@ def stream_sliding_window_counts(spark, sf_dir):
         .groupBy(F.window("ts", "2 hours", "1 hour"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            F.round(F.sum(_dec_value()), 2).cast("double").alias("total_value"),
+            F.round(F.sum(finite_decimal("value")), 2).cast("double").alias("total_value"),
         )
     )
     # state_partitions: see stream_tumbling_window_counts (state =
@@ -5548,7 +5459,7 @@ def ann_ivf_topk(spark, sf_dir):
 
 @_q(
     "session_window_stats",
-    """
+    f"""
     WITH e AS (
       -- ts IS NOT NULL (r11 ts-nulls find, seed 337): a session is a
       -- time-axis construct; Spark's session_window drops NULL event
@@ -5571,8 +5482,7 @@ def ann_ivf_topk(spark, sf_dir):
            MIN(ts) AS session_start,
            MAX(ts) + INTERVAL 30 MINUTE AS session_end,
            COUNT(*) AS n_events,
-           CAST(ROUND(SUM(CASE WHEN NOT isnan(value)
-                               THEN TRY_CAST(value AS DECIMAL(18,6)) END), 2)
+           CAST(ROUND(SUM({finite_decimal_sql('value')}), 2)
                 AS DOUBLE) AS total_value
     FROM s GROUP BY user_id, sid
     """,
@@ -5587,7 +5497,7 @@ def session_window_stats(spark, sf_dir):
         ev.groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
-            F.round(F.sum(_dec_value("value")), 2).cast("double").alias("total_value"),
+            F.round(F.sum(finite_decimal("value")), 2).cast("double").alias("total_value"),
         )
         .select(
             "user_id",
@@ -5601,7 +5511,7 @@ def session_window_stats(spark, sf_dir):
 
 @_q(
     "stream_session_window_stats",
-    """
+    f"""
     WITH e AS (
       -- ts IS NOT NULL (r11): the engine's watermark drops NULL event
       -- times; before this spelling the oracle only matched because
@@ -5625,8 +5535,7 @@ def session_window_stats(spark, sf_dir):
              MAX(ts) + INTERVAL 30 MINUTE AS session_end,
              COUNT(*) AS n_events,
              -- guarded-decimal sums: see session_window_stats (seed 191)
-             CAST(ROUND(SUM(CASE WHEN NOT isnan(value)
-                                 THEN TRY_CAST(value AS DECIMAL(18,6)) END), 2)
+             CAST(ROUND(SUM({finite_decimal_sql('value')}), 2)
                   AS DOUBLE) AS total_value
       FROM s GROUP BY user_id, sid
     )
@@ -5650,7 +5559,7 @@ def stream_session_window_stats(spark, sf_dir):
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
-            F.round(F.sum(_dec_value("value")), 2).cast("double").alias("total_value"),
+            F.round(F.sum(finite_decimal("value")), 2).cast("double").alias("total_value"),
         )
     )
     # state_partitions: see stream_tumbling_window_counts (state =
@@ -5678,7 +5587,7 @@ def stream_session_window_stats(spark, sf_dir):
 
 @_q(
     "q2_min_cost_supplier",
-    """
+    f"""
     WITH li AS (
       SELECT l_partkey, l_suppkey, l_extendedprice, l_quantity FROM lineitem
       WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size = 15 AND p_type = 'SMALL')
@@ -5688,19 +5597,17 @@ def stream_session_window_stats(spark, sf_dir):
                           WHERE r_name = 'EUROPE')
     ),
     offers AS (
-      -- finite-domain offers (see _dec_value): a NaN/±Inf/overflow
+      -- finite-domain offers: a NaN/±Inf/overflow
       -- price OR quantity is no offer — MIN skips the NULL. The
       -- quantity guard must WRAP the GREATEST (it skips NULLs on both
       -- engines, so a bare clamp would resurrect a corrupt quantity
       -- as qty=1); FLOOR on the guarded DECIMAL stays in BIGINT range
       SELECT l_partkey, l_suppkey,
              MIN(CASE WHEN qf IS NOT NULL THEN
-                   CAST((CASE WHEN NOT isnan(l_extendedprice)
-                              THEN TRY_CAST(l_extendedprice AS DECIMAL(18,2)) END)
+                   CAST({finite_decimal_sql('l_extendedprice', 'decimal(18,2)')}
                         * 1000000 AS BIGINT)
                    // GREATEST(qf, 1) END) AS unit_micro
-      FROM (SELECT *, CAST(FLOOR(CASE WHEN NOT isnan(l_quantity)
-                                      THEN TRY_CAST(l_quantity AS DECIMAL(18,6)) END)
+      FROM (SELECT *, CAST(FLOOR({finite_decimal_sql('l_quantity')})
                            AS BIGINT) AS qf
             FROM li)
       GROUP BY l_partkey, l_suppkey
@@ -5752,21 +5659,16 @@ def q2_min_cost_supplier(spark, sf_dir):
     # on one sf0.1 row (Spark HALF_UPs the decimal repr, DuckDB rounds the
     # binary value) — integer arithmetic ends the class; the published
     # double is micro/1e6 of an identical integer.
-    # finite-domain: TRY_CAST + isnan guard (the _dec_value policy inside
-    # a SQL expr) — an out-of-domain price OR quantity is no offer, MIN
-    # skips NULL. The quantity guard WRAPS the GREATEST (NULL-skipping
-    # clamp would resurrect a corrupt quantity as qty=1, r09 ring 2);
-    # FLOOR on the guarded DECIMAL keeps the BIGINT cast in range.
+    # finite-domain: the finite_decimal policy inside a SQL expr — an
+    # out-of-domain price OR quantity is no offer, MIN skips NULL. The
+    # quantity guard WRAPS the GREATEST (NULL-skipping clamp would
+    # resurrect a corrupt quantity as qty=1, r09 ring 2); FLOOR on the
+    # guarded DECIMAL keeps the BIGINT cast in range.
+    qf = f"CAST(FLOOR({finite_decimal_sql('l_quantity')}) AS BIGINT)"
     unit_micro = F.expr(
-        "CASE WHEN CAST(FLOOR(CASE WHEN NOT isnan(l_quantity)"
-        "                          THEN TRY_CAST(l_quantity AS DECIMAL(18,6)) END)"
-        "               AS BIGINT) IS NOT NULL THEN"
-        " CAST((CASE WHEN NOT isnan(l_extendedprice)"
-        "       THEN TRY_CAST(l_extendedprice AS DECIMAL(18,2)) END)"
-        "      * 1000000 AS BIGINT)"
-        " DIV GREATEST(CAST(FLOOR(CASE WHEN NOT isnan(l_quantity)"
-        "                              THEN TRY_CAST(l_quantity AS DECIMAL(18,6)) END)"
-        "                   AS BIGINT), 1L) END"
+        f"CASE WHEN {qf} IS NOT NULL THEN"
+        f" CAST({finite_decimal_sql('l_extendedprice', 'decimal(18,2)')} * 1000000 AS BIGINT)"
+        f" DIV GREATEST({qf}, 1L) END"
     )
     offers = (
         li.join(F.broadcast(part.select("p_partkey")), F.col("l_partkey") == F.col("p_partkey"))
@@ -5823,7 +5725,7 @@ def q4_late_order_priority(spark, sf_dir):
 
 @_q(
     "q7_nation_volume_shipping",
-    """
+    f"""
     SELECT supp_nation, cust_nation, l_year,
            -- finite-domain DECIMAL revenue (the q5/q9 discipline): the
            -- skew-planted hot supplier concentrates one (nation, year)
@@ -5833,10 +5735,8 @@ def q4_late_order_priority(spark, sf_dir):
     FROM (
       SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
              CAST(EXTRACT(year FROM l_shipdate) AS INTEGER) AS l_year,
-             (CASE WHEN NOT isnan(l_extendedprice)
-                   THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END)
-               * (1 - (CASE WHEN NOT isnan(l_discount)
-                            THEN TRY_CAST(l_discount AS DECIMAL(8,6)) END)) AS volume
+             {finite_decimal_sql('l_extendedprice', 'decimal(15,4)')}
+               * (1 - {finite_decimal_sql('l_discount', 'decimal(8,6)')}) AS volume
       FROM supplier
       JOIN lineitem ON s_suppkey = l_suppkey
       JOIN orders ON o_orderkey = l_orderkey
@@ -5884,8 +5784,8 @@ def q7_nation_volume_shipping(spark, sf_dir):
         .agg(
             F.round(
                 F.sum(
-                    _dec_value("l_extendedprice", "decimal(15,4)")
-                    * (F.lit(1) - _dec_value("l_discount", "decimal(8,6)"))
+                    finite_decimal("l_extendedprice", "decimal(15,4)")
+                    * (F.lit(1) - finite_decimal("l_discount", "decimal(8,6)"))
                 ),
                 2,
             )
@@ -5897,7 +5797,7 @@ def q7_nation_volume_shipping(spark, sf_dir):
 
 @_q(
     "q8_market_share",
-    """
+    f"""
     SELECT o_year,
            -- finite-domain DECIMAL volume (the q5/q9/q7 discipline); the
            -- share is one double division of identical decimal operands
@@ -5905,10 +5805,8 @@ def q7_nation_volume_shipping(spark, sf_dir):
                  / CAST(SUM(volume) AS DOUBLE), 6) AS mkt_share
     FROM (
       SELECT CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS o_year,
-             (CASE WHEN NOT isnan(l_extendedprice)
-                   THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END)
-               * (1 - (CASE WHEN NOT isnan(l_discount)
-                            THEN TRY_CAST(l_discount AS DECIMAL(8,6)) END)) AS volume,
+             {finite_decimal_sql('l_extendedprice', 'decimal(15,4)')}
+               * (1 - {finite_decimal_sql('l_discount', 'decimal(8,6)')}) AS volume,
              n2.n_name AS nation
       FROM part
       JOIN lineitem ON p_partkey = l_partkey
@@ -5947,8 +5845,8 @@ def q8_market_share(spark, sf_dir):
             F.lit("1995-01-01").cast("timestamp"), F.lit("1996-12-31").cast("timestamp")
         )
     )
-    vol = _dec_value("l_extendedprice", "decimal(15,4)") * (
-        F.lit(1) - _dec_value("l_discount", "decimal(8,6)")
+    vol = finite_decimal("l_extendedprice", "decimal(15,4)") * (
+        F.lit(1) - finite_decimal("l_discount", "decimal(8,6)")
     )
     return (
         _t(spark, sf_dir, "lineitem")
@@ -5979,22 +5877,18 @@ def q8_market_share(spark, sf_dir):
     # (driver_sim --perturb-skew find: 3/175 rows). Decimal addition is
     # associative, so any aggregation tree reproduces; the final cast
     # back to DOUBLE is bit-identical from identical decimals.
-    """
+    f"""
     SELECT nation, o_year, CAST(ROUND(SUM(amount), 2) AS DOUBLE) AS sum_profit
     FROM (
       SELECT n_name AS nation,
              CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS o_year,
-             -- finite-domain ingestion (see _dec_value) on EVERY double
+             -- finite-domain ingestion on EVERY double
              -- operand (r09 ring 2): an out-of-domain price, discount,
              -- retail price, or quantity voids that line's amount
-             (CASE WHEN NOT isnan(l_extendedprice)
-                   THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END)
-               * (1 - (CASE WHEN NOT isnan(l_discount)
-                            THEN TRY_CAST(l_discount AS DECIMAL(8,6)) END))
-               - (CASE WHEN NOT isnan(p_retailprice)
-                       THEN TRY_CAST(p_retailprice AS DECIMAL(15,4)) END)
-                 * (CASE WHEN NOT isnan(l_quantity)
-                         THEN TRY_CAST(l_quantity AS DECIMAL(8,2)) END)
+             {finite_decimal_sql('l_extendedprice', 'decimal(15,4)')}
+               * (1 - {finite_decimal_sql('l_discount', 'decimal(8,6)')})
+               - {finite_decimal_sql('p_retailprice', 'decimal(15,4)')}
+                 * {finite_decimal_sql('l_quantity', 'decimal(8,2)')}
                  * CAST(0.1 AS DECIMAL(2,1)) AS amount
       FROM part
       JOIN lineitem ON p_partkey = l_partkey
@@ -6026,10 +5920,10 @@ def q9_product_type_profit(spark, sf_dir):
     # starts flipping cent boundaries — driver_sim --perturb-skew find);
     # sizes keep every product/sum strictly inside precision 38
     amount = (
-        _dec_value("l_extendedprice", "decimal(15,4)")
-        * (F.lit(1) - _dec_value("l_discount", "decimal(8,6)"))
-        - _dec_value("p_retailprice", "decimal(15,4)")
-        * _dec_value("l_quantity", "decimal(8,2)")
+        finite_decimal("l_extendedprice", "decimal(15,4)")
+        * (F.lit(1) - finite_decimal("l_discount", "decimal(8,6)"))
+        - finite_decimal("p_retailprice", "decimal(15,4)")
+        * finite_decimal("l_quantity", "decimal(8,2)")
         * F.lit(_Decimal("0.1"))
     )
     return (
@@ -6049,13 +5943,11 @@ def q9_product_type_profit(spark, sf_dir):
     # threshold compare runs in DOUBLE on decimal-derived operands: both
     # engines cast the SAME exact decimals to the SAME doubles and apply
     # one multiply + one compare — bit-identical (the q14 ratio recipe).
-    """
+    f"""
     WITH v AS (
       SELECT l_partkey,
-             SUM((CASE WHEN NOT isnan(l_extendedprice)
-                       THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END)
-               * (CASE WHEN NOT isnan(l_quantity)
-                       THEN TRY_CAST(l_quantity AS DECIMAL(18,6)) END)) AS part_value
+             SUM({finite_decimal_sql('l_extendedprice', 'decimal(15,4)')}
+               * {finite_decimal_sql('l_quantity')}) AS part_value
       FROM lineitem
       JOIN supplier ON l_suppkey = s_suppkey
       JOIN nation ON s_nationkey = n_nationkey
@@ -6087,8 +5979,8 @@ def q11_important_part_values(spark, sf_dir):
         .groupBy("l_partkey")
         .agg(
             F.sum(
-                _dec_value("l_extendedprice", "decimal(15,4)")
-                * _dec_value("l_quantity", "decimal(18,6)")
+                finite_decimal("l_extendedprice", "decimal(15,4)")
+                * finite_decimal("l_quantity")
             ).alias("part_value")
         )
     )
@@ -6170,14 +6062,12 @@ def q13_customer_order_distribution(spark, sf_dir):
 
 @_q(
     "q15_top_revenue_supplier",
-    """
+    f"""
     WITH revenue AS (
       SELECT l_suppkey AS supplier_no,
              -- finite-domain DECIMAL revenue (the q5/q9/q7 discipline)
-             CAST(ROUND(SUM((CASE WHEN NOT isnan(l_extendedprice)
-                   THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END)
-               * (1 - (CASE WHEN NOT isnan(l_discount)
-                            THEN TRY_CAST(l_discount AS DECIMAL(8,6)) END))), 2) AS DOUBLE) AS total_revenue
+             CAST(ROUND(SUM({finite_decimal_sql('l_extendedprice', 'decimal(15,4)')}
+               * (1 - {finite_decimal_sql('l_discount', 'decimal(8,6)')})), 2) AS DOUBLE) AS total_revenue
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
       GROUP BY l_suppkey
@@ -6203,8 +6093,8 @@ def q15_top_revenue_supplier(spark, sf_dir):
         .agg(
             F.round(
                 F.sum(
-                    _dec_value("l_extendedprice", "decimal(15,4)")
-                    * (F.lit(1) - _dec_value("l_discount", "decimal(8,6)"))
+                    finite_decimal("l_extendedprice", "decimal(15,4)")
+                    * (F.lit(1) - finite_decimal("l_discount", "decimal(8,6)"))
                 ),
                 2,
             )
@@ -6281,13 +6171,11 @@ def q16_brand_supplier_counts(spark, sf_dir):
     # and order-free. Spelled decorrelated to match the engine plan
     # (the correlated form is equivalent: the correlation key is the
     # part, and parts are brand-unique).
-    """
+    f"""
     WITH li AS (
       SELECT l_partkey,
-             (CASE WHEN NOT isnan(l_quantity)
-                   THEN TRY_CAST(l_quantity AS DECIMAL(18,6)) END) AS qty,
-             (CASE WHEN NOT isnan(l_extendedprice)
-                   THEN TRY_CAST(l_extendedprice AS DECIMAL(15,4)) END) AS price
+             {finite_decimal_sql('l_quantity')} AS qty,
+             {finite_decimal_sql('l_extendedprice', 'decimal(15,4)')} AS price
       FROM lineitem JOIN part ON p_partkey = l_partkey
       WHERE p_brand = 'Brand#5'
     ),
@@ -6315,8 +6203,8 @@ def q17_small_quantity_revenue(spark, sf_dir):
         .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .select(
             "l_partkey",
-            _dec_value("l_quantity", "decimal(18,6)").alias("qty"),
-            _dec_value("l_extendedprice", "decimal(15,4)").alias("price"),
+            finite_decimal("l_quantity").alias("qty"),
+            finite_decimal("l_extendedprice", "decimal(15,4)").alias("price"),
         )
     )
     per_part = li.groupBy(F.col("l_partkey").alias("pk")).agg(
@@ -6340,14 +6228,13 @@ def q17_small_quantity_revenue(spark, sf_dir):
     # 149): raw double SUM over ±1e300 extremes is ORDER-DEPENDENT
     # (absorption), so the 0.3x boundary flipped between otherwise
     # identical runs of the SAME engine — the one flaky class the
-    # cross-engine gate can't pin. The _dec_value guard makes the sums
+    # cross-engine gate can't pin. The finite_decimal guard makes the sums
     # exact and associative; qty*10 > 3*total keeps the threshold in
     # integer decimal arithmetic (no 0.3 double).
-    """
+    f"""
     WITH ps AS (
       SELECT l_partkey, l_suppkey,
-             SUM(CASE WHEN NOT isnan(l_quantity)
-                      THEN TRY_CAST(l_quantity AS DECIMAL(18,6)) END) AS qty
+             SUM({finite_decimal_sql('l_quantity')}) AS qty
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
       GROUP BY l_partkey, l_suppkey
@@ -6377,7 +6264,7 @@ def q20_dominant_part_suppliers(spark, sf_dir):
     )
     red = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%")).select("p_partkey")
     ps = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.sum(_dec_value("l_quantity", "decimal(18,6)")).alias("qty")
+        F.sum(finite_decimal("l_quantity")).alias("qty")
     )
     w = Window.partitionBy("l_partkey")
     dominant = (
@@ -6458,12 +6345,11 @@ def q21_sole_late_suppliers(spark, sf_dir):
     # threshold becomes CAST(SUM(dec) AS DOUBLE)/COUNT over the
     # finite-domain balance — out-of-domain readings (NaN/±Inf/±1e300)
     # are missing, so they neither poison the fit nor appear in the
-    # output (the _dec_value policy).
-    """
+    # output (the finite_decimal policy).
+    f"""
     WITH c AS (
       SELECT c_custkey, c_nationkey,
-             (CASE WHEN NOT isnan(c_acctbal)
-                   THEN TRY_CAST(c_acctbal AS DECIMAL(18,6)) END) AS bal
+             {finite_decimal_sql('c_acctbal')} AS bal
       FROM customer
     ),
     a AS (
@@ -6493,7 +6379,7 @@ def q22_dormant_high_balance(spark, sf_dir):
     broadcast ("__scalar_"); the NOT EXISTS is a broadcast anti join of
     the filtered order keys."""
     cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", _dec_value("c_acctbal").alias("bal")
+        "c_custkey", "c_nationkey", finite_decimal("c_acctbal").alias("bal")
     )
     pos = F.when(F.col("bal") > 0, F.col("bal"))
     avg_bal = cust.agg(
@@ -6902,11 +6788,11 @@ from ..operators.statistics import grouped_ols, mad_outliers  # noqa: E402
 
 @_q(
     "regression_daily_trend",
-    """
+    f"""
     WITH base AS (
       SELECT event_type,
              CAST(DATEDIFF('day', DATE '2000-01-01', CAST(ts AS DATE)) AS BIGINT) AS x,
-             (CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END) AS y
+             {finite_decimal_sql('value')} AS y
       FROM events
     ),
     -- observed-pairs fit: a row whose y is missing (NULL or out of the
@@ -6959,7 +6845,7 @@ def regression_daily_trend(spark, sf_dir):
     any engine / any aggregation tree; see module docstring)."""
     # observed-pairs fit (see oracle comment): drop rows whose value is
     # missing or out of the finite decimal domain BEFORE the sums
-    ev = _t(spark, sf_dir, "events").withColumn("value", _dec_value()).filter(
+    ev = _t(spark, sf_dir, "events").withColumn("value", finite_decimal("value")).filter(
         F.col("value").isNotNull()
     )
     x = F.datediff(F.col("ts").cast("date"), F.lit("2000-01-01").cast("date"))
@@ -6968,14 +6854,14 @@ def regression_daily_trend(spark, sf_dir):
 
 @_q(
     "anomaly_mad_outliers",
-    """
+    f"""
     WITH dec AS (
       -- observed FINITE values only: mad_outliers drops NULLs AND
       -- out-of-domain values (NaN/±Inf/overflow) before ranking —
       -- unguarded, either class shifts the rank-window middle selection
       SELECT event_type, v FROM (
         SELECT event_type,
-               (CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(20,7)) END) AS v
+               {finite_decimal_sql('value', 'decimal(20,7)')} AS v
         FROM events
       ) WHERE v IS NOT NULL
     ),
@@ -7142,7 +7028,7 @@ def heavy_hitter_tokens(spark, sf_dir):
 
 @_q(
     "join_salted_skew_enrich",
-    """
+    f"""
     SELECT e.event_id, e.event_type, t.type_n, t.type_total
     FROM events e
     JOIN (
@@ -7150,7 +7036,7 @@ def heavy_hitter_tokens(spark, sf_dir):
              -- decimal->double THROUGH VARCHAR (r12 18-mode stack find,
              -- seed 503, the twap class): the direct cast double-rounds
              -- past 2^53 scaled units
-             CAST(CAST(SUM((CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END)) AS VARCHAR) AS DOUBLE) AS type_total
+             CAST(CAST(SUM({finite_decimal_sql('value')}) AS VARCHAR) AS DOUBLE) AS type_total
       FROM events GROUP BY event_type
     ) t USING (event_type)
     """,
@@ -7165,7 +7051,7 @@ def join_salted_skew_enrich(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     per_type = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("type_n"),
-        F.sum(_dec_value()).cast("double").alias("type_total"),
+        F.sum(finite_decimal("value")).cast("double").alias("type_total"),
     )
     out = JN.salted_join(
         ev.select("event_id", "event_type"), per_type, on=["event_type"], salt=8
@@ -7210,10 +7096,10 @@ def chunk_documents_rag(spark, sf_dir):
 
 @_q(
     "jdbc_roundtrip_derby",
-    """
+    f"""
     WITH g AS (
       SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-             CAST(SUM((CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END)) * 1000000 AS BIGINT) AS m
+             CAST(SUM({finite_decimal_sql('value')}) * 1000000 AS BIGINT) AS m
       FROM events GROUP BY event_type
     )
     SELECT event_type, n_events,
@@ -7241,7 +7127,7 @@ def jdbc_roundtrip_derby(spark, sf_dir):
         .agg(
             F.count("*").alias("n_events"),
             F.expr(
-                "CAST(SUM((CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END)) * 1000000 AS BIGINT)"
+                f"CAST(SUM({finite_decimal_sql('value')}) * 1000000 AS BIGINT)"
             ).alias("m"),
         )
         .select(
@@ -7353,7 +7239,7 @@ def join_full_outer_reconcile(spark, sf_dir):
 
 @_q(
     "grouped_mode_bucket",
-    """
+    f"""
     WITH b AS (
       -- observed values only: the mode of a group is the most frequent
       -- OBSERVED bucket — NULL is not a value, same convention as SQL
@@ -7363,11 +7249,9 @@ def join_full_outer_reconcile(spark, sf_dir):
       -- finite buckets only, on the DECIMAL(24,6) domain: Spark's
       -- floor(double) SATURATES on NaN/±Inf (0 / Long.MAX) instead of
       -- erroring or NULLing, so both sides floor the try-cast DECIMAL —
-      -- out-of-domain values have no bucket (the isnan guard dodges
-      -- DuckDB's TRY_CAST-NaN hole)
+      -- out-of-domain values have no bucket
       SELECT event_type,
-             CAST(FLOOR((CASE WHEN NOT isnan(value)
-                              THEN TRY_CAST(value AS DECIMAL(24,6)) END)) AS BIGINT) AS bucket
+             CAST(FLOOR({finite_decimal_sql('value', 'decimal(24,6)')}) AS BIGINT) AS bucket
       FROM events WHERE value IS NOT NULL
     ),
     bf AS (SELECT * FROM b WHERE bucket IS NOT NULL),
@@ -7397,7 +7281,7 @@ def grouped_mode_bucket(spark, sf_dir):
         _t(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
         .withColumn(
-            "bucket", F.floor(_dec_value("value", "decimal(24,6)")).cast("long")
+            "bucket", F.floor(finite_decimal("value", "decimal(24,6)")).cast("long")
         )
         .filter(F.col("bucket").isNotNull())
     )
@@ -7577,10 +7461,10 @@ def ann_ivf_portable_topk(spark, sf_dir):
 
 @_q(
     "timeseries_twap_user",
-    """
+    f"""
     WITH stepped AS (
       SELECT user_id,
-             (CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END) AS v,
+             {finite_decimal_sql('value')} AS v,
              CAST(COALESCE(
                date_diff('microseconds', CAST(ts AS TIMESTAMP),
                          LEAD(CAST(ts AS TIMESTAMP)) OVER
@@ -7823,11 +7707,10 @@ def path_top_event_sequences(spark, sf_dir):
 @_q(
     "join_bloom_prefilter",
     # guarded-decimal quantity sums (r11 batch, r10 verdict item 2)
-    """
+    f"""
     SELECT l_suppkey,
            CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(ROUND(SUM(CASE WHEN NOT isnan(l_quantity)
-                   THEN TRY_CAST(l_quantity AS DECIMAL(18,6)) END), 2)
+           CAST(ROUND(SUM({finite_decimal_sql('l_quantity')}), 2)
                 AS DOUBLE) AS sum_qty
     FROM lineitem
     WHERE l_suppkey IN (
@@ -7861,7 +7744,7 @@ def join_bloom_prefilter_q(spark, sf_dir):
         .groupBy("l_suppkey")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            F.round(F.sum(_dec_value("l_quantity", "decimal(18,6)")), 2)
+            F.round(F.sum(finite_decimal("l_quantity")), 2)
             .cast("double")
             .alias("sum_qty"),
         )
@@ -8034,14 +7917,13 @@ def graph_triangle_count(spark, sf_dir):
 
 @_q(
     "sample_weighted_bernoulli",
-    """
+    f"""
     WITH l2 AS (
       -- finite-domain weight (r09 ring 2): a NaN/±Inf/overflow quantity
       -- has no weight — the row can never be sampled and MAX skips it;
       -- FLOOR on the guarded DECIMAL keeps the BIGINT cast in range
       SELECT l_orderkey, l_linenumber,
-             CAST(FLOOR(CASE WHEN NOT isnan(l_quantity)
-                             THEN TRY_CAST(l_quantity AS DECIMAL(18,6)) END)
+             CAST(FLOOR({finite_decimal_sql('l_quantity')})
                   AS BIGINT) AS qf
       FROM lineitem
     ),
@@ -8074,7 +7956,7 @@ def sample_weighted_bernoulli(spark, sf_dir):
     # quantity has no weight — NULL comparison keeps the row out and
     # MAX skips it — where floor of the raw double would hard-error on
     # the ANSI long cast.
-    qf = F.floor(_dec_value("l_quantity", "decimal(18,6)")).cast("long")
+    qf = F.floor(finite_decimal("l_quantity")).cast("long")
     wm = li.agg(F.max(qf).cast("decimal(4,0)").alias("__scalar_wmax"))
     # NULL-PROPAGATING concat, matching the oracle's `||` (r10
     # --perturb-tpch-ids find, seed 137): a row with a NULL key has no
@@ -8229,15 +8111,15 @@ def inverted_index_postings(spark, sf_dir):
 
 @_q(
     "ab_test_cuped_adjusted",
-    """
+    f"""
     WITH per_user AS (
       SELECT user_id,
              CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END AS grp,
              CAST(SUM(CASE WHEN event_type = 'view'
-                           THEN (CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END)
+                           THEN {finite_decimal_sql('value')}
                            ELSE CAST(0 AS DECIMAL(18,6)) END) AS DECIMAL(19,6)) AS x,
              CAST(SUM(CASE WHEN event_type = 'purchase'
-                           THEN (CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END)
+                           THEN {finite_decimal_sql('value')}
                            ELSE CAST(0 AS DECIMAL(18,6)) END) AS DECIMAL(18,6)) AS y
       FROM events GROUP BY user_id
     ),
@@ -8420,13 +8302,12 @@ def histogram_percentile_estimate_q(spark, sf_dir):
 @_q(
     "agg_grouping_sets_revenue",
     # guarded-decimal revenue (r11 batch, r10 verdict item 2)
-    """
+    f"""
     SELECT COALESCE(n_name, '(all)') AS nation,
            COALESCE(CAST(EXTRACT(year FROM o_orderdate) AS VARCHAR), '(all)') AS order_year,
            CAST(GROUPING(n_name) * 2 + GROUPING(EXTRACT(year FROM o_orderdate)) AS INT)
              AS grouping_level,
-           CAST(ROUND(SUM(CASE WHEN NOT isnan(o_totalprice)
-                   THEN TRY_CAST(o_totalprice AS DECIMAL(18,6)) END), 2)
+           CAST(ROUND(SUM({finite_decimal_sql('o_totalprice')}), 2)
                 AS DOUBLE) AS revenue,
            CAST(COUNT(*) AS BIGINT) AS n_orders
     FROM orders
@@ -8451,12 +8332,11 @@ def agg_grouping_sets_revenue(spark, sf_dir):
     )
     base.createOrReplaceTempView("__gs_base")
     return base.sparkSession.sql(
-        """
+        f"""
         SELECT COALESCE(n_name, '(all)') AS nation,
                COALESCE(CAST(oy AS STRING), '(all)') AS order_year,
                CAST(grouping_id(n_name, oy) AS INT) AS grouping_level,
-               CAST(ROUND(SUM(CASE WHEN NOT isnan(o_totalprice)
-                       THEN TRY_CAST(o_totalprice AS DECIMAL(18,6)) END), 2)
+               CAST(ROUND(SUM({finite_decimal_sql('o_totalprice')}), 2)
                     AS DOUBLE) AS revenue,
                COUNT(*) AS n_orders
         FROM __gs_base
@@ -8610,7 +8490,7 @@ def variant_shred_props(spark, sf_dir):
 
 @_q(
     "feature_lag_rolling",
-    """
+    f"""
     WITH p AS (
       SELECT user_id, event_id, ts, value,
              -- finite-domain observation for the rolling MEAN: a raw
@@ -8619,8 +8499,7 @@ def variant_shred_props(spark, sf_dir):
              -- segment-tree nodes) the moment mixed magnitudes share a
              -- frame (r12 decimal-edge find, seed 491); the decimal
              -- sum is order-free and NaN/±Inf are missing observations
-             (CASE WHEN NOT isnan(value)
-                   THEN TRY_CAST(value AS DECIMAL(18,6)) END) AS dv
+             {finite_decimal_sql('value')} AS dv
       FROM events WHERE event_type = 'purchase'
     )
     SELECT user_id, event_id,
@@ -8657,7 +8536,7 @@ def feature_lag_rolling(spark, sf_dir):
     one double division of identical operands; MAX and the lags are
     order-free raw passthrough."""
     ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    ev = ev.withColumn("dv", _dec_value())
+    ev = ev.withColumn("dv", finite_decimal("value"))
     w = Window.partitionBy("user_id").orderBy(
         F.asc_nulls_first("ts"), F.asc_nulls_first("event_id"),
         F.asc_nulls_first("value"))
@@ -8872,11 +8751,11 @@ def funnel_time_to_convert(spark, sf_dir):
 
 @_q(
     "seasonal_decompose_daily",
-    """
+    f"""
     WITH daily AS (
       SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
              CAST(DATEDIFF('day', DATE '2000-01-01', CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT) AS x,
-             CAST(SUM((CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END)) AS DECIMAL(18,6)) AS y
+             CAST(SUM({finite_decimal_sql('value')}) AS DECIMAL(18,6)) AS y
       FROM events WHERE event_type = 'purchase'
       GROUP BY 1, 2
     ),
@@ -8942,7 +8821,7 @@ def seasonal_decompose_daily(spark, sf_dir):
             F.col("value"),
         )
         .groupBy("day", "x")
-        .agg(F.sum(_dec_value()).cast("decimal(18,6)").alias("y"))
+        .agg(F.sum(finite_decimal("value")).cast("decimal(18,6)").alias("y"))
     )
     fit = (
         grouped_ols(daily.withColumn("__g", F.lit(1)), "x", "y", ["__g"])
@@ -8970,15 +8849,14 @@ def seasonal_decompose_daily(spark, sf_dir):
 
 @_q(
     "rfm_customer_segments",
-    """
+    f"""
     WITH rfm AS (
       SELECT o_custkey,
              MAX(o_orderdate) AS last_order,
              CAST(COUNT(*) AS BIGINT) AS frequency,
-             -- finite-domain monetary (see _dec_value): out-of-domain
+             -- finite-domain monetary: out-of-domain
              -- totals are missing, contributing to no customer's sum
-             CAST(SUM(CASE WHEN NOT isnan(o_totalprice)
-                           THEN TRY_CAST(o_totalprice AS DECIMAL(18,2)) END)
+             CAST(SUM({finite_decimal_sql('o_totalprice', 'decimal(18,2)')})
                   AS DECIMAL(18,2)) AS monetary
       -- o_custkey IS NOT NULL: entity gate (r10 --perturb-fk-ids find,
       -- seed 233) — RFM scores CUSTOMERS; a NULL key is no customer,
@@ -9036,7 +8914,7 @@ def rfm_customer_segments(spark, sf_dir):
         .agg(
             F.max("o_orderdate").alias("last_order"),
             F.count(F.lit(1)).cast("bigint").alias("frequency"),
-            F.sum(_dec_value("o_totalprice", "decimal(18,2)")).cast("decimal(18,2)").alias("monetary"),
+            F.sum(finite_decimal("o_totalprice", "decimal(18,2)")).cast("decimal(18,2)").alias("monetary"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -9771,11 +9649,11 @@ def dedup_lsh_recall_audit(spark, sf_dir):
 
 @_q(
     "anomaly_seasonal_residuals",
-    """
+    f"""
     WITH daily AS (
       SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
              CAST(DATEDIFF('day', DATE '2000-01-01', CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT) AS x,
-             CAST(SUM((CASE WHEN NOT isnan(value) THEN TRY_CAST(value AS DECIMAL(18,6)) END)) AS DECIMAL(18,6)) AS y
+             CAST(SUM({finite_decimal_sql('value')}) AS DECIMAL(18,6)) AS y
       FROM events WHERE event_type = 'purchase'
       GROUP BY 1, 2
     ),
@@ -9872,7 +9750,7 @@ def anomaly_seasonal_residuals(spark, sf_dir):
             F.col("value"),
         )
         .groupBy("day", "x")
-        .agg(F.sum(_dec_value()).cast("decimal(18,6)").alias("y"))
+        .agg(F.sum(finite_decimal("value")).cast("decimal(18,6)").alias("y"))
     )
     from ..operators.statistics import grouped_ols
 
@@ -10266,12 +10144,10 @@ def ml_fold_assignment(spark, sf_dir):
 
 @_q(
     "pareto_revenue_concentration",
-    """
+    f"""
     WITH cust AS (
       SELECT o_custkey,
-             -- finite-domain revenue (see _dec_value)
-             CAST(SUM(CASE WHEN NOT isnan(o_totalprice)
-                           THEN TRY_CAST(o_totalprice AS DECIMAL(18,2)) END)
+             CAST(SUM({finite_decimal_sql('o_totalprice', 'decimal(18,2)')})
                   AS DECIMAL(18,2)) AS rev
       FROM orders GROUP BY o_custkey
     ),
@@ -10306,7 +10182,7 @@ def pareto_revenue_concentration(spark, sf_dir):
 
     o = _t(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
-        F.sum(_dec_value("o_totalprice", "decimal(18,2)"))
+        F.sum(finite_decimal("o_totalprice", "decimal(18,2)"))
         .cast("decimal(18,2)")
         .alias("rev")
     )
@@ -10510,12 +10386,10 @@ def graph_link_prediction_cn(spark, sf_dir):
 
 @_q(
     "customer_tier_migration",
-    """
+    f"""
     WITH halves AS (
       SELECT o_custkey, o_orderkey % 2 AS h,
-             -- finite-domain revenue (see _dec_value)
-             CAST(SUM(CASE WHEN NOT isnan(o_totalprice)
-                           THEN TRY_CAST(o_totalprice AS DECIMAL(18,2)) END)
+             CAST(SUM({finite_decimal_sql('o_totalprice', 'decimal(18,2)')})
                   AS DECIMAL(18,2)) AS rev
       FROM orders GROUP BY o_custkey, o_orderkey % 2
     ),
@@ -10548,7 +10422,7 @@ def customer_tier_migration(spark, sf_dir):
     halves = o.groupBy(
         "o_custkey", (F.col("o_orderkey") % 2).alias("h")
     ).agg(
-        F.sum(_dec_value("o_totalprice", "decimal(18,2)"))
+        F.sum(finite_decimal("o_totalprice", "decimal(18,2)"))
         .cast("decimal(18,2)")
         .alias("rev")
     )
@@ -10581,12 +10455,10 @@ def customer_tier_migration(spark, sf_dir):
 
 @_q(
     "agg_ratio_to_report",
-    """
+    f"""
     WITH nat AS (
       SELECT r.r_name AS region, n.n_name AS nation,
-             -- finite-domain revenue (see _dec_value)
-             CAST(SUM(CASE WHEN NOT isnan(o_totalprice)
-                           THEN TRY_CAST(o_totalprice AS DECIMAL(18,2)) END)
+             CAST(SUM({finite_decimal_sql('o_totalprice', 'decimal(18,2)')})
                   AS DECIMAL(18,2)) AS rev
       FROM orders
       JOIN customer ON o_custkey = c_custkey
@@ -10617,7 +10489,7 @@ def agg_ratio_to_report(spark, sf_dir):
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(
-            F.sum(_dec_value("o_totalprice", "decimal(18,2)"))
+            F.sum(finite_decimal("o_totalprice", "decimal(18,2)"))
             .cast("decimal(18,2)")
             .alias("rev")
         )
@@ -10967,14 +10839,13 @@ def ann_index_occupancy_audit(spark, sf_dir):
 
 @_q(
     "group_percentile_exact",
-    """
+    f"""
     WITH s AS (
-      -- finite-domain order statistics (see _dec_value): out-of-domain
+      -- finite-domain order statistics: out-of-domain
       -- totals are excluded BEFORE ranking, so n counts exactly the
       -- population the selected p90 ranks within
       SELECT o_orderpriority, o_orderkey,
-             CASE WHEN NOT isnan(o_totalprice)
-                  THEN TRY_CAST(o_totalprice AS DECIMAL(18,2)) END AS v
+             {finite_decimal_sql('o_totalprice', 'decimal(18,2)')} AS v
       FROM orders
     ),
     r AS (
@@ -11003,7 +10874,7 @@ def group_percentile_exact(spark, sf_dir):
     s = o.select(
         "o_orderpriority",
         "o_orderkey",
-        _dec_value("o_totalprice", "decimal(18,2)").alias("v"),
+        finite_decimal("o_totalprice", "decimal(18,2)").alias("v"),
     ).where(F.col("v").isNotNull())
     w = Window.partitionBy("o_orderpriority").orderBy("v", "o_orderkey")
     wn = Window.partitionBy("o_orderpriority")

@@ -32,6 +32,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.aggregates import latest_per_key
 
@@ -60,6 +61,13 @@ def tumbling_window_agg(
         .groupBy(F.window(ts_col, window), *group_cols)
         .agg(*aggs)
     )
+
+
+def _run_bounded(writer: DataStreamWriter) -> None:
+    """Start ``writer`` on an availableNow trigger, drain it, stop it."""
+    q = writer.trigger(availableNow=True).start()
+    q.processAllAvailable()
+    q.stop()
 
 
 def run_bounded_to_memory(
@@ -94,15 +102,11 @@ def run_bounded_to_memory(
     if state_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        q = (
+        _run_bounded(
             stream_df.writeStream.format("memory")
             .queryName(qname)
             .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.processAllAvailable()
-        q.stop()
     finally:
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -165,14 +169,10 @@ def run_stream_near_dedup(
         )
         novel.write.mode("append").parquet(history_path)
 
-    q = (
+    _run_bounded(
         stream_df.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
 
 
 def stream_dedup(
@@ -372,14 +372,10 @@ def run_stream_upsert(
     """ST6+ST7: optional user transform, then foreachBatch online upsert,
     bounded (availableNow) with an exactly-once checkpoint."""
     df = transform(stream_df) if transform else stream_df
-    q = (
+    _run_bounded(
         df.writeStream.foreachBatch(store.foreach_batch())
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
 
 
 def run_stream_enrich(
@@ -407,14 +403,10 @@ def run_stream_enrich(
         online = store.read(batch_df.sparkSession)
         enrich(batch_df, online).write.mode("append").parquet(sink_path)
 
-    q = (
+    _run_bounded(
         stream_df.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
 
 
 def stateful_running_count_tws(stream_df: DataFrame, key_col: str) -> DataFrame:

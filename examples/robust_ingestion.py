@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from alibaba_cppfeaturestore_spark.functions.finite import finite_double
 from alibaba_cppfeaturestore_spark.functions.vectors import (
     cosine_similarity,
     finite_vector,
@@ -48,11 +49,7 @@ def main() -> None:
     )
 
     # out-of-domain -> NULL; every downstream aggregate skips it
-    fin = F.when(
-        ~F.isnan("value") & F.col("value").try_cast("decimal(18,6)").isNotNull(),
-        F.col("value"),
-    )
-    clean = readings.select("sensor_id", fin.alias("value"))
+    clean = readings.select("sensor_id", finite_double("value").alias("value"))
     stats = clean.agg(
         F.count("value").alias("n_observed"),
         F.round(F.avg("value"), 3).alias("mean"),

@@ -1,9 +1,13 @@
 """Executable documentation of the cross-engine NaN facts the
-finite-domain policy rests on (established by freeze repro in round 8).
+finite-domain policy rests on (established by freeze repro in round 8),
+and of the scalar guard's two spellings: functions/finite.py's Spark
+helpers and their DuckDB twins must give the same value on every edge
+input.
 
 If a DuckDB or Spark upgrade changes any of these, the finite-domain
-rationale in functions/vectors.py, plans/catalog._EMB_FINITE_WHERE and
-SCALING.md must be re-derived — these tests fail first.
+rationale in functions/finite.py, functions/vectors.py,
+plans/catalog._EMB_FINITE_WHERE and SCALING.md must be re-derived —
+these tests fail first.
 """
 
 from __future__ import annotations
@@ -13,6 +17,13 @@ import math
 import duckdb
 import pytest
 from pyspark.sql import functions as F
+
+from alibaba_cppfeaturestore_spark.functions.finite import (
+    finite_decimal,
+    finite_decimal_sql,
+    finite_double,
+    finite_double_sql,
+)
 
 NAN, INF = float("nan"), float("inf")
 
@@ -113,3 +124,44 @@ def test_duckdb_list_filter_drops_null_elements(spark, con):
         .collect()[0]
     )
     assert row.f is False
+
+
+# Every DECIMAL(p,s) the catalog and the operators pass to the guard.
+_GUARD_DECIMALS = [
+    "decimal(8,2)", "decimal(8,6)", "decimal(15,4)", "decimal(18,2)",
+    "decimal(18,6)", "decimal(20,7)", "decimal(24,6)", "decimal(30,6)",
+]
+_GUARD_TWINS = [
+    pytest.param(
+        lambda c, t=t: finite_decimal(c, t), lambda c, t=t: finite_decimal_sql(c, t), id=t
+    )
+    for t in _GUARD_DECIMALS
+] + [pytest.param(finite_double, finite_double_sql, id="double")]
+_GUARD_INPUTS = [None, NAN, INF, -INF, 1e300, -1e300, 1e12, -0.0, 123.456789, 1.5]
+
+
+@pytest.mark.parametrize("spark_fn, sql_fn", _GUARD_TWINS)
+def test_finite_guard_twins_agree(spark, con, spark_fn, sql_fn):
+    # One policy, two spellings: NaN/±Inf/out-of-domain -> NULL, a
+    # finite in-domain value cast exactly. The DuckDB side runs the very
+    # text the oracles embed, so a twin that drifts (a dropped isnan
+    # guard raises on NaN; a changed precision moves 1e12) fails here.
+    rows = list(enumerate(_GUARD_INPUTS))
+    got = [
+        r.v
+        for r in spark.createDataFrame(rows, "i int, x double")
+        .orderBy("i")
+        .select(spark_fn("x").alias("v"))
+        .collect()
+    ]
+    values = ", ".join(
+        f"({i}, {'NULL' if x is None else repr(str(x))}::DOUBLE)" for i, x in rows
+    )
+    want = [
+        v
+        for (v,) in con.execute(
+            f"SELECT {sql_fn('x')} FROM (VALUES {values}) t(i, x) ORDER BY i"
+        ).fetchall()
+    ]
+    assert got == want
+    assert got[0] is None and got[1] is None and got[-1] == 1.5

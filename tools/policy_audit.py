@@ -225,8 +225,8 @@ REVIEWED_SINKS = {
         "window's ORDER BY, which nests inside the CAST .. AS "
         "DECIMAL(19,0) span (duration width r12) — but that cast "
         "targets the microsecond DIFFERENCE; value itself enters "
-        "decimal only via the guarded _dec_value CASE (stripped before "
-        "detection)",
+        "decimal only via the guarded finite_decimal_sql CASE (stripped "
+        "before detection)",
 }
 
 
