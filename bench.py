@@ -24,70 +24,27 @@ from alibaba_cppfeaturestore_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO = os.path.dirname(os.path.abspath(__file__))
 
-# Measurement basis, recorded so cross-round comparisons aren't misread.
-# v1 (rounds 2-7): warmup pass + gc-between + best-of-2 + adaptive 3rd.
-# v2 (round 8+):   v1 PLUS release_persisted() after every warmup query
-#                  AND after every measured attempt — persist-reusing
-#                  queries (minhash index) no longer keep their cache
-#                  between samples, so v1 and v2 numbers are NOT
-#                  comparable for that class. Round 8 made this change
-#                  without bumping the string (r08 verdict item 3); the
-#                  basis below names it, and _SAME_BASIS records that
-#                  r08's artifact — string notwithstanding — already ran
-#                  on v2, so the r08→r09 delta IS like-for-like.
-# v3 (round 13+):  TWO untimed warmup passes instead of one — a
-#                  measurement-accuracy fix (guide §1: measure steady
-#                  state), declared in OPTIMIZATION_r13.md with both
-#                  bases recorded. Evidence: after ONE warmup pass the
-#                  codegen-heavy queries' first TWO measured attempts
-#                  still pay JIT compilation and AGREE with each other
-#                  (dedup_minhash_lsh decay after 1 warmup:
-#                  3.52, 3.72, 2.48, 1.93, 2.16, 2.16 s — best-of-2
-#                  records 3.52 and the <25% spread suppresses the
-#                  adaptive 3rd, so the artifact reports a number 70%
-#                  above the steady state the docstring promises:
-#                  "the warm number is the honest one"). The second
-#                  pass costs ~14 s of untimed runtime and moves every
-#                  query's measured attempts onto the flat part of its
-#                  decay curve. Affects NOTHING about what is computed.
-# v4 (round 14+): two additions, declared in OPTIMIZATION_r14.md with
-#                  v3-basis numbers kept alongside:
-#                  (a) DESCEND-TO-FLAT sampling — after the v3 rules, keep
-#                      sampling while the NEWEST sample sets a new minimum
-#                      by >5% (cap 5 attempts total). Evidence: after TWO
-#                      warmup passes, dedup_minhash_lsh's in-bench
-#                      measured attempts still read 2.72, 2.50, 1.88 —
-#                      best-of-2 records 2.50 (the samples "agree" within
-#                      25%, so the v3 adaptive third never fires) while
-#                      the same JVM reaches 1.88 one attempt later; the
-#                      isolated steady state is 1.8-2.0. A >5% NEW MIN is
-#                      direct evidence the query is still on its JIT
-#                      decay curve (converged queries plateau within
-#                      noise and stop immediately), so the extra attempts
-#                      trigger exactly on non-convergence, not on noise.
-#                  (b) the one-line stdout payload is COMPACTED to fit
-#                      the driver's 2000-byte tail whole (detector fields
-#                      only; the full payload still lands in
-#                      BENCH_LATEST.json / the promoted anchor), and the
-#                      detector derives the normalized series from
-#                      queries+canary_sec when a prev artifact lacks it.
-#                  Affects NOTHING about what is computed.
+# Measurement basis, recorded in every artifact; the detector reads a
+# prev artifact as like-for-like only when its string equals this one.
+# Two of its rules need their reason kept:
+# - TWO untimed warmup passes (OPTIMIZATION_r13.md). After one pass the
+#   codegen-heavy queries' first two measured attempts still pay JIT
+#   compilation and agree with each other (dedup_minhash_lsh after one
+#   warmup: 3.52, 3.72, 2.48, 1.93, 2.16, 2.16 s), so best-of-2 records a
+#   number 70% above the steady state.
+# - DESCEND-TO-FLAT sampling (OPTIMIZATION_r14.md). After two warmups
+#   dedup_minhash_lsh still read 2.72, 2.50, 1.88: best-of-2 records 2.50
+#   while the same JVM reaches 1.88 one attempt later. Sampling continues
+#   while the newest sample is a >5% new minimum (cap 5 attempts); a
+#   converged query plateaus within noise and stops at once.
 METHODOLOGY = "v4:2xwarmup+gc+best-of-2+adaptive-3rd+descend-to-flat+release-per-attempt"
-_V2_FIRST_ROUND = 8  # first driver artifact measured on the v2 basis
-_V3_FIRST_ROUND = 13  # first driver artifact measured on the v3 basis
-_V4_FIRST_ROUND = 14  # first driver artifact measured on the v4 basis
 _WARMUP_PASSES = 2
 _MAX_ATTEMPTS = 5
 _DESCENT_EPS = 0.05  # a >5% new min = still descending the decay curve
 
-# The committed quiet-host comparison anchor: READ-ONLY to a bench run.
-# It survives the driver's head-truncation of stdout tails
-# (BENCH_r07.json's tail begins mid-token, which r08's parser turned
-# into an empty prev dict and a vacuous zero-flag result). Through r10
-# every run overwrote it in place, which dirtied the tree after each
-# driver round and silently replaced the frozen baseline (r10 verdict
-# item 3); runs now write LATEST_OUT and promotion is an explicit
-# `--promote-anchor` + commit.
+# The committed quiet-host comparison anchor, READ-ONLY to a bench run:
+# the detector falls back to it when no round artifact compares. Runs
+# write LATEST_OUT; promotion is an explicit `--promote-anchor` + commit.
 LOCAL_ANCHOR = os.path.join(REPO, "BENCH_LOCAL.json")
 # Every run's full payload lands here (gitignored): the working copy
 # for freeze-run comparisons and for deliberate anchor promotion.
@@ -95,94 +52,36 @@ LATEST_OUT = os.path.join(REPO, "BENCH_LATEST.json")
 
 
 def _extract_bench_fields(raw: str) -> dict:
-    """Pull the comparison fields out of a bench artifact REGARDLESS of
-    shape: a clean full-payload JSON file (the local anchor), a driver
-    wrapper whose ``tail`` string holds the stdout JSON line, or a
-    head-truncated ``tail`` where only the final fields of that line
-    survive (BENCH_r07.json's tail begins mid-token — the shape that
-    silently blinded r08's detector). The per-query dicts are flat (no
-    nested braces), so a brace regex recovers them from any suffix that
-    still contains the key; the regex must run on the UNESCAPED tail —
-    inside the wrapper the quotes are \\" and a quote-anchored pattern
-    never matches the raw file bytes."""
-    texts = []
+    """The detector's fields from one bench artifact. A round wrapper
+    (``BENCH_r<N>.json``) gives its ``parsed`` stdout line ({} when that
+    is null), a full payload (the committed anchor) gives itself, and
+    text that is not a JSON object gives {}, so the caller moves on to
+    its next candidate. The normalized series is always derived as
+    ``round(t / canary.sec, 2)``, main()'s own formula."""
     try:
-        whole = json.loads(raw)
+        line = json.loads(raw)
     except json.JSONDecodeError:
-        whole = None
-    if isinstance(whole, dict):
-        if "queries_canary_normalized" in whole:  # full payload (anchor)
-            for key, field in (("canary", "canary_sec"), ("canary2", "canary2_sec")):
-                sec = (whole.get(key) or {}).get("sec") if isinstance(whole.get(key), dict) else None
-                if isinstance(sec, (int, float)):
-                    whole.setdefault(field, float(sec))
-            return whole
-        if isinstance(whole.get("tail"), str):  # driver wrapper
-            texts.append(whole["tail"])
-    texts.append(raw)  # last resort: regex over the raw bytes
-    out: dict = {}
-    for text in texts:
-        for key in (
-            "queries_canary_normalized",
-            "queries",
-            "queries_build_sec",
-            "queries_sample_spread",
-        ):
-            if key in out:
-                continue
-            matches = re.findall(r'"%s"\s*:\s*(\{[^{}]*\})' % key, text)
-            if matches:
-                try:
-                    out[key] = json.loads(matches[-1])
-                except json.JSONDecodeError:
-                    pass
-        m = re.findall(r'"methodology"\s*:\s*"([^"]*)"', text)
-        if m and "methodology" not in out:
-            out["methodology"] = m[-1]
-        m = re.findall(r'"canary"\s*:\s*\{\s*"name"\s*:\s*"([^"]+)"', text)
-        if m and "canary_name" not in out:
-            out["canary_name"] = m[-1]
-        # both canaries' SECONDS (dual-canary basis, r12 verdict item):
-        # from the early "canary"/"canary2" dicts when the line is whole,
-        # or from the tail-region "canaries_sec" duplicate (which is what
-        # actually survives the driver's 2000-byte truncation)
-        for key, field in (("canary", "canary_sec"), ("canary2", "canary2_sec")):
-            if field in out:
-                continue
-            m = re.findall(
-                r'"%s"\s*:\s*\{[^{}]*?"sec"\s*:\s*([0-9.eE+-]+)' % key, text
-            ) or re.findall(r'"%s"\s*:\s*([0-9.eE+-]+)' % field, text)
-            if m:
-                try:
-                    out[field] = float(m[-1])
-                except ValueError:
-                    pass
-        # canary2's own sample spread (r13 advice: when the dual-canary
-        # basis corrects through canary2, ITS best-of variance belongs
-        # in every noise term)
-        if "canary2_spread" not in out:
-            m = re.findall(
-                r'"canary2"\s*:\s*\{[^{}]*?"spread"\s*:\s*([0-9.eE+-]+)', text
-            )
-            if m:
-                try:
-                    out["canary2_spread"] = float(m[-1])
-                except ValueError:
-                    pass
-    # v4 artifacts drop the normalized dict from stdout (the compact
-    # line must fit the driver's 2000-byte tail whole); derive it from
-    # queries + canary_sec — the identical round(t/c, 2) main() computes
-    if (
-        "queries_canary_normalized" not in out
-        and out.get("queries")
-        and isinstance(out.get("canary_sec"), float)
-        and out["canary_sec"] > 0
-    ):
-        c = out["canary_sec"]
-        out["queries_canary_normalized"] = {
-            q: round(t / c, 2) for q, t in out["queries"].items()
+        return {}
+    if isinstance(line, dict) and "parsed" in line:
+        line = line["parsed"]
+    if not isinstance(line, dict):
+        return {}
+    canary = line.get("canary") or {}
+    canary2 = line.get("canary2") or {}
+    fields = {
+        "queries_sample_spread": line.get("queries_sample_spread"),
+        "methodology": line.get("methodology"),
+        "canary_name": canary.get("name"),
+        "canary_sec": canary.get("sec"),
+        "canary2_sec": canary2.get("sec"),
+        "canary2_spread": canary2.get("spread"),
+    }
+    c = fields["canary_sec"]
+    if line.get("queries") and isinstance(c, (int, float)) and c > 0:
+        fields["queries_canary_normalized"] = {
+            q: round(t / c, 2) for q, t in line["queries"].items()
         }
-    return out
+    return {k: v for k, v in fields.items() if v is not None}
 
 
 def _prev_comparison(
@@ -194,11 +93,11 @@ def _prev_comparison(
     canary2_sec: float | None = None,
     canary2_spread: float = 0.0,
 ) -> dict:
-    """Round-over-round regression block. Reads the newest driver
-    BENCH_r*.json (robust to tail truncation), falling back to the
-    builder's local anchor; emits per-query canary-normalized deltas and
-    flags |Δ| > 25%. An empty comparison is an ERROR in the artifact,
-    never a silent zero-flag pass (the r08 failure mode).
+    """Round-over-round regression block. Reads the newest round
+    ``BENCH_r<N>.json``, falling back to the committed local anchor;
+    emits per-query canary-normalized deltas and flags |Δ| > 25%. An
+    empty comparison is an ERROR in the artifact, never a silent
+    zero-flag pass (the r08 failure mode).
 
     ``artifact_dir`` defaults to the repo root; tests inject a tmp dir
     so the contract stays pinned no matter which BENCH_r*.json the
@@ -223,38 +122,27 @@ def _prev_comparison(
     speedup (r13's load_table plan memo cut q1's per-attempt build,
     halving the divisor and inflating every delta ~2×) — reads as a
     fleet-wide regression. With both runs' canary SECONDS (q1 and the
-    frozen-shape minhash probe) extractable, the host/harness movement
-    estimate becomes the MEDIAN of the two canaries' raw ratios, and
-    each single-canary delta is corrected by q1_ratio/median. One
-    moving canary can no longer recolor the whole board; flags are
-    computed from the corrected deltas, and both series are recorded
-    (``deltas`` = corrected, ``deltas_single_canary`` = the old basis,
-    kept for one-round continuity per the verdict's done-criterion).
-    Falls back to the single-canary basis (correction 1.0) when either
-    run's canary seconds are missing (truncated prev artifacts)."""
+    frozen-shape minhash probe), the host/harness movement estimate
+    becomes the MEDIAN of the two canaries' raw ratios, and each
+    single-canary delta is corrected by q1_ratio/median. One moving
+    canary can no longer recolor the whole board; ``deltas`` and the
+    flags are the corrected series. Falls back to the single-canary
+    basis (correction 1.0) when either run lacks a canary's seconds."""
     artifact_dir = artifact_dir or REPO
-    anchor = os.path.join(artifact_dir, os.path.basename(LOCAL_ANCHOR))
-    candidates: list[tuple[str, int]] = []  # (path, driver round or -1)
     # EXACT name match only: the driver also deposits low-core artifacts
-    # (BENCH_r13_c8.json) that the old BENCH_r*.json glob matched with
-    # the SAME round key — a stable-sort coin flip away from comparing
-    # this 32-core run against an 8-core prev
-    arts = sorted(
-        (
-            p
-            for p in glob.glob(os.path.join(artifact_dir, "BENCH_r*.json"))
-            if re.fullmatch(r"BENCH_r\d+\.json", os.path.basename(p))
-        ),
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    )
-    if arts:
-        candidates.append(
-            (arts[-1], int(re.search(r"r(\d+)", os.path.basename(arts[-1])).group(1)))
-        )
+    # (BENCH_r13_c8.json) under the SAME round number, and comparing this
+    # 32-core run against an 8-core prev would be a coin flip away
+    rounds = {}
+    for p in glob.glob(os.path.join(artifact_dir, "BENCH_r*.json")):
+        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(p))
+        if m:
+            rounds[int(m.group(1))] = p
+    candidates = [rounds[max(rounds)]] if rounds else []
+    anchor = os.path.join(artifact_dir, os.path.basename(LOCAL_ANCHOR))
     if os.path.exists(anchor):
-        candidates.append((anchor, -1))
+        candidates.append(anchor)
 
-    for path, rnd in candidates:
+    for path in candidates:
         try:
             with open(path) as f:
                 fields = _extract_bench_fields(f.read())
@@ -267,16 +155,8 @@ def _prev_comparison(
             if prev_norm.get(qn)
         }
         if not deltas:
-            continue  # artifact too truncated even for regex — try next
-        # basis check: v1-era artifacts (rounds < 8) are NOT comparable
-        # for persist-reusing queries; r08 ran on v2 despite its stale
-        # methodology string (see METHODOLOGY comment above)
+            continue  # nothing in common with this artifact — try next
         prev_meth = fields.get("methodology", "")
-        same_basis = (
-            prev_meth == METHODOLOGY
-            or (rnd >= _V4_FIRST_ROUND)
-            or (rnd == -1 and prev_meth.startswith("v4:"))
-        )
         prev_spread = fields.get("queries_sample_spread") or {}
         now_spread = spreads or {}
         # The CANARY's spread propagates into every normalized value
@@ -334,10 +214,9 @@ def _prev_comparison(
         return {
             "prev_artifact": os.path.basename(path),
             "prev_methodology": prev_meth or "(not recorded)",
-            "same_measurement_basis": same_basis,
+            "same_measurement_basis": prev_meth == METHODOLOGY,
             "canary_basis": basis,
             "deltas": deltas_dual,
-            "deltas_single_canary": deltas,
             "flagged_over_25pct": sorted(
                 qn for qn in over if abs(deltas_dual[qn]) > noise[qn]
             ),
@@ -347,7 +226,7 @@ def _prev_comparison(
         }
     return {
         "error": "no prev artifact yielded a non-empty comparison "
-        f"(tried {[os.path.basename(p) for p, _ in candidates]}); "
+        f"(tried {[os.path.basename(p) for p in candidates]}); "
         "an empty deltas dict is a detector failure, not a flat bench"
     }
 
@@ -538,7 +417,6 @@ def main() -> None:
         },
         "normalized_delta_vs_prev": prev_block,
         "queries_sample_spread": spread,
-        "canaries_sec": {"canary_sec": canary, "canary2_sec": canary2},
         "methodology": METHODOLOGY,
         "value_canary_normalized": round(total / canary, 2),
         "queries_canary_normalized": norm,

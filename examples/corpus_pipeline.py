@@ -7,15 +7,16 @@ this repo (see COVERAGE.md for the full catalog):
   contamination check → mixture resampling → tokenizer budgeting →
   sequence packing → train/val folds → drift monitor on the output.
 
-Run:  PYTHONPATH=/root/repo python examples/corpus_pipeline.py
+Run:  python examples/corpus_pipeline.py
 (~1 min on local[32] at sf0.001.)
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -1,11 +1,12 @@
-"""bench.py regression-detector contract (r08 verdict item 1).
+"""bench.py regression-detector contract.
 
-The r08 detector parsed the driver's head-truncated BENCH_r07 tail to an
-empty dict and certified a +19% regressing bench as flat with zero
-flags. These tests pin the repaired behavior against the REAL committed
-artifacts: extraction must survive (a) the driver wrapper's escaped-
-string tail, (b) head truncation that cuts the line mid-token, and
-(c) the clean full-payload local anchor — and an empty comparison must
+The detector compares this run's canary-normalized series against one
+prev artifact: the newest exact-name ``BENCH_r<N>.json`` round
+artifact (a wrapper whose ``parsed`` dict is the bench's compact
+stdout line), else the committed full-payload ``BENCH_LOCAL.json``
+anchor. These tests pin the reader on the REAL committed artifacts and
+on synthetic ones of both shapes, the dual-canary correction and its
+noise floors, and the compact stdout line; an empty comparison must
 surface as an explicit error, never as a zero-flag pass.
 """
 
@@ -13,6 +14,8 @@ from __future__ import annotations
 
 import json
 import os
+
+import pytest
 
 import bench
 
@@ -24,55 +27,88 @@ def _read(name: str) -> str:
         return f.read()
 
 
-def test_extracts_norm_dict_from_truncated_driver_tail():
-    # BENCH_r07.json is the artifact that blinded r08: its tail begins
-    # mid-token. The normalized dict sits near the END of the stdout
-    # line, so it survives head truncation and MUST be recovered.
-    fields = bench._extract_bench_fields(_read("BENCH_r07.json"))
-    norm = fields.get("queries_canary_normalized")
-    assert norm and len(norm) >= 15
-    assert norm.get("q1_pricing_summary") == 1.0
+def _check_committed_artifact(name: str) -> None:
+    # a round wrapper gives its parsed stdout line, the anchor itself
+    raw = json.loads(_read(name))
+    line = raw.get("parsed", raw)
+    fields = bench._extract_bench_fields(_read(name))
+    c = line["canary"]["sec"]
+    norm = fields["queries_canary_normalized"]
+    assert len(norm) == 18
+    assert norm == {q: round(t / c, 2) for q, t in line["queries"].items()}
+    assert fields["canary2_spread"] == line["canary2"]["spread"]
+    assert fields["methodology"] == bench.METHODOLOGY
+    if "queries_canary_normalized" in line:  # the anchor stores its own
+        assert norm == line["queries_canary_normalized"]
 
 
 def test_extracts_from_untruncated_driver_wrapper():
-    fields = bench._extract_bench_fields(_read("BENCH_r08.json"))
-    assert len(fields.get("queries_canary_normalized", {})) >= 15
-    assert fields.get("methodology", "").startswith("warmup-pass")
+    _check_committed_artifact("BENCH_r14.json")
+
+
+def test_extracts_committed_anchor():
+    _check_committed_artifact("BENCH_LOCAL.json")
 
 
 def test_extracts_full_payload_anchor():
     payload = {
-        "queries_canary_normalized": {"qx": 2.0},
-        "methodology": bench.METHODOLOGY,
         "queries": {"qx": 1.5},
+        "canary": {"name": "q_other", "sec": 0.75},
+        "canary2": {"name": "minhash_lsh_fixed_probe", "sec": 1.2, "spread": 0.3},
+        "methodology": bench.METHODOLOGY,
     }
     fields = bench._extract_bench_fields(json.dumps(payload))
-    assert fields["queries_canary_normalized"] == {"qx": 2.0}
-    assert fields["methodology"] == bench.METHODOLOGY
+    assert fields == {
+        "queries_canary_normalized": {"qx": 2.0}, "methodology": bench.METHODOLOGY,
+        "canary_name": "q_other", "canary_sec": 0.75, "canary2_sec": 1.2, "canary2_spread": 0.3,
+    }
+
+
+def test_unparsed_round_artifact_falls_to_the_anchor(tmp_path):
+    # BENCH_r12.json is a wrapper whose stdout line was never parsed
+    # (parsed: null): it gives no fields, and the comparison moves
+    # on to the anchor
+    assert bench._extract_bench_fields(_read("BENCH_r12.json")) == {}
+    assert bench._extract_bench_fields("not json {") == {}
+    wrapper = {"n": 42, "rc": 0, "tail": "...", "parsed": None}
+    (tmp_path / "BENCH_r42.json").write_text(json.dumps(wrapper))
+    _write_prev(tmp_path, None, {"q1_pricing_summary": 1.0, "qa": 2.0})
+    block = bench._prev_comparison(
+        {"q1_pricing_summary": 1.0, "qa": 2.0}, artifact_dir=str(tmp_path)
+    )
+    assert block["prev_artifact"] == "BENCH_LOCAL.json"
+    assert block["deltas"]["qa"] == 0.0
 
 
 def _write_prev(
     tmp_path,
-    rnd: int,
+    rnd: int | str | None,
     norm: dict,
     spread: dict | None = None,
-    canary_sec: float | None = None,
+    canary_sec: float = 1.0,
     canary2_sec: float | None = None,
+    canary2_spread: float | None = None,
 ):
-    """Synthesize a driver-wrapper artifact whose ``tail`` holds the
-    stdout JSON line — the shape the driver actually deposits."""
+    """Write a prev artifact whose stdout line reproduces ``norm``: the
+    round's ``BENCH_r<rnd>.json`` wrapper with the line as ``parsed``,
+    or, for ``rnd=None``, the full-payload ``BENCH_LOCAL.json`` anchor."""
     line: dict = {
         "methodology": bench.METHODOLOGY,
-        "queries_canary_normalized": norm,
+        "queries": {q: v * canary_sec for q, v in norm.items()},
+        "canary": {"name": "q1_pricing_summary", "sec": canary_sec},
     }
     if spread is not None:
         line["queries_sample_spread"] = spread
-    if canary_sec is not None:
-        line["canary"] = {"name": "q1_pricing_summary", "sec": canary_sec}
     if canary2_sec is not None:
         line["canary2"] = {"name": "minhash_lsh_fixed_probe", "sec": canary2_sec}
-    wrapper = {"n": rnd, "rc": 0, "tail": json.dumps(line) + "\n", "parsed": None}
-    (tmp_path / f"BENCH_r{rnd:02d}.json").write_text(json.dumps(wrapper))
+        if canary2_spread is not None:
+            line["canary2"]["spread"] = canary2_spread
+    if rnd is None:  # main()'s full payload also stores the series
+        line["queries_canary_normalized"] = norm
+        (tmp_path / "BENCH_LOCAL.json").write_text(json.dumps(line))
+    else:
+        wrapper = {"n": rnd, "rc": 0, "tail": "...", "parsed": line}
+        (tmp_path / f"BENCH_r{rnd}.json").write_text(json.dumps(wrapper))
 
 
 def test_dual_canary_corrects_structural_canary_speedup(tmp_path):
@@ -93,8 +129,7 @@ def test_dual_canary_corrects_structural_canary_speedup(tmp_path):
     )
     assert block["canary_basis"]["applied"] is True
     assert block["canary_basis"]["host_ratio_used"] == 1.0  # canary2 unmoved
-    assert block["deltas_single_canary"]["qa"] == 1.0       # old basis: +100%
-    assert block["deltas"]["qa"] == 0.0                     # corrected: flat
+    assert block["deltas"]["qa"] == 0.0  # corrected: flat (single-canary +100%)
     # q1's own corrected delta now carries its TRUE movement (-50%) —
     # under the single-canary basis it was 0 by construction, hiding
     # exactly the structural canary change this basis exists to expose
@@ -121,37 +156,15 @@ def test_dual_canary_ignores_the_mover_not_the_host(tmp_path):
     assert block["deltas"]["qa"] == 0.0
 
 
-def test_canary_secs_survive_tail_truncation():
-    """The early canary/canary2 dicts are eaten by the driver's
-    2000-byte tail (BENCH_r12.json lost them); the tail-region
-    ``canaries_sec`` duplicate must be extractable from a tail cut
-    mid-line ahead of it."""
-    line = json.dumps(
-        {
-            "queries_sample_spread": {"qa": 0.1},
-            "canaries_sec": {"canary_sec": 0.41, "canary2_sec": 1.52},
-            "methodology": bench.METHODOLOGY,
-            "queries_canary_normalized": {"qa": 2.0},
-        }
-    )
-    # head truncation mid-token, cutting into the spread dict just ahead
-    # of the canaries (the 2000-byte tail keeps the final ~1.1 KB whole)
-    tail = line[line.index('"qa"') + 2 :]
-    fields = bench._extract_bench_fields(json.dumps({"tail": tail, "n": 13}))
-    assert fields["canary_sec"] == 0.41
-    assert fields["canary2_sec"] == 1.52
-
-
 def test_dual_canary_falls_back_without_prev_canary_secs(tmp_path):
-    """Truncated prev artifacts without canary seconds keep the old
-    single-canary basis (correction off, deltas identical)."""
+    """A prev artifact without canary2 seconds keeps the single-canary
+    basis (correction off)."""
     _write_prev(tmp_path, 42, {"q1_pricing_summary": 1.0, "qa": 2.0})
     block = bench._prev_comparison(
         {"q1_pricing_summary": 1.0, "qa": 2.6}, artifact_dir=str(tmp_path),
         canary_sec=0.2, canary2_sec=1.5,
     )
     assert block["canary_basis"]["applied"] is False
-    assert block["deltas"] == block["deltas_single_canary"]
     assert block["deltas"]["qa"] == 0.3
 
 
@@ -172,7 +185,7 @@ def test_prev_comparison_yields_nonempty_deltas_and_flags(tmp_path):
 
 def test_prev_comparison_picks_newest_artifact(tmp_path):
     _write_prev(tmp_path, 2, {"qa": 1.0})
-    _write_prev(tmp_path, 10, {"qa": 2.0})  # lexicographic sort would pick r02
+    _write_prev(tmp_path, 10, {"qa": 2.0})  # lexicographic sort would pick r2
     block = bench._prev_comparison({"qa": 2.0}, artifact_dir=str(tmp_path))
     assert block["prev_artifact"] == "BENCH_r10.json"
     assert block["deltas"]["qa"] == 0.0
@@ -317,7 +330,7 @@ def test_detector_derives_norm_from_compact_v4_line(tmp_path):
         "queries_sample_spread": {"q1_pricing_summary": 0.0, "qa": 0.0},
         "methodology": bench.METHODOLOGY,
     }
-    wrapper = {"n": 42, "rc": 0, "tail": json.dumps(line, separators=(",", ":")) + "\n"}
+    wrapper = {"n": 42, "rc": 0, "tail": "...", "parsed": line}
     (tmp_path / "BENCH_r42.json").write_text(json.dumps(wrapper))
     fields = bench._extract_bench_fields((tmp_path / "BENCH_r42.json").read_text())
     assert fields["queries_canary_normalized"] == {"q1_pricing_summary": 1.0, "qa": 2.0}
@@ -333,37 +346,33 @@ def test_detector_derives_norm_from_compact_v4_line(tmp_path):
     assert block["same_measurement_basis"] is True
 
 
-def test_canary2_spread_joins_noise_when_it_is_the_host_witness(tmp_path):
+@pytest.mark.parametrize("rnd", [42, None], ids=["round_wrapper", "anchor"])
+def test_canary2_spread_joins_noise_when_it_is_the_host_witness(tmp_path, rnd):
     # r13 advice: when the dual-canary correction flows through canary2
     # (host witness = r2), canary2's best-of variance enters every
-    # corrected delta — a flag that does not clear it must demote.
-    _write_prev(
-        tmp_path, 42, {"q1_pricing_summary": 1.0, "qx": 2.0},
-        spread={"q1_pricing_summary": 0.0, "qx": 0.0},
-        canary_sec=0.4, canary2_sec=1.5,
-    )
+    # corrected delta — BOTH runs' spreads, whichever shape the prev
+    # artifact has — and a flag that does not clear it must demote.
     # q1 halves (structural), canary2 flat -> host witness is canary2,
-    # correction = 0.5; qx raw flat => single delta +100%, corrected 0.
-    # Make qx corrected delta +30% instead (raw 0.8 -> 1.04) and give
-    # THIS run's canary2 a 0.4 spread: noise 0.4 > 0.3 -> subnoise.
-    block = bench._prev_comparison(
-        {"q1_pricing_summary": 1.0, "qx": 5.2},
-        artifact_dir=str(tmp_path),
-        spreads={"q1_pricing_summary": 0.0, "qx": 0.0},
-        canary_sec=0.2, canary2_sec=1.5, canary2_spread=0.4,
-    )
-    assert block["canary_basis"]["applied"] is True
-    assert block["canary_basis"]["host_ratio_used"] == 1.0
-    assert block["deltas"]["qx"] == 0.3
-    assert "qx" in block["flagged_subnoise_over_25pct"]
-    # without canary2's spread the same delta would have been flagged
-    block2 = bench._prev_comparison(
-        {"q1_pricing_summary": 1.0, "qx": 5.2},
-        artifact_dir=str(tmp_path),
-        spreads={"q1_pricing_summary": 0.0, "qx": 0.0},
-        canary_sec=0.2, canary2_sec=1.5, canary2_spread=0.0,
-    )
-    assert "qx" in block2["flagged_over_25pct"]
+    # correction = 0.5; qx raw 0.8 -> 1.04 gives a corrected +30%.
+    for prev_c2_spread, now_c2_spread, flag_list in (
+        (0.4, 0.0, "flagged_subnoise_over_25pct"),  # the prev run's spread
+        (0.0, 0.4, "flagged_subnoise_over_25pct"),  # this run's spread
+        (0.0, 0.0, "flagged_over_25pct"),  # neither: the delta is a flag
+    ):
+        _write_prev(
+            tmp_path, rnd, {"q1_pricing_summary": 1.0, "qx": 2.0},
+            spread={"q1_pricing_summary": 0.0, "qx": 0.0},
+            canary_sec=0.4, canary2_sec=1.5, canary2_spread=prev_c2_spread,
+        )
+        block = bench._prev_comparison(
+            {"q1_pricing_summary": 1.0, "qx": 5.2},
+            artifact_dir=str(tmp_path),
+            spreads={"q1_pricing_summary": 0.0, "qx": 0.0},
+            canary_sec=0.2, canary2_sec=1.5, canary2_spread=now_c2_spread,
+        )
+        assert block["canary_basis"]["host_ratio_used"] == 1.0
+        assert block["deltas"]["qx"] == 0.3
+        assert "qx" in block[flag_list]
 
 
 def test_descend_to_flat_sampling_policy():
@@ -387,12 +396,8 @@ def test_low_core_artifacts_never_chosen_as_prev(tmp_path):
     # BENCH_r13.json; the round-number sort key ties and a stable-sort
     # coin flip could compare a 32-core run against 8-core numbers.
     # Only exact BENCH_r<d>.json names are comparison candidates.
+    _write_prev(tmp_path, "13_c8", {"q1_pricing_summary": 1.0, "qa": 99.0})  # 8 cores
     _write_prev(tmp_path, 13, {"q1_pricing_summary": 1.0, "qa": 2.0})
-    # an 8-core artifact of the SAME round with wildly different values
-    line = {"methodology": bench.METHODOLOGY,
-            "queries_canary_normalized": {"q1_pricing_summary": 1.0, "qa": 99.0}}
-    wrapper = {"n": 13, "rc": 0, "tail": json.dumps(line) + "\n"}
-    (tmp_path / "BENCH_r13_c8.json").write_text(json.dumps(wrapper))
     block = bench._prev_comparison(
         {"q1_pricing_summary": 1.0, "qa": 2.0}, artifact_dir=str(tmp_path)
     )

@@ -24,13 +24,14 @@ at sf0.001 so the module stays fast.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from alibaba_cppfeaturestore_spark.plans.catalog import QUERIES
 from tools.driver_sim import TABLES, perturb_nulls_sf

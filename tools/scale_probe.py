@@ -15,9 +15,10 @@ Usage: python tools/scale_probe.py  (≈2-3 min on local[32])
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -142,8 +143,7 @@ def skew_probe(spark):
     volumes are computed ARITHMETICALLY from the bucket-size histogram
     (Σ C(m,2)), so the probe itself never materializes the m² pairs it
     measures."""
-    sys.path.insert(0, "/root/repo/tools")
-    from driver_sim import perturb_skew_sf
+    from tools.driver_sim import perturb_skew_sf
 
     skewed = perturb_skew_sf("/root/testdata/sf0.1", 7)
     docs = load_table(spark, skewed, "documents").select("doc_id", "text")
