@@ -84,6 +84,17 @@ def _extract_bench_fields(raw: str) -> dict:
     return {k: v for k, v in fields.items() if v is not None}
 
 
+def _wrapper_cpus(path: str) -> int | None:
+    """The core count a ``BENCH_r<N>.json`` round wrapper records, or
+    None when the file is unreadable or records none."""
+    try:
+        with open(path) as f:
+            wrapper = json.load(f)
+    except (OSError, ValueError):
+        return None
+    return wrapper.get("cpus") if isinstance(wrapper, dict) else None
+
+
 def _prev_comparison(
     norm: dict[str, float],
     artifact_dir: str | None = None,
@@ -92,10 +103,13 @@ def _prev_comparison(
     canary_sec: float | None = None,
     canary2_sec: float | None = None,
     canary2_spread: float = 0.0,
+    cpus: int = 32,
 ) -> dict:
     """Round-over-round regression block. Reads the newest round
-    ``BENCH_r<N>.json``, falling back to the committed local anchor;
-    emits per-query canary-normalized deltas and flags |Δ| > 25%. An
+    ``BENCH_r<N>.json`` wrapper that ran on this run's ``cpus`` (main()
+    passes ``SPARK_GRAFT_CPUS``), falling back to the committed local
+    anchor, which records no core count (``prev_cpus`` is then None).
+    Emits per-query canary-normalized deltas and flags |Δ| > 25%. An
     empty comparison is an ERROR in the artifact, never a silent
     zero-flag pass (the r08 failure mode).
 
@@ -129,15 +143,16 @@ def _prev_comparison(
     flags are the corrected series. Falls back to the single-canary
     basis (correction 1.0) when either run lacks a canary's seconds."""
     artifact_dir = artifact_dir or REPO
-    # EXACT name match only: the driver also deposits low-core artifacts
-    # (BENCH_r13_c8.json) under the SAME round number, and comparing this
-    # 32-core run against an 8-core prev would be a coin flip away
-    rounds = {}
+    # Only a wrapper recorded at this run's core count compares: the
+    # driver also deposits 8-core runs (BENCH_r13_c8.json) under the same
+    # round number, and a local[4] run read against the local[32] r14
+    # flagged +173% deltas as subnoise.
+    rounds = []
     for p in glob.glob(os.path.join(artifact_dir, "BENCH_r*.json")):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(p))
-        if m:
-            rounds[int(m.group(1))] = p
-    candidates = [rounds[max(rounds)]] if rounds else []
+        m = re.fullmatch(r"BENCH_r(\d+)(_\w+)?\.json", os.path.basename(p))
+        if m and _wrapper_cpus(p) == cpus:
+            rounds.append((int(m.group(1)), p))
+    candidates = [max(rounds)[1]] if rounds else []
     anchor = os.path.join(artifact_dir, os.path.basename(LOCAL_ANCHOR))
     if os.path.exists(anchor):
         candidates.append(anchor)
@@ -213,6 +228,7 @@ def _prev_comparison(
         over = {qn for qn, d in deltas_dual.items() if abs(d) > 0.25}
         return {
             "prev_artifact": os.path.basename(path),
+            "prev_cpus": None if path == anchor else cpus,
             "prev_methodology": prev_meth or "(not recorded)",
             "same_measurement_basis": prev_meth == METHODOLOGY,
             "canary_basis": basis,
@@ -386,6 +402,7 @@ def main() -> None:
             canary_sec=canary,
             canary2_sec=canary2,
             canary2_spread=canary2_spread,
+            cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         )
     except Exception as exc:  # the comparison must never fail the bench
         prev_block = {"error": repr(exc)[:200]}

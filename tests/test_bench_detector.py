@@ -1,10 +1,10 @@
 """bench.py regression-detector contract.
 
 The detector compares this run's canary-normalized series against one
-prev artifact: the newest exact-name ``BENCH_r<N>.json`` round
-artifact (a wrapper whose ``parsed`` dict is the bench's compact
-stdout line), else the committed full-payload ``BENCH_LOCAL.json``
-anchor. These tests pin the reader on the REAL committed artifacts and
+prev artifact: the newest ``BENCH_r<N>.json`` round artifact recorded at
+this run's core count (a wrapper whose ``parsed`` dict is the bench's
+compact stdout line), else the committed full-payload
+``BENCH_LOCAL.json`` anchor. These tests pin the reader on the REAL committed artifacts and
 on synthetic ones of both shapes, the dual-canary correction and its
 noise floors, and the compact stdout line; an empty comparison must
 surface as an explicit error, never as a zero-flag pass.
@@ -70,7 +70,7 @@ def test_unparsed_round_artifact_falls_to_the_anchor(tmp_path):
     # on to the anchor
     assert bench._extract_bench_fields(_read("BENCH_r12.json")) == {}
     assert bench._extract_bench_fields("not json {") == {}
-    wrapper = {"n": 42, "rc": 0, "tail": "...", "parsed": None}
+    wrapper = {"n": 42, "rc": 0, "cpus": 32, "tail": "...", "parsed": None}
     (tmp_path / "BENCH_r42.json").write_text(json.dumps(wrapper))
     _write_prev(tmp_path, None, {"q1_pricing_summary": 1.0, "qa": 2.0})
     block = bench._prev_comparison(
@@ -88,10 +88,12 @@ def _write_prev(
     canary_sec: float = 1.0,
     canary2_sec: float | None = None,
     canary2_spread: float | None = None,
+    cpus: int = 32,
 ):
     """Write a prev artifact whose stdout line reproduces ``norm``: the
-    round's ``BENCH_r<rnd>.json`` wrapper with the line as ``parsed``,
-    or, for ``rnd=None``, the full-payload ``BENCH_LOCAL.json`` anchor."""
+    round's ``BENCH_r<rnd>.json`` wrapper (run on ``cpus`` cores) with
+    the line as ``parsed``, or, for ``rnd=None``, the full-payload
+    ``BENCH_LOCAL.json`` anchor."""
     line: dict = {
         "methodology": bench.METHODOLOGY,
         "queries": {q: v * canary_sec for q, v in norm.items()},
@@ -107,7 +109,7 @@ def _write_prev(
         line["queries_canary_normalized"] = norm
         (tmp_path / "BENCH_LOCAL.json").write_text(json.dumps(line))
     else:
-        wrapper = {"n": rnd, "rc": 0, "tail": "...", "parsed": line}
+        wrapper = {"n": rnd, "rc": 0, "cpus": cpus, "tail": "...", "parsed": line}
         (tmp_path / f"BENCH_r{rnd}.json").write_text(json.dumps(wrapper))
 
 
@@ -330,7 +332,7 @@ def test_detector_derives_norm_from_compact_v4_line(tmp_path):
         "queries_sample_spread": {"q1_pricing_summary": 0.0, "qa": 0.0},
         "methodology": bench.METHODOLOGY,
     }
-    wrapper = {"n": 42, "rc": 0, "tail": "...", "parsed": line}
+    wrapper = {"n": 42, "rc": 0, "cpus": 32, "tail": "...", "parsed": line}
     (tmp_path / "BENCH_r42.json").write_text(json.dumps(wrapper))
     fields = bench._extract_bench_fields((tmp_path / "BENCH_r42.json").read_text())
     assert fields["queries_canary_normalized"] == {"q1_pricing_summary": 1.0, "qa": 2.0}
@@ -393,13 +395,38 @@ def test_descend_to_flat_sampling_policy():
 
 def test_low_core_artifacts_never_chosen_as_prev(tmp_path):
     # The driver deposits BENCH_r13_c8.json (8-core scaling run) next to
-    # BENCH_r13.json; the round-number sort key ties and a stable-sort
-    # coin flip could compare a 32-core run against 8-core numbers.
-    # Only exact BENCH_r<d>.json names are comparison candidates.
-    _write_prev(tmp_path, "13_c8", {"q1_pricing_summary": 1.0, "qa": 99.0})  # 8 cores
+    # BENCH_r13.json under the same round number. The wrappers' recorded
+    # core counts, not their names, decide which one a run compares to.
+    _write_prev(tmp_path, "13_c8", {"q1_pricing_summary": 1.0, "qa": 99.0}, cpus=8)
     _write_prev(tmp_path, 13, {"q1_pricing_summary": 1.0, "qa": 2.0})
     block = bench._prev_comparison(
         {"q1_pricing_summary": 1.0, "qa": 2.0}, artifact_dir=str(tmp_path)
     )
     assert block["prev_artifact"] == "BENCH_r13.json"
+    assert block["prev_cpus"] == 32
+    assert block["deltas"]["qa"] == 0.0
+    block = bench._prev_comparison(
+        {"q1_pricing_summary": 1.0, "qa": 99.0}, artifact_dir=str(tmp_path), cpus=8
+    )
+    assert block["prev_artifact"] == "BENCH_r13_c8.json"
+    assert block["prev_cpus"] == 8
+    assert block["deltas"]["qa"] == 0.0
+
+
+def test_cross_core_wrapper_never_compares(tmp_path):
+    # A local[4] run was once read against the local[32] r14 and filed a
+    # +173% delta as subnoise. With only a 32-core wrapper, a 4-core run
+    # falls to the anchor (which records no core count), and with no
+    # anchor either it reports the explicit error.
+    _write_prev(tmp_path, 14, {"q1_pricing_summary": 1.0, "qa": 2.0})
+    block = bench._prev_comparison(
+        {"q1_pricing_summary": 1.0, "qa": 5.46}, artifact_dir=str(tmp_path), cpus=4
+    )
+    assert "error" in block and "deltas" not in block
+    _write_prev(tmp_path, None, {"q1_pricing_summary": 1.0, "qa": 5.0})
+    block = bench._prev_comparison(
+        {"q1_pricing_summary": 1.0, "qa": 5.0}, artifact_dir=str(tmp_path), cpus=4
+    )
+    assert block["prev_artifact"] == "BENCH_LOCAL.json"
+    assert block["prev_cpus"] is None
     assert block["deltas"]["qa"] == 0.0

@@ -2,8 +2,9 @@
 infrastructure: a fuzzer that silently stops mutating a column turns
 every downstream "certified under extremes" claim vacuous (the r08
 bench-detector lesson, applied to the data side). These tests pin the
-r09 widened extremes regime — EVERY double column seeded — with pure
-pyarrow, no Spark session."""
+r09 widened extremes regime — EVERY double column seeded — the other
+modes' own contracts, and the copy contract every mode in
+``driver_sim.MODES`` shares, with pure pyarrow, no Spark session."""
 
 from __future__ import annotations
 
@@ -12,8 +13,11 @@ import os
 import sys
 
 import pyarrow.parquet as pq
+import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+
+import driver_sim  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -39,9 +43,9 @@ def _specials(vals):
 
 
 def test_extremes_seeds_every_double_column():
-    from driver_sim import perturb_extremes_sf
+    from driver_sim import perturb
 
-    out = perturb_extremes_sf(SF, 97)
+    out = perturb(SF, "--perturb-extremes", 97)
     for table, cols in RING.items():
         tbl = pq.read_table(os.path.join(out, f"{table}.parquet"))
         for col in cols:
@@ -85,9 +89,9 @@ def test_extremes_seeds_every_double_column():
 
 
 def test_extremes_leaves_non_target_columns_intact():
-    from driver_sim import perturb_extremes_sf
+    from driver_sim import perturb
 
-    out = perturb_extremes_sf(SF, 97)
+    out = perturb(SF, "--perturb-extremes", 97)
     for table, key in [("orders", "o_orderkey"), ("lineitem", "l_orderkey"), ("customer", "c_custkey")]:
         before = pq.read_table(os.path.join(SF, f"{table}.parquet")).column(key).to_pylist()
         after = pq.read_table(os.path.join(out, f"{table}.parquet")).column(key).to_pylist()
@@ -102,7 +106,7 @@ def test_ids_fuzzer_duplicates_every_custom_table_key():
     "green under --perturb-ids" claim vacuous."""
     import driver_sim as DS
 
-    out = DS.perturb_ids_sf(SF, seed=9001)
+    out = DS.perturb(SF, "--perturb-ids", seed=9001)
     for table, col in (
         ("documents", "doc_id"),
         ("embeddings", "vec_id"),
@@ -128,7 +132,7 @@ def test_tpch_ids_fuzzer_duplicates_and_nulls_every_join_key():
     composes with --perturb-ids, which owns those)."""
     import driver_sim as DS
 
-    out = DS.perturb_tpch_ids_sf(SF, seed=9001)
+    out = DS.perturb(SF, "--perturb-tpch-ids", seed=9001)
     for table, col in (
         ("orders", "o_orderkey"),
         ("lineitem", "l_orderkey"),
@@ -172,7 +176,7 @@ def test_fk_ids_fuzzer_nulls_and_orphans_every_fk():
     byte-identical (composes with --perturb-tpch-ids, which owns PKs)."""
     import driver_sim as DS
 
-    out = DS.perturb_fk_ids_sf(SF, seed=9001)
+    out = DS.perturb(SF, "--perturb-fk-ids", seed=9001)
     targets = {
         "orders": ["o_custkey"],
         "lineitem": ["l_suppkey", "l_partkey"],
@@ -211,7 +215,7 @@ def test_dim_ids_fuzzer_degrades_the_nation_region_chain():
     FKs gain NULLs; everything else byte-identical."""
     import driver_sim as DS
 
-    out = DS.perturb_dim_ids_sf(SF, seed=9001)
+    out = DS.perturb(SF, "--perturb-dim-ids", seed=9001)
     for t, col, want_dups in (
         ("nation", "n_nationkey", True),
         ("region", "r_regionkey", True),
@@ -245,7 +249,7 @@ def test_ts_nulls_fuzzer_degrades_the_event_time_spine():
 
     import driver_sim as DS
 
-    out = DS.perturb_ts_nulls_sf(SF, seed=9001)
+    out = DS.perturb(SF, "--perturb-ts-nulls", seed=9001)
     src = pq.read_table(f"{SF}/events.parquet")
     tbl = pq.read_table(f"{out}/events.parquet")
     before = src.column("ts").to_pylist()
@@ -283,7 +287,7 @@ def test_date_nulls_fuzzer_degrades_the_tpch_date_spine():
 
     import driver_sim as DS
 
-    out = DS.perturb_date_nulls_sf(SF, seed=9001)
+    out = DS.perturb(SF, "--perturb-date-nulls", seed=9001)
     for table, col in (("orders", "o_orderdate"), ("lineitem", "l_shipdate")):
         src = pq.read_table(f"{SF}/{table}.parquet")
         tbl = pq.read_table(f"{out}/{table}.parquet")
@@ -319,7 +323,7 @@ def test_props_json_fuzzer_malfomed_variants_present():
     Only props moves; every other column and table byte-identical."""
     import driver_sim as DS
 
-    out = DS.perturb_props_json_sf(SF, seed=9001)
+    out = DS.perturb(SF, "--perturb-props-json", seed=9001)
     src = pq.read_table(f"{SF}/events.parquet")
     tbl = pq.read_table(f"{out}/events.parquet")
     before = src.column("props").to_pylist()
@@ -349,7 +353,7 @@ def test_neg_ids_fuzzer_negates_every_target_key():
     boundaries, synthetic-id collisions)."""
     import driver_sim as DS
 
-    out = DS.perturb_neg_ids_sf(SF, seed=9001)
+    out = DS.perturb(SF, "--perturb-neg-ids", seed=9001)
     targets = {
         "documents": ["doc_id"], "embeddings": ["vec_id"],
         "events": ["event_id", "user_id"],
@@ -387,7 +391,7 @@ def test_kv_fuzzer_plants_adversarial_fragments():
     Only the two carrier columns move; everything else byte-identical."""
     import driver_sim as DS
 
-    out = DS.perturb_kv_sf(SF, seed=9001)
+    out = DS.perturb(SF, "--perturb-kv", seed=9001)
     for table, col in (("orders", "o_orderpriority"), ("customer", "c_name")):
         src = pq.read_table(f"{SF}/{table}.parquet")
         tbl = pq.read_table(f"{out}/{table}.parquet")
@@ -416,7 +420,7 @@ def test_kv_fuzzer_plants_adversarial_fragments():
 
 
 def test_decimal_edge_fuzzer_seeds_boundary_values():
-    """r12: ~5% of every scalar double column becomes a declared-width
+    """r12: ~5% of events.value becomes a declared-width
     boundary value — all exactly-representable doubles (the mode must
     stress the catalog's decimal domains, not the engines' legitimate
     shortest-repr-vs-binary conversion gap above 2^33)."""
@@ -435,7 +439,7 @@ def test_decimal_edge_fuzzer_seeds_boundary_values():
     for v in DS.DECIMAL_EDGES:
         assert abs(v) * 1e6 < 2**53 or v in (1e12, -1e12, 1e14), repr(v)
 
-    out = DS.perturb_decimal_edge_sf(SF, seed=9001)
+    out = DS.perturb(SF, "--perturb-decimal-edge", seed=9001)
     src = pq.read_table(f"{SF}/events.parquet")
     tbl = pq.read_table(f"{out}/events.parquet")
     before = src.column("value").to_pylist()
@@ -451,9 +455,59 @@ def test_decimal_edge_fuzzer_seeds_boundary_values():
             assert tbl.column(f.name).to_pylist() == src.column(f.name).to_pylist()
     # only events.value moves: the TPC-H price columns feed DECLARED-RAW
     # double sums where finite cancelling magnitudes cannot be made
-    # engine-equal (see perturb_decimal_edge_sf's domain pins)
+    # engine-equal (see driver_sim._decimal_edges' domain pins)
     for t in ("orders", "lineitem", "customer", "supplier", "part",
               "documents", "embeddings", "nation", "region"):
         assert pq.read_table(f"{out}/{t}.parquet").equals(
             pq.read_table(f"{SF}/{t}.parquet")
         ), f"{t} mutated by the decimal-edge fuzzer"
+
+
+def _file_bytes(sf: str, t: str) -> bytes:
+    with open(os.path.join(sf, f"{t}.parquet"), "rb") as f:
+        return f.read()
+
+
+@pytest.mark.parametrize("flag", list(driver_sim.MODES))
+def test_every_mode_keeps_the_copy_contract(flag):
+    """The contract every mode shares: all tables are written, the ones
+    the mode does not list are byte copies, a listed one really changes,
+    row counts hold (0 for the emptied feeds), the copy is reproducible,
+    and a seeded mode moves with its seed."""
+    mode = driver_sim.MODES[flag]
+    out = driver_sim.perturb(SF, flag, 5)
+    assert all(os.path.isfile(os.path.join(out, f"{t}.parquet")) for t in driver_sim.TABLES)
+    first = {t: _file_bytes(out, t) for t in driver_sim.TABLES}
+    changed = []
+    for t in driver_sim.TABLES:
+        if t not in mode.transforms:
+            assert first[t] == _file_bytes(SF, t), f"{flag}: {t} is not a byte copy"
+            continue
+        src = pq.read_table(os.path.join(SF, f"{t}.parquet"))
+        got = pq.read_table(os.path.join(out, f"{t}.parquet"))
+        assert got.num_rows == (0 if flag == "--perturb-empty" else src.num_rows), t
+        if not got.equals(src):
+            changed.append(t)
+    assert changed, f"{flag}: no listed table differs from its source"
+
+    assert driver_sim.perturb(SF, flag, 5) == out
+    assert {t: _file_bytes(out, t) for t in driver_sim.TABLES} == first, "not reproducible"
+    if mode.seeded:
+        other = driver_sim.perturb(SF, flag, 6)
+        assert other != out
+        assert any(
+            not pq.read_table(os.path.join(other, f"{t}.parquet")).equals(
+                pq.read_table(os.path.join(out, f"{t}.parquet"))
+            )
+            for t in mode.transforms
+        ), f"{flag}: seeds 5 and 6 give the same copy"
+
+
+def test_all_modes_stack_within_the_filename_limit():
+    """Stacked modes chain their output names; ``_src_tag`` keeps the
+    last of all 20 within the 255-byte filename limit."""
+    sf = SF
+    for flag in driver_sim.MODES:
+        sf = driver_sim.perturb(sf, flag, 3)
+    assert len(os.path.basename(sf).encode()) <= 255
+    assert all(os.path.isfile(os.path.join(sf, f"{t}.parquet")) for t in driver_sim.TABLES)

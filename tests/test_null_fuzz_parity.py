@@ -1,7 +1,7 @@
 """NULL-injection differential: the null-sensitive catalog entries vs
 their DuckDB oracles on a null-perturbed testdata copy.
 
-``tools/driver_sim.py --perturb-nulls`` runs the full 207-entry gate on
+``tools/driver_sim.py --perturb-nulls`` runs the full 211-entry gate on
 NULL-seeded data; this module pins the property in the regular pytest
 loop for the entries whose plans had (and fixed) genuine cross-engine
 null divergences, so a regression is caught without a driver_sim run:
@@ -34,7 +34,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from alibaba_cppfeaturestore_spark.plans.catalog import QUERIES
-from tools.driver_sim import TABLES, perturb_nulls_sf
+from tools.driver_sim import TABLES, perturb
 
 # The entries whose plans carry explicit null-discipline decisions (see
 # module docstring), plus the dictionary/text/statistics neighbours that
@@ -77,7 +77,7 @@ NULL_SENSITIVE = [
 
 @pytest.fixture(scope="module")
 def null_sf(tmp_path_factory):
-    return perturb_nulls_sf("/root/testdata/sf0.001", seed=11)
+    return perturb("/root/testdata/sf0.001", "--perturb-nulls", seed=11)
 
 
 @pytest.fixture(scope="module")

@@ -7,19 +7,6 @@ session-conf dependencies (e.g. ``spark.sql.mapKeyDedupPolicy`` — the
 round-1 ``kv_merge_lastwin`` crash).  This script reproduces the hard gate
 locally: vanilla session, column-name-sorted value comparison, JSON report.
 
-Usage:  python tools/driver_sim.py [--sf /root/testdata/sf0.01] [--only name,...]
-                                   [--strict] [--perturb SEED] [--perturb-text S]
-                                   [--perturb-ids S] [--perturb-tpch-ids S]
-                                   [--perturb-fk-ids S] [--perturb-dim-ids S]
-                                   [--perturb-unicode S] [--perturb-ts S]
-                                   [--perturb-ts-nulls S] [--perturb-date-nulls S]
-                                   [--perturb-props-json S] [--perturb-neg-ids S]
-                                   [--perturb-decimal-edge S] [--perturb-kv S]
-                                   [--perturb-nulls S] [--perturb-order S]
-                                   [--perturb-schema S] [--perturb-skew S]
-                                   [--perturb-extremes S]
-                                   [--perturb-empty S]   (modes stack)
-
 ``--strict`` compares values EXACTLY (the driver hashes values, so a
 mismatch in the 7th decimal is red there while the default rtol=1e-6
 compare would mask it). ``--perturb SEED`` runs the whole gate on a
@@ -34,14 +21,23 @@ real data) is the round-start bar.
 from __future__ import annotations
 
 import argparse
+import datetime
 import json
 import os
+import random
+import shutil
 import sys
 import time
 import traceback
+import zlib
+from collections.abc import Callable
+from typing import NamedTuple
 
 import duckdb
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -59,9 +55,7 @@ def _src_tag(sf: str) -> str:
     inputs collapse to a crc32 digest + tail, short ones stay readable
     (and stay byte-identical to the pre-r10 names, so recorded seed
     certifications remain reproducible)."""
-    import zlib
-
-    base = __import__("os").path.basename(sf.rstrip("/"))
+    base = os.path.basename(sf.rstrip("/"))
     if len(base) <= 100:
         return base
     return f"x{zlib.crc32(base.encode()):08x}_{base[-60:]}"
@@ -79,43 +73,54 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns), na_position="last").reset_index(drop=True)
 
 
-def perturb_sf(sf: str, seed: int) -> str:
+# Perturbation modes. Each mode rewrites some tables of a testdata copy
+# through one transform ``(table, table_name, seed) -> table``; ``MODES``
+# (below the transforms) ties each to its flag. Every seeded choice
+# hashes a key string: those strings and the output directory names are
+# what recorded seed certifications reproduce, so they never change.
+
+
+def _crc(key: str) -> int:
+    return zlib.crc32(key.encode())
+
+
+def _with_columns(tbl: pa.Table, cols: dict[str, list]) -> pa.Table:
+    """``tbl`` with the named columns replaced by Python lists, each
+    keeping its field's type; names absent from the schema are ignored."""
+    return pa.Table.from_arrays(
+        [
+            pa.array(cols[f.name], type=f.type) if f.name in cols else tbl.column(i)
+            for i, f in enumerate(tbl.schema)
+        ],
+        schema=tbl.schema,
+    )
+
+
+def _text_columns(texts: list) -> dict[str, list]:
+    """``documents.text`` plus its derived column, for ``_with_columns``:
+    keeps the generator's invariant n_chars = len(text)."""
+    return {"text": texts, "n_chars": [None if v is None else len(v) for v in texts]}
+
+
+def _jitter(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Deterministically jittered copy of the testdata directory: every
     float64 column is scaled by (1 + U(-1e-4, 1e-4)) with a seed derived
     from (seed, table, column), so each run is reproducible but lands
     every float sum on fresh rounding boundaries. Non-float columns
     (ids, strings, timestamps, embedding lists) pass through untouched —
     the point is float-edge brittleness, not new data semantics."""
-    import os
-    import zlib
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out = f"/tmp/driver_sim_perturbed_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        tbl = pq.read_table(src)
-        arrays = []
-        for i, field in enumerate(tbl.schema):
-            col = tbl.column(i)
-            if pa.types.is_float64(field.type):
-                rng = np.random.default_rng(
-                    zlib.crc32(f"{seed}/{t}/{field.name}".encode())
-                )
-                v = col.combine_chunks().to_numpy(zero_copy_only=False)
-                jit = v * (1.0 + rng.uniform(-1e-4, 1e-4, len(v)))
-                # from_pandas=True: NaN (incl. former nulls) → null
-                arrays.append(pa.array(jit, type=pa.float64(), from_pandas=True))
-            else:
-                arrays.append(col)
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
+    cols = {}
+    for f in tbl.schema:
+        if pa.types.is_float64(f.type):
+            rng = np.random.default_rng(_crc(f"{seed}/{t}/{f.name}"))
+            v = tbl.column(f.name).combine_chunks().to_numpy(zero_copy_only=False)
+            jit = v * (1.0 + rng.uniform(-1e-4, 1e-4, len(v)))
+            # NaN (incl. former nulls) → null
+            cols[f.name] = [None if x != x else x for x in jit.tolist()]
+    return _with_columns(tbl, cols)
 
 
-def perturb_text_sf(sf: str, seed: int) -> str:
+def _exotic_whitespace(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Copy of the testdata with exotic whitespace seeded into a
     deterministic ~20% of ``documents.text``: vertical tab (Java-``\\s``
     but NOT RE2-``\\s`` — the char class divergence that flipped
@@ -123,13 +128,6 @@ def perturb_text_sf(sf: str, seed: int) -> str:
     CR, tab runs, NBSP, ideographic space, and an ASCII control char.
     Both engines see identical bytes, so any red row is a genuine
     cross-engine regex/semantics divergence, not a data change."""
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     # last four: astral-plane emoji (UTF-16 surrogate pair — 1 codepoint
     # on both engines, 2 Java chars), CJK, combining accent (decomposed
     # e+U+0301 — no engine normalizes, both must count 2 codepoints),
@@ -137,54 +135,33 @@ def perturb_text_sf(sf: str, seed: int) -> str:
     # semantics rather than the tokenizer split
     exotic = ["\x0b", "\x0c", "\r", "\t\t", " ", "　", "\x01", " \x0b ",
               "x😀y", "好的", "café", "שָׁלוֹם"]
-    out = f"/tmp/driver_sim_textperturbed_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t != "documents":
-            # ALWAYS overwrite: the driver regenerates the source data
-            # between rounds, and an exists-check would silently mix a
-            # stale cached copy with freshly perturbed tables.
-            shutil.copyfile(src, dst)
+    mutated = []
+    for did, txt in zip(tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist()):
+        h = _crc(f"{seed}/{did}")
+        if txt is None or h % 5 != 0:
+            mutated.append(txt)
             continue
-        tbl = pq.read_table(src)
-        texts = tbl.column("text").combine_chunks().to_pylist()
-        doc_ids = tbl.column("doc_id").combine_chunks().to_pylist()
-        mutated = []
-        for did, txt in zip(doc_ids, texts):
-            h = zlib.crc32(f"{seed}/{did}".encode())
-            if txt is None or h % 5 != 0:
-                mutated.append(txt)
-                continue
-            ch = exotic[(h >> 3) % len(exotic)]
-            toks = txt.split(" ")
-            pos = (h >> 7) % max(len(toks), 1)
-            toks.insert(pos, ch)
-            s = " ".join(toks)
-            if (h >> 11) % 2:
-                s = ch + s  # leading separator: empty-first-token edge
-            if (h >> 12) % 2:
-                s = s + ch  # trailing separator: empty-last-token edge
-            mutated.append(s)
-        # keep the generator's derived-column invariant (n_chars = len(text))
-        arrays = []
-        for i, f in enumerate(tbl.schema):
-            if f.name == "text":
-                arrays.append(pa.array(mutated, type=pa.string()))
-            elif f.name == "n_chars":
-                arrays.append(
-                    pa.array(
-                        [None if t is None else len(t) for t in mutated],
-                        type=f.type,
-                    )
-                )
-            else:
-                arrays.append(tbl.column(i))
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
+        ch = exotic[(h >> 3) % len(exotic)]
+        toks = txt.split(" ")
+        pos = (h >> 7) % max(len(toks), 1)
+        toks.insert(pos, ch)
+        s = " ".join(toks)
+        if (h >> 11) % 2:
+            s = ch + s  # leading separator: empty-first-token edge
+        if (h >> 12) % 2:
+            s = s + ch  # trailing separator: empty-last-token edge
+        mutated.append(s)
+    return _with_columns(tbl, _text_columns(mutated))
 
 
-def perturb_ids_sf(sf: str, seed: int) -> str:
+# The custom tables' keys (no TPC-H-style key discipline behind them).
+# events joined the ids regime in r09: event_id is the tie-break column
+# in most window entries, the exact role doc_id played in the four-round
+# sequence_packing_plan divergence.
+_ID_COLS = {"documents": "doc_id", "embeddings": "vec_id", "events": "event_id"}
+
+
+def _dup_ids(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Copy of the testdata with a seeded ~5% of ``documents.doc_id``,
     ``embeddings.vec_id``, and ``events.event_id`` (r09) values
     overwritten by ANOTHER row's id, creating duplicate ids in the
@@ -197,44 +174,18 @@ def perturb_ids_sf(sf: str, seed: int) -> str:
     data is unique, so only this mode reproduces the driver's failure
     shape.  Both engines see identical bytes: any red row is a genuine
     tie-order / uniqueness-assumption divergence."""
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    # the CUSTOM tables (no TPC-H-style key discipline behind them) —
-    # events joined r09: event_id is the tie-break column in most window
-    # entries, the exact role doc_id played in the four-round
-    # sequence_packing_plan divergence
-    id_cols = {"documents": "doc_id", "embeddings": "vec_id",
-               "events": "event_id"}
-    out = f"/tmp/driver_sim_idperturbed_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t not in id_cols:
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        tbl = pq.read_table(src)
-        ids = tbl.column(id_cols[t]).combine_chunks().to_pylist()
-        orig = list(ids)
-        for i in range(1, len(ids)):
-            if zlib.crc32(f"{seed}/{t}/{orig[i]}".encode()) % 20 == 0:
-                # adjacent duplicate: same shard-locality as a generator
-                # emitting colliding ids, and guaranteed to collide with
-                # an id that actually exists
-                ids[i] = orig[i - 1]
-        arrays = [
-            pa.array(ids, type=f.type) if f.name == id_cols[t] else tbl.column(i)
-            for i, f in enumerate(tbl.schema)
-        ]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
+    ids = tbl.column(_ID_COLS[t]).to_pylist()
+    orig = list(ids)
+    for i in range(1, len(ids)):
+        if _crc(f"{seed}/{t}/{orig[i]}") % 20 == 0:
+            # adjacent duplicate: same shard-locality as a generator
+            # emitting colliding ids, and guaranteed to collide with
+            # an id that actually exists
+            ids[i] = orig[i - 1]
+    return _with_columns(tbl, {_ID_COLS[t]: ids})
 
 
-def perturb_unicode_sf(sf: str, seed: int) -> str:
+def _unicode_carriers(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Copy of the testdata with UNICODE CASE-FOLD DIVERGENCE CARRIERS
     seeded into ~15% of ``documents.text`` (derived ``n_chars`` kept in
     sync — all three engines count codepoints). The r10 full-BMP sweep
@@ -247,13 +198,6 @@ def perturb_unicode_sf(sf: str, seed: int) -> str:
     length/tokenize/shingle paths. Both engines see identical bytes: any
     red row is a genuine unicode-semantics divergence — the class
     ``portable_lower`` (functions/text.py) exists to neutralize."""
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     palette = [
         " İstanbul DİYARBAKIR",          # İ: Java lower expands
         " ΣΙΣΥΦΟΣ ΕΙΣ",                  # final-sigma contextual rule
@@ -268,40 +212,29 @@ def perturb_unicode_sf(sf: str, seed: int) -> str:
         " zero​width‍join",    # ZWSP/ZWJ
         " non breaking　space", # NBSP + ideographic space
     ]
-    out = f"/tmp/driver_sim_unicode_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t != "documents":
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        tbl = pq.read_table(src)
-        ids = tbl.column("doc_id").combine_chunks().to_pylist()
-        texts = tbl.column("text").combine_chunks().to_pylist()
-        mutated = [
-            v + palette[zlib.crc32(f"{seed}/pick/{rid}".encode()) % len(palette)]
-            if v is not None and zlib.crc32(f"{seed}/hit/{rid}".encode()) % 100 < 15
-            else v
-            for rid, v in zip(ids, texts)
-        ]
-        arrays = []
-        for i, f in enumerate(tbl.schema):
-            if f.name == "text":
-                arrays.append(pa.array(mutated, type=f.type))
-            elif f.name == "n_chars":  # derived-column invariant
-                arrays.append(
-                    pa.array(
-                        [None if v is None else len(v) for v in mutated],
-                        type=f.type,
-                    )
-                )
-            else:
-                arrays.append(tbl.column(i))
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
+    ids = tbl.column("doc_id").to_pylist()
+    mutated = [
+        v + palette[_crc(f"{seed}/pick/{rid}") % len(palette)]
+        if v is not None and _crc(f"{seed}/hit/{rid}") % 100 < 15
+        else v
+        for rid, v in zip(ids, tbl.column("text").to_pylist())
+    ]
+    return _with_columns(tbl, _text_columns(mutated))
 
 
-def perturb_tpch_ids_sf(sf: str, seed: int) -> str:
+_TPCH_KEYS = {
+    "orders": "o_orderkey",
+    "lineitem": "l_orderkey",
+    "customer": "c_custkey",
+    "supplier": "s_suppkey",
+    # p_partkey joined the regime the same round (the q2 seed-157
+    # find generalizes: any dimension PK can carry a duplicate whose
+    # copies disagree on the filter columns)
+    "part": "p_partkey",
+}
+
+
+def _tpch_keys(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Copy of the testdata with the TPC-H JOIN KEYS degraded: a seeded
     ~5% of ``orders.o_orderkey``, ``lineitem.l_orderkey``,
     ``customer.c_custkey``, ``supplier.s_suppkey``, and
@@ -318,59 +251,36 @@ def perturb_tpch_ids_sf(sf: str, seed: int) -> str:
     null-key divergence, not data noise. Kept SEPARATE from
     ``--perturb-ids`` (custom tables) so r09's recorded seed results
     remain reproducible."""
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    key_cols = {
-        "orders": "o_orderkey",
-        "lineitem": "l_orderkey",
-        "customer": "c_custkey",
-        "supplier": "s_suppkey",
-        # p_partkey joined the regime the same round (the q2 seed-157
-        # find generalizes: any dimension PK can carry a duplicate whose
-        # copies disagree on the filter columns)
-        "part": "p_partkey",
-    }
-    out = f"/tmp/driver_sim_tpchids_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t not in key_cols:
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        tbl = pq.read_table(src)
-        ids = tbl.column(key_cols[t]).combine_chunks().to_pylist()
-        orig = list(ids)
-        for i in range(1, len(ids)):
-            # the hash keys on ROW INDEX, not value: lineitem's l_orderkey
-            # legitimately repeats across lines, and a value-keyed coin
-            # would mutate every line of a hit order at once
-            h = zlib.crc32(f"{seed}/{t}/{i}".encode()) % 100
-            if h < 5:
-                ids[i] = orig[i - 1]  # adjacent duplicate (existing value)
-            elif h < 7:
-                ids[i] = None  # degenerate NULL key
-        # tiny tables (supplier at sf0.001 has ~10 rows) can dodge the
-        # percentage coin entirely — force ≥1 duplicate and ≥1 NULL so
-        # every target table exercises both regimes at every SF
-        if len(ids) >= 3:
-            if ids == orig:
-                ids[1] = orig[0]
-            if not any(v is None for v in ids):
-                ids[2] = None
-        arrays = [
-            pa.array(ids, type=f.type) if f.name == key_cols[t] else tbl.column(i)
-            for i, f in enumerate(tbl.schema)
-        ]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
+    ids = tbl.column(_TPCH_KEYS[t]).to_pylist()
+    orig = list(ids)
+    for i in range(1, len(ids)):
+        # the hash keys on ROW INDEX, not value: lineitem's l_orderkey
+        # legitimately repeats across lines, and a value-keyed coin
+        # would mutate every line of a hit order at once
+        h = _crc(f"{seed}/{t}/{i}") % 100
+        if h < 5:
+            ids[i] = orig[i - 1]  # adjacent duplicate (existing value)
+        elif h < 7:
+            ids[i] = None  # degenerate NULL key
+    # tiny tables (supplier at sf0.001 has ~10 rows) can dodge the
+    # percentage coin entirely — force ≥1 duplicate and ≥1 NULL so
+    # every target table exercises both regimes at every SF
+    if len(ids) >= 3:
+        if ids == orig:
+            ids[1] = orig[0]
+        if not any(v is None for v in ids):
+            ids[2] = None
+    return _with_columns(tbl, {_TPCH_KEYS[t]: ids})
 
 
-def perturb_fk_ids_sf(sf: str, seed: int) -> str:
+_FK_COLS = {
+    "orders": ["o_custkey"],
+    "lineitem": ["l_suppkey", "l_partkey"],
+    "events": ["user_id"],
+}
+
+
+def _fk_ids(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Copy of the testdata with the FOREIGN-KEY columns degraded: a
     seeded ~2% of ``orders.o_custkey``, ``lineitem.l_suppkey``,
     ``lineitem.l_partkey``, and ``events.user_id`` set to NULL, plus a
@@ -384,50 +294,31 @@ def perturb_fk_ids_sf(sf: str, seed: int) -> str:
     exactly an orphan-FK divergence, produced there as a PK side
     effect). Both engines see identical bytes: any red row is a
     genuine null-key / orphan-semantics divergence."""
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    fk_cols: dict[str, list[str]] = {
-        "orders": ["o_custkey"],
-        "lineitem": ["l_suppkey", "l_partkey"],
-        "events": ["user_id"],
-    }
-    out = f"/tmp/driver_sim_fkids_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t not in fk_cols:
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        tbl = pq.read_table(src)
-        mutated: dict[str, list] = {}
-        for col in fk_cols[t]:
-            vals = tbl.column(col).combine_chunks().to_pylist()
-            new = []
-            for i, v in enumerate(vals):
-                h = zlib.crc32(f"{seed}/{t}/{col}/{i}".encode()) % 100
-                if h < 2:
-                    new.append(None)  # lost reference
-                elif h < 5 and t != "events" and v is not None:
-                    new.append(-v - 1)  # orphan: parent guaranteed absent
-                else:
-                    new.append(v)
-            mutated[col] = new
-        arrays = [
-            pa.array(mutated[f.name], type=f.type)
-            if f.name in mutated
-            else tbl.column(i)
-            for i, f in enumerate(tbl.schema)
-        ]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
+    cols: dict[str, list] = {}
+    for col in _FK_COLS[t]:
+        new = []
+        for i, v in enumerate(tbl.column(col).to_pylist()):
+            h = _crc(f"{seed}/{t}/{col}/{i}") % 100
+            if h < 2:
+                new.append(None)  # lost reference
+            elif h < 5 and t != "events" and v is not None:
+                new.append(-v - 1)  # orphan: parent guaranteed absent
+            else:
+                new.append(v)
+        cols[col] = new
+    return _with_columns(tbl, cols)
 
 
-def perturb_dim_ids_sf(sf: str, seed: int) -> str:
+_DIM_PLAN: dict[str, list[tuple[str, int, bool]]] = {
+    # (column, mutation pct, allow duplicates)
+    "nation": [("n_nationkey", 8, True)],
+    "region": [("r_regionkey", 8, True)],
+    "customer": [("c_nationkey", 2, False)],
+    "supplier": [("s_nationkey", 2, False)],
+}
+
+
+def _dim_ids(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Copy of the testdata with the small-dimension key chain degraded:
     ~8% of ``nation.n_nationkey`` / ``region.r_regionkey`` duplicated
     (adjacent value) or NULLed, and ~2% of ``customer.c_nationkey`` /
@@ -436,55 +327,26 @@ def perturb_dim_ids_sf(sf: str, seed: int) -> str:
     family the r10 tpch-ids/fk-ids regimes left untouched; tiny tables
     get higher rates plus the forced ≥1-dup/≥1-NULL floor so every SF
     exercises both regimes. Both engines see identical bytes."""
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    plan: dict[str, list[tuple[str, int, bool]]] = {
-        # (column, mutation pct, allow duplicates)
-        "nation": [("n_nationkey", 8, True)],
-        "region": [("r_regionkey", 8, True)],
-        "customer": [("c_nationkey", 2, False)],
-        "supplier": [("s_nationkey", 2, False)],
-    }
-    out = f"/tmp/driver_sim_dimids_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t not in plan:
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        tbl = pq.read_table(src)
-        mutated: dict[str, list] = {}
-        for col, pct, dups in plan[t]:
-            vals = tbl.column(col).combine_chunks().to_pylist()
-            orig = list(vals)
-            for i in range(1, len(vals)):
-                h = zlib.crc32(f"{seed}/{t}/{col}/{i}".encode()) % 100
-                if h < pct // 2 and dups:
-                    vals[i] = orig[i - 1]
-                elif h < pct:
-                    vals[i] = None
-            if dups and len(vals) >= 3:
-                if vals == orig:
-                    vals[1] = orig[0]
-                if not any(v is None for v in vals):
-                    vals[2] = None
-            mutated[col] = vals
-        arrays = [
-            pa.array(mutated[f.name], type=f.type)
-            if f.name in mutated
-            else tbl.column(i)
-            for i, f in enumerate(tbl.schema)
-        ]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
+    cols: dict[str, list] = {}
+    for col, pct, dups in _DIM_PLAN[t]:
+        vals = tbl.column(col).to_pylist()
+        orig = list(vals)
+        for i in range(1, len(vals)):
+            h = _crc(f"{seed}/{t}/{col}/{i}") % 100
+            if h < pct // 2 and dups:
+                vals[i] = orig[i - 1]
+            elif h < pct:
+                vals[i] = None
+        if dups and len(vals) >= 3:
+            if vals == orig:
+                vals[1] = orig[0]
+            if not any(v is None for v in vals):
+                vals[2] = None
+        cols[col] = vals
+    return _with_columns(tbl, cols)
 
 
-def perturb_ts_sf(sf: str, seed: int) -> str:
+def _ts_ties(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Copy of the testdata with a seeded ~20% of ``events.ts``
     truncated to the hour, forcing duplicate timestamps — including
     (user_id, ts) collisions — throughout the event stream. Every
@@ -493,39 +355,29 @@ def perturb_ts_sf(sf: str, seed: int) -> str:
     empirically: regenerated data carries no tie-freeness guarantee,
     and a bare ORDER BY ts lets each engine place the tied rows
     differently. Both engines see identical bytes."""
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out = f"/tmp/driver_sim_tsperturbed_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t != "events":
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        tbl = pq.read_table(src)
-        ts = tbl.column("ts").combine_chunks()
-        eid = tbl.column("event_id").combine_chunks().to_pylist()
-        vals = ts.to_pylist()
-        mutated = [
-            v.replace(minute=0, second=0, microsecond=0)
-            if v is not None and zlib.crc32(f"{seed}/{e}".encode()) % 5 == 0
-            else v
-            for v, e in zip(vals, eid)
-        ]
-        arrays = [
-            pa.array(mutated, type=f.type) if f.name == "ts" else tbl.column(i)
-            for i, f in enumerate(tbl.schema)
-        ]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
+    eid = tbl.column("event_id").to_pylist()
+    mutated = [
+        v.replace(minute=0, second=0, microsecond=0)
+        if v is not None and _crc(f"{seed}/{e}") % 5 == 0
+        else v
+        for v, e in zip(tbl.column("ts").to_pylist(), eid)
+    ]
+    return _with_columns(tbl, {"ts": mutated})
 
 
-def perturb_ts_nulls_sf(sf: str, seed: int) -> str:
+def _time_holes(vals: list, keys: list, prefix: str) -> list:
+    """A seeded ~2% each of ``vals`` overwritten by NULL, the epoch floor
+    (1970-01-01) and the far-future extreme (2200-01-01); the coin of
+    row ``k`` hashes ``f"{prefix}/{k}"``."""
+    holes = (None, datetime.datetime(1970, 1, 1), datetime.datetime(2200, 1, 1))
+    mutated = []
+    for v, k in zip(vals, keys):
+        pick = _crc(f"{prefix}/{k}") % 50
+        mutated.append(v if v is None or pick > 2 else holes[pick])
+    return mutated
+
+
+def _ts_nulls(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Copy of the testdata with the event-time spine itself degraded
     (r10 verdict item 4 — the last un-fuzzed column family): a seeded
     ~2% of ``events.ts`` overwritten by NULL, ~2% by the epoch floor
@@ -540,43 +392,83 @@ def perturb_ts_nulls_sf(sf: str, seed: int) -> str:
     derivation, date bucketing, and interval joins. Both engines see
     identical bytes. ``--perturb-ts`` (hour truncation → ties) and this
     mode compose: ties AND holes AND extremes in one regime."""
-    import datetime
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out = f"/tmp/driver_sim_tsnulls_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    epoch = datetime.datetime(1970, 1, 1)
-    far = datetime.datetime(2200, 1, 1)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t != "events":
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        tbl = pq.read_table(src)
-        ts = tbl.column("ts").combine_chunks()
-        eid = tbl.column("event_id").combine_chunks().to_pylist()
-        vals = ts.to_pylist()
-        mutated = []
-        for v, e in zip(vals, eid):
-            pick = zlib.crc32(f"{seed}/ts-nulls/{e}".encode()) % 50
-            if v is None or pick > 2:
-                mutated.append(v)
-            else:
-                mutated.append((None, epoch, far)[pick])
-        arrays = [
-            pa.array(mutated, type=f.type) if f.name == "ts" else tbl.column(i)
-            for i, f in enumerate(tbl.schema)
-        ]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
+    eid = tbl.column("event_id").to_pylist()
+    return _with_columns(
+        tbl, {"ts": _time_holes(tbl.column("ts").to_pylist(), eid, f"{seed}/ts-nulls")}
+    )
 
 
-def perturb_neg_ids_sf(sf: str, seed: int) -> str:
+_DATE_COLS = {"orders": "o_orderdate", "lineitem": "l_shipdate"}
+
+
+def _date_nulls(tbl: pa.Table, t: str, seed: int) -> pa.Table:
+    """Copy of the testdata with the RELATIONAL date spine degraded —
+    the sibling of ``--perturb-ts-nulls`` for the TPC-H side (r11: the
+    events.ts campaign left ``orders.o_orderdate`` and
+    ``lineitem.l_shipdate`` as the last never-degraded time columns): a
+    seeded ~2% of each overwritten by NULL, ~2% by the epoch floor
+    (1970-01-01), ~2% by a far-future extreme (2200-01-01). Range
+    filters drop NULLs identically in both engines by comparison
+    semantics, but year()/window() bucketing, weekly rollups, date
+    sequences (gap fill), and ORDER BY tie-breaks all have NULL/extreme
+    behavior that must be pinned, not inherited. Hit selection keys on
+    the ROW INDEX (parquet row order is stable; the natural keys can be
+    duplicated/NULLed by the id fuzzers this mode stacks with)."""
+    col = _DATE_COLS[t]
+    vals = tbl.column(col).to_pylist()
+    return _with_columns(
+        tbl, {col: _time_holes(vals, range(len(vals)), f"{seed}/date-nulls/{t}")}
+    )
+
+
+def _props_json(tbl: pa.Table, t: str, seed: int) -> pa.Table:
+    """Copy of the testdata with a seeded ~5% of ``events.props``
+    overwritten by MALFORMED or type-shifted JSON — truncated objects,
+    bare text, empty string, wrong-typed / overflowing / null ``k``,
+    wrong-cased keys, an array. Real producers emit every one of these
+    (serializer bugs, truncation at the transport MTU, schema drift),
+    and the engines diverge hard on them: Spark's ``get_json_object``
+    returns NULL on malformed input while DuckDB's ``json_extract``
+    HARD-ERRORS, Spark's ANSI ``CAST('x' AS INT)`` throws while
+    TRY_CAST returns NULL, and ``parse_json`` vs ``try_parse_json`` is
+    the same split on the variant path. Green means every JSON-consuming
+    entry pins an explicit invalid-input policy (malformed → NULL,
+    non-numeric k → NULL) instead of inheriting either engine's
+    accident. Both engines see identical bytes."""
+    variants = [
+        "not json",
+        '{"k":',
+        "",
+        '{"k": "x"}',
+        "[1, 2",
+        '{"k": 99999999999999999999}',
+        '{"K": 7}',
+        '{"k": null}',
+        '{"k": [1, 2]}',
+        "   ",
+    ]
+    eid = tbl.column("event_id").to_pylist()
+    mutated = []
+    for v, e in zip(tbl.column("props").to_pylist(), eid):
+        h = _crc(f"{seed}/props-json/{e}")
+        if v is None or h % 20 != 0:
+            mutated.append(v)
+        else:
+            mutated.append(variants[(h // 20) % len(variants)])
+    return _with_columns(tbl, {"props": mutated})
+
+
+_NEG_ID_COLS: dict[str, list[str]] = {
+    "documents": ["doc_id"],
+    "embeddings": ["vec_id"],
+    "events": ["event_id", "user_id"],
+    "orders": ["o_orderkey", "o_custkey"],
+    "lineitem": ["l_orderkey"],
+    "customer": ["c_custkey"],
+}
+
+
+def _neg_ids(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Copy of the testdata with a seeded ~3% of the integer ID columns
     NEGATED — documents.doc_id, embeddings.vec_id, events.event_id /
     user_id, orders.o_orderkey / o_custkey, lineitem.l_orderkey,
@@ -591,457 +483,16 @@ def perturb_neg_ids_sf(sf: str, seed: int) -> str:
     (``doc_id + 1000000`` can now collide with a natural id — the
     duplicate-id regime by another door). Hit selection keys on the
     ROW INDEX. Both engines see identical bytes."""
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    targets: dict[str, list[str]] = {
-        "documents": ["doc_id"],
-        "embeddings": ["vec_id"],
-        "events": ["event_id", "user_id"],
-        "orders": ["o_orderkey", "o_custkey"],
-        "lineitem": ["l_orderkey"],
-        "customer": ["c_custkey"],
-    }
-    out = f"/tmp/driver_sim_negids_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t not in targets:
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        tbl = pq.read_table(src)
-        mutated: dict[str, list] = {}
-        for col in targets[t]:
-            vals = tbl.column(col).combine_chunks().to_pylist()
-            mutated[col] = [
-                -v
-                if v is not None
-                and zlib.crc32(f"{seed}/neg-ids/{t}/{col}/{i}".encode()) % 33 == 0
-                else v
-                for i, v in enumerate(vals)
-            ]
-        arrays = [
-            pa.array(mutated[f.name], type=f.type) if f.name in mutated else tbl.column(i)
-            for i, f in enumerate(tbl.schema)
-        ]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
-
-
-def perturb_props_json_sf(sf: str, seed: int) -> str:
-    """Copy of the testdata with a seeded ~5% of ``events.props``
-    overwritten by MALFORMED or type-shifted JSON — truncated objects,
-    bare text, empty string, wrong-typed / overflowing / null ``k``,
-    wrong-cased keys, an array. Real producers emit every one of these
-    (serializer bugs, truncation at the transport MTU, schema drift),
-    and the engines diverge hard on them: Spark's ``get_json_object``
-    returns NULL on malformed input while DuckDB's ``json_extract``
-    HARD-ERRORS, Spark's ANSI ``CAST('x' AS INT)`` throws while
-    TRY_CAST returns NULL, and ``parse_json`` vs ``try_parse_json`` is
-    the same split on the variant path. Green means every JSON-consuming
-    entry pins an explicit invalid-input policy (malformed → NULL,
-    non-numeric k → NULL) instead of inheriting either engine's
-    accident. Both engines see identical bytes."""
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    variants = [
-        "not json",
-        '{"k":',
-        "",
-        '{"k": "x"}',
-        "[1, 2",
-        '{"k": 99999999999999999999}',
-        '{"K": 7}',
-        '{"k": null}',
-        '{"k": [1, 2]}',
-        "   ",
-    ]
-    out = f"/tmp/driver_sim_propsjson_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t != "events":
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        tbl = pq.read_table(src)
-        eid = tbl.column("event_id").combine_chunks().to_pylist()
-        vals = tbl.column("props").combine_chunks().to_pylist()
-        mutated = []
-        for v, e in zip(vals, eid):
-            h = zlib.crc32(f"{seed}/props-json/{e}".encode())
-            if v is None or h % 20 != 0:
-                mutated.append(v)
-            else:
-                mutated.append(variants[(h // 20) % len(variants)])
-        arrays = [
-            pa.array(mutated, type=f.type) if f.name == "props" else tbl.column(i)
-            for i, f in enumerate(tbl.schema)
-        ]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
-
-
-def perturb_date_nulls_sf(sf: str, seed: int) -> str:
-    """Copy of the testdata with the RELATIONAL date spine degraded —
-    the sibling of ``--perturb-ts-nulls`` for the TPC-H side (r11: the
-    events.ts campaign left ``orders.o_orderdate`` and
-    ``lineitem.l_shipdate`` as the last never-degraded time columns): a
-    seeded ~2% of each overwritten by NULL, ~2% by the epoch floor
-    (1970-01-01), ~2% by a far-future extreme (2200-01-01). Range
-    filters drop NULLs identically in both engines by comparison
-    semantics, but year()/window() bucketing, weekly rollups, date
-    sequences (gap fill), and ORDER BY tie-breaks all have NULL/extreme
-    behavior that must be pinned, not inherited. Hit selection keys on
-    the ROW INDEX (parquet row order is stable; the natural keys can be
-    duplicated/NULLed by the id fuzzers this mode stacks with)."""
-    import datetime
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    targets = {"orders": "o_orderdate", "lineitem": "l_shipdate"}
-    out = f"/tmp/driver_sim_datenulls_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    epoch = datetime.datetime(1970, 1, 1)
-    far = datetime.datetime(2200, 1, 1)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t not in targets:
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        col = targets[t]
-        tbl = pq.read_table(src)
-        vals = tbl.column(col).combine_chunks().to_pylist()
-        mutated = []
-        for i, v in enumerate(vals):
-            pick = zlib.crc32(f"{seed}/date-nulls/{t}/{i}".encode()) % 50
-            if v is None or pick > 2:
-                mutated.append(v)
-            else:
-                mutated.append((None, epoch, far)[pick])
-        arrays = [
-            pa.array(mutated, type=f.type) if f.name == col else tbl.column(i)
-            for i, f in enumerate(tbl.schema)
-        ]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
-
-
-def perturb_nulls_sf(sf: str, seed: int) -> str:
-    """Copy of the testdata with a seeded ~5% of nullable CUSTOM-table
-    values overwritten by NULL: documents.text / documents.lang /
-    documents.source, embeddings.label, and events.event_type /
-    events.props / events.value, plus a seeded ~2% of the custom-table
-    KEYS (documents.doc_id / embeddings.vec_id) — the advisor's
-    degenerate-key regime: NULL keys never equi-join, never win a
-    ``count(col)`` probe, and sort on opposite ends of the two engines'
-    windows, so representative-selection and LIMIT-boundary tie-breaks
-    must spell their null order explicitly. events.event_id and
-    timestamps stay non-null IN THIS MODE (a NULL *value* column is
-    exactly what a lossy upstream producer emits; the event-time spine
-    gets its own dedicated regime — ``--perturb-ts-nulls`` — so the two
-    failure families stay bisectable). The
-    driver regenerates data
-    each round with no null-freeness promise on the custom tables, and
-    NULL is the classic cross-engine divergence carrier: Java-regex vs
-    RE2 never see it the same way COUNT/count_distinct/window ORDER BY
-    do — the round-6 advisor found exactly this class in the
-    NDV-uniqueness probe (count(col) ignores NULL keys). TPC-H tables
-    stay untouched (their generators guarantee non-null columns).
-    Both engines see identical bytes: any red row is a genuine
-    null-semantics divergence."""
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    null_cols = {
-        "documents": ["text", "lang", "source"],
-        "embeddings": ["label"],
-        "events": ["event_type", "props", "value"],
-    }
-    id_cols = {"documents": "doc_id", "embeddings": "vec_id", "events": "event_id"}
-    out = f"/tmp/driver_sim_nullperturbed_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t not in null_cols:
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        tbl = pq.read_table(src)
-        id_col = id_cols[t]
-        ids = tbl.column(id_col).combine_chunks().to_pylist()
-        arrays = []
-        for i, f in enumerate(tbl.schema):
-            if f.name == id_col and t in ("documents", "embeddings"):
-                arrays.append(
-                    pa.array(
-                        [
-                            None
-                            if zlib.crc32(f"{seed}/{t}/id/{rid}".encode()) % 50 == 0
-                            else rid
-                            for rid in ids
-                        ],
-                        type=f.type,
-                    )
-                )
-            elif f.name in null_cols[t]:
-                vals = tbl.column(i).combine_chunks().to_pylist()
-                vals = [
-                    None
-                    if zlib.crc32(f"{seed}/{t}/{f.name}/{rid}".encode()) % 20 == 0
-                    else v
-                    for rid, v in zip(ids, vals)
-                ]
-                arrays.append(pa.array(vals, type=f.type))
-            elif f.name == "n_chars" and "text" in null_cols[t]:
-                # keep the generator's derived-column invariant
-                texts = tbl.column("text").combine_chunks().to_pylist()
-                texts = [
-                    None
-                    if zlib.crc32(f"{seed}/{t}/text/{rid}".encode()) % 20 == 0
-                    else v
-                    for rid, v in zip(ids, texts)
-                ]
-                arrays.append(
-                    pa.array(
-                        [None if v is None else len(v) for v in texts], type=f.type
-                    )
-                )
-            else:
-                arrays.append(tbl.column(i))
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
-
-
-def perturb_schema_sf(sf: str, seed: int) -> str:
-    """Copy of the testdata with every table's COLUMN ORDER reversed and
-    the custom-table int64 ids downcast to int32 (values unchanged — all
-    fit). The driver regenerates the parquet each round with no promise
-    on column order or physical integer width, and the repo has already
-    been bitten by exactly this class once (events.ts arrived as
-    INT64-nanos in round 1, native timestamp from round 2 — the
-    ``load_table`` shim exists because of it). Green means every reader
-    binds columns BY NAME and widens types instead of assuming the
-    generator's current layout. ``seed`` is accepted for CLI symmetry;
-    the transform is deterministic."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    downcast = {
-        "documents": ["doc_id"],
-        "embeddings": ["vec_id"],
-        "events": ["event_id", "user_id"],
-    }
-    out = f"/tmp/driver_sim_schemadrift_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        tbl = pq.read_table(f"{sf}/{t}.parquet")
-        cols, fields = [], []
-        for name in reversed(tbl.schema.names):
-            col, f = tbl.column(name), tbl.schema.field(name)
-            if name in downcast.get(t, []):
-                col, f = col.cast(pa.int32()), pa.field(name, pa.int32())
-            cols.append(col)
-            fields.append(f)
-        pq.write_table(
-            pa.Table.from_arrays(cols, schema=pa.schema(fields)),
-            f"{out}/{t}.parquet",
-        )
-    return out
-
-
-def perturb_order_sf(sf: str, seed: int) -> str:
-    """Copy of the testdata with EVERY table's rows re-ordered by a
-    seeded permutation and rewritten in 4 row groups. Values are
-    untouched — any red row is a genuine physical-order sensitivity:
-    ``first()`` / ``collect_list`` order, a non-total window order, or
-    partition-boundary dependence. The driver's generator makes no
-    ordering promise between rounds; neither engine should either.
-    Both engines see identical (re-ordered) bytes."""
-    import os
-    import random
-
-    import pyarrow.parquet as pq
-
-    out = f"/tmp/driver_sim_orderperturbed_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        tbl = pq.read_table(src)
-        idx = list(range(tbl.num_rows))
-        random.Random(f"{seed}/{t}").shuffle(idx)
-        shuffled = tbl.take(idx)
-        pq.write_table(
-            shuffled, dst, row_group_size=max(tbl.num_rows // 4, 1)
-        )
-    return out
-
-
-def perturb_skew_sf(sf: str, seed: int) -> str:
-    """Copy of the testdata with HOT KEYS planted: a seeded ~30% of
-    ``events.user_id`` collapses onto one existing user, ~20% of
-    ``orders.o_custkey`` onto one customer, ~20% of
-    ``lineitem.l_suppkey`` onto one supplier, and ~10% of
-    ``documents.text`` onto one document's text. Values are swapped,
-    never invented, so referential integrity holds and both engines see
-    identical bytes — any red row is a genuine skew-regime divergence
-    (a tie-break that was total only because groups were small, a
-    bucket/candidate cap that drops pairs the oracle keeps, a
-    representative selection that assumed near-unique keys). This is
-    also the local stand-in for the 100 TB hot-key regime the salted
-    join / bucket-cap / AQE-skew designs exist for: the catalog must be
-    value-correct on exactly the data shape those designs defend
-    against. Hot values are chosen deterministically from the data
-    (first non-null value of the table's first row group), so the mode
-    survives driver-regenerated testdata."""
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    # (table, column to overwrite, key column(s) seeding the coin, pct)
-    plan = {
-        "events": ("user_id", ["event_id"], 30),
-        "orders": ("o_custkey", ["o_orderkey"], 20),
-        "lineitem": ("l_suppkey", ["l_orderkey", "l_linenumber"], 20),
-        "documents": ("text", ["doc_id"], 10),
-    }
-    out = f"/tmp/driver_sim_skewperturbed_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t not in plan:
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        col_name, key_cols, pct = plan[t]
-        tbl = pq.read_table(src)
-        vals = tbl.column(col_name).combine_chunks().to_pylist()
-        keys = list(
-            zip(*(tbl.column(k).combine_chunks().to_pylist() for k in key_cols))
-        )
-        hot = next((v for v in vals if v is not None), None)
-        mutated = [
-            hot
-            if zlib.crc32(f"{seed}/{t}/{'/'.join(map(str, k))}".encode()) % 100 < pct
+    return _with_columns(tbl, {
+        col: [
+            -v
+            if v is not None
+            and _crc(f"{seed}/neg-ids/{t}/{col}/{i}") % 33 == 0
             else v
-            for v, k in zip(vals, keys)
+            for i, v in enumerate(tbl.column(col).to_pylist())
         ]
-        arrays = [
-            pa.array(mutated, type=f.type) if f.name == col_name else tbl.column(i)
-            for i, f in enumerate(tbl.schema)
-        ]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
-
-
-def perturb_extremes_sf(sf: str, seed: int) -> str:
-    """Copy of the testdata with a seeded ~5% of EVERY raw DOUBLE
-    measurement column overwritten by IEEE specials and out-of-domain
-    magnitudes: NaN, ±Inf, ±1e300 in the scalar doubles — ring 1 (r08):
-    ``events.value``, ``orders.o_totalprice``,
-    ``lineitem.l_extendedprice``; ring 2 (r09, closing the surface —
-    no unexercised double column remains): ``lineitem.l_quantity /
-    l_discount / l_tax``, ``customer.c_acctbal``, ``supplier.s_acctbal``,
-    ``part.p_retailprice`` — and NaN/±Inf/±3e38 in
-    ``embeddings.embedding`` components (float32 — ±3e38 is the in-type
-    extreme magnitude; 1e300 would round to Inf on the cast and collapse
-    two cases into one). Real feeds emit all of these (sensor glitches,
-    div-by-zero upstream, unit bugs), and they are the values where
-    engine semantics diverge hardest: NaN ordering, decimal-cast
-    overflow (Spark ANSI throws, DuckDB's TRY_CAST has a NaN hole),
-    STDDEV over Inf, cosine of a non-finite vector. Green means every
-    consuming entry pins an explicit FINITE-DOMAIN policy
-    (out-of-domain → NULL/excluded → the already-pinned null policies
-    absorb it) instead of inheriting either engine's accident. Both
-    engines see identical bytes.
-
-    REGIME NOTE (r09): the hit/pick hash keys gained the column name
-    when the per-table target became a column LIST, so a given seed
-    selects a DIFFERENT row subset for the ring-1 columns than it did
-    in r08 — r09's certification re-ran every seed under this wider
-    regime, so no green row rests on the old key shape."""
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    specials = [float("nan"), float("inf"), float("-inf"), 1e300, -1e300]
-    f32_specials = [float("nan"), float("inf"), float("-inf"), 3e38, -3e38]
-    # table -> columns to mutate; the hit/pick hash keys on the ROW INDEX
-    # (parquet row order is stable), which stays unique even where the
-    # natural key repeats (lineitem's l_orderkey spans multiple lines)
-    targets: dict[str, list[str]] = {
-        "events": ["value"],
-        "orders": ["o_totalprice"],
-        "lineitem": ["l_extendedprice", "l_quantity", "l_discount", "l_tax"],
-        "customer": ["c_acctbal"],
-        "supplier": ["s_acctbal"],
-        "part": ["p_retailprice"],
-        "embeddings": ["embedding"],
-    }
-    out = f"/tmp/driver_sim_extremes_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t not in targets:
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        tbl = pq.read_table(src)
-        mutated: dict[str, list] = {}
-        for col in targets[t]:
-            vals = tbl.column(col).combine_chunks().to_pylist()
-            keys = list(range(len(vals)))
-            if t == "embeddings":
-                # mutate ONE seeded component of ~5% of vectors
-                mut = []
-                for v, k in zip(vals, keys):
-                    if v and zlib.crc32(f"{seed}/hit/{t}/{col}/{k}".encode()) % 20 == 0:
-                        v = list(v)
-                        pos = zlib.crc32(f"{seed}/pos/{k}".encode()) % len(v)
-                        v[pos] = f32_specials[
-                            zlib.crc32(f"{seed}/pick/{t}/{col}/{k}".encode())
-                            % len(f32_specials)
-                        ]
-                    mut.append(v)
-            else:
-                mut = [
-                    specials[
-                        zlib.crc32(f"{seed}/pick/{t}/{col}/{k}".encode()) % len(specials)
-                    ]
-                    if zlib.crc32(f"{seed}/hit/{t}/{col}/{k}".encode()) % 20 == 0
-                    else v
-                    for v, k in zip(vals, keys)
-                ]
-            mutated[col] = mut
-        arrays = [
-            pa.array(mutated[f.name], type=f.type)
-            if f.name in mutated
-            else tbl.column(i)
-            for i, f in enumerate(tbl.schema)
-        ]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
+        for col in _NEG_ID_COLS[t]
+    })
 
 
 # Decimal-precision boundary values (--perturb-decimal-edge). The r11
@@ -1067,7 +518,7 @@ DECIMAL_EDGES = [
 ]
 
 
-def perturb_decimal_edge_sf(sf: str, seed: int) -> str:
+def _decimal_edges(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Copy of the testdata with a seeded ~5% of ``events.value``
     overwritten by decimal-precision BOUNDARY values (``DECIMAL_EDGES``):
     the guarded-decimal catalog declares DECIMAL(18,6)/(24,6) ingestion
@@ -1093,44 +544,13 @@ def perturb_decimal_edge_sf(sf: str, seed: int) -> str:
       order-INDEPENDENTLY.
     Green means every declared width/overflow edge behaves identically
     on both engines. Both engines see identical bytes."""
-    import os
-    import shutil
-    import zlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    targets: dict[str, list[str]] = {
-        "events": ["value"],
-    }
-    out = f"/tmp/driver_sim_decedge_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t not in targets:
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        tbl = pq.read_table(src)
-        mutated: dict[str, list] = {}
-        for col in targets[t]:
-            vals = tbl.column(col).combine_chunks().to_pylist()
-            mutated[col] = [
-                DECIMAL_EDGES[
-                    zlib.crc32(f"{seed}/decpick/{t}/{col}/{k}".encode())
-                    % len(DECIMAL_EDGES)
-                ]
-                if zlib.crc32(f"{seed}/dechit/{t}/{col}/{k}".encode()) % 20 == 0
-                else v
-                for k, v in enumerate(vals)
-            ]
-        arrays = [
-            pa.array(mutated[f.name], type=f.type)
-            if f.name in mutated
-            else tbl.column(i)
-            for i, f in enumerate(tbl.schema)
-        ]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
+    col = "value"
+    return _with_columns(tbl, {col: [
+        DECIMAL_EDGES[_crc(f"{seed}/decpick/{t}/{col}/{k}") % len(DECIMAL_EDGES)]
+        if _crc(f"{seed}/dechit/{t}/{col}/{k}") % 20 == 0
+        else v
+        for k, v in enumerate(tbl.column(col).to_pylist())
+    ]})
 
 
 # Adversarial Ali-CCP kv fragments (--perturb-kv). Each replaces a value
@@ -1162,8 +582,10 @@ KV_FRAGMENTS = [
                                              # matches before it; \A..\z doesn't — r12 advice)
 ]
 
+_KV_COLS = {"orders": "o_orderpriority", "customer": "c_name"}
 
-def perturb_kv_sf(sf: str, seed: int) -> str:
+
+def _kv_fragments(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Copy of the testdata with adversarial kv fragments overwriting a
     seeded ~10% of ``orders.o_orderpriority`` and ``customer.c_name`` —
     the data-driven tails of the Ali-CCP kv golden path
@@ -1176,40 +598,145 @@ def perturb_kv_sf(sf: str, seed: int) -> str:
     (natural keys may be NULLed/duplicated by stacked id fuzzers).
     Both engines see identical bytes: a red row is a genuine parse /
     merge / cast policy divergence, not noise."""
-    import os
-    import shutil
-    import zlib
+    col = _KV_COLS[t]
+    mutated = []
+    for i, v in enumerate(tbl.column(col).to_pylist()):
+        h = _crc(f"{seed}/kv/{t}/{i}")
+        if h % 10 != 0:
+            mutated.append(v)
+        else:
+            mutated.append(KV_FRAGMENTS[(h // 10) % len(KV_FRAGMENTS)])
+    return _with_columns(tbl, {col: mutated})
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    targets = {"orders": "o_orderpriority", "customer": "c_name"}
-    out = f"/tmp/driver_sim_kvperturbed_s{seed}_{_src_tag(sf)}"
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t not in targets:
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
-            continue
-        col = targets[t]
-        tbl = pq.read_table(src)
-        vals = tbl.column(col).combine_chunks().to_pylist()
-        mutated = []
-        for i, v in enumerate(vals):
-            h = zlib.crc32(f"{seed}/kv/{t}/{i}".encode())
-            if h % 10 != 0:
-                mutated.append(v)
-            else:
-                mutated.append(KV_FRAGMENTS[(h // 10) % len(KV_FRAGMENTS)])
-        arrays = [
-            pa.array(mutated, type=f.type) if f.name == col else tbl.column(i)
-            for i, f in enumerate(tbl.schema)
+_NULL_COLS = {
+    "documents": ["text", "lang", "source"],
+    "embeddings": ["label"],
+    "events": ["event_type", "props", "value"],
+}
+
+
+def _plant_nulls(tbl: pa.Table, t: str, seed: int) -> pa.Table:
+    """Copy of the testdata with a seeded ~5% of nullable CUSTOM-table
+    values overwritten by NULL: documents.text / documents.lang /
+    documents.source, embeddings.label, and events.event_type /
+    events.props / events.value, plus a seeded ~2% of the custom-table
+    KEYS (documents.doc_id / embeddings.vec_id) — the advisor's
+    degenerate-key regime: NULL keys never equi-join, never win a
+    ``count(col)`` probe, and sort on opposite ends of the two engines'
+    windows, so representative-selection and LIMIT-boundary tie-breaks
+    must spell their null order explicitly. events.event_id and
+    timestamps stay non-null IN THIS MODE (a NULL *value* column is
+    exactly what a lossy upstream producer emits; the event-time spine
+    gets its own dedicated regime — ``--perturb-ts-nulls`` — so the two
+    failure families stay bisectable). The
+    driver regenerates data
+    each round with no null-freeness promise on the custom tables, and
+    NULL is the classic cross-engine divergence carrier: Java-regex vs
+    RE2 never see it the same way COUNT/count_distinct/window ORDER BY
+    do — the round-6 advisor found exactly this class in the
+    NDV-uniqueness probe (count(col) ignores NULL keys). TPC-H tables
+    stay untouched (their generators guarantee non-null columns).
+    Both engines see identical bytes: any red row is a genuine
+    null-semantics divergence."""
+    ids = tbl.column(_ID_COLS[t]).to_pylist()
+    cols = {
+        c: [
+            None if _crc(f"{seed}/{t}/{c}/{rid}") % 20 == 0 else v
+            for rid, v in zip(ids, tbl.column(c).to_pylist())
         ]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=tbl.schema), dst)
-    return out
+        for c in _NULL_COLS[t]
+    }
+    if t != "events":
+        cols[_ID_COLS[t]] = [
+            None if _crc(f"{seed}/{t}/id/{rid}") % 50 == 0 else rid for rid in ids
+        ]
+    if "text" in cols:
+        cols.update(_text_columns(cols["text"]))
+    return _with_columns(tbl, cols)
 
 
-def perturb_empty_sf(sf: str, seed: int) -> str:
+def _reorder(tbl: pa.Table, t: str, seed: int) -> pa.Table:
+    """Copy of the testdata with EVERY table's rows re-ordered by a
+    seeded permutation and rewritten in 4 row groups. Values are
+    untouched — any red row is a genuine physical-order sensitivity:
+    ``first()`` / ``collect_list`` order, a non-total window order, or
+    partition-boundary dependence. The driver's generator makes no
+    ordering promise between rounds; neither engine should either.
+    Both engines see identical (re-ordered) bytes."""
+    idx = list(range(tbl.num_rows))
+    random.Random(f"{seed}/{t}").shuffle(idx)
+    return tbl.take(idx)
+
+
+_DOWNCAST = {
+    "documents": ["doc_id"],
+    "embeddings": ["vec_id"],
+    "events": ["event_id", "user_id"],
+}
+
+
+def _schema_drift(tbl: pa.Table, t: str, seed: int) -> pa.Table:
+    """Copy of the testdata with every table's COLUMN ORDER reversed and
+    the custom-table int64 ids downcast to int32 (values unchanged — all
+    fit). The driver regenerates the parquet each round with no promise
+    on column order or physical integer width, and the repo has already
+    been bitten by exactly this class once (events.ts arrived as
+    INT64-nanos in round 1, native timestamp from round 2 — the
+    ``load_table`` shim exists because of it). Green means every reader
+    binds columns BY NAME and widens types instead of assuming the
+    generator's current layout. ``seed`` is accepted for CLI symmetry;
+    the transform is deterministic."""
+    cols, fields = [], []
+    for name in reversed(tbl.schema.names):
+        col, f = tbl.column(name), tbl.schema.field(name)
+        if name in _DOWNCAST.get(t, []):
+            col, f = col.cast(pa.int32()), pa.field(name, pa.int32())
+        cols.append(col)
+        fields.append(f)
+    return pa.Table.from_arrays(cols, schema=pa.schema(fields))
+
+
+# table -> (column to overwrite, key column(s) seeding the coin, pct)
+_SKEW_PLAN = {
+    "events": ("user_id", ["event_id"], 30),
+    "orders": ("o_custkey", ["o_orderkey"], 20),
+    "lineitem": ("l_suppkey", ["l_orderkey", "l_linenumber"], 20),
+    "documents": ("text", ["doc_id"], 10),
+}
+
+
+def _hot_keys(tbl: pa.Table, t: str, seed: int) -> pa.Table:
+    """Copy of the testdata with HOT KEYS planted: a seeded ~30% of
+    ``events.user_id`` collapses onto one existing user, ~20% of
+    ``orders.o_custkey`` onto one customer, ~20% of
+    ``lineitem.l_suppkey`` onto one supplier, and ~10% of
+    ``documents.text`` onto one document's text. Values are swapped,
+    never invented, so referential integrity holds and both engines see
+    identical bytes — any red row is a genuine skew-regime divergence
+    (a tie-break that was total only because groups were small, a
+    bucket/candidate cap that drops pairs the oracle keeps, a
+    representative selection that assumed near-unique keys). This is
+    also the local stand-in for the 100 TB hot-key regime the salted
+    join / bucket-cap / AQE-skew designs exist for: the catalog must be
+    value-correct on exactly the data shape those designs defend
+    against. Hot values are chosen deterministically from the data
+    (first non-null value of the table's first row group), so the mode
+    survives driver-regenerated testdata."""
+    col_name, key_cols, pct = _SKEW_PLAN[t]
+    vals = tbl.column(col_name).to_pylist()
+    keys = list(zip(*(tbl.column(k).to_pylist() for k in key_cols)))
+    hot = next((v for v in vals if v is not None), None)
+    mutated = [
+        hot
+        if _crc(f"{seed}/{t}/{'/'.join(map(str, k))}") % 100 < pct
+        else v
+        for v, k in zip(vals, keys)
+    ]
+    return _with_columns(tbl, {col_name: mutated})
+
+
+def _empty(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Copy of the testdata with the three PIPELINE-FED tables
     (``events``, ``documents``, ``embeddings``) truncated to ZERO rows,
     schema preserved. The TPC-H tables stay intact — they model curated
@@ -1223,22 +750,178 @@ def perturb_empty_sf(sf: str, seed: int) -> str:
     GROUP BY → no rows) are shared, so any divergence is a genuine
     empty-input bug. ``seed`` is accepted for CLI symmetry; the
     transform is deterministic."""
-    import os
-    import shutil
+    return tbl.slice(0, 0)
 
-    import pyarrow.parquet as pq
 
-    empty_tables = {"events", "documents", "embeddings"}
-    out = f"/tmp/driver_sim_emptyfeeds_{_src_tag(sf)}"
+# table -> columns to mutate; the hit/pick hash keys on the ROW INDEX
+# (parquet row order is stable), which stays unique even where the
+# natural key repeats (lineitem's l_orderkey spans multiple lines)
+_EXTREME_COLS: dict[str, list[str]] = {
+    "events": ["value"],
+    "orders": ["o_totalprice"],
+    "lineitem": ["l_extendedprice", "l_quantity", "l_discount", "l_tax"],
+    "customer": ["c_acctbal"],
+    "supplier": ["s_acctbal"],
+    "part": ["p_retailprice"],
+    "embeddings": ["embedding"],
+}
+
+
+def _extremes(tbl: pa.Table, t: str, seed: int) -> pa.Table:
+    """Copy of the testdata with a seeded ~5% of EVERY raw DOUBLE
+    measurement column overwritten by IEEE specials and out-of-domain
+    magnitudes: NaN, ±Inf, ±1e300 in the scalar doubles — ring 1 (r08):
+    ``events.value``, ``orders.o_totalprice``,
+    ``lineitem.l_extendedprice``; ring 2 (r09, closing the surface —
+    no unexercised double column remains): ``lineitem.l_quantity /
+    l_discount / l_tax``, ``customer.c_acctbal``, ``supplier.s_acctbal``,
+    ``part.p_retailprice`` — and NaN/±Inf/±3e38 in
+    ``embeddings.embedding`` components (float32 — ±3e38 is the in-type
+    extreme magnitude; 1e300 would round to Inf on the cast and collapse
+    two cases into one). Real feeds emit all of these (sensor glitches,
+    div-by-zero upstream, unit bugs), and they are the values where
+    engine semantics diverge hardest: NaN ordering, decimal-cast
+    overflow (Spark ANSI throws, DuckDB's TRY_CAST has a NaN hole),
+    STDDEV over Inf, cosine of a non-finite vector. Green means every
+    consuming entry pins an explicit FINITE-DOMAIN policy
+    (out-of-domain → NULL/excluded → the already-pinned null policies
+    absorb it) instead of inheriting either engine's accident. Both
+    engines see identical bytes.
+
+    REGIME NOTE (r09): the hit/pick hash keys gained the column name
+    when the per-table target became a column LIST, so a given seed
+    selects a DIFFERENT row subset for the ring-1 columns than it did
+    in r08 — r09's certification re-ran every seed under this wider
+    regime, so no green row rests on the old key shape."""
+    specials = [float("nan"), float("inf"), float("-inf"), 1e300, -1e300]
+    f32_specials = [float("nan"), float("inf"), float("-inf"), 3e38, -3e38]
+    cols: dict[str, list] = {}
+    for col in _EXTREME_COLS[t]:
+        mut = []
+        for k, v in enumerate(tbl.column(col).to_pylist()):
+            hit = _crc(f"{seed}/hit/{t}/{col}/{k}") % 20 == 0
+            if t == "embeddings":
+                # mutate ONE seeded component of ~5% of vectors
+                if v and hit:
+                    v = list(v)
+                    pos = _crc(f"{seed}/pos/{k}") % len(v)
+                    v[pos] = f32_specials[
+                        _crc(f"{seed}/pick/{t}/{col}/{k}") % len(f32_specials)
+                    ]
+            elif hit:
+                v = specials[_crc(f"{seed}/pick/{t}/{col}/{k}") % len(specials)]
+            mut.append(v)
+        cols[col] = mut
+    return _with_columns(tbl, cols)
+
+
+class Mode(NamedTuple):
+    """One perturbation mode: its flag and help text, the stem of its
+    output directory, and the transform of each table it rewrites."""
+
+    flag: str
+    help: str
+    stem: str
+    transforms: dict[str, Callable[[pa.Table, str, int], pa.Table]]
+    seeded: bool = True  # False: the directory name carries no seed
+    row_groups: int = 0  # > 0: rewrite each table in that many row groups
+
+
+# In stacking order: ``main()`` applies the requested modes top to bottom,
+# each to the previous mode's output.
+MODES: dict[str, Mode] = {m.flag: m for m in (
+    Mode("--perturb", "run on a float-jittered copy of the testdata",
+         "perturbed", dict.fromkeys(TABLES, _jitter)),
+    Mode("--perturb-text", "seed exotic whitespace into documents.text",
+         "textperturbed", {"documents": _exotic_whitespace}),
+    Mode("--perturb-ids", "duplicate a seeded ~5%% of documents.doc_id, "
+         "embeddings.vec_id and events.event_id",
+         "idperturbed", dict.fromkeys(_ID_COLS, _dup_ids)),
+    Mode("--perturb-tpch-ids", "duplicate ~5%% + NULL ~2%% of the TPC-H join keys "
+         "(o_orderkey, l_orderkey, c_custkey, s_suppkey, p_partkey)",
+         "tpchids", dict.fromkeys(_TPCH_KEYS, _tpch_keys)),
+    Mode("--perturb-fk-ids", "NULL ~2%% of the FK columns (o_custkey, l_suppkey, "
+         "l_partkey, events.user_id) + orphan ~3%% of the "
+         "TPC-H FKs (re-point at absent parents)",
+         "fkids", dict.fromkeys(_FK_COLS, _fk_ids)),
+    Mode("--perturb-dim-ids", "duplicate/NULL ~8%% of nation/region keys + NULL "
+         "~2%% of c_nationkey / s_nationkey",
+         "dimids", dict.fromkeys(_DIM_PLAN, _dim_ids)),
+    Mode("--perturb-unicode", "seed unicode case-fold divergence carriers "
+         "(İ, final sigma, ligatures, emoji, CJK, RTL) "
+         "into ~15%% of documents.text",
+         "unicode", {"documents": _unicode_carriers}),
+    Mode("--perturb-ts", "truncate a seeded ~20%% of events.ts to the hour",
+         "tsperturbed", {"events": _ts_ties}),
+    Mode("--perturb-ts-nulls", "NULL ~2%% of events.ts + seed epoch-0 / far-future "
+         "(2200-01-01) extremes into ~2%% each",
+         "tsnulls", {"events": _ts_nulls}),
+    Mode("--perturb-date-nulls", "NULL/epoch/far-future ~2%% each into o_orderdate "
+         "and l_shipdate (the TPC-H date spine)",
+         "datenulls", dict.fromkeys(_DATE_COLS, _date_nulls)),
+    Mode("--perturb-props-json", "overwrite ~5%% of events.props with malformed / "
+         "type-shifted JSON (truncated, bare text, wrong-typed k)",
+         "propsjson", {"events": _props_json}),
+    Mode("--perturb-neg-ids", "negate ~3%% of the integer id columns (doc/vec/event/"
+         "user/order/cust keys) — signed-id regime",
+         "negids", dict.fromkeys(_NEG_ID_COLS, _neg_ids)),
+    Mode("--perturb-decimal-edge", "seed decimal-precision boundary values (DECIMAL(18,6) "
+         "max, one-past overflow, int32 edges, sum stressors) "
+         "into ~5%% of events.value",
+         "decedge", {"events": _decimal_edges}),
+    Mode("--perturb-kv", "seed adversarial Ali-CCP kv fragments (dup field_ids, "
+         "ragged triplets, frame shifts, malformed ints) into "
+         "~10%% of o_orderpriority / c_name",
+         "kvperturbed", dict.fromkeys(_KV_COLS, _kv_fragments)),
+    Mode("--perturb-nulls", "NULL a seeded ~5%% of documents+events value columns "
+         "+ embeddings.label, and ~2%% of the doc_id / vec_id keys",
+         "nullperturbed", dict.fromkeys(_NULL_COLS, _plant_nulls)),
+    Mode("--perturb-order", "shuffle every table's row order (4 row groups)",
+         "orderperturbed", dict.fromkeys(TABLES, _reorder), row_groups=4),
+    Mode("--perturb-schema", "reverse column order + downcast custom ids to int32",
+         "schemadrift", dict.fromkeys(TABLES, _schema_drift), seeded=False),
+    Mode("--perturb-skew", "plant hot keys: ~30%% of events.user_id, ~20%% of "
+         "orders.o_custkey / lineitem.l_suppkey, ~10%% of "
+         "documents.text collapse onto one value",
+         "skewperturbed", dict.fromkeys(_SKEW_PLAN, _hot_keys)),
+    Mode("--perturb-empty", "truncate the feed tables (events/documents/embeddings) to 0 rows",
+         "emptyfeeds", dict.fromkeys(("events", "documents", "embeddings"), _empty),
+         seeded=False),
+    Mode("--perturb-extremes", "seed NaN/±Inf/±1e300 into ~5%% of EVERY double "
+         "column (events.value, o_totalprice, all four "
+         "lineitem doubles, c_acctbal, s_acctbal, "
+         "p_retailprice) + ±3e38 into embedding components",
+         "extremes", dict.fromkeys(_EXTREME_COLS, _extremes)),
+)}
+
+
+def _perturbed_copy(sf: str, out: str, mode: Mode, seed: int) -> str:
+    """Write ``mode``'s copy of the testdata ``sf`` to ``out``: the tables
+    it lists go through their transform, every other table is copied
+    byte for byte."""
     os.makedirs(out, exist_ok=True)
     for t in TABLES:
         src, dst = f"{sf}/{t}.parquet", f"{out}/{t}.parquet"
-        if t not in empty_tables:
-            shutil.copyfile(src, dst)  # always overwrite (see perturb_text_sf)
+        if t not in mode.transforms:
+            # ALWAYS overwrite: the driver regenerates the source data
+            # between rounds, and an exists-check would silently mix a
+            # stale cached copy with freshly perturbed tables.
+            shutil.copyfile(src, dst)
             continue
-        tbl = pq.read_table(src)
-        pq.write_table(tbl.slice(0, 0), dst)
+        tbl = mode.transforms[t](pq.read_table(src), t, seed)
+        rows = max(tbl.num_rows // mode.row_groups, 1) if mode.row_groups else None
+        pq.write_table(tbl, dst, row_group_size=rows)
     return out
+
+
+def perturb(sf: str, flag: str, seed: int) -> str:
+    """The ``flag`` mode's perturbed copy of the testdata directory ``sf``
+    (written under /tmp, always overwritten); returns its path."""
+    mode = MODES[flag]
+    seed_tag = f"s{seed}_" if mode.seeded else ""
+    return _perturbed_copy(
+        sf, f"/tmp/driver_sim_{mode.stem}_{seed_tag}{_src_tag(sf)}", mode, seed
+    )
 
 
 def main() -> int:
@@ -1248,126 +931,15 @@ def main() -> int:
     ap.add_argument("--out", default="/tmp/driver_sim.json")
     ap.add_argument("--strict", action="store_true",
                     help="exact value compare (driver-hash fidelity)")
-    ap.add_argument("--perturb", type=int, default=None, metavar="SEED",
-                    help="run on a float-jittered copy of the testdata")
-    ap.add_argument("--perturb-text", type=int, default=None, metavar="SEED",
-                    help="seed exotic whitespace into documents.text")
-    ap.add_argument("--perturb-ids", type=int, default=None, metavar="SEED",
-                    help="duplicate a seeded ~5%% of documents.doc_id")
-    ap.add_argument("--perturb-tpch-ids", type=int, default=None, metavar="SEED",
-                    help="duplicate ~5%% + NULL ~2%% of the TPC-H join keys "
-                         "(o_orderkey, l_orderkey, c_custkey, s_suppkey)")
-    ap.add_argument("--perturb-fk-ids", type=int, default=None, metavar="SEED",
-                    help="NULL ~2%% of the FK columns (o_custkey, l_suppkey, "
-                         "l_partkey, events.user_id) + orphan ~3%% of the "
-                         "TPC-H FKs (re-point at absent parents)")
-    ap.add_argument("--perturb-dim-ids", type=int, default=None, metavar="SEED",
-                    help="duplicate/NULL ~8%% of nation/region keys + NULL "
-                         "~2%% of c_nationkey / s_nationkey")
-    ap.add_argument("--perturb-unicode", type=int, default=None, metavar="SEED",
-                    help="seed unicode case-fold divergence carriers "
-                         "(İ, final sigma, ligatures, emoji, CJK, RTL) "
-                         "into ~15%% of documents.text")
-    ap.add_argument("--perturb-ts", type=int, default=None, metavar="SEED",
-                    help="truncate a seeded ~20%% of events.ts to the hour")
-    ap.add_argument("--perturb-ts-nulls", type=int, default=None, metavar="SEED",
-                    help="NULL ~2%% of events.ts + seed epoch-0 / far-future "
-                         "(2200-01-01) extremes into ~2%% each")
-    ap.add_argument("--perturb-date-nulls", type=int, default=None, metavar="SEED",
-                    help="NULL/epoch/far-future ~2%% each into o_orderdate "
-                         "and l_shipdate (the TPC-H date spine)")
-    ap.add_argument("--perturb-props-json", type=int, default=None, metavar="SEED",
-                    help="overwrite ~5%% of events.props with malformed / "
-                         "type-shifted JSON (truncated, bare text, wrong-typed k)")
-    ap.add_argument("--perturb-neg-ids", type=int, default=None, metavar="SEED",
-                    help="negate ~3%% of the integer id columns (doc/vec/event/"
-                         "user/order/cust keys) — signed-id regime")
-    ap.add_argument("--perturb-decimal-edge", type=int, default=None, metavar="SEED",
-                    help="seed decimal-precision boundary values (DECIMAL(18,6) "
-                         "max, one-past overflow, int32 edges, sum stressors) "
-                         "into ~5%% of every scalar double column")
-    ap.add_argument("--perturb-kv", type=int, default=None, metavar="SEED",
-                    help="seed adversarial Ali-CCP kv fragments (dup field_ids, "
-                         "ragged triplets, frame shifts, malformed ints) into "
-                         "~10%% of o_orderpriority / c_name")
-    ap.add_argument("--perturb-nulls", type=int, default=None, metavar="SEED",
-                    help="NULL a seeded ~5%% of documents+events value columns + embeddings.label")
-    ap.add_argument("--perturb-order", type=int, default=None, metavar="SEED",
-                    help="shuffle every table's row order (4 row groups)")
-    ap.add_argument("--perturb-schema", type=int, default=None, metavar="SEED",
-                    help="reverse column order + downcast custom ids to int32")
-    ap.add_argument("--perturb-skew", type=int, default=None, metavar="SEED",
-                    help="plant hot keys: ~30%% of events.user_id, ~20%% of "
-                         "orders.o_custkey / lineitem.l_suppkey, ~10%% of "
-                         "documents.text collapse onto one value")
-    ap.add_argument("--perturb-empty", type=int, default=None, metavar="SEED",
-                    help="truncate the feed tables (events/documents/embeddings) to 0 rows")
-    ap.add_argument("--perturb-extremes", type=int, default=None, metavar="SEED",
-                    help="seed NaN/±Inf/±1e300 into ~5%% of EVERY double "
-                         "column (events.value, o_totalprice, all four "
-                         "lineitem doubles, c_acctbal, s_acctbal, "
-                         "p_retailprice) + ±3e38 into embedding components")
+    for flag, mode in MODES.items():
+        ap.add_argument(flag, dest=flag, type=int, default=None, metavar="SEED",
+                        help=mode.help)
     args = ap.parse_args()
-    if args.perturb is not None:
-        args.sf = perturb_sf(args.sf, args.perturb)
-        print(f"# perturbed testdata (seed {args.perturb}) -> {args.sf}")
-    if args.perturb_text is not None:
-        args.sf = perturb_text_sf(args.sf, args.perturb_text)
-        print(f"# text-perturbed testdata (seed {args.perturb_text}) -> {args.sf}")
-    if args.perturb_ids is not None:
-        args.sf = perturb_ids_sf(args.sf, args.perturb_ids)
-        print(f"# id-perturbed testdata (seed {args.perturb_ids}) -> {args.sf}")
-    if args.perturb_tpch_ids is not None:
-        args.sf = perturb_tpch_ids_sf(args.sf, args.perturb_tpch_ids)
-        print(f"# tpch-id-perturbed testdata (seed {args.perturb_tpch_ids}) -> {args.sf}")
-    if args.perturb_fk_ids is not None:
-        args.sf = perturb_fk_ids_sf(args.sf, args.perturb_fk_ids)
-        print(f"# fk-id-perturbed testdata (seed {args.perturb_fk_ids}) -> {args.sf}")
-    if args.perturb_dim_ids is not None:
-        args.sf = perturb_dim_ids_sf(args.sf, args.perturb_dim_ids)
-        print(f"# dim-id-perturbed testdata (seed {args.perturb_dim_ids}) -> {args.sf}")
-    if args.perturb_unicode is not None:
-        args.sf = perturb_unicode_sf(args.sf, args.perturb_unicode)
-        print(f"# unicode-perturbed testdata (seed {args.perturb_unicode}) -> {args.sf}")
-    if args.perturb_ts is not None:
-        args.sf = perturb_ts_sf(args.sf, args.perturb_ts)
-        print(f"# ts-perturbed testdata (seed {args.perturb_ts}) -> {args.sf}")
-    if args.perturb_ts_nulls is not None:
-        args.sf = perturb_ts_nulls_sf(args.sf, args.perturb_ts_nulls)
-        print(f"# ts-nulls-perturbed testdata (seed {args.perturb_ts_nulls}) -> {args.sf}")
-    if args.perturb_date_nulls is not None:
-        args.sf = perturb_date_nulls_sf(args.sf, args.perturb_date_nulls)
-        print(f"# date-nulls-perturbed testdata (seed {args.perturb_date_nulls}) -> {args.sf}")
-    if args.perturb_props_json is not None:
-        args.sf = perturb_props_json_sf(args.sf, args.perturb_props_json)
-        print(f"# props-json-perturbed testdata (seed {args.perturb_props_json}) -> {args.sf}")
-    if args.perturb_neg_ids is not None:
-        args.sf = perturb_neg_ids_sf(args.sf, args.perturb_neg_ids)
-        print(f"# neg-ids-perturbed testdata (seed {args.perturb_neg_ids}) -> {args.sf}")
-    if args.perturb_decimal_edge is not None:
-        args.sf = perturb_decimal_edge_sf(args.sf, args.perturb_decimal_edge)
-        print(f"# decimal-edge-perturbed testdata (seed {args.perturb_decimal_edge}) -> {args.sf}")
-    if args.perturb_kv is not None:
-        args.sf = perturb_kv_sf(args.sf, args.perturb_kv)
-        print(f"# kv-perturbed testdata (seed {args.perturb_kv}) -> {args.sf}")
-    if args.perturb_nulls is not None:
-        args.sf = perturb_nulls_sf(args.sf, args.perturb_nulls)
-        print(f"# null-perturbed testdata (seed {args.perturb_nulls}) -> {args.sf}")
-    if args.perturb_order is not None:
-        args.sf = perturb_order_sf(args.sf, args.perturb_order)
-        print(f"# order-perturbed testdata (seed {args.perturb_order}) -> {args.sf}")
-    if args.perturb_schema is not None:
-        args.sf = perturb_schema_sf(args.sf, args.perturb_schema)
-        print(f"# schema-drifted testdata -> {args.sf}")
-    if args.perturb_skew is not None:
-        args.sf = perturb_skew_sf(args.sf, args.perturb_skew)
-        print(f"# skew-perturbed testdata (seed {args.perturb_skew}) -> {args.sf}")
-    if args.perturb_empty is not None:
-        args.sf = perturb_empty_sf(args.sf, args.perturb_empty)
-        print(f"# empty-feed testdata -> {args.sf}")
-    if args.perturb_extremes is not None:
-        args.sf = perturb_extremes_sf(args.sf, args.perturb_extremes)
-        print(f"# extremes-perturbed testdata (seed {args.perturb_extremes}) -> {args.sf}")
+    for flag in MODES:  # modes stack
+        seed = vars(args)[flag]
+        if seed is not None:
+            args.sf = perturb(args.sf, flag, seed)
+            print(f"# {flag} {seed} -> {args.sf}")
 
     import __spark_entry__ as entry
 

@@ -143,9 +143,9 @@ def skew_probe(spark):
     volumes are computed ARITHMETICALLY from the bucket-size histogram
     (Σ C(m,2)), so the probe itself never materializes the m² pairs it
     measures."""
-    from tools.driver_sim import perturb_skew_sf
+    from tools.driver_sim import perturb
 
-    skewed = perturb_skew_sf("/root/testdata/sf0.1", 7)
+    skewed = perturb("/root/testdata/sf0.1", "--perturb-skew", 7)
     docs = load_table(spark, skewed, "documents").select("doc_id", "text")
     banded = DD.minhash_band_index(docs, "text", "doc_id", 32, 4, 5)
     sizes = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("m"))
