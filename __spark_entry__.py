@@ -265,6 +265,25 @@ _WINDOW_EXEMPT_CHANGED: dict[str, str] = {
         "joins.py module docstring only (online lookup hint removal); "
         "then: " + _FINITE_GUARD + "."
     ),
+    # Public defs that only tests reached were deleted from these
+    # entries' modules (tests/test_reachability.py), and docstrings that
+    # named them were reworded. The function-level attribution reads a
+    # deletion next to a kept def, or a docstring edit, as a change to
+    # what the entry uses. Every entry's normalized formatted plan at
+    # sf0.01 is identical before and after (all 211 dumped; only
+    # aliccp_silver_to_gold_e2e, which is windowed, differs).
+    **dict.fromkeys(
+        (
+            "doc_fingerprint",
+            "multimodal_decode_metadata",
+            "multimodal_frame_sample",
+            "record_linkage_customers",
+            "snapshot_diff_cdc",
+            "text_quality_filter",
+        ),
+        "unreached-def deletion or docstring edit in the module; "
+        "normalized plan identical before and after.",
+    ),
 }
 
 _DRIVER_WINDOW = [

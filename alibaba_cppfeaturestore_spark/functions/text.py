@@ -94,11 +94,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text: Column | str) -> Column:
-    col = F.col(text) if isinstance(text, str) else text
-    return F.length(col)
-
-
 def punct_ratio(text: Column | str) -> Column:
     """Fraction of characters that are sentence punctuation."""
     col = F.col(text) if isinstance(text, str) else text
@@ -112,12 +107,6 @@ def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Co
     sw = stopwords or STOPWORDS_EN
     hits = F.size(F.filter(toks, lambda x: x.isin(sw)))
     return hits / F.greatest(F.size(toks), F.lit(1))
-
-
-def avg_token_length(text: Column | str) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x))
-    return total / F.greatest(F.size(toks), F.lit(1))
 
 
 def quality_score(text: Column | str) -> Column:
@@ -182,20 +171,10 @@ def token_shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def fingerprint(text: Column | str, seed: int = 42) -> Column:
-    """64-bit document fingerprint: xxhash64 over the normalized text.
-    Stable across runs/partitions (pure function of the bytes)."""
-    col = F.col(text) if isinstance(text, str) else text
-    normalized = portable_lower(F.regexp_replace(ws_trim(col), TOKEN_SPLIT_REGEX, " "))
-    return F.xxhash64(normalized, F.lit(seed))
-
-
 def fingerprint_md5(text: Column | str) -> Column:
-    """128-bit portable fingerprint: md5 hex over the same normalized text
-    as ``fingerprint``. md5 exists in every SQL engine (Spark, DuckDB,
-    Trino, Postgres), so cross-engine dedup ledgers interoperate; prefer
-    ``fingerprint`` (xxhash64, 8 bytes vs 32-hex) when the ledger stays
-    inside Spark and compactness wins."""
+    """128-bit portable fingerprint: md5 hex over the whitespace-normalized,
+    lowercased text. md5 exists in every SQL engine (Spark, DuckDB, Trino,
+    Postgres), so cross-engine dedup ledgers interoperate."""
     col = F.col(text) if isinstance(text, str) else text
     normalized = portable_lower(F.regexp_replace(ws_trim(col), TOKEN_SPLIT_REGEX, " "))
     return F.md5(normalized)
@@ -235,7 +214,7 @@ def winnow_fingerprints(
     Guarantee: two documents sharing any substring of length
     ≥ ``window + k - 1`` share at least one selected fingerprint — the
     basis for containment/plagiarism detection, robust to where the match
-    sits in the document (unlike whole-doc ``fingerprint``).
+    sits in the document (unlike whole-doc ``fingerprint_md5``).
 
     All-native expressions; the k-gram hash array is bound once via
     ``_let`` so the sliding windows index into it instead of re-hashing.

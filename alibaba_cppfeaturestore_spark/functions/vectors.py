@@ -71,11 +71,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    diffs = F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))
-
-
 def quantize_int8(v: Column) -> Column:
     """Scalar int8 quantization: struct(scale float, q array<tinyint>)
     with q = round(x / scale), scale = max|x| / 127.
@@ -83,8 +78,8 @@ def quantize_int8(v: Column) -> Column:
     The storage lever for vector corpora: 4 bytes/dim float32 → 1
     byte/dim (+1 scalar), so a 100 TB embedding store reads/shuffles 4×
     less. Zero vectors quantize to scale 0 / all-zero q. All native
-    expressions — quantize on write, search on the quantized form via
-    ``cosine_int8``, keep originals cold."""
+    expressions — quantize on write, score the quantized form with
+    ``dot_int8`` / ``norm_int8``, keep originals cold."""
     from .text import _let
 
     amax_expr = F.aggregate(
@@ -112,12 +107,6 @@ def quantize_int8(v: Column) -> Column:
     )
 
 
-def dequantize_int8(qv: Column) -> Column:
-    """Inverse of ``quantize_int8``: array<float> ≈ original (max
-    per-component error = scale/2 = max|x|/254)."""
-    return F.transform(qv["q"], lambda x: (x.cast("double") * qv["scale"]).cast("float"))
-
-
 def dot_int8(qa: Column, qb: Column) -> Column:
     """Integer dot product of two int8-quantized vectors' q arrays
     (double accumulation — every partial sum is an exact integer-valued
@@ -130,26 +119,16 @@ def dot_int8(qa: Column, qb: Column) -> Column:
 
 
 def norm_int8(qv: Column) -> Column:
-    """Integer L2 norm of an int8-quantized vector's q array — the
-    per-VECTOR constant that ``cosine_int8`` re-folds per PAIR. Scoring
-    pipelines precompute it once per side and score with
-    ``dot_int8(a, b) / greatest(na * nb, 1e-12)``: the same doubles
-    ``cosine_int8`` divides by (same fold, same sqrt), so cosines are
-    bit-identical at one interpreted HOF fold per pair instead of three
-    (``operators/similarity.py``'s ``INT8`` scorer)."""
+    """Integer L2 norm of an int8-quantized vector's q array. Scoring
+    pipelines precompute it once per VECTOR and score each pair with
+    ``dot_int8(a, b) / greatest(na * nb, 1e-12)`` — scales cancel, so the
+    cosine is integer dot over integer norms, one interpreted HOF fold
+    per pair (``operators/similarity.py``'s ``INT8`` scorer)."""
     return F.sqrt(
         F.aggregate(
             qv["q"], F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
         )
     )
-
-
-def cosine_int8(qa: Column, qb: Column) -> Column:
-    """Cosine similarity computed directly on int8-quantized vectors —
-    scales cancel, so this is integer dot / integer norms; no
-    dequantized array is materialized. Per-pair convenience form; hot
-    paths precompute ``norm_int8`` per side (see its docstring)."""
-    return dot_int8(qa, qb) / F.greatest(norm_int8(qa) * norm_int8(qb), F.lit(1e-12))
 
 
 def projection_signs(out_dim: int, in_dim: int, seed: int = 0x5EED) -> list[list[float]]:

@@ -368,7 +368,7 @@ def minhash_band_index(
 ) -> DataFrame:
     """LSH band index rows ``(id, sig, band, bucket)`` for a corpus —
     ``bands`` rows per document. Materialize once (ideally bucketed on
-    (band, bucket) via ``write_bucketed``) and reuse with
+    (band, bucket) via ``DataFrameWriter.bucketBy``) and reuse with
     ``minhash_lsh_duplicates_incremental`` so history is never re-hashed.
 
     Banding shuffles only (id, sig, band, bucket) — never the document
@@ -544,18 +544,6 @@ def minhash_lsh_duplicates_incremental(
         text_col, id_col, shingle_size,
     )
     return _verify_jaccard(cand, hist.unionByName(sh_new), jaccard_threshold)
-
-
-def minhash_lsh_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    **kwargs,
-) -> DataFrame:
-    """Drop every row that near-duplicates a smaller-id row (keep-first)."""
-    pairs = minhash_lsh_duplicates(df, text_col, id_col, **kwargs)
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
 
 
 def simhash_duplicates(

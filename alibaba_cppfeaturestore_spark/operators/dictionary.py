@@ -119,16 +119,11 @@ def _local_size(d: DataFrame) -> int | None:
     return plan.data().size() if plan.nodeName() == "LocalRelation" else None
 
 
-def encode_with_dictionaries(
-    df: DataFrame,
-    dictionaries: dict[str, DataFrame],
-    unseen: str = "keep",
-) -> DataFrame:
+def encode_with_dictionaries(df: DataFrame, dictionaries: dict[str, DataFrame]) -> DataFrame:
     """Replace each column with its dictionary index via broadcast joins.
 
-    ``unseen="keep"`` mirrors ``StringIndexer(handleInvalid="keep")``:
-    values absent from the dictionary get index = |vocab| (one extra
-    bucket). ``unseen="null"`` leaves them NULL.
+    As ``StringIndexer(handleInvalid="keep")``: values absent from the
+    dictionary get index = |vocab| (one extra bucket).
 
     Each dictionary is broadcast — no shuffle of the fact table, the joins
     pipeline inside one stage. A dictionary from ``fit_dictionaries`` is
@@ -139,47 +134,25 @@ def encode_with_dictionaries(
     Any other ``(value, index)`` DataFrame works too (a lazy one is
     evaluated by each broadcast); its |vocab| is a one-row ``count(*)``
     aggregate, cross-joined (broadcast) onto the fact.
+
+    The joins only add columns; one final ``select`` keeps the other
+    columns in input order, then the encoded ones in dictionary order.
     """
-    out = df
+    out, encoded = df, []
     for col, d in dictionaries.items():
-        dict_renamed = F.broadcast(
-            d.select(
-                F.col("value").alias(f"__{col}_value"),
-                F.col("index").alias(f"__{col}_index"),
-            )
-        )
+        value, index, vocab = f"__{col}_value", f"__{col}_index", f"__{col}_vocab"
         out = out.join(
-            dict_renamed, out[col] == dict_renamed[f"__{col}_value"], "left"
+            F.broadcast(d.select(F.col("value").alias(value), F.col("index").alias(index))),
+            out[col] == F.col(value),
+            "left",
         )
-        idx = F.col(f"__{col}_index")
-        if unseen == "keep":
-            size = _local_size(d)
-            if size is None:
-                out = out.crossJoin(F.broadcast(d.agg(F.count("*").cast("int").alias(f"__{col}_vocab"))))
-            idx = F.coalesce(idx, F.col(f"__{col}_vocab") if size is None else F.lit(size))
-        out = (
-            out.drop(col, f"__{col}_value")
-            .withColumn(col, idx.cast("int"))
-            .drop(f"__{col}_index", f"__{col}_vocab")
+        size = _local_size(d)
+        if size is None:
+            out = out.crossJoin(F.broadcast(d.agg(F.count("*").cast("int").alias(vocab))))
+        encoded.append(
+            F.coalesce(F.col(index), F.col(vocab) if size is None else F.lit(size)).cast("int").alias(col)
         )
-    return out
-
-
-def decode_with_dictionary(
-    df: DataFrame, column: str, dictionary: DataFrame
-) -> DataFrame:
-    """Inverse mapping index→value (dictionary decode)."""
-    d = F.broadcast(
-        dictionary.select(
-            F.col("index").alias(f"__{column}_index"),
-            F.col("value").alias(f"__{column}_value"),
-        )
-    )
-    out = df.join(d, df[column] == d[f"__{column}_index"], "left")
-    return (
-        out.drop(column, f"__{column}_index")
-        .withColumnRenamed(f"__{column}_value", column)
-    )
+    return out.select(*[c for c in df.columns if c not in dictionaries], *encoded)
 
 
 def fit_dictionary_mllib(df: DataFrame, column: str) -> DataFrame:
@@ -200,8 +173,7 @@ def fit_dictionary_mllib(df: DataFrame, column: str) -> DataFrame:
     MLlib PipelineModel persists), re-emitted as the same driver-local
     ``(value, index)`` DataFrame ``fit_dictionaries`` returns (``value``
     is a string: StringIndexer labels are strings), so
-    ``encode_with_dictionaries`` / ``decode_with_dictionary`` work
-    unchanged on either fit path.
+    ``encode_with_dictionaries`` works unchanged on either fit path.
     """
     from pyspark.ml.feature import StringIndexer
 

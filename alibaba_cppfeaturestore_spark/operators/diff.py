@@ -9,8 +9,8 @@ join on the keys, null-safe struct comparison for the values.
 Scale shape: the join shuffles both snapshots by key once (AQE handles
 skew); value comparison is a per-row native expression. For repeated
 diffs of huge tables, write both sides bucketed on the keys
-(``sources/writers.py::write_bucketed``) and the join runs with no
-exchange at all.
+(``DataFrameWriter.bucketBy``) and the join runs with no exchange at
+all.
 """
 
 from __future__ import annotations

@@ -31,67 +31,6 @@ def field_similarity(a: Column, b: Column) -> Column:
     return F.when(a.isNull() | b.isNull(), F.lit(0.0)).otherwise(sim)
 
 
-def golden_records(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    completeness_cols: list[str] | None = None,
-) -> DataFrame:
-    """Survivorship: collapse each linkage cluster (transitive closure of
-    ``pairs`` via connected components) to ONE golden record. Field
-    values survive per-column from the cluster's most-complete record
-    (fewest nulls; ties broken by smallest id), then remaining nulls are
-    back-filled from any cluster member — so the golden record is at
-    least as complete as every source row. Unmatched records pass
-    through unchanged.
-
-    One CC run + one grouped aggregation; no per-cluster Python."""
-    from .graph import duplicate_clusters
-
-    completeness_cols = completeness_cols or [
-        c for c in df.columns if c != id_col
-    ]
-    clustered = duplicate_clusters(df, pairs, id_col=id_col)
-    nulls = sum(
-        (F.when(F.col(c).isNull(), 1).otherwise(0) for c in completeness_cols),
-        F.lit(0),
-    )
-    ranked = clustered.withColumn("__nulls", nulls)
-    value_cols = [c for c in df.columns if c != id_col]
-    # per column: value from the (fewest-nulls, smallest-id) record,
-    # falling back to any non-null value in the cluster
-    best = F.struct(
-        F.col("__nulls"), F.col(id_col).alias("__id"),
-        *[F.col(c) for c in value_cols],
-    )
-    agg = [
-        F.min_by(best, F.struct(F.col("__nulls"), F.col(id_col))).alias("__best"),
-        *[
-            # deterministic back-fill: the non-null value of the SMALLEST
-            # id that has one (F.first(ignorenulls) is partition-order
-            # dependent — banned by the determinism principle)
-            F.min(
-                F.when(
-                    F.col(c).isNotNull(),
-                    F.struct(F.col(id_col).alias("i"), F.col(c).alias("v")),
-                )
-            )["v"].alias(f"__any_{c}")
-            for c in value_cols
-        ],
-        F.count("*").alias("n_merged"),
-    ]
-    grouped = ranked.groupBy("cluster_id").agg(*agg)
-    out_cols = [
-        F.col("cluster_id").alias(id_col),
-        *[
-            F.coalesce(F.col(f"__best.{c}"), F.col(f"__any_{c}")).alias(c)
-            for c in value_cols
-        ],
-        "n_merged",
-    ]
-    return grouped.select(*out_cols)
-
-
 def record_linkage_pairs(
     df: DataFrame,
     id_col: str,
@@ -102,8 +41,8 @@ def record_linkage_pairs(
     """Candidate record pairs scoring ≥ ``threshold``: equi-join on the
     blocking keys, weighted mean of per-field similarities (weights
     normalized to sum 1). Returns (id_a, id_b, score), id_a < id_b.
-    Close the pairs with ``operators/graph.py::duplicate_clusters`` for
-    golden-record selection."""
+    Close the pairs into entity clusters with
+    ``operators/graph.py::duplicate_clusters``."""
     if not block_cols:
         raise ValueError("record linkage requires blocking columns")
     total = sum(fields.values())

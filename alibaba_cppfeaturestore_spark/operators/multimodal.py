@@ -42,7 +42,7 @@ def attach_binary_payload(df: DataFrame, source_col: str, id_col: str) -> DataFr
     plus a media_type derived from the id.
 
     Rows with a NULL id are dropped AT THE GATE: every downstream kernel
-    (decode / resize / frame-sample / features) declares ``media_id``
+    (decode / frame-sample / features) declares ``media_id``
     non-nullable — an unattributable object can never be joined back —
     and letting a null id through surfaces as an Arrow null-in-non-null
     crash deep inside a codegen stage instead of a visible contract
@@ -84,71 +84,6 @@ def codec_available() -> bool:
         return False
 
 
-def _skip_gif_subblocks(payload: bytes, pos: int) -> int:
-    """Advance past a GIF data-sub-block chain (len-prefixed blocks,
-    0x00 terminator); returns the position after the terminator."""
-    while True:
-        if pos >= len(payload):
-            raise ValueError("truncated GIF sub-blocks")
-        n = payload[pos]
-        pos += 1
-        if n == 0:
-            return pos
-        pos += n
-
-
-def header_decode(payload: bytes) -> dict:
-    """Dependency-free REAL decoder for the two container formats whose
-    metadata lives in fixed public-spec headers: PNG (width/height from
-    the IHDR chunk, per the PNG spec every file leads with it) and GIF
-    (width/height from the logical screen descriptor; n_frames by
-    walking the block stream and counting 0x2C image descriptors).
-    Raises ValueError on any other bytes, exactly like a real codec
-    meeting a non-image — callers' per-object try/except nulls the
-    decode fields.
-
-    Exists so the real-codec decode path has an EXECUTED test in
-    codec-less containers (r08 verdict item 6): unlike ``_fake_decode``
-    this parses actual image bytes, and unlike ``pil_decode`` it needs
-    only the stdlib. Pillow stays the preferred real codec when
-    importable (``default_decode_fn``) — this decoder reads container
-    headers, it does not decompress pixel data."""
-    import struct
-
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        if len(payload) < 24 or payload[12:16] != b"IHDR":
-            raise ValueError("PNG without leading IHDR chunk")
-        w, h = struct.unpack(">II", payload[16:24])
-        return {"width": w, "height": h, "n_frames": 1}
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        if len(payload) < 13:
-            raise ValueError("truncated GIF header")
-        w, h = struct.unpack("<HH", payload[6:10])
-        flags = payload[10]
-        pos = 13 + (3 * (2 << (flags & 0x07)) if flags & 0x80 else 0)
-        frames = 0
-        while pos < len(payload):
-            b0 = payload[pos]
-            if b0 == 0x3B:  # trailer
-                break
-            if b0 == 0x2C:  # image descriptor = one frame
-                frames += 1
-                if pos + 10 > len(payload):
-                    raise ValueError("truncated GIF image descriptor")
-                lflags = payload[pos + 9]
-                pos += 10 + (3 * (2 << (lflags & 0x07)) if lflags & 0x80 else 0)
-                pos += 1  # LZW minimum code size byte
-                pos = _skip_gif_subblocks(payload, pos)
-            elif b0 == 0x21:  # extension: label byte then sub-blocks
-                pos = _skip_gif_subblocks(payload, pos + 2)
-            else:
-                raise ValueError(f"corrupt GIF block 0x{b0:02x}")
-        if frames == 0:
-            raise ValueError("GIF with no image descriptors")
-        return {"width": w, "height": h, "n_frames": frames}
-    raise ValueError("unsupported container (header_decode reads PNG/GIF)")
-
-
 def pil_decode(payload: bytes) -> dict:
     """Real-codec decode via Pillow: width/height from the image header,
     n_frames from multi-frame formats (GIF/TIFF; 1 otherwise). Raises on
@@ -166,20 +101,6 @@ def pil_decode(payload: bytes) -> dict:
         }
 
 
-def pil_resize(payload: bytes, w: int, h: int) -> bytes:
-    """Real-codec resize via Pillow, re-encoded in the source format
-    (PNG when the source format is unknown)."""
-    import io
-
-    from PIL import Image
-
-    with Image.open(io.BytesIO(payload)) as im:
-        fmt = im.format or "PNG"
-        out = io.BytesIO()
-        im.resize((w, h)).save(out, format=fmt)
-        return out.getvalue()
-
-
 def default_decode_fn() -> Callable[[bytes], dict]:
     """The decode kernel the operators use when the caller passes none:
     the real Pillow codec when importable, else the deterministic stub.
@@ -188,18 +109,6 @@ def default_decode_fn() -> Callable[[bytes], dict]:
     the hash-chained stub, which must not silently change value when a
     codec library appears in the environment."""
     return pil_decode if codec_available() else _fake_decode
-
-
-def default_resize_fn() -> Callable[[bytes, int, int], bytes]:
-    """Resize kernel default — real Pillow resize when importable, else
-    the hash-chained stub (see ``default_decode_fn``)."""
-    if codec_available():
-        return pil_resize
-
-    def fake_resize(payload: bytes, w: int, h: int) -> bytes:
-        return hashlib.sha256(payload + f"{w}x{h}".encode()).digest()
-
-    return fake_resize
 
 
 def decode_media_metadata(
@@ -274,60 +183,6 @@ def decode_media_metadata(
     return media.select("media_id", "media_type", "payload").mapInPandas(
         decode_batches, MEDIA_META_SCHEMA
     )
-
-
-def resize_media(
-    media: DataFrame,
-    width: int,
-    height: int,
-    resize_fn: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """Resize contract: binary→binary transform with declared output dims
-    (``media_id, payload, width, height``). The stub derives a
-    deterministic pseudo-payload (hash-chained to the requested size);
-    pass ``resize_fn(payload, w, h) -> bytes`` to plug PIL/ffmpeg.
-    Corrupt/null payloads pass through as null payload rows."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("width", T.IntegerType(), False),
-            T.StructField("height", T.IntegerType(), False),
-        ]
-    )
-
-    fn = resize_fn or default_resize_fn()
-
-    def resize_one(payload):
-        if payload is None:
-            return None
-        try:
-            return fn(bytes(payload), width, height)
-        except ImportError:
-            raise  # executor-side codec missing: env mismatch, not corruption
-        except Exception:
-            return None
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        # zip-over-columns, not iterrows: only the codec call is
-        # per-object; column assembly is vectorized (same pattern as
-        # decode_media_metadata).
-        for pdf in batches:
-            payloads = pdf["payload"].to_list()
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "payload": [resize_one(p) for p in payloads],
-                    "width": width,
-                    "height": height,
-                },
-                columns=["media_id", "payload", "width", "height"],
-            )
-
-    # column-pruned Arrow feed (see decode_media_metadata)
-    return media.select("media_id", "payload").mapInPandas(gen, schema)
 
 
 def extract_features(

@@ -41,8 +41,8 @@ window hash partitioning) plus three tiny broadcast joins; no
 skew degrades balance, never correctness.
 
 Lifecycle: the persisted keyed input belongs to the session resource
-registry (``resources.py``); the harness's ``release()`` or a caller's
-``scope()`` frees it once the ranked output has materialized.
+registry (``resources.py``); the harness's ``release()`` frees it once
+the ranked output has materialized.
 ``release_persisted`` is kept here as an alias of ``resources.release``.
 
 No reference parity: the reference's StringIndexer fit
@@ -110,8 +110,8 @@ def two_phase_rank(
     already cached or trivially cheap. The cache is registered with the
     session resource registry (``resources.own``); ``resources.release()``
     once the consumer has materialized (bench.py / tools/driver_sim.py
-    do this between queries), or a ``resources.scope()`` around the
-    work, frees it, so blocks don't accumulate across a long session.
+    do this between queries) frees it, so blocks don't accumulate across
+    a long session.
     """
     running = running or {}
     keyed = df.withColumn(_KEY, F.struct(*[c.alias(f"k{i}") for i, c in enumerate(key)]))

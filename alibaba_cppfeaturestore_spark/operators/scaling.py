@@ -1,6 +1,6 @@
 """Deterministic feature scaling and binning (fit/apply).
 
-Engine-native equivalents of MLlib's StandardScaler / MinMaxScaler /
+Engine-native equivalents of MLlib's StandardScaler and
 QuantileDiscretizer, in the same spirit as the dictionary operators
 (``operators/dictionary.py``): the fitted state is a plain DataFrame /
 dict of numbers — inspectable, oracle-checkable, identical between batch
@@ -48,31 +48,6 @@ def apply_standard_scaler(
             F.lit(0.0)
             if std == 0.0
             else (F.col(c) - F.lit(s["mean"])) / F.lit(std)
-        )
-        out = out.withColumn(c, scaled)
-    return out
-
-
-def fit_minmax_scaler(df: DataFrame, columns: list[str]) -> dict[str, dict[str, float]]:
-    """Per-column min/max in one pass."""
-    aggs = []
-    for c in columns:
-        aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
-    row = df.agg(*aggs).collect()[0]
-    return {c: {"min": row[f"{c}__min"], "max": row[f"{c}__max"]} for c in columns}
-
-
-def apply_minmax_scaler(
-    df: DataFrame, stats: dict[str, dict[str, float]]
-) -> DataFrame:
-    """Rescale columns to [0, 1]; constant columns map to 0.0."""
-    out = df
-    for c, s in stats.items():
-        span = (s["max"] or 0.0) - (s["min"] or 0.0)
-        scaled = (
-            F.lit(0.0)
-            if span == 0.0
-            else (F.col(c) - F.lit(s["min"])) / F.lit(span)
         )
         out = out.withColumn(c, scaled)
     return out

@@ -7,8 +7,7 @@ Every top-k path is one composition of three parts, each written once:
   ``_lsh_pairs`` (multi-table random-hyperplane buckets from
   ``_lsh_buckets``: an equi-join, never a cross join), or IVF cells
   (``_cell_pairs``: a query meets the corpus vectors of the cells it
-  probes). IVF cell ids come from a quantizer: learned KMeans centroids
-  (``_kmeans_pairs``), or a centroid table of k-center greedy
+  probes). IVF cell ids come from a centroid table of k-center greedy
   (``_greedy_pairs``) or smallest-id (``_smallest_id_pairs``) picks,
   scored against each vector like any other pair (``_table_pairs``).
 - **Scorer** — ``FLOAT`` (float cosine over a per-side ``norm``) or
@@ -23,7 +22,6 @@ Entry points, and the output contract each composes itself:
 - ``brute_force_topk``: all pairs × FLOAT, rounded to 6 places;
 - ``lsh_bucketed_topk``: LSH buckets × FLOAT, rounded, scored before
   the pair dedup;
-- ``ivf_topk``: IVF with KMeans cells × FLOAT, rounded;
 - ``ivf_portable_topk``: IVF with smallest-id cells × INT8, unrounded;
 - ``ivf_greedy_topk``: IVF with k-center greedy cells × INT8, unrounded.
 
@@ -45,7 +43,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot, dot_int8, norm, norm_int8, quantize_int8
-from ..resources import memo
 from .aggregates import top_k_per_group
 from .dedup import _spread, portable_hash60
 
@@ -303,157 +300,11 @@ def lsh_bucketed_topk(
     return _top_k(scored, k)
 
 
-def ivf_fit_centroids(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    sample_fraction: float | None = None,
-    seed: int = 42,
-    max_fit_rows: int = 1000 * 16,
-) -> list[list[float]]:
-    """Fit IVF coarse-quantizer centroids with MLlib KMeans.
-
-    Scale-safe BY DEFAULT: the fit input is always capped at
-    ``max_fit_rows`` (≈1000× n_centroids — coarse-quantizer quality
-    saturates well below that), so calling this on a 100 TB corpus never
-    runs a full-corpus KMeans. Pass ``sample_fraction`` to thin a huge
-    corpus uniformly before the cap (seeded, reproducible); assignment
-    afterwards is a per-row expression against broadcast centroid
-    literals, never a model invocation. Fits are memoized per corpus
-    plan (semantic hash) and input-file mtimes (``resources.memo``), so
-    repeated queries against the same corpus reuse the centroids instead
-    of re-running the fit job, and a corpus rewritten in place re-fits —
-    the plan's hash alone does not change when its files do."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    def fit() -> list[list[float]]:
-        sample = corpus if sample_fraction is None else corpus.sample(sample_fraction, seed)
-        cap = max(max_fit_rows, 10 * n_centroids)
-        vecs = sample.select(
-            array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-        ).limit(cap)
-        if vecs.isEmpty():
-            # empty feed / filtered-away corpus: nothing to quantize. Callers
-            # treat [] as "no cells" and return an empty, well-typed result
-            # instead of crashing MLlib's fit (driver_sim --perturb-empty).
-            return []
-        model = KMeans(k=n_centroids, seed=seed, maxIter=10).fit(vecs)
-        return [[float(x) for x in c] for c in model.clusterCenters()]
-
-    try:
-        sem = corpus._jdf.queryExecution().analyzed().semanticHash()
-        files = corpus.inputFiles()
-    except Exception:  # Connect or API drift: fall back to uncached fit
-        return fit()
-    key = ("centroids", sem, vec_col, n_centroids, sample_fraction, seed, max_fit_rows)
-    return memo(corpus.sparkSession, files, key, fit)
-
-
-def _nearest_centroid_ids(vec: Column, centroids: list[list[float]], n: int) -> Column:
-    """ids of the ``n`` nearest centroids (squared-L2, KMeans' metric).
-
-    The centroid set is ONE literal matrix and the distance is ONE
-    ``transform`` lambda over it — inlining a separate distance
-    expression per centroid (16× aggregate(zip_with)) overflows the
-    generated method size and drops the whole projection out of
-    whole-stage codegen (~10× slower on the corpus-assignment scan)."""
-    cmat = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in centroids])
-    dists = F.transform(
-        cmat,
-        lambda c: F.aggregate(
-            F.zip_with(
-                vec,
-                c,
-                lambda x, cc: (x.cast("double") - cc) * (x.cast("double") - cc),
-            ),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        ),
-    )
-    ranked = F.array_sort(
-        F.zip_with(
-            dists,
-            F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
-            lambda d, i: F.struct(d.alias("dist"), i.alias("cid")),
-        )
-    )
-    return F.transform(F.slice(ranked, 1, n), lambda s: s["cid"])
-
-
 def _cell_pairs(q: DataFrame, c: DataFrame) -> DataFrame:
     """IVF generator: query and corpus sides carrying ``__cell`` ids
     equi-join on the cell — corpus compared ≈ n_probe/n_cells of a cross
     join."""
     return q.join(c, "__cell").filter(F.col("query_id") != F.col("neighbor_id"))
-
-
-def _kmeans_pairs(
-    queries: DataFrame,
-    corpus: DataFrame,
-    scorer: Scorer,
-    centroids: list[list[float]],
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """IVF cells from literal (KMeans) centroids: each corpus vector sits
-    in its nearest centroid's cell, each query probes its ``n_probe``
-    nearest cells (squared L2 on the raw vectors, whatever the scorer)."""
-    c = _side(
-        corpus, scorer, id_col, vec_col, C,
-        F.element_at(_nearest_centroid_ids(F.col(vec_col), centroids, 1), 1).alias("__cell"),
-    )
-    # explode_outer: an inner explode of this computed array would get
-    # an InferFiltersFromGenerate size/isnotnull filter that re-runs the
-    # per-centroid distance scan twice; the probe list is never empty,
-    # so no null rows to drop
-    q = _side(
-        queries, scorer, query_id_col, vec_col, Q,
-        F.explode_outer(_nearest_centroid_ids(F.col(vec_col), centroids, n_probe)).alias("__cell"),
-    )
-    return _cell_pairs(F.broadcast(q), c)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    centroids: list[list[float]] | None = None,
-    sample_fraction: float | None = None,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: KMeans coarse quantizer,
-    corpus assigned to its nearest centroid, each query probes its
-    ``n_probe`` nearest cells (IVF with KMeans cells × FLOAT, rounded to
-    6 places). Pass precomputed ``centroids`` to reuse a fitted quantizer
-    (the batch↔stream / fit-once-serve-many path).
-
-    IVF vs hyperplane LSH (``lsh_bucketed_topk``): IVF adapts cells to the
-    data distribution (better candidate quality on clustered embeddings)
-    at the cost of a fit job; LSH is fit-free and fully deterministic.
-    """
-    cents = centroids or ivf_fit_centroids(
-        corpus, vec_col, n_centroids, sample_fraction
-    )
-    if cents:
-        pairs = _kmeans_pairs(
-            queries, corpus, FLOAT, cents, n_probe, id_col, vec_col, query_id_col
-        )
-    else:
-        # no quantizer cells (empty corpus): an empty, correctly-typed
-        # result — limit(0) inputs keep id/vector types without a scan
-        pairs = _all_pairs(
-            queries.limit(0), corpus.limit(0), FLOAT, id_col, vec_col, query_id_col
-        )
-    return _top_k(
-        pairs.select("query_id", "neighbor_id", F.round(_cos(FLOAT), 6).alias("cosine_sim")), k
-    )
 
 
 def threshold_pairs(
@@ -571,18 +422,15 @@ def ivf_portable_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF top-k with a DETERMINISTIC coarse quantizer — the fully
-    oracle-able sibling of ``ivf_topk``: centroids are the ``nlist``
-    corpus vectors with the smallest ids (a fixed "random" sample — ids
+    """IVF top-k with a DETERMINISTIC coarse quantizer: centroids are the
+    ``nlist`` corpus vectors with the smallest ids (a fixed "random" sample — ids
     carry no geometry) int8-quantized, assignment/probing/scoring are
     integer dot products (every partial sum is an exact integer-valued
     double < 2^53, so aggregation order cannot change a bit), and all
     argmax selections tie-break on ids (IVF with smallest-id cells ×
-    INT8, unrounded). Same physical shape as the learned-KMeans path —
+    INT8, unrounded). Same physical shape as ``ivf_greedy_topk`` —
     broadcast centroids, cell equi-join, per-cell top-k — with recall
-    traded for exact cross-engine replayability. Use ``ivf_topk``
-    (learned centroids) when recall matters more than a value-level
-    audit trail.
+    traded for a fit-free quantizer.
     """
     pairs = _smallest_id_pairs(emb, INT8, n_queries, nlist, nprobe, id_col, vec_col)
     return _top_k(pairs.select("query_id", "neighbor_id", _cos(INT8).alias("cosine_sim")), k)
@@ -657,10 +505,10 @@ def ivf_greedy_topk(
 ) -> DataFrame:
     """IVF top-k with a DATA-ADAPTIVE deterministic coarse quantizer:
     farthest-point (k-center greedy) centroid selection over int8-
-    quantized vectors, replacing ``ivf_topk``'s MLlib-KMeans fit (r11
-    verdict item 6 — the RNG init and Lloyd float accumulation were the
-    only oracle-less stages left in the catalog). IVF with k-center
-    greedy cells × INT8, unrounded.
+    quantized vectors, in place of an MLlib-KMeans fit (r11 verdict
+    item 6 — the RNG init and Lloyd float accumulation were the only
+    oracle-less stages left in the catalog). IVF with k-center greedy
+    cells × INT8, unrounded.
 
     Why this is exactly replayable where KMeans is not:
 
@@ -735,8 +583,7 @@ def kmeans_lloyd_step(
     codegen expression (no shuffle); the update is ONE partial-aggregable
     groupBy of k rows — the per-iteration cost profile that lets Lloyd
     run at corpus scale with broadcast centroids. Production k-means
-    loops this with refreshed literals (see ``ivf_fit_centroids`` for
-    the sampled-fit variant)."""
+    loops this with refreshed literals."""
     assigned = df.select(
         F.col(id_col),
         lloyd_assign(F.col(vec_col).cast("array<double>"), centroids).alias("cluster"),

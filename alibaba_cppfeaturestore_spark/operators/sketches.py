@@ -110,78 +110,6 @@ def heavy_hitters(
     )
 
 
-def distinct_sketch_rollup(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-    lg_k: int = 12,
-) -> DataFrame:
-    """Per-group Apache DataSketches HLL sketch columns for distinct
-    counting that MERGES: ``group_cols…, sketch (binary), estimate``.
-
-    The point vs ``approx_count_distinct``: that returns only a number,
-    so coarser rollups must rescan raw data. A persisted sketch COLUMN
-    re-aggregates — daily sketches union into monthly ones
-    (``merge_distinct_sketches``) without touching raw rows, the same
-    partial-state cascade ``rollup_cascade`` uses for sums. At 100 TB a
-    distinct-users-per-(day, country) table is gigabytes of sketches;
-    any coarser distinct query is a sketch union over it. Pytest-pinned
-    (like ann_ivf_topk): the estimator is DataSketches-specific, so no
-    cross-engine value oracle exists; the merge-tracks-direct property
-    (equal to within HLL_4 mode-transition noise, both inside the lg_k
-    error envelope) is pinned in tests."""
-    return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("sketch"),
-        F.hll_sketch_estimate(F.hll_sketch_agg(F.col(value_col), F.lit(lg_k))).alias(
-            "estimate"
-        ),
-    )
-
-
-def merge_distinct_sketches(
-    sketches: DataFrame,
-    group_cols: list[str],
-    sketch_col: str = "sketch",
-) -> DataFrame:
-    """Union per-group HLL sketches up to a coarser grouping — pure
-    partial-state re-aggregation, no raw-data rescan."""
-    merged = F.hll_union_agg(F.col(sketch_col))
-    return sketches.groupBy(*group_cols).agg(
-        merged.alias("sketch"),
-        F.hll_sketch_estimate(merged).alias("estimate"),
-    )
-
-
-def sketch_intersection_estimate(
-    a: DataFrame,
-    b: DataFrame,
-    join_cols: list[str],
-    sketch_col: str = "sketch",
-) -> DataFrame:
-    """Distinct-count INTERSECTION estimate from HLL sketch columns via
-    inclusion–exclusion: |A∩B| ≈ |A| + |B| − |A∪B|, with the union term
-    a real sketch union (HLL supports union natively; it does not
-    support intersection, so this is the standard derived estimator —
-    error grows when the overlap is small relative to either set).
-    Joins two per-group sketch tables on ``join_cols`` and returns
-    ``join_cols…, est_a, est_b, est_union, est_intersection``."""
-    ea = a.select(*join_cols, F.col(sketch_col).alias("_sa"))
-    eb = b.select(*join_cols, F.col(sketch_col).alias("_sb"))
-    j = ea.join(eb, join_cols)
-    union_est = F.hll_sketch_estimate(
-        F.hll_union(F.col("_sa"), F.col("_sb"), True)
-    )
-    est_a = F.hll_sketch_estimate(F.col("_sa"))
-    est_b = F.hll_sketch_estimate(F.col("_sb"))
-    return j.select(
-        *join_cols,
-        est_a.alias("est_a"),
-        est_b.alias("est_b"),
-        union_est.alias("est_union"),
-        F.greatest(est_a + est_b - union_est, F.lit(0)).alias("est_intersection"),
-    )
-
-
 def countmin_sketch(
     items: DataFrame, col: str, depth: int = 4, width: int = 2048
 ) -> DataFrame:

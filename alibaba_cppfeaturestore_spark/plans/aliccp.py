@@ -207,8 +207,3 @@ def silver_to_gold(
     ts = clock if clock is not None else F.current_timestamp()
     return df.withColumn("created", ts).withColumn("datetime", ts)
 
-
-def gold_retrieval(gold: DataFrame) -> DataFrame:
-    """The ``alicppretrieval`` table: Gold filtered to click=1
-    (reference ``batch_process_Silver_to_Gold.py:171-172``)."""
-    return gold.filter(F.col("click") == 1)

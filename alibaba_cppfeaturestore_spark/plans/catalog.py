@@ -5448,11 +5448,8 @@ def ann_ivf_topk(spark, sf_dir):
     deliberately omitted: its mean-update makes downstream distance
     sums accumulation-order-dependent, the exact class of engine
     inequality this catalog retires (determination in the operator
-    docstring). The old KMeans path remains public API
-    (``ivf_topk``/``ivf_fit_centroids``, pytest-covered) for users who
-    want Lloyd-refined recall without a value-level audit trail.
-    Finite-filtered + id-canonicalized like ann_ivf_portable_topk (the
-    fit order is hash(id)-keyed)."""
+    docstring). Finite-filtered + id-canonicalized like
+    ann_ivf_portable_topk (the fit order is hash(id)-keyed)."""
     emb = _emb_finite(_emb_unique(spark, sf_dir))
     return SIM.ivf_greedy_topk(emb, n_queries=5, nlist=16, nprobe=4, k=5)
 

@@ -6,23 +6,21 @@ cannot free what those frames read (a persisted aggregate, a local
 checkpoint, a tempdir holding a written table) — the consumer has not
 run yet. Each such resource is registered with ``own`` / ``tempdir``
 instead, and whoever knows the consumer has materialized calls
-``release()`` (bench.py and tools/driver_sim.py between queries) or
-wraps its work in ``scope()`` (releases only what was registered inside,
-for callers sharing a session with other live queries). Without either
-call the resources live for the session; tempdirs are removed at
-interpreter exit. Releasing a persisted frame before its consumer runs
-only costs a recompute; releasing a checkpoint or tempdir early breaks
-the consumer, so only ever release after it materialized.
+``release()`` (bench.py and tools/driver_sim.py between queries).
+Without that call the resources live for the session; tempdirs are
+removed at interpreter exit. Releasing a persisted frame before its
+consumer runs only costs a recompute; releasing a checkpoint or tempdir
+early breaks the consumer, so only ever release after it materialized.
 
 **Memo.** ``memo`` caches driver-side state derived from input files
-(analyzed plans, footer schemas, key statistics, fitted centroids). An
-entry is keyed on the application id, the session identity (sibling
-``newSession()``s have their own confs and temp views, so one never
-gets a frame bound to another) and the caller's key; the value carries
-the ``st_mtime_ns`` of every input path, so a dataset rewritten in place
-re-computes and REPLACES its entry rather than adding one. Past
-``MEMO_CAP`` entries the memo is cleared outright: a rebuild costs
-~100 ms, unbounded driver growth is the hazard.
+(analyzed plans, footer schemas, key statistics). An entry is keyed on
+the application id, the session identity (sibling ``newSession()``s
+have their own confs and temp views, so one never gets a frame bound to
+another) and the caller's key; the value carries the ``st_mtime_ns`` of
+every input path, so a dataset rewritten in place re-computes and
+REPLACES its entry rather than adding one. Past ``MEMO_CAP`` entries
+the memo is cleared outright: a rebuild costs ~100 ms, unbounded driver
+growth is the hazard.
 """
 
 from __future__ import annotations
@@ -31,7 +29,6 @@ import atexit
 import os
 import shutil
 import tempfile
-from contextlib import contextmanager
 from typing import Callable, TypeVar
 from urllib.parse import unquote, urlparse
 
@@ -81,23 +78,6 @@ def release(blocking: bool = False) -> int:
     while _OWNED:
         _free(_OWNED.pop(), blocking)
     return n
-
-
-@contextmanager
-def scope(blocking: bool = False):
-    """On exit, release only what was registered inside the block.
-
-    Spark's cache manager keys on the analyzed plan, so two scopes that
-    persist plan-identical frames share one cache entry and either exit
-    drops it for both (the survivor recomputes: correct, just slower)."""
-    before = {id(o) for o in _OWNED}
-    try:
-        yield
-    finally:
-        mine = [o for o in _OWNED if id(o) not in before]
-        _OWNED[:] = [o for o in _OWNED if id(o) in before]
-        for o in mine:
-            _free(o, blocking)
 
 
 @atexit.register

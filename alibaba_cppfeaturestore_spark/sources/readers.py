@@ -1,4 +1,4 @@
-"""Source adapters: csv / parquet / delta / jdbc / kafka / local collection.
+"""Source adapters: csv / parquet / delta / kafka.
 
 Mirrors the reference's source surface (SURVEY.md §2.1) behind plain
 functions. External services (Kafka broker, Postgres, MinIO, Delta jars)
@@ -56,32 +56,6 @@ def read_delta(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    properties: dict[str, str] | None = None,
-    partition_column: str | None = None,
-    num_partitions: int | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-) -> DataFrame:
-    """JDBC scan (Gold/Postgres in the reference). ``partition_column`` +
-    bounds enable parallel reads — without them JDBC reads are single-task,
-    which does not survive scale."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    if partition_column:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", num_partitions or 8)
-            .option("lowerBound", lower_bound or 0)
-            .option("upperBound", upper_bound or 1_000_000)
-        )
-    return reader.load()
-
-
 def kafka_source_options(
     bootstrap_servers: str,
     topic: str,
@@ -113,12 +87,6 @@ def read_kafka_stream(
         .options(**kafka_source_options(bootstrap_servers, topic, starting_offsets))
         .load()
     )
-
-
-def from_collection(spark: SparkSession, data, schema=None) -> DataFrame:
-    """Local-collection source (reference S8,
-    ``batch_process_Bronze_to_Silver.py:178``)."""
-    return spark.createDataFrame(data, schema=schema)
 
 
 def read_parquet_evolving(spark: SparkSession, *paths: str) -> DataFrame:

@@ -414,23 +414,3 @@ class TxTable:
         merged = survivors.unionByName(incoming)
         return self.commit(merged, "overwrite")
 
-
-def table_changes(
-    table: "TxTable",
-    spark: SparkSession,
-    from_version: int,
-    to_version: int,
-    keys: list[str],
-) -> DataFrame:
-    """Change-data-feed between two committed versions — Delta's
-    ``table_changes`` re-expressed over the transaction log: time-travel
-    both versions and key-diff them (``operators/diff.py::snapshot_diff``
-    → one row per insert/update/delete with an ``op`` column and
-    old_/new_ value pairs).
-    Reads only the LIVE FILES of the two manifests, never the log's
-    full history."""
-    from ..operators.diff import snapshot_diff
-
-    old = table.read(spark, version=from_version)
-    new = table.read(spark, version=to_version)
-    return snapshot_diff(old, new, keys)

@@ -1,6 +1,7 @@
-"""Sink adapters: parquet/delta, csv export, jdbc, kafka, partitioned writes.
+"""Sink adapters: parquet/delta, jdbc, partitioned and observed writes.
 
-Covers the reference's sink surface (SURVEY.md §2.1 S3-S5, S7). File sizing
+Covers the reference's sink surface (SURVEY.md §2.1 S3-S4; the Kafka sink
+S7 is ``streaming/pipeline.py::write_kafka_stream``). File sizing
 is declarative (``spark.sql.files.maxRecordsPerFile`` in the session
 factory) instead of the reference's count()+repartition() two-job dance
 (``batch_process_Bronze_to_Silver.py:308-312``).
@@ -30,54 +31,6 @@ def write_table(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Bucketed (hash-clustered) table write — the co-located-join lever.
-
-    Two tables bucketed on the same key with the same bucket count join
-    WITHOUT a shuffle: each task reads bucket i of both sides, so the
-    exchange that dominates a large fact⋈fact join disappears. With
-    ``sort_cols`` the per-bucket sort is also pre-done, so the join plan
-    is scan → join with no Exchange and no Sort. The same applies to
-    ``groupBy(bucket_cols)`` — aggregation runs shuffle-free.
-
-    This is the engine's answer at 100 TB for repeated joins on a stable
-    key (user_id, item_id): pay one clustering write, amortize it over
-    every downstream join/agg. Bucketing requires ``saveAsTable`` (bucket
-    metadata lives in the catalog); the explicit ``path`` keeps the files
-    external and inspectable.
-
-    Pick ``num_buckets`` so one bucket ≈ 100-200 MB at target scale
-    (buckets are not splittable: too few → giant tasks, too many → tiny
-    files). Bucket counts in a ratio (e.g. 32 and 64) still avoid the
-    larger side's shuffle on Spark's coalescing bucket read.
-    """
-    writer = (
-        df.write.format(fmt)
-        .mode(mode)
-        .option("path", path)
-        .bucketBy(num_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
-def export_csv_sample(df: DataFrame, path: str, n: int) -> None:
-    """Single-file CSV export of a bounded sample (reference S5,
-    ``generate_example_data.py:71-72``). coalesce(1) is safe only because
-    ``limit(n)`` bounds the data first."""
-    df.limit(n).coalesce(1).write.option("header", True).mode("overwrite").csv(path)
 
 
 def write_with_metrics(
@@ -125,102 +78,6 @@ def morton_code(cols, bits: int = 8):
                 )
             )
     return z
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 8,
-    n_files: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered parquet write: rows are range-partitioned and
-    sorted by the Morton interleave of ``cols``, so parquet min/max file
-    stats become selective on EVERY listed column at once — a filter on
-    any of them prunes most files. (A linear sort on one column gives
-    perfect pruning for it and none for the others; Z-order trades a
-    little of the first for a lot of the rest.)
-
-    Columns are min-max scaled to ``bits`` bits with one tiny aggregate
-    (2ⁿ-cell grid; heavily skewed columns deserve a quantile scaling —
-    swap the scale expression via ``fit_quantile_bins`` if needed).
-    This is the OPTIMIZE ZORDER BY of Delta/Iceberg re-expressed as a
-    plain repartitionByRange + sortWithinPartitions write."""
-    from pyspark.sql import functions as F
-
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"{c}__mn"), F.max(c).alias(f"{c}__mx")]
-    row = df.agg(*aggs).collect()[0]
-    top = (1 << bits) - 1
-    scaled = []
-    for c in cols:
-        mn, mx = float(row[f"{c}__mn"]), float(row[f"{c}__mx"])
-        span = (mx - mn) or 1.0
-        scaled.append(
-            F.least(
-                F.lit(top),
-                F.floor((F.col(c).cast("double") - F.lit(mn)) / F.lit(span) * top).cast(
-                    "long"
-                ),
-            )
-        )
-    zdf = df.withColumn("__z", morton_code(scaled, bits))
-    (
-        zdf.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_mb: int = 128,
-    sort_within_by: list[str] | None = None,
-) -> int:
-    """Compact a small-file parquet directory: coalesce to
-    ``ceil(bytes / target_file_mb)`` files, atomically swap. Returns the
-    new file count.
-
-    Small files are the classic lakehouse tax — a streaming sink or
-    over-parallel write leaves thousands of KB-sized files, and every
-    later scan pays task-per-file scheduling plus footer reads. Target
-    ~128 MB so a file ≈ one scan task.
-
-    ``sort_within_by`` additionally sorts rows WITHIN each output file
-    (``sortWithinPartitions`` — no global shuffle) so parquet min/max
-    page stats become selective for those columns: cheap data-skipping
-    without a full z-order rewrite.
-
-    Local/HDFS-style atomicity: write to a sibling temp dir, then rename.
-    On object stores, swap via the table format's commit (Delta
-    ``OPTIMIZE``) instead.
-    """
-    import math
-    import os
-    import shutil
-    import uuid
-
-    size_bytes = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if not f.startswith((".", "_"))
-    )
-    n_files = max(1, math.ceil(size_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    df = df.repartition(n_files)
-    if sort_within_by:
-        df = df.sortWithinPartitions(*sort_within_by)
-    tmp = f"{path.rstrip('/')}__compact_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.replace(tmp, path)
-    return n_files
 
 
 def write_jdbc(

@@ -47,22 +47,6 @@ def stream_from_parquet(
     return spark.readStream.schema(schema).parquet(path)
 
 
-def tumbling_window_agg(
-    stream_df: DataFrame,
-    ts_col: str,
-    window: str,
-    watermark: str,
-    group_cols: list[str],
-    aggs: list,
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation (ST4 + windowed agg)."""
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window), *group_cols)
-        .agg(*aggs)
-    )
-
-
 def _run_bounded(writer: DataStreamWriter) -> None:
     """Start ``writer`` on an availableNow trigger, drain it, stop it."""
     q = writer.trigger(availableNow=True).start()
@@ -111,68 +95,6 @@ def run_bounded_to_memory(
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
     return stream_df.sparkSession.table(qname)
-
-
-def run_stream_near_dedup(
-    stream_df: DataFrame,
-    history_path: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    **lsh_kwargs,
-) -> None:
-    """Streaming NEAR-duplicate filtering against all history: each
-    micro-batch is deduped with the incremental LSH path
-    (``operators/dedup.py::minhash_lsh_duplicates_incremental``) against
-    the persisted history index + within itself, and only novel
-    documents are appended to the history table. Exactly the daily-
-    ingest dedup loop, but continuous.
-
-    ``history_path`` holds the accepted corpus as parquet
-    ``(id, text, sig, band, bucket)`` band rows — the index IS the
-    history, so batches never re-hash accepted documents; their text is
-    read back only for candidate verification (id-pruned scan).
-    """
-    import os
-
-    from ..operators.dedup import (
-        minhash_band_index,
-        minhash_lsh_dedup,
-        minhash_lsh_duplicates_incremental,
-    )
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # in-batch dedup first (keep smallest id of each in-batch cluster)
-        batch = minhash_lsh_dedup(batch_df, text_col, id_col, **lsh_kwargs)
-        if os.path.exists(history_path):
-            hist = spark.read.parquet(history_path)
-            index = hist.select("id", "sig", "band", "bucket")
-            texts = hist.select(
-                F.col("id").alias(id_col), F.col("text").alias(text_col)
-            ).dropDuplicates([id_col])
-            pairs = minhash_lsh_duplicates_incremental(
-                batch, index, texts, text_col, id_col, **lsh_kwargs
-            )
-            dup_ids = (
-                pairs.select(F.col("id_a").alias(id_col))
-                .union(pairs.select(F.col("id_b").alias(id_col)))
-                .join(
-                    batch.select(id_col), id_col, "left_semi"
-                )
-                .distinct()
-            )
-            batch = batch.join(dup_ids, id_col, "left_anti")
-        novel = minhash_band_index(batch, text_col, id_col).join(
-            batch.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")),
-            "id",
-        )
-        novel.write.mode("append").parquet(history_path)
-
-    _run_bounded(
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
 
 
 def stream_dedup(
@@ -279,39 +201,6 @@ class OnlineStore:
         return lambda df, epoch: self.upsert_batch(df, epoch)
 
 
-def stateful_running_count(
-    stream_df: DataFrame,
-    key_col: str,
-    count_col: str = "n_events",
-) -> DataFrame:
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    a per-key cumulative event count that survives across micro-batches
-    (the escape hatch for operators neither windowed aggregation nor
-    ``session_window`` can express).
-
-    Emits (key, running_count) every time a key appears in a micro-batch;
-    state is one long per key — bounded by |keys|, not stream length. At
-    scale add a timeout (``GroupStateTimeout.EventTimeTimeout``) to expire
-    idle keys instead of NoTimeout."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        current = state.get[0] if state.exists else 0
-        current += sum(len(p) for p in pdfs)
-        state.update((current,))
-        yield pd.DataFrame({key_col: [key[0]], count_col: [current]})
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=f"{key_col} long, {count_col} long",
-        stateStructType=f"{count_col} long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def kafka_sink_options(
     bootstrap_servers: str, topic: str, checkpoint_dir: str
 ) -> dict[str, str]:
@@ -408,51 +297,3 @@ def run_stream_enrich(
         .option("checkpointLocation", checkpoint_dir)
     )
 
-
-def stateful_running_count_tws(stream_df: DataFrame, key_col: str) -> DataFrame:
-    """Cumulative per-key event counts via Spark 4's
-    ``transformWithStateInPandas`` — the modern arbitrary-state API
-    (typed state variables + timers) superseding
-    ``applyInPandasWithState``'s single GroupState blob. Functionally
-    identical to ``stateful_running_count``; kept side by side so both
-    stateful tiers stay pinned. ValueState holds one integer per key —
-    state size is |keys|, never the stream.
-
-    Environment note: executing a TWS query needs ``google.protobuf``
-    (the state-server wire protocol), absent from this container — the
-    test skips when the import fails (same class of block as
-    delta-spark / Kafka); building the plan needs nothing extra."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    class RunningCount(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._count = handle.getValueState(
-                "count", StructType([StructField("n", LongType())])
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n = self._count.get()[0] if self._count.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self._count.update((n,))
-            yield pd.DataFrame({"k": [key[0]], "n_events": [n]})
-
-        def close(self) -> None:
-            # Required StatefulProcessor lifecycle hook; no resources to
-            # release (state handles are runtime-owned). Not an error
-            # swallow — there is no try/except in this module.
-            pass
-
-    out_schema = StructType(
-        [StructField("k", LongType()), StructField("n_events", LongType())]
-    )
-    return (
-        stream_df.groupBy(F.col(key_col))
-        .transformWithStateInPandas(
-            RunningCount(), out_schema, outputMode="Update", timeMode="None"
-        )
-        .withColumnRenamed("k", key_col)
-    )

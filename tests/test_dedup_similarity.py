@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from alibaba_cppfeaturestore_spark.operators.dedup import (
     exact_dedup,
-    minhash_lsh_dedup,
     minhash_lsh_duplicates,
     simhash_duplicates,
 )
@@ -71,15 +70,6 @@ def test_minhash_finds_planted_near_dups(spark, docs):
     planted = {(r["doc_id"], r["doc_id"] + 10_000) for r in base.collect()}
     recall = len(found & planted) / len(planted)
     assert recall >= 0.8, f"LSH recall too low: {recall}"
-    # Dedup keeps the originals, EXCEPT originals that truly near-duplicate
-    # a smaller-id original (the sf0.001 corpus contains such a pair:
-    # jaccard(doc 8, doc 12) ≈ 0.985) — every found pair is verified by
-    # exact Jaccard, so any dropped original must appear as some pair's id_b.
-    kept = minhash_lsh_dedup(corpus, num_hashes=32, bands=4, jaccard_threshold=0.7)
-    kept_ids = {r["doc_id"] for r in kept.filter(F.col("doc_id") < 10_000).collect()}
-    original_losers = {b for a, b in found if b < 10_000}
-    assert kept_ids == {r["doc_id"] for r in base.collect()} - original_losers
-    assert len(kept_ids) >= 48
 
 
 def test_minhash_duplicate_ids_emit_no_self_pairs(spark, docs):
@@ -315,36 +305,6 @@ def test_brute_force_topk_self_excluded_and_sorted(spark):
         assert len(sims) == 5
 
 
-def test_ivf_topk_recall_and_reused_centroids(spark):
-    from alibaba_cppfeaturestore_spark.operators.similarity import (
-        ivf_fit_centroids,
-        ivf_topk,
-    )
-
-    emb = load_table(spark, SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = brute_force_topk(emb, queries, k=5)
-    approx = ivf_topk(emb, queries, k=5, n_centroids=8, n_probe=3)
-    e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
-    a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.5, f"IVF recall vs brute force too low: {recall}"
-    # fit-once-serve-many: precomputed centroids give identical results
-    cents = ivf_fit_centroids(emb, n_centroids=8)
-    a2 = {(r["query_id"], r["neighbor_id"]) for r in ivf_topk(
-        emb, queries, k=5, n_probe=3, centroids=cents).collect()}
-    assert a == a2
-    # empty-feed discipline: no corpus -> no cells -> empty typed result,
-    # never a crashed MLlib fit (driver_sim --perturb-empty find)
-    none = emb.filter(F.lit(False))
-    assert ivf_fit_centroids(none, n_centroids=8) == []
-    degraded = ivf_topk(none, queries.limit(0), k=5, n_centroids=8)
-    assert degraded.count() == 0
-    assert set(degraded.columns) == {"query_id", "neighbor_id", "cosine_sim"}
-
-
 def test_ivf_greedy_topk_recall_determinism_and_edges(spark):
     """The r12 oracle-able learned quantizer (farthest-point greedy):
     recall vs brute force at least matches the arbitrary-id portable
@@ -383,7 +343,7 @@ def test_ivf_greedy_topk_recall_determinism_and_edges(spark):
 def test_scorer_written_once_across_generators(spark):
     """Every top-k path scores its pairs with the same scorer: for each
     scorer, each pair an approximate candidate generator returns (LSH
-    buckets, k-center greedy IVF, smallest-id IVF, KMeans IVF) carries a
+    buckets, k-center greedy IVF, smallest-id IVF) carries a
     cosine bit-identical to the exact all-pairs generator's score for
     that pair, and the approximate generators return a strict subset."""
     from alibaba_cppfeaturestore_spark.operators import similarity as S
@@ -393,7 +353,6 @@ def test_scorer_written_once_across_generators(spark):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     cols = ("vec_id", "embedding")
-    cents = S.ivf_fit_centroids(emb, n_centroids=8)
     for scorer in (S.FLOAT, S.INT8):
         def scores(pairs):
             rows = pairs.select(
@@ -406,7 +365,6 @@ def test_scorer_written_once_across_generators(spark):
             "lsh": S._lsh_pairs(queries, emb, scorer, *cols, "query_id", 4, 8, 64),
             "greedy_ivf": S._greedy_pairs(emb, scorer, 10, 8, 3, *cols, 16384),
             "smallest_id_ivf": S._smallest_id_pairs(emb, scorer, 10, 8, 3, *cols),
-            "kmeans_ivf": S._kmeans_pairs(queries, emb, scorer, cents, 3, *cols, "query_id"),
         }
         for name, pairs in generators.items():
             got = scores(pairs)
@@ -686,9 +644,9 @@ def test_prefix_indexed_jaccard_blocked_shingles_equals_quadratic(spark, docs):
 
 def test_int8_quantization_roundtrip_and_cosine(spark):
     from alibaba_cppfeaturestore_spark.functions.vectors import (
-        cosine_int8,
         cosine_similarity,
-        dequantize_int8,
+        dot_int8,
+        norm_int8,
         quantize_int8,
     )
 
@@ -699,7 +657,7 @@ def test_int8_quantization_roundtrip_and_cosine(spark):
         F.aggregate(
             F.zip_with(
                 F.col("embedding"),
-                dequantize_int8(F.col("qv")),
+                F.transform(F.col("qv.q"), lambda x: x.cast("double") * F.col("qv.scale")),
                 lambda a, b: F.abs(a.cast("double") - b.cast("double")),
             ),
             F.lit(0.0),
@@ -709,7 +667,7 @@ def test_int8_quantization_roundtrip_and_cosine(spark):
     )
     bad = err.filter(F.col("maxerr") > F.col("bound")).count()
     assert bad == 0
-    # quantized cosine tracks exact cosine
+    # quantized cosine (the INT8 scorer's integer dot / norms) tracks exact cosine
     pairs = (
         q.alias("a")
         .crossJoin(q.alias("b"))
@@ -717,7 +675,10 @@ def test_int8_quantization_roundtrip_and_cosine(spark):
         .limit(200)
         .select(
             cosine_similarity(F.col("a.embedding"), F.col("b.embedding")).alias("exact"),
-            cosine_int8(F.col("a.qv"), F.col("b.qv")).alias("approx"),
+            (
+                dot_int8(F.col("a.qv"), F.col("b.qv"))
+                / F.greatest(norm_int8(F.col("a.qv")) * norm_int8(F.col("b.qv")), F.lit(1e-12))
+            ).alias("approx"),
         )
     )
     worst = pairs.agg(F.max(F.abs(F.col("exact") - F.col("approx")))).first()[0]
@@ -788,30 +749,6 @@ def test_record_linkage_typos_and_nulls(spark):
         field_similarity(F.lit(None).cast("string"), F.lit("abc")).alias("nul"),
     ).collect()[0]
     assert sims["same"] == 1.0 and sims["diff"] == 0.0 and sims["nul"] == 0.0
-
-
-def test_golden_records_survivorship(spark):
-    from alibaba_cppfeaturestore_spark.operators.linkage import golden_records
-
-    rows = [
-        # cluster {1,2,3}: 2 is most complete; 1 donates phone via backfill
-        (1, None, "NY", "555-1234"),
-        (2, "Jon Smith", "NY", None),
-        (3, None, None, None),
-        # singleton passes through
-        (9, "Maria", "CA", "555-9999"),
-    ]
-    df = spark.createDataFrame(rows, ["rid", "name", "state", "phone"])
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
-    out = {r["rid"]: r for r in golden_records(df, pairs, "rid").collect()}
-    assert set(out) == {1, 9}
-    g = out[1]
-    # base = record 2 (fewest nulls), phone back-filled from record 1
-    assert (g["name"], g["state"], g["phone"], g["n_merged"]) == (
-        "Jon Smith", "NY", "555-1234", 3
-    )
-    s = out[9]
-    assert (s["name"], s["phone"], s["n_merged"]) == ("Maria", "555-9999", 1)
 
 
 def test_portable_minhash_matches_default_pairs(spark, docs):

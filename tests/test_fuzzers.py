@@ -21,6 +21,12 @@ import driver_sim  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
+
+@pytest.fixture(scope="module")
+def root(tmp_path_factory):
+    """Output root for this module's perturbed copies."""
+    return str(tmp_path_factory.mktemp("driver_sim"))
+
 RING = {
     "events": ["value"],
     "orders": ["o_totalprice"],
@@ -42,10 +48,10 @@ def _specials(vals):
     return n_nan, n_inf, n_big
 
 
-def test_extremes_seeds_every_double_column():
+def test_extremes_seeds_every_double_column(root):
     from driver_sim import perturb
 
-    out = perturb(SF, "--perturb-extremes", 97)
+    out = perturb(SF, "--perturb-extremes", 97, root=root)
     for table, cols in RING.items():
         tbl = pq.read_table(os.path.join(out, f"{table}.parquet"))
         for col in cols:
@@ -88,17 +94,17 @@ def test_extremes_seeds_every_double_column():
     assert any(sets[0] != s for s in sets[1:]), "per-column hit keys collapsed to per-table"
 
 
-def test_extremes_leaves_non_target_columns_intact():
+def test_extremes_leaves_non_target_columns_intact(root):
     from driver_sim import perturb
 
-    out = perturb(SF, "--perturb-extremes", 97)
+    out = perturb(SF, "--perturb-extremes", 97, root=root)
     for table, key in [("orders", "o_orderkey"), ("lineitem", "l_orderkey"), ("customer", "c_custkey")]:
         before = pq.read_table(os.path.join(SF, f"{table}.parquet")).column(key).to_pylist()
         after = pq.read_table(os.path.join(out, f"{table}.parquet")).column(key).to_pylist()
         assert before == after, f"{table}.{key} mutated by the extremes fuzzer"
 
 
-def test_ids_fuzzer_duplicates_every_custom_table_key():
+def test_ids_fuzzer_duplicates_every_custom_table_key(root):
     """The r09-widened ids regime: duplicate ids planted in ALL THREE
     custom tables' keys — documents.doc_id, embeddings.vec_id, and (new)
     events.event_id, the tie-break column in most window entries. A
@@ -106,7 +112,7 @@ def test_ids_fuzzer_duplicates_every_custom_table_key():
     "green under --perturb-ids" claim vacuous."""
     import driver_sim as DS
 
-    out = DS.perturb(SF, "--perturb-ids", seed=9001)
+    out = DS.perturb(SF, "--perturb-ids", seed=9001, root=root)
     for table, col in (
         ("documents", "doc_id"),
         ("embeddings", "vec_id"),
@@ -123,7 +129,7 @@ def test_ids_fuzzer_duplicates_every_custom_table_key():
         assert tbl.column(other).to_pylist() == src.column(other).to_pylist()
 
 
-def test_tpch_ids_fuzzer_duplicates_and_nulls_every_join_key():
+def test_tpch_ids_fuzzer_duplicates_and_nulls_every_join_key(root):
     """r10 regime (r09 verdict item 4): the TPC-H join keys — the columns
     every q3/q5/q7/q9-family join, window tie-break, and txlog MERGE
     key on — get duplicate AND NULL values planted. Contract: every
@@ -132,7 +138,7 @@ def test_tpch_ids_fuzzer_duplicates_and_nulls_every_join_key():
     composes with --perturb-ids, which owns those)."""
     import driver_sim as DS
 
-    out = DS.perturb(SF, "--perturb-tpch-ids", seed=9001)
+    out = DS.perturb(SF, "--perturb-tpch-ids", seed=9001, root=root)
     for table, col in (
         ("orders", "o_orderkey"),
         ("lineitem", "l_orderkey"),
@@ -168,7 +174,7 @@ def test_tpch_ids_fuzzer_duplicates_and_nulls_every_join_key():
         assert a.equals(b), f"{t} mutated by the tpch-ids fuzzer"
 
 
-def test_fk_ids_fuzzer_nulls_and_orphans_every_fk():
+def test_fk_ids_fuzzer_nulls_and_orphans_every_fk(root):
     """r10 FK regime: NULLs in every FK column, plus orphan values
     (re-pointed at guaranteed-absent parents) in the TPC-H FKs.
     Contract: every target column gains NULLs; TPC-H FKs gain negative
@@ -176,7 +182,7 @@ def test_fk_ids_fuzzer_nulls_and_orphans_every_fk():
     byte-identical (composes with --perturb-tpch-ids, which owns PKs)."""
     import driver_sim as DS
 
-    out = DS.perturb(SF, "--perturb-fk-ids", seed=9001)
+    out = DS.perturb(SF, "--perturb-fk-ids", seed=9001, root=root)
     targets = {
         "orders": ["o_custkey"],
         "lineitem": ["l_suppkey", "l_partkey"],
@@ -209,13 +215,13 @@ def test_fk_ids_fuzzer_nulls_and_orphans_every_fk():
         ), f"{t} mutated by the fk-ids fuzzer"
 
 
-def test_dim_ids_fuzzer_degrades_the_nation_region_chain():
+def test_dim_ids_fuzzer_degrades_the_nation_region_chain(root):
     """r10 dim-key regime: nation/region PKs gain duplicates AND NULLs
     (forced floor — the tables are tiny), the c_nationkey/s_nationkey
     FKs gain NULLs; everything else byte-identical."""
     import driver_sim as DS
 
-    out = DS.perturb(SF, "--perturb-dim-ids", seed=9001)
+    out = DS.perturb(SF, "--perturb-dim-ids", seed=9001, root=root)
     for t, col, want_dups in (
         ("nation", "n_nationkey", True),
         ("region", "r_regionkey", True),
@@ -239,7 +245,7 @@ def test_dim_ids_fuzzer_degrades_the_nation_region_chain():
         ), f"{t} mutated by the dim-ids fuzzer"
 
 
-def test_ts_nulls_fuzzer_degrades_the_event_time_spine():
+def test_ts_nulls_fuzzer_degrades_the_event_time_spine(root):
     """r11 regime (r10 verdict item 4): events.ts — the column the
     whole asof/session/watermark/cadence family keys on — gains NULLs,
     epoch-0 floors, and far-future (2200-01-01) extremes. Contract:
@@ -249,7 +255,7 @@ def test_ts_nulls_fuzzer_degrades_the_event_time_spine():
 
     import driver_sim as DS
 
-    out = DS.perturb(SF, "--perturb-ts-nulls", seed=9001)
+    out = DS.perturb(SF, "--perturb-ts-nulls", seed=9001, root=root)
     src = pq.read_table(f"{SF}/events.parquet")
     tbl = pq.read_table(f"{out}/events.parquet")
     before = src.column("ts").to_pylist()
@@ -279,7 +285,7 @@ def test_ts_nulls_fuzzer_degrades_the_event_time_spine():
         ), f"{t} mutated by the ts-nulls fuzzer"
 
 
-def test_date_nulls_fuzzer_degrades_the_tpch_date_spine():
+def test_date_nulls_fuzzer_degrades_the_tpch_date_spine(root):
     """r11: the relational date spine (o_orderdate, l_shipdate) gains
     NULLs, epoch-0 floors, and far-future extremes at ~2% each; only
     the two date columns move, every other table byte-identical."""
@@ -287,7 +293,7 @@ def test_date_nulls_fuzzer_degrades_the_tpch_date_spine():
 
     import driver_sim as DS
 
-    out = DS.perturb(SF, "--perturb-date-nulls", seed=9001)
+    out = DS.perturb(SF, "--perturb-date-nulls", seed=9001, root=root)
     for table, col in (("orders", "o_orderdate"), ("lineitem", "l_shipdate")):
         src = pq.read_table(f"{SF}/{table}.parquet")
         tbl = pq.read_table(f"{out}/{table}.parquet")
@@ -317,13 +323,13 @@ def test_date_nulls_fuzzer_degrades_the_tpch_date_spine():
         ), f"{t} mutated by the date-nulls fuzzer"
 
 
-def test_props_json_fuzzer_malfomed_variants_present():
+def test_props_json_fuzzer_malfomed_variants_present(root):
     """r11: ~5% of events.props becomes malformed / type-shifted JSON —
     truncated objects, bare text, empty, wrong-typed/overflowing k.
     Only props moves; every other column and table byte-identical."""
     import driver_sim as DS
 
-    out = DS.perturb(SF, "--perturb-props-json", seed=9001)
+    out = DS.perturb(SF, "--perturb-props-json", seed=9001, root=root)
     src = pq.read_table(f"{SF}/events.parquet")
     tbl = pq.read_table(f"{out}/events.parquet")
     before = src.column("props").to_pylist()
@@ -347,13 +353,13 @@ def test_props_json_fuzzer_malfomed_variants_present():
         ), f"{t} mutated by the props-json fuzzer"
 
 
-def test_neg_ids_fuzzer_negates_every_target_key():
+def test_neg_ids_fuzzer_negates_every_target_key(root):
     """r11: ~3% of each integer id column flips sign; everything else
     byte-identical (signed-id regime — modulo sign, ordering
     boundaries, synthetic-id collisions)."""
     import driver_sim as DS
 
-    out = DS.perturb(SF, "--perturb-neg-ids", seed=9001)
+    out = DS.perturb(SF, "--perturb-neg-ids", seed=9001, root=root)
     targets = {
         "documents": ["doc_id"], "embeddings": ["vec_id"],
         "events": ["event_id", "user_id"],
@@ -384,14 +390,14 @@ def test_neg_ids_fuzzer_negates_every_target_key():
         ), f"{t} mutated by the neg-ids fuzzer"
 
 
-def test_kv_fuzzer_plants_adversarial_fragments():
+def test_kv_fuzzer_plants_adversarial_fragments(root):
     """r12: ~10% of orders.o_orderpriority and customer.c_name becomes an
     adversarial Ali-CCP kv fragment — duplicate field_ids, ragged
     triplets, frame-shifting lone separators, malformed int values.
     Only the two carrier columns move; everything else byte-identical."""
     import driver_sim as DS
 
-    out = DS.perturb(SF, "--perturb-kv", seed=9001)
+    out = DS.perturb(SF, "--perturb-kv", seed=9001, root=root)
     for table, col in (("orders", "o_orderpriority"), ("customer", "c_name")):
         src = pq.read_table(f"{SF}/{table}.parquet")
         tbl = pq.read_table(f"{out}/{table}.parquet")
@@ -419,7 +425,7 @@ def test_kv_fuzzer_plants_adversarial_fragments():
         ), f"{t} mutated by the kv fuzzer"
 
 
-def test_decimal_edge_fuzzer_seeds_boundary_values():
+def test_decimal_edge_fuzzer_seeds_boundary_values(root):
     """r12: ~5% of events.value becomes a declared-width
     boundary value — all exactly-representable doubles (the mode must
     stress the catalog's decimal domains, not the engines' legitimate
@@ -439,7 +445,7 @@ def test_decimal_edge_fuzzer_seeds_boundary_values():
     for v in DS.DECIMAL_EDGES:
         assert abs(v) * 1e6 < 2**53 or v in (1e12, -1e12, 1e14), repr(v)
 
-    out = DS.perturb(SF, "--perturb-decimal-edge", seed=9001)
+    out = DS.perturb(SF, "--perturb-decimal-edge", seed=9001, root=root)
     src = pq.read_table(f"{SF}/events.parquet")
     tbl = pq.read_table(f"{out}/events.parquet")
     before = src.column("value").to_pylist()
@@ -469,13 +475,13 @@ def _file_bytes(sf: str, t: str) -> bytes:
 
 
 @pytest.mark.parametrize("flag", list(driver_sim.MODES))
-def test_every_mode_keeps_the_copy_contract(flag):
+def test_every_mode_keeps_the_copy_contract(flag, root):
     """The contract every mode shares: all tables are written, the ones
     the mode does not list are byte copies, a listed one really changes,
     row counts hold (0 for the emptied feeds), the copy is reproducible,
     and a seeded mode moves with its seed."""
     mode = driver_sim.MODES[flag]
-    out = driver_sim.perturb(SF, flag, 5)
+    out = driver_sim.perturb(SF, flag, 5, root=root)
     assert all(os.path.isfile(os.path.join(out, f"{t}.parquet")) for t in driver_sim.TABLES)
     first = {t: _file_bytes(out, t) for t in driver_sim.TABLES}
     changed = []
@@ -490,10 +496,10 @@ def test_every_mode_keeps_the_copy_contract(flag):
             changed.append(t)
     assert changed, f"{flag}: no listed table differs from its source"
 
-    assert driver_sim.perturb(SF, flag, 5) == out
+    assert driver_sim.perturb(SF, flag, 5, root=root) == out
     assert {t: _file_bytes(out, t) for t in driver_sim.TABLES} == first, "not reproducible"
     if mode.seeded:
-        other = driver_sim.perturb(SF, flag, 6)
+        other = driver_sim.perturb(SF, flag, 6, root=root)
         assert other != out
         assert any(
             not pq.read_table(os.path.join(other, f"{t}.parquet")).equals(
@@ -503,11 +509,11 @@ def test_every_mode_keeps_the_copy_contract(flag):
         ), f"{flag}: seeds 5 and 6 give the same copy"
 
 
-def test_all_modes_stack_within_the_filename_limit():
+def test_all_modes_stack_within_the_filename_limit(root):
     """Stacked modes chain their output names; ``_src_tag`` keeps the
     last of all 20 within the 255-byte filename limit."""
     sf = SF
     for flag in driver_sim.MODES:
-        sf = driver_sim.perturb(sf, flag, 3)
+        sf = driver_sim.perturb(sf, flag, 3, root=root)
     assert len(os.path.basename(sf).encode()) <= 255
     assert all(os.path.isfile(os.path.join(sf, f"{t}.parquet")) for t in driver_sim.TABLES)

@@ -271,27 +271,6 @@ def test_salted_join_spreads_shuffle_key(spark):
     assert "__salt" in plan and "SortMergeJoin" in plan
 
 
-def test_hll_sketch_rollup_merge_equals_direct(spark):
-    from alibaba_cppfeaturestore_spark.operators.sketches import (
-        distinct_sketch_rollup,
-        merge_distinct_sketches,
-    )
-
-    rows = [(d, u) for d in range(10) for u in range(d * 50, d * 50 + 300)]
-    df = spark.createDataFrame(rows, "day int, user long")
-    daily = distinct_sketch_rollup(df, "user", ["day"])
-    # merged-from-daily tracks the directly built whole-table sketch
-    # (not bit-identical: HLL_4 sparse->dense mode transitions differ by
-    # build path) and both sit inside the lg_k=12 error envelope
-    merged = merge_distinct_sketches(daily.select(F.lit(1).alias("g"), "sketch"), ["g"])
-    direct = distinct_sketch_rollup(df.select(F.lit(1).alias("g"), "user"), "user", ["g"])
-    m, d = merged.collect()[0], direct.collect()[0]
-    exact = df.select("user").distinct().count()
-    assert abs(m.estimate - d.estimate) <= 0.01 * exact
-    assert abs(m.estimate - exact) / exact < 0.05  # lg_k=12 -> ~1.6% rse
-    assert abs(d.estimate - exact) / exact < 0.05
-
-
 def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     """L5: the partitioned layout must turn a partition-column predicate
     into PartitionFilters at the scan (directory pruning), not a data
@@ -369,24 +348,6 @@ def test_exact_stats_fuzz_many_adversarial_groups(spark):
         else:
             slope = float(n * sxy - Decimal(sx) * sy) / den
             assert ols[g].slope == slope, g
-
-
-def test_hll_intersection_estimate_tracks_truth(spark):
-    from alibaba_cppfeaturestore_spark.operators.sketches import (
-        distinct_sketch_rollup,
-        sketch_intersection_estimate,
-    )
-
-    # A = 0..5999, B = 4000..9999 -> |A∩B| = 2000
-    a = distinct_sketch_rollup(
-        spark.range(0, 6000).select(F.lit("g").alias("g"), "id"), "id", ["g"]
-    )
-    b = distinct_sketch_rollup(
-        spark.range(4000, 10000).select(F.lit("g").alias("g"), "id"), "id", ["g"]
-    )
-    row = sketch_intersection_estimate(a, b, ["g"]).collect()[0]
-    assert abs(row.est_intersection - 2000) / 2000 < 0.15
-    assert abs(row.est_union - 10000) / 10000 < 0.05
 
 
 def test_incremental_ols_composition(spark):

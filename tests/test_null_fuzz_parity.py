@@ -77,7 +77,10 @@ NULL_SENSITIVE = [
 
 @pytest.fixture(scope="module")
 def null_sf(tmp_path_factory):
-    return perturb("/root/testdata/sf0.001", "--perturb-nulls", seed=11)
+    return perturb(
+        "/root/testdata/sf0.001", "--perturb-nulls", seed=11,
+        root=str(tmp_path_factory.mktemp("driver_sim")),
+    )
 
 
 @pytest.fixture(scope="module")

@@ -161,7 +161,7 @@ def test_release_persisted_registry(spark):
 
 def test_operator_persists_are_registered(spark, sf_dir):
     # r13 verdict item: every operator-internal persist routes through
-    # the resource registry, so release()/scope() actually cover them —
+    # the resource registry, so release() actually covers them —
     # a long-lived session no longer accumulates MEMORY_AND_DISK blocks
     # until clearCache(). Two witnesses: the minhash persist (1 shared
     # shingle frame) and the PPJoin index (sorted_docs + postings),
@@ -210,32 +210,3 @@ def test_operator_persists_are_registered(spark, sf_dir):
                 n_owned += 1
     assert n_owned >= 27  # the walk really saw the persist/checkpoint sites (29 today)
 
-
-def test_persist_scope_releases_only_own_caches(spark):
-    # resources.scope (the r09 persist_scope, ADVICE find): interleaved
-    # callers sharing a session release only caches registered INSIDE
-    # their scope — a concurrent query's still-needed cache survives,
-    # unlike the global release() sweep
-    from alibaba_cppfeaturestore_spark import resources
-
-    resources.release()
-    df = spark.createDataFrame(_rows(50, 3), "id long, v long, s string")
-    outer = two_phase_rank(df, [F.col("v"), F.col("id")], rank_col="rk")
-    assert outer.count() == 50
-    assert len(resources._OWNED) == 1
-    outer_cache = resources._OWNED[0]
-    # the inner query must be a DIFFERENT plan: Spark's cache manager
-    # keys on the analyzed plan, so unpersisting an identical plan would
-    # drop the shared entry regardless of which DataFrame handle did it
-    with resources.scope():
-        inner = two_phase_rank(df, [F.col("id"), F.col("v")], rank_col="rk")
-        assert inner.count() == 50
-        assert len(resources._OWNED) == 2
-    # scope exit released ONLY the inner cache; the outer one is intact
-    assert [id(d) for d in resources._OWNED] == [id(outer_cache)]
-    assert outer_cache.storageLevel.useMemory  # still persisted
-    assert resources.release() == 1
-    # scope exits cleanly with nothing registered inside it
-    with resources.scope():
-        pass
-    assert resources.release() == 0

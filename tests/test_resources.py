@@ -7,7 +7,6 @@ from __future__ import annotations
 import os
 import tempfile
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -19,11 +18,10 @@ def _entries(kind: str, path: str) -> list[tuple]:
 
 
 def test_memos_serve_regenerated_data(spark, tmp_path):
-    # Every memo (table plans, key uniqueness, stream schema, IVF
-    # centroids) serves the NEW data after the files are rewritten in
-    # place, replaces its entry instead of accumulating one per
-    # generation, and keeps sibling sessions apart.
-    from alibaba_cppfeaturestore_spark.operators.similarity import ivf_fit_centroids
+    # Every memo (table plans, key uniqueness, stream schema) serves the
+    # NEW data after the files are rewritten in place, replaces its entry
+    # instead of accumulating one per generation, and keeps sibling
+    # sessions apart.
     from alibaba_cppfeaturestore_spark.plans import catalog as C
     from alibaba_cppfeaturestore_spark.plans import views
     from alibaba_cppfeaturestore_spark.streaming.pipeline import run_bounded_to_memory
@@ -31,24 +29,6 @@ def test_memos_serve_regenerated_data(spark, tmp_path):
     d = tmp_path / "sf"
     d.mkdir()
     sf = str(d)
-
-    # IVF centroids: the analyzed plan's semantic hash is the same before
-    # and after the rewrite, so only the file stamp tells them apart
-    rng = np.random.default_rng(7)
-    emb_path = str(d / "embeddings.parquet")
-
-    def write_embeddings(shift: float) -> None:
-        vecs = (rng.normal(0.0, 0.1, (60, 4)) + shift).astype("float32")
-        pq.write_table(
-            pa.table({"vec_id": np.arange(60), "embedding": [list(v) for v in vecs]}), emb_path
-        )
-
-    for shift in (0.0, 10.0):
-        write_embeddings(shift)
-        got = ivf_fit_centroids(spark.read.parquet(emb_path), n_centroids=2)
-        assert len(got) == 2
-        assert all(abs(x - shift) < 1.0 for c in got for x in c), (shift, got)
-    assert len(_entries("centroids", emb_path)) == 1
 
     # table plans: a hit returns the memoized plan; each rewrite re-reads
     reg_path = str(d / "region.parquet")

@@ -1,5 +1,5 @@
 """Source/sink adapter tests (SURVEY.md §2.1): csv round-trip, idempotent
-table writes, csv export, local-collection source."""
+and partitioned table writes, the observed write, the JDBC sink."""
 
 from __future__ import annotations
 
@@ -8,16 +8,10 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from alibaba_cppfeaturestore_spark.sources.readers import (
-    from_collection,
-    read_csv,
-    read_parquet,
-)
-from alibaba_cppfeaturestore_spark.sources.writers import (
-    export_csv_sample,
-    write_bucketed,
-    write_table,
-)
+from conftest import from_collection
+
+from alibaba_cppfeaturestore_spark.sources.readers import read_csv, read_parquet
+from alibaba_cppfeaturestore_spark.sources.writers import write_table
 
 
 def test_csv_roundtrip_with_schema(spark, tmp_path):
@@ -51,110 +45,6 @@ def test_write_table_partition_by_prunes(spark, tmp_path):
     # partition filter must prune to one directory
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert back.count() == 1
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-located join: two tables bucketed+sorted on the join key must
-    join with NO Exchange (shuffle) and NO Sort in the physical plan —
-    the whole point of paying the clustering write."""
-    left = from_collection(
-        spark, [(i, f"u{i}") for i in range(1000)], schema="uid INT, name STRING"
-    )
-    right = from_collection(
-        spark, [(i % 500, i * 10) for i in range(2000)], schema="uid INT, spend INT"
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", None)
-    try:
-        # the test tables are tiny enough to broadcast (which would be the
-        # right plan in production); force SMJ so the bucketing is what's
-        # under test
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(left, "b_left", str(tmp_path / "bl"), ["uid"], 4, ["uid"])
-        write_bucketed(right, "b_right", str(tmp_path / "br"), ["uid"], 4, ["uid"])
-        joined = spark.table("b_left").join(spark.table("b_right"), "uid")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        assert joined.count() == 2000
-        # bucketed groupBy is shuffle-free too
-        agg = spark.table("b_right").groupBy("uid").count()
-        agg_plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in agg_plan, agg_plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        if prev_aqe is not None:
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", prev_aqe)
-        else:
-            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_left")
-        spark.sql("DROP TABLE IF EXISTS b_right")
-
-
-def test_export_csv_sample_single_file(spark, tmp_path):
-    path = str(tmp_path / "export")
-    df = from_collection(spark, [(i,) for i in range(100)], schema="v INT")
-    export_csv_sample(df, path, n=10)
-    parts = [f for f in os.listdir(path) if f.startswith("part-")]
-    assert len(parts) == 1
-    assert read_csv(spark, path, schema="v INT", header=True).count() == 10
-
-
-def test_compact_parquet_reduces_files_preserving_data(spark, tmp_path):
-    from alibaba_cppfeaturestore_spark.sources.writers import compact_parquet
-
-    path = str(tmp_path / "frag")
-    df = from_collection(spark, [(i, f"v{i}") for i in range(5000)], schema="id INT, v STRING")
-    df.repartition(40).write.parquet(path)  # 40 tiny files
-    before = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(before) == 40
-    n = compact_parquet(spark, path, target_file_mb=128, sort_within_by=["id"])
-    after = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(after) == n == 1
-    back = spark.read.parquet(path)
-    assert back.count() == 5000
-    assert back.agg(F.sum("id")).first()[0] == sum(range(5000))
-
-
-def test_zorder_write_improves_multicolumn_skipping(spark, tmp_path):
-    """The signature of Z-order: per-file (span_x × span_y) is far below
-    a linear sort's — files are selective on BOTH columns at once."""
-    import random
-
-    from alibaba_cppfeaturestore_spark.sources.writers import zorder_write
-
-    rng = random.Random(11)
-    rows = [(rng.randrange(100_000), rng.randrange(100_000)) for _ in range(40_000)]
-    df = from_collection(spark, rows, schema="x LONG, y LONG")
-
-    zpath, lpath = str(tmp_path / "z"), str(tmp_path / "lin")
-    zorder_write(df, zpath, ["x", "y"], bits=8, n_files=16)
-    df.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(lpath)
-
-    def avg_spans(path):
-        sx, sy, n = 0, 0, 0
-        for f in os.listdir(path):
-            if not f.endswith(".parquet"):
-                continue
-            part = spark.read.parquet(os.path.join(path, f))
-            r = part.agg(
-                (F.max("x") - F.min("x")).alias("sx"),
-                (F.max("y") - F.min("y")).alias("sy"),
-            ).first()
-            sx, sy, n = sx + r["sx"], sy + r["sy"], n + 1
-        return sx / n, sy / n
-
-    zx, zy = avg_spans(zpath)
-    lx, ly = avg_spans(lpath)
-    # linear sort: x-span tiny but y-span ≈ full range (zero pruning for
-    # y-filters). Z-order makes files selective on BOTH dimensions: each
-    # spans a fraction of the range in x AND y.
-    assert ly > 90_000, ly          # linear layout can't prune y
-    assert zy < 0.5 * ly, (zy, ly)  # z-order files can
-    assert zx < 0.5 * 100_000, zx   # while staying selective on x too
-    # and the data survives intact
-    assert spark.read.parquet(zpath).count() == 40_000
 
 
 def test_write_with_metrics_single_job_audit(spark, tmp_path):

@@ -22,7 +22,6 @@ from alibaba_cppfeaturestore_spark.streaming.pipeline import (
     run_stream_upsert,
     stream_from_parquet,
     stream_stream_interval_join,
-    tumbling_window_agg,
 )
 
 
@@ -54,10 +53,11 @@ def test_windowed_agg_stream_matches_batch(spark, workdir):
     src = os.path.join(workdir, "events")
     _write_events(spark, src, rows)
 
-    stream = stream_from_parquet(spark, src)
-    agg = tumbling_window_agg(
-        stream, "ts", "1 hour", "10 minutes", ["event_type"],
-        [F.count("*").alias("n"), F.sum("value").alias("total")],
+    agg = (
+        stream_from_parquet(spark, src)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
+        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
     )
     result = run_bounded_to_memory(agg, output_mode="complete")
     got = {
@@ -86,10 +86,11 @@ def test_state_partitions_knob_is_scoped_and_value_invariant(spark, workdir):
     _write_events(spark, src, rows)
 
     def run(sp):
-        agg = tumbling_window_agg(
-            stream_from_parquet(spark, src), "ts", "1 hour", "10 minutes",
-            ["event_type"],
-            [F.count("*").alias("n"), F.sum("value").alias("total")],
+        agg = (
+            stream_from_parquet(spark, src)
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour"), "event_type")
+            .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
         )
         out = run_bounded_to_memory(agg, output_mode="complete", state_partitions=sp)
         return {
@@ -195,44 +196,6 @@ def test_dictionary_shared_batch_and_stream(spark, workdir):
         merged.update(c)
     # a(freq 2)->0, b->1, unseen->2
     assert merged == {1: 0, 2: 1, 3: 2}
-
-
-def test_stateful_running_count_across_batches(spark, workdir):
-    """applyInPandasWithState: state must carry across micro-batches —
-    two staged files + maxFilesPerTrigger=1 force two batches."""
-    from alibaba_cppfeaturestore_spark.streaming.pipeline import (
-        stateful_running_count,
-    )
-
-    rows1 = [(1, ts("2024-01-01T10:00:00"), "view", 1.0),
-             (1, ts("2024-01-01T10:01:00"), "view", 1.0),
-             (2, ts("2024-01-01T10:02:00"), "click", 1.0)]
-    rows2 = [(1, ts("2024-01-01T11:00:00"), "view", 1.0),
-             (3, ts("2024-01-01T11:01:00"), "view", 1.0)]
-    src = os.path.join(workdir, "src")
-    spark.createDataFrame(rows1, ["user_id", "ts", "event_type", "value"]) \
-        .coalesce(1).write.mode("overwrite").parquet(src)
-    spark.createDataFrame(rows2, ["user_id", "ts", "event_type", "value"]) \
-        .coalesce(1).write.mode("append").parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    counts = stateful_running_count(stream, "user_id")
-    result = run_bounded_to_memory(counts, output_mode="update")
-    rows = result.collect()
-    # final cumulative count per key == plain batch groupBy count
-    final = {}
-    for r in rows:
-        final[r["user_id"]] = max(final.get(r["user_id"], 0), r["n_events"])
-    assert final == {1: 3, 2: 1, 3: 1}
-    # state carried across batches: user 1 must have been emitted twice
-    # with increasing counts (2 in batch 1, 3 in batch 2) — not 3 at once
-    u1 = sorted(r["n_events"] for r in rows if r["user_id"] == 1)
-    assert u1 == [2, 3], f"expected cross-batch accumulation, got {u1}"
 
 
 def test_stream_stream_interval_join_inner_and_outer(spark, workdir):
@@ -358,43 +321,6 @@ def test_stream_dedup_keeps_and_dedupes_null_ts_rows(spark, workdir):
     assert sorted(r["user_id"] for r in out if r["ts"] is None) == [2, 3]
 
 
-def test_stream_near_dedup_filters_against_history(spark, workdir):
-    """Cross-micro-batch near-dedup: batch 2's near-copy of a batch-1 doc
-    is rejected; novel docs are accepted and indexed."""
-    from alibaba_cppfeaturestore_spark.streaming.pipeline import run_stream_near_dedup
-
-    base_a = "the quick brown fox jumps over the lazy dog " * 20
-    base_b = "completely different content about databases and engines " * 20
-    base_c = "a third novel document concerning streaming systems " * 20
-
-    src = os.path.join(workdir, "docs_src")
-    hist = os.path.join(workdir, "docs_history")
-    spark.createDataFrame(
-        [(1, base_a), (2, base_b)], ["doc_id", "text"]
-    ).coalesce(1).write.mode("overwrite").parquet(src)
-    spark.createDataFrame(
-        [
-            (10, base_a + " tiny suffix"),   # near-dup of doc 1 -> rejected
-            (11, base_c),                    # novel -> accepted
-            (12, base_c + " x"),             # near-dup within batch -> keep-first drops it
-        ],
-        ["doc_id", "text"],
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    run_stream_near_dedup(
-        stream, hist, os.path.join(workdir, "chk"),
-        num_hashes=32, bands=4, jaccard_threshold=0.7,
-    )
-    kept = {
-        r["id"] for r in spark.read.parquet(hist).select("id").distinct().collect()
-    }
-    assert kept == {1, 2, 11}
-
-
 def test_pii_redaction_shared_batch_and_stream(spark, workdir):
     """ST5 companion: the PII scrub is a pure column expression, so the
     SAME redact_pii call runs unchanged on a batch frame and inside a
@@ -437,46 +363,6 @@ def test_pii_redaction_shared_batch_and_stream(spark, workdir):
     q.processAllAvailable()
     q.stop()
     assert captured == batch_out
-
-
-def test_transform_with_state_running_count_across_batches(spark, workdir):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API): same
-    cross-batch accumulation contract as the applyInPandasWithState
-    tier. The TWS state-server protocol needs google.protobuf, which
-    this container lacks (same class of environment block as
-    delta-spark / Kafka) — skip rather than fail when absent; the
-    operator itself is import-clean either way."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from alibaba_cppfeaturestore_spark.streaming.pipeline import (
-        stateful_running_count_tws,
-    )
-
-    rows1 = [(1, ts("2024-01-01T10:00:00"), "view", 1.0),
-             (1, ts("2024-01-01T10:01:00"), "view", 1.0),
-             (2, ts("2024-01-01T10:02:00"), "click", 1.0)]
-    rows2 = [(1, ts("2024-01-01T11:00:00"), "view", 1.0),
-             (3, ts("2024-01-01T11:01:00"), "view", 1.0)]
-    src = os.path.join(workdir, "src_tws")
-    spark.createDataFrame(rows1, ["user_id", "ts", "event_type", "value"]) \
-        .coalesce(1).write.mode("overwrite").parquet(src)
-    spark.createDataFrame(rows2, ["user_id", "ts", "event_type", "value"]) \
-        .coalesce(1).write.mode("append").parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    counts = stateful_running_count_tws(stream, "user_id")
-    result = run_bounded_to_memory(counts, output_mode="update")
-    rows = result.collect()
-    final = {}
-    for r in rows:
-        final[r["user_id"]] = max(final.get(r["user_id"], 0), r["n_events"])
-    assert final == {1: 3, 2: 1, 3: 1}
-    u1 = sorted(r["n_events"] for r in rows if r["user_id"] == 1)
-    assert u1 == [2, 3], f"expected cross-batch accumulation, got {u1}"
 
 
 def test_kafka_source_option_contract():

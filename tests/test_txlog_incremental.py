@@ -351,16 +351,6 @@ def test_pagerank_fixedpoint_semantics(spark):
     assert sum(r.values()) <= 10**12
 
 
-def test_table_changes_between_versions(spark, tmp_path):
-    from alibaba_cppfeaturestore_spark.sources.txlog import TxTable, table_changes
-
-    t = TxTable(str(tmp_path / "t"))
-    t.commit(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), "append")
-    t.commit(spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string"), "overwrite")
-    ch = {r.k: r.op for r in table_changes(t, spark, 0, 1, ["k"]).collect()}
-    assert ch == {1: "delete", 2: "update", 3: "insert"}
-
-
 def test_txlog_optimize_compacts_preserving_rows_and_history(spark, tmp_path):
     import glob
     import os

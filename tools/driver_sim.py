@@ -658,7 +658,9 @@ def _plant_nulls(tbl: pa.Table, t: str, seed: int) -> pa.Table:
 
 def _reorder(tbl: pa.Table, t: str, seed: int) -> pa.Table:
     """Copy of the testdata with EVERY table's rows re-ordered by a
-    seeded permutation and rewritten in 4 row groups. Values are
+    seeded permutation and rewritten ``max(n // 4, 1)`` rows per row group
+    (4 groups when 4 divides the row count, 5 otherwise; one per row
+    below 4 rows). Values are
     untouched — any red row is a genuine physical-order sensitivity:
     ``first()`` / ``collect_list`` order, a non-total window order, or
     partition-boundary dependence. The driver's generator makes no
@@ -824,7 +826,7 @@ class Mode(NamedTuple):
     stem: str
     transforms: dict[str, Callable[[pa.Table, str, int], pa.Table]]
     seeded: bool = True  # False: the directory name carries no seed
-    row_groups: int = 0  # > 0: rewrite each table in that many row groups
+    row_groups: int = 0  # > 0: rewrite each table max(n // row_groups, 1) rows per row group
 
 
 # In stacking order: ``main()`` applies the requested modes top to bottom,
@@ -876,7 +878,7 @@ MODES: dict[str, Mode] = {m.flag: m for m in (
     Mode("--perturb-nulls", "NULL a seeded ~5%% of documents+events value columns "
          "+ embeddings.label, and ~2%% of the doc_id / vec_id keys",
          "nullperturbed", dict.fromkeys(_NULL_COLS, _plant_nulls)),
-    Mode("--perturb-order", "shuffle every table's row order (4 row groups)",
+    Mode("--perturb-order", "shuffle every table's row order (n//4 rows per row group)",
          "orderperturbed", dict.fromkeys(TABLES, _reorder), row_groups=4),
     Mode("--perturb-schema", "reverse column order + downcast custom ids to int32",
          "schemadrift", dict.fromkeys(TABLES, _schema_drift), seeded=False),
@@ -914,13 +916,14 @@ def _perturbed_copy(sf: str, out: str, mode: Mode, seed: int) -> str:
     return out
 
 
-def perturb(sf: str, flag: str, seed: int) -> str:
-    """The ``flag`` mode's perturbed copy of the testdata directory ``sf``
-    (written under /tmp, always overwritten); returns its path."""
+def perturb(sf: str, flag: str, seed: int, root: str = "/tmp") -> str:
+    """The ``flag`` mode's perturbed copy of the testdata directory ``sf``,
+    written as ``<root>/driver_sim_<stem>_…`` (always overwritten);
+    returns its path."""
     mode = MODES[flag]
     seed_tag = f"s{seed}_" if mode.seeded else ""
     return _perturbed_copy(
-        sf, f"/tmp/driver_sim_{mode.stem}_{seed_tag}{_src_tag(sf)}", mode, seed
+        sf, f"{root}/driver_sim_{mode.stem}_{seed_tag}{_src_tag(sf)}", mode, seed
     )
 
 
