@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,19 +58,25 @@ def _make_png(w: int, h: int) -> bytes:
     )
 
 
-def test_codec_capability_detection(spark):
-    # Two decode tiers, each pinned:
-    # - stub: the codec-less default reproduces the catalog oracle values;
-    # - Pillow: the default when importable; true dimensions from actual
-    #   image bytes, also through decode_media_metadata.
+def test_codec_capability_detection():
+    # The default decode tier follows what imports: the real Pillow codec
+    # where installed, else the stub that reproduces the catalog oracle
+    # values. The Pillow tier's own decode is test_pillow_decode_true_dimensions.
     from alibaba_cppfeaturestore_spark.operators import multimodal as MM
 
     if not MM.codec_available():
         assert MM.default_decode_fn() is MM._fake_decode
-        return  # Pillow tier runs only where installed — no skip needed
+    else:
+        assert MM.default_decode_fn() is MM.pil_decode
+
+
+def test_pillow_decode_true_dimensions(spark):
+    # True dimensions from actual image bytes, also through
+    # decode_media_metadata's default decoder.
+    pytest.importorskip("PIL")
+    from alibaba_cppfeaturestore_spark.operators import multimodal as MM
 
     png = _make_png(37, 21)
-    assert MM.default_decode_fn() is MM.pil_decode
     meta = MM.pil_decode(png)
     assert (meta["width"], meta["height"], meta["n_frames"]) == (37, 21, 1)
     schema = T.StructType(
