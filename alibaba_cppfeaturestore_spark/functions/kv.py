@@ -15,6 +15,9 @@ Merge semantics (``merge_feature_maps``) replicate Python ``dict.update``:
 the *right-most* map wins on key collisions (reference ``:80-82`` — common
 features override skeleton features). Conf-independent: works under any
 ``spark.sql.mapKeyDedupPolicy`` (duplicates are filtered before concat).
+
+``KV_PARSE_SQL``, ``kv_get_sql`` and ``kv_int_sql`` replay the parse in
+DuckDB for the oracles, built from the same regexes.
 """
 
 from __future__ import annotations
@@ -24,6 +27,8 @@ from pyspark.sql import functions as F
 
 # Control-byte separators of the Ali-CCP encoding (reference :70-73).
 KV_SPLIT_REGEX = "[\x01\x02\x03]"
+# The same class as DuckDB text: chr() keeps the control bytes out of SQL.
+KV_SPLIT_SQL = "'[' || " + " || ".join(f"chr({ord(c)})" for c in KV_SPLIT_REGEX[1:-1]) + " || ']'"
 
 
 def parse_kv_triplets(feat_list: Column | str) -> Column:
@@ -72,6 +77,25 @@ def parse_kv_triplets(feat_list: Column | str) -> Column:
     )
 
 
+# DuckDB twin of ``parse_kv_triplets``' framing, as the columns of a parse
+# CTE over a string column ``s``: split on the control bytes, key and
+# value strides, truncation to complete pairs. ``kv_get_sql`` reads it.
+KV_PARSE_SQL = f"""
+         string_split_regex(s, {KV_SPLIT_SQL}) AS toks,
+         list_filter(toks, (x, i) -> (i-1) % 3 = 0) AS ks,
+         list_filter(toks, (x, i) -> (i-1) % 3 = 1) AS vs,
+         least(len(ks), len(vs)) AS n"""
+
+
+def kv_get_sql(key: str) -> str:
+    """The parsed map's value for ``key`` over ``KV_PARSE_SQL``'s (ks, vs,
+    n): the last occurrence of a field_id wins, as in the map."""
+    return (
+        "vs[list_max(list_transform(generate_series(1, n), "
+        f"j -> CASE WHEN ks[j] = '{key}' THEN j END))]"
+    )
+
+
 # Strict integral-format gate: optional sign, digits, nothing else.
 # Shared Java∩RE2 subset (no lookaround, no unicode classes) so both
 # engines' regex semantics coincide — the text_pii_redact discipline.
@@ -99,10 +123,13 @@ def kv_int(value: Column) -> Column:
     engine-free answer: malformed → NULL (the reference's wide
     projection ran under Spark-2 non-ANSI cast semantics — NULL on bad
     input — so this also matches reference behavior,
-    ``batch_process_Bronze_to_Silver.py:206-300``). Oracle spelling:
-    ``CASE WHEN regexp_matches(v, '\\A[+-]?[0-9]+\\z') THEN
-    TRY_CAST(v AS INTEGER) END``."""
+    ``batch_process_Bronze_to_Silver.py:206-300``). Its DuckDB twin is
+    ``kv_int_sql``."""
     return F.when(F.regexp_like(value, F.lit(KV_INT_REGEX)), value.try_cast("int"))
+
+
+def kv_int_sql(v: str) -> str:
+    return f"(CASE WHEN regexp_matches({v}, '{KV_INT_REGEX}') THEN TRY_CAST({v} AS INTEGER) END)"
 
 
 def merge_feature_maps(*maps: Column) -> Column:

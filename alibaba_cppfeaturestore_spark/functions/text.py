@@ -6,6 +6,9 @@ token counting, quality scoring, language-ID heuristic, shingling and
 document fingerprinting. All are native column expressions (JVM-side,
 codegen) — no Python in the hot path — so they hold at 100 TB: a scan +
 per-row expressions, no shuffle.
+
+Each ``*_sql`` function is the DuckDB twin of the function it follows
+(over a SQL expression), built from the same constants.
 """
 
 from __future__ import annotations
@@ -41,6 +44,10 @@ def ws_trim(text: Column | str) -> Column:
     """Trim exactly the six portable whitespace chars from both ends."""
     col = F.col(text) if isinstance(text, str) else text
     return F.btrim(col, F.lit(WS_TRIM_CHARS))
+
+
+def ws_trim_sql(expr: str) -> str:
+    return f"TRIM({expr}, {WS_TRIM_SQL})"
 
 
 # ``lower()`` is NOT portable either (r10 full-BMP sweep, all ~63k
@@ -90,6 +97,10 @@ def tokens(text: Column | str) -> Column:
     return F.split(ws_trim(col), TOKEN_SPLIT_REGEX)
 
 
+def tokens_sql(expr: str) -> str:
+    return f"regexp_split_to_array({ws_trim_sql(expr)}, '{TOKEN_SPLIT_REGEX}')"
+
+
 def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
@@ -101,12 +112,30 @@ def punct_ratio(text: Column | str) -> Column:
     return puncts / F.greatest(F.length(col), F.lit(1))
 
 
+def punct_ratio_sql(expr: str) -> str:
+    punct = PUNCT_REGEX.replace("[^", "[")
+    return (
+        f"(LENGTH({expr}) - LENGTH(regexp_replace({expr}, '{punct}', '', 'g'))) "
+        f"/ GREATEST(LENGTH({expr}), 1)"
+    )
+
+
 def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:
     """Fraction of tokens that are (English) stopwords."""
     toks = tokens(text)
     sw = stopwords or STOPWORDS_EN
     hits = F.size(F.filter(toks, lambda x: x.isin(sw)))
     return hits / F.greatest(F.size(toks), F.lit(1))
+
+
+# ``STOPWORDS_EN`` as a DuckDB IN-list.
+STOPWORDS_SQL = "(" + ",".join(f"'{w}'" for w in STOPWORDS_EN) + ")"
+
+
+def stopword_ratio_sql(expr: str) -> str:
+    """Over ``STOPWORDS_EN``."""
+    t = tokens_sql(expr)
+    return f"LEN(list_filter({t}, x -> x IN {STOPWORDS_SQL})) / GREATEST(LEN({t}), 1)::DOUBLE"
 
 
 def quality_score(text: Column | str) -> Column:
@@ -119,16 +148,33 @@ def quality_score(text: Column | str) -> Column:
     return F.round(len_score * (1.0 - punct_penalty), 6)
 
 
+def quality_score_sql(expr: str) -> str:
+    return (
+        f"ROUND(LEAST(LEN({tokens_sql(expr)}) / 100.0, 1.0) * "
+        f"(1.0 - LEAST({punct_ratio_sql(expr)} * 5.0, 1.0)), 6)"
+    )
+
+
+# lang_id's labels and the least stopword ratio each needs; else "other".
+_LANG_CUTS = (("en", 0.15), ("mixed", 0.05))
+
+
 def lang_id(text: Column | str) -> Column:
     """Heuristic language ID: stopword-hit scoring with a deterministic
     fallback. Real corpora would use per-language stopword/ngram tables;
     the mechanism (token scoring → argmax → CASE) is the engine surface."""
     ratio = stopword_ratio(text)
-    return (
-        F.when(ratio >= 0.15, F.lit("en"))
-        .when(ratio >= 0.05, F.lit("mixed"))
-        .otherwise(F.lit("other"))
-    )
+    (first, first_cut), *rest = _LANG_CUTS
+    label = F.when(ratio >= first_cut, F.lit(first))
+    for lang, cut in rest:
+        label = label.when(ratio >= cut, F.lit(lang))
+    return label.otherwise(F.lit("other"))
+
+
+def lang_id_sql(ratio: str) -> str:
+    """Over ``ratio``, a column holding the text's ``stopword_ratio_sql``."""
+    whens = " ".join(f"WHEN {ratio} >= {cut} THEN '{lang}'" for lang, cut in _LANG_CUTS)
+    return f"CASE {whens} ELSE 'other' END"
 
 
 def char_shingles(text: Column | str, n: int = 5) -> Column:
@@ -171,13 +217,27 @@ def token_shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
+def _fingerprint_text(col: Column) -> Column:
+    """What the fingerprints hash: each whitespace run one space, lowered."""
+    return portable_lower(F.regexp_replace(ws_trim(col), TOKEN_SPLIT_REGEX, " "))
+
+
+def fingerprint_text_sql(expr: str) -> str:
+    return portable_lower_sql(
+        f"regexp_replace({ws_trim_sql(expr)}, '{TOKEN_SPLIT_REGEX}', ' ', 'g')"
+    )
+
+
 def fingerprint_md5(text: Column | str) -> Column:
     """128-bit portable fingerprint: md5 hex over the whitespace-normalized,
     lowercased text. md5 exists in every SQL engine (Spark, DuckDB, Trino,
     Postgres), so cross-engine dedup ledgers interoperate."""
     col = F.col(text) if isinstance(text, str) else text
-    normalized = portable_lower(F.regexp_replace(ws_trim(col), TOKEN_SPLIT_REGEX, " "))
-    return F.md5(normalized)
+    return F.md5(_fingerprint_text(col))
+
+
+def fingerprint_md5_sql(expr: str) -> str:
+    return f"md5({fingerprint_text_sql(expr)})"
 
 
 def clean_text(text: Column | str) -> Column:
@@ -229,7 +289,7 @@ def winnow_fingerprints(
     per byte).
     """
     col = F.col(text) if isinstance(text, str) else text
-    normalized = portable_lower(F.regexp_replace(ws_trim(col), TOKEN_SPLIT_REGEX, " "))
+    normalized = _fingerprint_text(col)
     if portable:
         gram_hash = lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")  # noqa: E731
     else:
@@ -264,6 +324,19 @@ def winnow_fingerprints(
 PII_EMAIL_REGEX = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PII_IPV4_REGEX = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 PII_PHONE_REGEX = r"\+?[0-9][0-9()\- \t\n\r\f\x0B]{6,}[0-9]"
+_PII_RULES = ((PII_EMAIL_REGEX, "<EMAIL>"), (PII_IPV4_REGEX, "<IP>"), (PII_PHONE_REGEX, "<PHONE>"))
+
+
+def _redact(c: Column, rules) -> Column:
+    for pattern, token in rules:
+        c = F.regexp_replace(c, pattern, token)
+    return c
+
+
+def _redact_sql(expr: str, rules) -> str:
+    for pattern, token in rules:
+        expr = f"regexp_replace({expr}, '{pattern}', '{token}', 'g')"
+    return expr
 
 
 def redact_pii(text: Column | str) -> Column:
@@ -272,30 +345,34 @@ def redact_pii(text: Column | str) -> Column:
     ``regexp_replace`` chain: runs in the scan stage, no UDF, no shuffle;
     at 100 TB this is embarrassingly parallel and whole-stage-codegen'd."""
     c = F.col(text) if isinstance(text, str) else text
-    c = F.regexp_replace(c, PII_EMAIL_REGEX, "<EMAIL>")
-    c = F.regexp_replace(c, PII_IPV4_REGEX, "<IP>")
-    c = F.regexp_replace(c, PII_PHONE_REGEX, "<PHONE>")
-    return c
+    return _redact(c, _PII_RULES)
+
+
+def redact_pii_sql(expr: str) -> str:
+    return _redact_sql(expr, _PII_RULES)
 
 
 def pii_counts(text: Column | str) -> tuple[Column, Column, Column]:
     """Per-document match counts (email, ipv4, phone) for audit reports —
-    counted on the PRE-redaction text with the same shared patterns."""
+    counted on the PRE-redaction text with the same shared patterns;
+    phones after the emails and IPv4s are redacted."""
     c = F.col(text) if isinstance(text, str) else text
     return (
         F.size(F.regexp_extract_all(c, F.lit(PII_EMAIL_REGEX), F.lit(0))),
         F.size(F.regexp_extract_all(c, F.lit(PII_IPV4_REGEX), F.lit(0))),
         F.size(
             F.regexp_extract_all(
-                F.regexp_replace(
-                    F.regexp_replace(c, PII_EMAIL_REGEX, "<EMAIL>"),
-                    PII_IPV4_REGEX,
-                    "<IP>",
-                ),
-                F.lit(PII_PHONE_REGEX),
-                F.lit(0),
+                _redact(c, _PII_RULES[:2]), F.lit(PII_PHONE_REGEX), F.lit(0)
             )
         ),
+    )
+
+
+def pii_counts_sql(expr: str) -> tuple[str, str, str]:
+    return (
+        f"LEN(regexp_extract_all({expr}, '{PII_EMAIL_REGEX}'))",
+        f"LEN(regexp_extract_all({expr}, '{PII_IPV4_REGEX}'))",
+        f"LEN(regexp_extract_all({_redact_sql(expr, _PII_RULES[:2])}, '{PII_PHONE_REGEX}'))",
     )
 
 
@@ -347,6 +424,11 @@ def bpe_pretokens(text: Column | str) -> Column:
     BPE token count far better than whitespace words."""
     text = F.col(text) if isinstance(text, str) else text
     return F.regexp_extract_all(text, F.lit(BPE_PRETOKEN_PATTERN), 0)
+
+
+def bpe_pretokens_sql(expr: str) -> str:
+    pattern = BPE_PRETOKEN_PATTERN.replace("'", "''")
+    return f"regexp_extract_all({expr}, '{pattern}')"
 
 
 def chunk_tokens(

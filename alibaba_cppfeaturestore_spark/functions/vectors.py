@@ -34,6 +34,12 @@ def is_finite_vector(v: Column) -> Column:
     )
 
 
+def is_finite_vector_sql(v: str) -> str:
+    """DuckDB twin of ``is_finite_vector``. ``x IS NULL`` mirrors its
+    isNotNull: DuckDB's list_filter drops elements whose predicate is NULL."""
+    return f"len(list_filter({v}, x -> x IS NULL OR NOT isfinite(x))) = 0"
+
+
 def finite_vector(v: Column) -> Column:
     """FINITE-DOMAIN ingestion policy for embedding columns: the vector
     itself when every component is finite, else NULL. A NaN/±Inf
@@ -41,7 +47,7 @@ def finite_vector(v: Column) -> Column:
     → NaN/Inf, cosine → engine-accident), so such a vector is one
     corrupt MEASUREMENT and becomes missing — the same policy the
     decimal ingestion points pin for scalar doubles
-    (plans/catalog._dec_value). The measured cross-engine mechanism
+    (functions/finite.finite_decimal). The measured cross-engine mechanism
     (NOT a comparison disagreement — both engines treat NaN as greatest
     and NaN >= 0 as true): DuckDB's list_cosine_similarity clamps to
     [-1, 1] and returns -1.0 for non-finite inputs, while these explicit
@@ -49,12 +55,7 @@ def finite_vector(v: Column) -> Column:
     FIRST — a corrupt vector dominates every Spark top-k and silently
     sinks in DuckDB's. Extreme-but-finite magnitudes (±3e38,
     the float32 edge) are in-domain: double accumulation handles them
-    exactly. Oracle spelling:
-    ``CASE WHEN len(list_filter(v, x -> x IS NULL OR NOT isfinite(x))) = 0
-    THEN v END`` — the ``x IS NULL`` leg mirrors the Spark predicate's
-    isNotNull (DuckDB's list_filter drops NULL-predicate elements, so
-    without it a NULL component would be silently kept; DuckDB's
-    isfinite is false for NaN and ±Inf alike)."""
+    exactly. The oracles filter on ``is_finite_vector_sql``."""
     return F.when(is_finite_vector(v), v)
 
 

@@ -162,25 +162,8 @@ def bronze_to_silver(
     return wide
 
 
-GOLD_SELECT_COLUMNS: list[str] = [
-    "user_id",
-    "item_id",
-    "item_category",
-    "item_shop",
-    "item_brand",
-    "user_shops",
-    "user_profile",
-    "user_group",
-    "user_gender",
-    "user_age",
-    "user_consumption_2",
-    "user_is_occupied",
-    "user_geography",
-    "user_intentions",
-    "user_brands",
-    "user_categories",
-    "click",
-]
+# The Gold projection: the categorified columns and the label.
+GOLD_SELECT_COLUMNS: list[str] = [*CATEGORIFY_COLUMNS, "click"]
 
 
 def silver_to_gold(

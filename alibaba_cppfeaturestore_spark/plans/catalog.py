@@ -44,7 +44,13 @@ from ..functions.finite import (
     finite_double,
     finite_double_sql,
 )
-from ..functions.kv import merge_feature_maps, parse_kv_triplets
+from ..functions.kv import (
+    KV_PARSE_SQL,
+    kv_get_sql,
+    kv_int_sql,
+    merge_feature_maps,
+    parse_kv_triplets,
+)
 from ..operators import dedup as DD
 from ..operators import graph as GR
 from ..operators import similarity as SIM
@@ -124,28 +130,31 @@ def _key_is_unique(df: DataFrame, sf_dir: str, table: str, col: str) -> bool:
     return memo(df.sparkSession, [f"{sf_dir.rstrip('/')}/{table}.parquet"], ("key_unique", col), probe)
 
 
+def _canonical(
+    spark: SparkSession, sf_dir: str, table: str, key: str, ties: list, ties_if_present=()
+) -> DataFrame:
+    """Spark twin of a ``_*_UNIQUE_SQL`` CTE: the first row per ``key``
+    by ``ties``, then by each ``ties_if_present`` column the table has,
+    all ascending with NULLs first. When the NDV probe shows ``key`` is
+    already unique the window is skipped outright (it would be the
+    identity); the DuckDB oracle keeps the full window spelling, which
+    reduces to the same rows on the same data."""
+    d = _t(spark, sf_dir, table)
+    if _key_is_unique(d, sf_dir, table, key):
+        return d
+    order = ties + [c for c in ties_if_present if c in d.columns]
+    w = Window.partitionBy(key).orderBy(*[F.asc_nulls_first(c) for c in order])
+    return d.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+
+
 def _docs_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of ``_DOCS_UNIQUE_SQL`` (same keys, same null order).
     Tiebreak columns beyond md5(text) are applied only when present so
     tests can feed reduced-schema documents tables; rows tied on
     md5(text) have identical text, so dropping an absent tiebreak never
-    changes which content survives. When the NDV probe shows doc_id is
-    already unique the window is skipped outright (it would be the
-    identity); the DuckDB oracle keeps the full window spelling, which
-    reduces to the same rows on the same data."""
-    d = _t(spark, sf_dir, "documents")
-    if _key_is_unique(d, sf_dir, "documents", "doc_id"):
-        return d
-    keys = [F.asc_nulls_first(F.md5("text"))]
-    for c in ("lang", "source", "n_chars"):
-        if c in d.columns:
-            keys.append(F.asc_nulls_first(c))
-    w = Window.partitionBy("doc_id").orderBy(*keys)
-    return (
-        d.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    changes which content survives."""
+    ties_if_present = ("lang", "source", "n_chars")
+    return _canonical(spark, sf_dir, "documents", "doc_id", [F.md5("text")], ties_if_present)
 
 
 # Same contract for the other custom table: one row per vec_id, chosen
@@ -169,14 +178,13 @@ _EMB_UNIQUE_SQL = """embeddings_u AS (
 # similarity (dot/norm/cosine become engine accidents), so the ROW is a
 # corrupt measurement and is excluded — the vector sibling of
 # finite_decimal/finite_double. NULL vectors are excluded by the same
-# predicate on both engines (NULL comparison -> not kept). DuckDB's
-# isfinite() is false for NaN and ±Inf alike; ±3e38 (float32 extremes)
-# stay in-domain — double accumulation handles them exactly.
-_EMB_FINITE_WHERE = "len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0"
+# predicate on both engines (NULL comparison -> not kept); ±3e38
+# (float32 extremes) stay in-domain — double accumulation handles them
+# exactly. Oracles filter on V.is_finite_vector_sql("embedding").
 
 
 def _emb_finite(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Spark twin of ``_EMB_FINITE_WHERE`` (see comment above)."""
+    """The rows whose vector is finite (see comment above)."""
     return df.where(V.is_finite_vector(F.col(vec_col)))
 
 
@@ -203,8 +211,7 @@ _EVENTS_UNIQUE_SQL = """events_u AS (
 
 def _events_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of ``_EVENTS_UNIQUE_SQL`` (same keys, same null
-    order). Skipped outright (identity) when the NDV probe shows
-    event_id is already unique — see ``_key_is_unique``.
+    order).
 
     The full events schema (props included) is REQUIRED — every caller
     reads the generator's table via ``_t``. A presence guard here once
@@ -212,42 +219,17 @@ def _events_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduced-schema inputs, an asymmetry the shared-contract test could
     never catch (r09 advice); the twins now fail loudly together
     instead of silently diverging."""
-    e = _t(spark, sf_dir, "events")
-    if _key_is_unique(e, sf_dir, "events", "event_id"):
-        return e
-    keys = [
-        F.asc_nulls_first("ts"),
-        F.asc_nulls_first("user_id"),
-        F.asc_nulls_first("event_type"),
-        F.asc_nulls_first("value"),
-        F.asc_nulls_first(F.md5("props")),
-    ]
-    w = Window.partitionBy("event_id").orderBy(*keys)
-    return (
-        e.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    ties = ["ts", "user_id", "event_type", "value", F.md5("props")]
+    return _canonical(spark, sf_dir, "events", "event_id", ties)
 
 
 def _emb_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of ``_EMB_UNIQUE_SQL`` (same keys, same null order).
     ``label`` is applied only when present (reduced-schema test tables);
     rows tied on the full vector are interchangeable for every consumer
-    downstream of the canonicalization. Skipped entirely (identity) when
-    the NDV probe shows vec_id is unique — see ``_key_is_unique``."""
-    e = _t(spark, sf_dir, "embeddings")
-    if _key_is_unique(e, sf_dir, "embeddings", "vec_id"):
-        return e
-    keys = [F.asc_nulls_first(F.col("embedding").cast("array<double>"))]
-    if "label" in e.columns:
-        keys.append(F.asc_nulls_first("label"))
-    w = Window.partitionBy("vec_id").orderBy(*keys)
-    return (
-        e.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    downstream of the canonicalization."""
+    ties = [F.col("embedding").cast("array<double>")]
+    return _canonical(spark, sf_dir, "embeddings", "vec_id", ties, ("label",))
 
 
 # ---------------------------------------------------------------------------
@@ -1631,43 +1613,11 @@ def set_except_keys(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# --- DuckDB replay of the kv parser (r12 --perturb-kv campaign) --------
-# The kv entries now thread a RAW DATA-DRIVEN FRAGMENT (the TPC-H comment
-# columns) into the constructed feat_list, so the oracle can no longer
-# shortcut to the relational inputs — it must replay the parse itself:
-# split on the three control bytes, frame tokens as (key, value, weight)
-# strides, truncate to complete pairs, last occurrence of a field_id
-# wins (parse_kv_triplets' dict-build semantics). On vanilla data a
-# comment is one separator-free token at a key slot — dropped by the
-# truncation — so these oracles degenerate to the old relational ones.
-_KV_SEP_SQL = "'[' || chr(1) || chr(2) || chr(3) || ']'"
-# the parse CTE columns: toks -> ks/vs (stride filter) -> n (truncation)
-_KV_TOK_SQL = f"""
-         string_split_regex(s, {_KV_SEP_SQL}) AS toks,
-         list_filter(toks, (x, i) -> (i-1) % 3 = 0) AS ks,
-         list_filter(toks, (x, i) -> (i-1) % 3 = 1) AS vs,
-         least(len(ks), len(vs)) AS n"""
-
-
-def _kv_get_sql(key: str) -> str:
-    """Last-win lookup of ``key`` over the parse CTE's (ks, vs, n)."""
-    idx = (
-        "list_max(list_transform(generate_series(1, n), "
-        f"j -> CASE WHEN ks[j] = '{key}' THEN j END))"
-    )
-    return f"vs[{idx}]"
-
-
-def _kv_int_sql(v: str) -> str:
-    """functions/kv.kv_int's oracle spelling: strict integral-format
-    strings only, else NULL (the engines' native string→int casts
-    disagree on '12.5' / '1e3' / '0x1A'). \\A/\\z anchors, not ^/$
-    (r12 advice): Java '$' matches before a final newline, RE2 '$'
-    does not — \\A/\\z are end-of-text in both engines."""
-    return (
-        f"(CASE WHEN regexp_matches({v}, '\\A[+-]?[0-9]+\\z') "
-        f"THEN TRY_CAST({v} AS INTEGER) END)"
-    )
+# The kv entries thread a RAW DATA-DRIVEN FRAGMENT (a TPC-H text column)
+# into the constructed feat_list (r12 --perturb-kv campaign), so their
+# oracles replay the parse itself (KV_PARSE_SQL, kv_get_sql, kv_int_sql).
+# On vanilla data the fragment is one separator-free token at a key slot,
+# dropped by the truncation.
 
 
 @_q(
@@ -1688,12 +1638,12 @@ def _kv_int_sql(v: str) -> str:
       FROM orders WHERE o_orderkey % 10 = 0
     ),
     tok AS (
-      SELECT sample_id,{_KV_TOK_SQL}
+      SELECT sample_id,{KV_PARSE_SQL}
       FROM enc
     )
     SELECT sample_id,
-           {_kv_int_sql(_kv_get_sql('101'))} AS user_id,
-           {_kv_int_sql(_kv_get_sql('205'))} AS price_feature
+           {kv_int_sql(kv_get_sql('101'))} AS user_id,
+           {kv_int_sql(kv_get_sql('205'))} AS price_feature
     FROM tok
     """,
 )
@@ -1907,15 +1857,15 @@ def online_lookup_latest_features(spark, sf_dir):
 
 @_q(
     "text_stats",
-    r"""
+    rf"""
     SELECT doc_id,
-           CAST(LEN(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS INTEGER) AS n_tokens,
+           CAST(LEN({TX.tokens_sql('text')}) AS INTEGER) AS n_tokens,
            CAST(LEN(regexp_extract_all(text, '[a-z0-9]+')) AS INTEGER) AS n_regex_tokens,
-           ROUND(LENGTH(regexp_replace(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]', '', 'g'))
-                 / GREATEST(LEN(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')), 1), 6) AS avg_token_len,
-           ROUND(LEN(list_filter(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+'),
-                                 x -> x IN ('the','a','and','of','to','in','is','it','that','for')))
-                 / GREATEST(LEN(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')), 1), 6) AS stopword_ratio
+           ROUND(LENGTH(regexp_replace({TX.ws_trim_sql('text')}, '{TX.WS_CLASS}', '', 'g'))
+                 / GREATEST(LEN({TX.tokens_sql('text')}), 1), 6) AS avg_token_len,
+           ROUND(LEN(list_filter({TX.tokens_sql('text')},
+                                 x -> x IN {TX.STOPWORDS_SQL}))
+                 / GREATEST(LEN({TX.tokens_sql('text')}), 1), 6) AS stopword_ratio
     FROM documents
     """,
 )
@@ -1929,7 +1879,7 @@ def text_stats(spark, sf_dir):
         n_tok.alias("n_tokens"),
         F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z0-9]+"), 0)).alias("n_regex_tokens"),
         F.round(
-            F.length(F.regexp_replace(TX.ws_trim("text"), r"[ \t\n\r\f\x0B]", ""))
+            F.length(F.regexp_replace(TX.ws_trim("text"), TX.WS_CLASS, ""))
             / F.greatest(n_tok, F.lit(1)),
             6,
         ).alias("avg_token_len"),
@@ -1939,12 +1889,9 @@ def text_stats(spark, sf_dir):
 
 @_q(
     "text_quality_filter",
-    r"""
+    rf"""
     WITH scored AS (
-      SELECT doc_id, lang,
-             ROUND(LEAST(LEN(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) / 100.0, 1.0) *
-                   (1.0 - LEAST((LENGTH(text) - LENGTH(regexp_replace(text, '[.,;:!?]', '', 'g')))
-                                / GREATEST(LENGTH(text), 1) * 5.0, 1.0)), 6) AS quality
+      SELECT doc_id, lang, {TX.quality_score_sql('text')} AS quality
       FROM documents
     )
     SELECT doc_id, lang, quality FROM scored WHERE quality >= 0.5
@@ -1961,18 +1908,12 @@ def text_quality_filter(spark, sf_dir):
 
 @_q(
     "lang_id_heuristic",
-    r"""
+    rf"""
     WITH r AS (
-      SELECT doc_id, lang,
-             LEN(list_filter(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+'),
-                             x -> x IN ('the','a','and','of','to','in','is','it','that','for')))
-             / GREATEST(LEN(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')), 1)::DOUBLE AS ratio
+      SELECT doc_id, lang, {TX.stopword_ratio_sql('text')} AS ratio
       FROM documents
     )
-    SELECT doc_id, lang,
-           CASE WHEN ratio >= 0.15 THEN 'en'
-                WHEN ratio >= 0.05 THEN 'mixed'
-                ELSE 'other' END AS lang_pred
+    SELECT doc_id, lang, {TX.lang_id_sql('ratio')} AS lang_pred
     FROM r
     """,
 )
@@ -1993,7 +1934,7 @@ def _docs_with_duplicates(spark, sf_dir):
 
 @_q(
     "text_pii_redact",
-    r"""
+    rf"""
     WITH synth AS (
       SELECT doc_id,
              CASE WHEN doc_id % 5 = 0 THEN
@@ -2004,19 +1945,10 @@ def _docs_with_duplicates(spark, sf_dir):
       FROM documents
     )
     SELECT doc_id,
-           regexp_replace(regexp_replace(regexp_replace(text,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-               '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
-               '\+?[0-9][0-9()\- \t\n\r\f\x0B]{6,}[0-9]', '<PHONE>', 'g') AS redacted,
-           CAST(LEN(regexp_extract_all(text,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INTEGER) AS n_email,
-           CAST(LEN(regexp_extract_all(text,
-               '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS INTEGER) AS n_ip,
-           CAST(LEN(regexp_extract_all(
-               regexp_replace(regexp_replace(text,
-                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                   '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
-               '\+?[0-9][0-9()\- \t\n\r\f\x0B]{6,}[0-9]')) AS INTEGER) AS n_phone
+           {TX.redact_pii_sql('text')} AS redacted,
+           CAST({TX.pii_counts_sql('text')[0]} AS INTEGER) AS n_email,
+           CAST({TX.pii_counts_sql('text')[1]} AS INTEGER) AS n_ip,
+           CAST({TX.pii_counts_sql('text')[2]} AS INTEGER) AS n_phone
     FROM synth
     """,
 )
@@ -2060,9 +1992,9 @@ def text_pii_redact(spark, sf_dir):
 
 @_q(
     "text_repetition_rules",
-    r"""
+    rf"""
     WITH t AS (
-      SELECT doc_id, regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+') AS toks FROM documents
+      SELECT doc_id, {TX.tokens_sql('text')} AS toks FROM documents
     ),
     m AS (
       SELECT doc_id, CAST(LEN(toks) AS INTEGER) AS word_count,
@@ -2108,9 +2040,9 @@ def text_repetition_rules(spark, sf_dir):
 
 @_q(
     "contamination_ngram_overlap",
-    r"""
+    rf"""
     WITH t AS (
-      SELECT doc_id, regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+') AS toks FROM documents
+      SELECT doc_id, {TX.tokens_sql('text')} AS toks FROM documents
     ),
     s AS (
       SELECT doc_id,
@@ -2219,10 +2151,10 @@ def dedup_exact(spark, sf_dir):
 
 @_q(
     "dedup_ngram_jaccard",
-    r"""
+    rf"""
     WITH t AS (
       SELECT doc_id, lang,
-             list_distinct(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS tokset
+             list_distinct({TX.tokens_sql('text')}) AS tokset
       FROM documents
     )
     SELECT * FROM (
@@ -2244,10 +2176,10 @@ def dedup_ngram_jaccard(spark, sf_dir):
 
 @_q(
     "dedup_clusters",
-    "WITH RECURSIVE " + _DOCS_UNIQUE_SQL + r""",
+    "WITH RECURSIVE " + _DOCS_UNIQUE_SQL + rf""",
     t AS MATERIALIZED (
       SELECT doc_id,
-             list_distinct(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS tokset
+             list_distinct({TX.tokens_sql('text')}) AS tokset
       FROM documents_u
     ),
     pairs AS MATERIALIZED (
@@ -2384,10 +2316,10 @@ def dedup_minhash_lsh(spark, sf_dir):
     "dedup_ngram_jaccard_indexed",
     # headline: the oracle-checked scale-path dedup (prefix-filtered
     # set-similarity join); replaced oracle-less winnow in the bench set.
-    "WITH " + _DOCS_UNIQUE_SQL + r""",
+    "WITH " + _DOCS_UNIQUE_SQL + rf""",
     t AS (
       SELECT doc_id,
-             list_distinct(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS tokset
+             list_distinct({TX.tokens_sql('text')}) AS tokset
       FROM documents_u
     )
     SELECT * FROM (
@@ -2452,14 +2384,14 @@ def dedup_minhash_incremental(spark, sf_dir):
 
 @_q(
     "dedup_simhash",
-    "WITH " + _DOCS_UNIQUE_SQL + r""",
+    "WITH " + _DOCS_UNIQUE_SQL + rf""",
     corpus AS (
       SELECT doc_id, text FROM documents_u
       UNION ALL
       SELECT doc_id + 1000000 AS doc_id, text || ' zz' AS text FROM documents_u
     ),
     toks AS (
-      SELECT doc_id AS id, UNNEST(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS tok
+      SELECT doc_id AS id, UNNEST({TX.tokens_sql('text')}) AS tok
       FROM corpus
     ),
     h AS (SELECT id, CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) AS h FROM toks),
@@ -2518,9 +2450,7 @@ def dedup_simhash(spark, sf_dir):
     norm AS (
       -- portable_lower spelling (r10 full-BMP sweep): bare lower()
       -- diverges on 15 codepoints, see functions/text.py
-      SELECT doc_id, """ + TX.portable_lower_sql(
-        r"regexp_replace(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+', ' ', 'g')"
-    ) + r""" AS s
+      SELECT doc_id, """ + TX.fingerprint_text_sql("text") + r""" AS s
       FROM corpus
     ),
     grams AS (
@@ -2586,13 +2516,9 @@ def dedup_winnow_containment(spark, sf_dir):
 
 @_q(
     "doc_fingerprint",
-    # portable_lower spelling (r10 full-BMP sweep): bare lower()
-    # diverges on 15 codepoints, see functions/text.py
-    r"""
+    f"""
     SELECT doc_id,
-           md5(""" + TX.portable_lower_sql(
-        r"regexp_replace(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+', ' ', 'g')"
-    ) + r""") AS fingerprint
+           {TX.fingerprint_md5_sql('text')} AS fingerprint
     FROM documents
     """,
 )
@@ -2610,8 +2536,8 @@ def doc_fingerprint(spark, sf_dir):
     "ann_brute_force_topk",
     """
     WITH ef AS (
-      -- finite-domain vectors only (see _EMB_FINITE_WHERE)
-      SELECT * FROM embeddings WHERE """ + _EMB_FINITE_WHERE + """
+      -- finite-domain vectors only (see is_finite_vector_sql)
+      SELECT * FROM embeddings WHERE """ + V.is_finite_vector_sql("embedding") + """
     ),
     q AS (SELECT vec_id AS query_id, embedding FROM ef WHERE vec_id < 5)
     SELECT q.query_id, c.vec_id AS neighbor_id,
@@ -2653,9 +2579,9 @@ def _lsh_buckets_sql() -> str:
     )
     return f"""
     WITH {_EMB_UNIQUE_SQL},
-    -- finite-domain vectors only (see _EMB_FINITE_WHERE)
+    -- finite-domain vectors only (see is_finite_vector_sql)
     e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings_u
-          WHERE {_EMB_FINITE_WHERE}),
+          WHERE {V.is_finite_vector_sql('embedding')}),
     b AS (
       SELECT e.vec_id, p.tbl,
              CAST(SUM(CASE WHEN list_dot_product(e.v, CAST(p.w AS DOUBLE[])) >= 0
@@ -2700,8 +2626,8 @@ def ann_lsh_bucketed_topk(spark, sf_dir):
     "embedding_threshold_pairs",
     """
     WITH ef AS (
-      -- finite-domain vectors only (see _EMB_FINITE_WHERE)
-      SELECT * FROM embeddings WHERE """ + _EMB_FINITE_WHERE + """
+      -- finite-domain vectors only (see is_finite_vector_sql)
+      SELECT * FROM embeddings WHERE """ + V.is_finite_vector_sql("embedding") + """
     )
     SELECT * FROM (
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -2727,16 +2653,16 @@ def embedding_threshold_pairs(spark, sf_dir):
       -- vector can neither form pairs (NULL < x is never true) nor
       -- carry a cluster label anyone can reference, and NULL = NULL
       -- comparisons make its is_canonical flag engine-dependent
-      -- finite-domain vectors only (see _EMB_FINITE_WHERE): a NaN/Inf
+      -- finite-domain vectors only (see is_finite_vector_sql): a NaN/Inf
       -- component makes the pair cosine an engine accident
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
       FROM embeddings WHERE vec_id IS NOT NULL
-        AND """ + _EMB_FINITE_WHERE + """
+        AND """ + V.is_finite_vector_sql("embedding") + """
       UNION ALL
       SELECT vec_id + 100000, label,
              list_transform(CAST(embedding AS DOUBLE[]), x -> x * 2.0)
       FROM embeddings WHERE vec_id < 25
-        AND """ + _EMB_FINITE_WHERE + """
+        AND """ + V.is_finite_vector_sql("embedding") + """
     ),
     pairs AS (
       SELECT * FROM (
@@ -4678,11 +4604,11 @@ def stream_interval_join_attribution(spark, sf_dir):
       FROM orders WHERE o_orderkey % 5 = 0
     ),
     skelf AS (SELECT * FROM skel WHERE NOT (click = '0' AND conversion = '1')),
-    stok AS (SELECT sample_id, click, conversion, cfi,{_KV_TOK_SQL} FROM skelf),
+    stok AS (SELECT sample_id, click, conversion, cfi,{KV_PARSE_SQL} FROM skelf),
     smap AS (
       SELECT sample_id, click, conversion, cfi,
-             {_kv_get_sql('101')} AS s101, {_kv_get_sql('122')} AS s122,
-             {_kv_get_sql('205')} AS s205, {_kv_get_sql('301')} AS s301
+             {kv_get_sql('101')} AS s101, {kv_get_sql('122')} AS s122,
+             {kv_get_sql('205')} AS s205, {kv_get_sql('301')} AS s301
       FROM stok
     ),
     comm AS (
@@ -4693,20 +4619,20 @@ def stream_interval_join_attribution(spark, sf_dir):
                c_name) AS s
       FROM customer
     ),
-    ctok AS (SELECT str_key,{_KV_TOK_SQL} FROM comm),
+    ctok AS (SELECT str_key,{KV_PARSE_SQL} FROM comm),
     cmap AS (
       SELECT str_key,
-             {_kv_get_sql('101')} AS c101, {_kv_get_sql('122')} AS c122,
-             {_kv_get_sql('205')} AS c205, {_kv_get_sql('301')} AS c301
+             {kv_get_sql('101')} AS c101, {kv_get_sql('122')} AS c122,
+             {kv_get_sql('205')} AS c205, {kv_get_sql('301')} AS c301
       FROM ctok
     )
     SELECT s.sample_id,
-           {_kv_int_sql("COALESCE(c.c101, s.s101)")} AS user_id,
-           {_kv_int_sql("COALESCE(c.c122, s.s122)")} AS user_group,
-           {_kv_int_sql("COALESCE(c.c205, s.s205)")} AS item_id,
-           {_kv_int_sql("COALESCE(c.c301, s.s301)")} AS position,
-           {_kv_int_sql("s.click")} AS click,
-           {_kv_int_sql("s.conversion")} AS conversion
+           {kv_int_sql("COALESCE(c.c101, s.s101)")} AS user_id,
+           {kv_int_sql("COALESCE(c.c122, s.s122)")} AS user_group,
+           {kv_int_sql("COALESCE(c.c205, s.s205)")} AS item_id,
+           {kv_int_sql("COALESCE(c.c301, s.s301)")} AS position,
+           {kv_int_sql("s.click")} AS click,
+           {kv_int_sql("s.conversion")} AS conversion
     FROM smap s LEFT JOIN cmap c ON s.cfi = c.str_key
     """,
 )
@@ -5036,10 +4962,10 @@ def corpus_mixture_resample(spark, sf_dir):
 
 @_q(
     "sequence_packing_plan",
-    r"""
+    rf"""
     WITH t AS (
       SELECT doc_id, doc_id % 8 AS shard,
-             CAST(LEN(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS BIGINT) AS n_tokens,
+             CAST(LEN({TX.tokens_sql('text')}) AS BIGINT) AS n_tokens,
              md5(text) AS tie
       FROM documents
     ),
@@ -5145,7 +5071,7 @@ def sample_stratified(spark, sf_dir):
 
 @_q(
     "text_clean_normalize",
-    r"""
+    rf"""
     SELECT doc_id,
            TRIM(regexp_replace(
              regexp_replace(
@@ -5153,8 +5079,8 @@ def sample_stratified(spark, sf_dir):
                  regexp_replace('<p class="x">' || text || '</p>' || chr(9) || ' trailing',
                                 '<[^>]*>', ' ', 'g'),
                  '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-               '[\x{00A0}\x{2000}-\x{200B}\x{3000}]', ' ', 'g'),
-             '[ \t\n\r\f\x0B]+', ' ', 'g'), ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)) AS text
+               '[\x{{00A0}}\x{{2000}}-\x{{200B}}\x{{3000}}]', ' ', 'g'),
+             '{TX.TOKEN_SPLIT_REGEX}', ' ', 'g'), {TX.WS_TRIM_SQL}) AS text
     FROM documents
     """,
 )
@@ -5307,10 +5233,10 @@ def multimodal_embed_topk(spark, sf_dir):
     "ann_quantized_topk",
     """
     WITH e AS (
-      -- finite-domain vectors only (see _EMB_FINITE_WHERE): a NaN amax
+      -- finite-domain vectors only (see is_finite_vector_sql): a NaN amax
       -- poisons the whole vector's int8 quantization
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-      WHERE """ + _EMB_FINITE_WHERE + """
+      WHERE """ + V.is_finite_vector_sql("embedding") + """
     ),
     a AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS amax FROM e),
     qt AS (
@@ -5380,7 +5306,7 @@ def _ann_ivf_greedy_sql(nlist: int = 16, cap: int = 16384, nprobe: int = 4,
     return (
         "WITH " + _EMB_UNIQUE_SQL + """,
     e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings_u
-          WHERE vec_id IS NOT NULL AND """ + _EMB_FINITE_WHERE + f"""),
+          WHERE vec_id IS NOT NULL AND """ + V.is_finite_vector_sql("embedding") + f"""),
     a AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS amax FROM e),
     qt AS MATERIALIZED (
       SELECT vec_id,
@@ -6462,7 +6388,7 @@ _BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     "bm25_topk_retrieval",
     f"""
     WITH b AS (
-      SELECT doc_id, regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \\t\\n\\r\\f\\x0B]+') AS toks
+      SELECT doc_id, {TX.tokens_sql('text')} AS toks
       FROM documents
     ),
     b2 AS (SELECT doc_id, toks, LEN(toks) AS dl FROM b),
@@ -6511,9 +6437,9 @@ def bm25_topk_retrieval(spark, sf_dir):
 
 @_q(
     "corpus_top_terms",
-    r"""
+    rf"""
     WITH toks AS (
-      SELECT doc_id, UNNEST(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS tok
+      SELECT doc_id, UNNEST({TX.tokens_sql('text')}) AS tok
       FROM documents
     ),
     c AS (
@@ -6638,9 +6564,9 @@ def ewma_user_value(spark, sf_dir):
 
 @_q(
     "dedup_bottomk_sketch",
-    r"""
+    rf"""
     WITH base AS (
-      SELECT doc_id, regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+') AS toks FROM documents
+      SELECT doc_id, {TX.tokens_sql('text')} AS toks FROM documents
     ),
     sk AS (
       SELECT doc_id,
@@ -6678,9 +6604,9 @@ def dedup_bottomk_sketch(spark, sf_dir):
 
 @_q(
     "quality_unigram_logprob",
-    r"""
+    rf"""
     WITH toks AS (
-      SELECT doc_id, UNNEST(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS tok
+      SELECT doc_id, UNNEST({TX.tokens_sql('text')}) AS tok
       FROM documents
     ),
     uni AS (SELECT tok, COUNT(*) AS cnt FROM toks GROUP BY tok),
@@ -6713,14 +6639,11 @@ def quality_unigram_logprob(spark, sf_dir):
 # statistics, interval-overlap join.
 # ---------------------------------------------------------------------------
 
-_BPE_PAT_SQL = TX.BPE_PRETOKEN_PATTERN.replace("'", "''")
-
-
 @_q(
     "token_count_bpe",
     f"""
     WITH toks AS (
-      SELECT doc_id, regexp_extract_all(text, '{_BPE_PAT_SQL}') AS arr
+      SELECT doc_id, {TX.bpe_pretokens_sql('text')} AS arr
       FROM documents
     )
     SELECT doc_id,
@@ -6996,9 +6919,9 @@ from ..operators.sketches import heavy_hitters  # noqa: E402
 
 @_q(
     "heavy_hitter_tokens",
-    r"""
+    rf"""
     WITH toks AS (
-      SELECT UNNEST(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS token
+      SELECT UNNEST({TX.tokens_sql('text')}) AS token
       FROM documents
     ),
     tot AS (SELECT COUNT(*) AS total FROM toks)
@@ -7058,9 +6981,9 @@ def join_salted_skew_enrich(spark, sf_dir):
 
 @_q(
     "chunk_documents_rag",
-    r"""
+    rf"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+') AS t FROM documents
+      SELECT doc_id, {TX.tokens_sql('text')} AS t FROM documents
     ),
     starts AS (
       SELECT doc_id, t, UNNEST(generate_series(1, GREATEST(LEN(t), 1), 48)) AS s
@@ -7387,11 +7310,11 @@ def schema_evolution_union_read(spark, sf_dir):
 @_q(
     "ann_ivf_portable_topk",
     "WITH " + _EMB_UNIQUE_SQL + """,
-    -- finite-domain vectors only (see _EMB_FINITE_WHERE); NULL ids out
+    -- finite-domain vectors only (see is_finite_vector_sql); NULL ids out
     -- at the gate — the centroid pick is id-ordered and engine NULL
     -- sort defaults differ (see ivf_portable_topk's operator gate)
     e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings_u
-          WHERE vec_id IS NOT NULL AND """ + _EMB_FINITE_WHERE + """),
+          WHERE vec_id IS NOT NULL AND """ + V.is_finite_vector_sql("embedding") + """),
     a AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS amax FROM e),
     qt AS (
       SELECT vec_id,
@@ -7779,9 +7702,9 @@ def ids_stable_assign(spark, sf_dir):
 
 @_q(
     "sketch_countmin_freqs",
-    r"""
+    rf"""
     WITH toks AS (
-      SELECT UNNEST(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS tok
+      SELECT UNNEST({TX.tokens_sql('text')}) AS tok
       FROM documents
     ),
     true_c AS (
@@ -7840,9 +7763,9 @@ def sketch_countmin_freqs(spark, sf_dir):
 
 @_q(
     "cooccurrence_skipgram_pairs",
-    r"""
+    rf"""
     WITH t AS (
-      SELECT doc_id, regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+') AS arr FROM documents
+      SELECT doc_id, {TX.tokens_sql('text')} AS arr FROM documents
     ),
     toks AS (
       SELECT doc_id, UNNEST(arr) AS tok, UNNEST(range(1, len(arr) + 1)) AS pos FROM t
@@ -7984,9 +7907,9 @@ def sample_weighted_bernoulli(spark, sf_dir):
 
 @_q(
     "tfidf_top_terms_per_doc",
-    r"""
+    rf"""
     WITH toks AS (
-      SELECT doc_id, UNNEST(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS tok
+      SELECT doc_id, UNNEST({TX.tokens_sql('text')}) AS tok
       FROM documents
     ),
     dfreq AS (SELECT tok, COUNT(DISTINCT doc_id) AS df FROM toks GROUP BY tok),
@@ -8028,7 +7951,7 @@ def tfidf_top_terms_per_doc(spark, sf_dir):
     "bpe_merge_pair_counts",
     f"""
     WITH pre AS (
-      SELECT UNNEST(regexp_extract_all(text, '{_BPE_PAT_SQL}')) AS pt
+      SELECT UNNEST({TX.bpe_pretokens_sql('text')}) AS pt
       FROM documents
     ),
     vocab AS (SELECT pt, COUNT(*) AS freq FROM pre GROUP BY pt),
@@ -8058,9 +7981,9 @@ def bpe_merge_pair_counts_q(spark, sf_dir):
 
 @_q(
     "inverted_index_postings",
-    r"""
+    rf"""
     WITH toks AS (
-      SELECT DISTINCT doc_id, UNNEST(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS term
+      SELECT DISTINCT doc_id, UNNEST({TX.tokens_sql('text')}) AS term
       FROM documents
     ),
     band AS (
@@ -9008,9 +8931,9 @@ def itemsim_copurchase_topk(spark, sf_dir):
 
 @_q(
     "vocab_oov_rate",
-    r"""
+    rf"""
     WITH toks AS (
-      SELECT doc_id, UNNEST(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS tok
+      SELECT doc_id, UNNEST({TX.tokens_sql('text')}) AS tok
       FROM documents
     ),
     vocab AS (
@@ -9182,9 +9105,9 @@ def window_value_functions(spark, sf_dir):
 
 @_q(
     "text_token_entropy",
-    r"""
+    rf"""
     WITH toks AS (
-      SELECT doc_id, UNNEST(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS tok
+      SELECT doc_id, UNNEST({TX.tokens_sql('text')}) AS tok
       FROM documents
     ),
     counts AS (
@@ -9245,12 +9168,9 @@ def text_token_entropy(spark, sf_dir):
 
 @_q(
     "hybrid_rrf_retrieval",
-    # parens: .replace must apply to the WHOLE concatenation (the
-    # {terms} placeholder lives in the first segment, before the
-    # spliced-in _EMB_FINITE_WHERE)
-    (f"""
+    f"""
     WITH b AS (
-      SELECT doc_id, regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \\t\\n\\r\\f\\x0B]+') AS toks
+      SELECT doc_id, {TX.tokens_sql('text')} AS toks
       FROM documents
     ),
     b2 AS (SELECT doc_id, toks, LEN(toks) AS dl FROM b),
@@ -9263,7 +9183,7 @@ def text_token_entropy(spark, sf_dir):
       FROM (
         SELECT doc_id, tok, COUNT(*) AS tf
         FROM (SELECT doc_id, UNNEST(toks) AS tok FROM b2)
-        WHERE tok IN ({{terms}})
+        WHERE tok IN ({_BM25_TERMS_SQL})
         GROUP BY doc_id, tok
       ) p JOIN docs ON p.doc_id IS NOT DISTINCT FROM docs.doc_id
     ),
@@ -9281,9 +9201,9 @@ def text_token_entropy(spark, sf_dir):
              CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id ASC) AS BIGINT) AS lex_rank
       FROM bm25s QUALIFY lex_rank <= 50
     ),
-    -- finite-domain vectors only (see _EMB_FINITE_WHERE)
+    -- finite-domain vectors only (see is_finite_vector_sql)
     ef AS (SELECT * FROM embeddings
-           WHERE """ + _EMB_FINITE_WHERE + """),
+           WHERE {V.is_finite_vector_sql('embedding')}),
     qv AS (SELECT embedding FROM ef WHERE vec_id = 0),
     vec AS (
       SELECT e.vec_id AS doc_id,
@@ -9304,7 +9224,7 @@ def text_token_entropy(spark, sf_dir):
     )
     SELECT doc_id, lex_rank, vec_rank, rrf
     FROM fused ORDER BY rrf DESC, doc_id ASC LIMIT 10
-    """).replace("{terms}", _BM25_TERMS_SQL),
+    """,
 )
 def hybrid_rrf_retrieval(spark, sf_dir):
     """Hybrid retrieval via Reciprocal Rank Fusion — the modern RAG
@@ -9821,14 +9741,14 @@ def anomaly_seasonal_residuals(spark, sf_dir):
 
 @_q(
     "corpus_data_card",
-    r"""
+    rf"""
     WITH d AS (
       SELECT doc_id, lang, md5(text) AS fp,
-             LEN(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS n_toks
+             LEN({TX.tokens_sql('text')}) AS n_toks
       FROM documents
     ),
     toks AS (
-      SELECT UNNEST(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS tok FROM documents
+      SELECT UNNEST({TX.tokens_sql('text')}) AS tok FROM documents
     ),
     ranked AS (
       -- median over SCORABLE docs only: a NULL n_toks (null text) would
@@ -9941,10 +9861,10 @@ def corpus_data_card(spark, sf_dir):
 
 @_q(
     "corpus_drift_js_divergence",
-    r"""
+    rf"""
     WITH toks AS (
       SELECT doc_id % 2 AS half,
-             UNNEST(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')) AS tok
+             UNNEST({TX.tokens_sql('text')}) AS tok
       FROM documents
     ),
     c AS (
@@ -10218,9 +10138,9 @@ def pareto_revenue_concentration(spark, sf_dir):
 
 @_q(
     "quality_bigram_logprob",
-    "WITH " + _DOCS_UNIQUE_SQL + r""",
+    "WITH " + _DOCS_UNIQUE_SQL + rf""",
     t AS (
-      SELECT doc_id, regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+') AS arr FROM documents_u
+      SELECT doc_id, {TX.tokens_sql('text')} AS arr FROM documents_u
     ),
     toks AS (
       SELECT doc_id, UNNEST(arr) AS tok, UNNEST(range(1, len(arr) + 1)) AS pos FROM t
@@ -10712,19 +10632,13 @@ def feature_hashing_trick(spark, sf_dir):
 
 @_q(
     "lang_id_confusion_matrix",
-    r"""
+    rf"""
     WITH r AS (
-      SELECT doc_id, lang,
-             LEN(list_filter(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+'),
-                             x -> x IN ('the','a','and','of','to','in','is','it','that','for')))
-             / GREATEST(LEN(regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')), 1)::DOUBLE AS ratio
+      SELECT doc_id, lang, {TX.stopword_ratio_sql('text')} AS ratio
       FROM documents
     ),
     pred AS (
-      SELECT lang AS true_lang,
-             CASE WHEN ratio >= 0.15 THEN 'en'
-                  WHEN ratio >= 0.05 THEN 'mixed'
-                  ELSE 'other' END AS pred_lang
+      SELECT lang AS true_lang, {TX.lang_id_sql('ratio')} AS pred_lang
       FROM r
     )
     SELECT true_lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n
@@ -10819,7 +10733,7 @@ def ann_index_occupancy_audit(spark, sf_dir):
     (``_emb_unique``) then finite-filtered (policy uniformity with the
     serving index — bucket signs themselves AGREE on NaN, `NaN >= 0` is
     true on both engines; the divergence lives in the downstream cosine,
-    see _EMB_FINITE_WHERE)."""
+    see ``_emb_finite``)."""
     from ..operators.similarity import _lsh_buckets
 
     emb = _emb_finite(_emb_unique(spark, sf_dir))
@@ -10940,7 +10854,7 @@ def cohort_repeat_rate(spark, sf_dir):
 
 @_q(
     "dedup_paragraph_exact",
-    "WITH " + _DOCS_UNIQUE_SQL + r""",
+    "WITH " + _DOCS_UNIQUE_SQL + rf""",
     corpus AS (
       SELECT doc_id,
              CASE WHEN doc_id % 2 = 0
@@ -10951,7 +10865,7 @@ def cohort_repeat_rate(spark, sf_dir):
     segs AS (
       SELECT doc_id,
              CAST(i - 1 AS INTEGER) AS para_idx,
-             TRIM(pp, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)) AS p
+             {TX.ws_trim_sql('pp')} AS p
       FROM (
         SELECT doc_id,
                UNNEST(regexp_split_to_array(text, '\.[ ]+')) AS pp,
@@ -11020,12 +10934,10 @@ def dedup_paragraph_exact(spark, sf_dir):
 # the synthetic corpus has a 31-word vocabulary, so any two long documents
 # share nearly all distinct TOKENS (measured: 444 unrelated pairs at
 # token-set J ≥ 0.98) while unrelated shingle sets barely intersect.
-_CURATION_TOK = r"regexp_split_to_array(TRIM({c}, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+')"
-
 _CURATION_SQL = (
     "WITH "
     + _DOCS_UNIQUE_SQL
-    + r""",
+    + rf""",
     corpus AS (
       SELECT doc_id, text FROM documents_u
       UNION ALL
@@ -11036,30 +10948,15 @@ _CURATION_SQL = (
       FROM documents_u
     ),
     lang AS (
-      SELECT doc_id, text,
-             CASE WHEN ratio >= 0.15 THEN 'en'
-                  WHEN ratio >= 0.05 THEN 'mixed'
-                  ELSE 'other' END AS lang_pred
+      SELECT doc_id, text, {TX.lang_id_sql('ratio')} AS lang_pred
       FROM (
-        SELECT doc_id, text,
-               LEN(list_filter("""
-    + _CURATION_TOK.format(c="text")
-    + r""",
-                               x -> x IN ('the','a','and','of','to','in','is','it','that','for')))
-               / GREATEST(LEN("""
-    + _CURATION_TOK.format(c="text")
-    + r"""), 1)::DOUBLE AS ratio
+        SELECT doc_id, text, {TX.stopword_ratio_sql('text')} AS ratio
         FROM corpus)
     ),
     lang_kept AS (SELECT * FROM lang WHERE lang_pred IN ('en','mixed')),
     q_kept AS (
       SELECT * FROM (
-        SELECT doc_id, text, lang_pred,
-               ROUND(LEAST(LEN("""
-    + _CURATION_TOK.format(c="text")
-    + r""") / 100.0, 1.0) *
-                     (1.0 - LEAST((LENGTH(text) - LENGTH(regexp_replace(text, '[.,;:!?]', '', 'g')))
-                                  / GREATEST(LENGTH(text), 1) * 5.0, 1.0)), 6) AS quality
+        SELECT doc_id, text, lang_pred, {TX.quality_score_sql('text')} AS quality
         FROM lang_kept)
       WHERE quality >= 0.5
     ),
@@ -11073,11 +10970,7 @@ _CURATION_SQL = (
       FROM q_kept
     ),
     red AS (
-      SELECT doc_id, lang_pred, quality,
-             regexp_replace(regexp_replace(regexp_replace(text,
-                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                 '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
-                 '\+?[0-9][0-9()\- \t\n\r\f\x0B]{6,}[0-9]', '<PHONE>', 'g') AS rtext
+      SELECT doc_id, lang_pred, quality, {TX.redact_pii_sql('text')} AS rtext
       FROM synth
     ),
     deduped AS (
@@ -11091,9 +10984,7 @@ _CURATION_SQL = (
                  toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
                          || toks[i+3] || ' ' || toks[i+4]))
              ELSE []::VARCHAR[] END AS tokset
-      FROM (SELECT doc_id, lang_pred, """
-    + _CURATION_TOK.format(c="rtext")
-    + r""" AS toks FROM deduped)
+      FROM (SELECT doc_id, lang_pred, {TX.tokens_sql('rtext')} AS toks FROM deduped)
     ),
     near_pairs AS (
       SELECT * FROM (
@@ -11110,9 +11001,7 @@ _CURATION_SQL = (
     ),
     final AS (
       SELECT doc_id, lang_pred, quality,
-             CAST(LEN("""
-    + _CURATION_TOK.format(c="rtext")
-    + r""") AS BIGINT) AS n_tokens,
+             CAST(LEN({TX.tokens_sql('rtext')}) AS BIGINT) AS n_tokens,
              md5(rtext) AS fp
       FROM near
     )
@@ -11372,7 +11261,7 @@ def llm_corpus_curation_lsh_counts(spark, sf_dir):
 
 @_q(
     "dedup_exact_substring_spans",
-    "WITH " + _DOCS_UNIQUE_SQL + r""",
+    "WITH " + _DOCS_UNIQUE_SQL + rf""",
     corpus AS (
       SELECT doc_id, text FROM documents_u
       UNION ALL
@@ -11386,7 +11275,7 @@ def llm_corpus_curation_lsh_counts(spark, sf_dir):
       -- the operator's gate: spans are keyed output and NULL text has
       -- no tokens
       SELECT doc_id,
-             regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+') AS toks
+             {TX.tokens_sql('text')} AS toks
       FROM corpus WHERE doc_id IS NOT NULL AND text IS NOT NULL
     ),
     g AS (
@@ -11436,7 +11325,7 @@ def dedup_exact_substring_spans(spark, sf_dir):
 
 @_q(
     "dedup_exact_substring_scrub",
-    "WITH " + _DOCS_UNIQUE_SQL + r""",
+    "WITH " + _DOCS_UNIQUE_SQL + rf""",
     corpus AS (
       SELECT doc_id, text FROM documents_u WHERE doc_id IS NOT NULL
       UNION ALL
@@ -11445,7 +11334,7 @@ def dedup_exact_substring_spans(spark, sf_dir):
     ),
     t AS (
       SELECT doc_id,
-             regexp_split_to_array(TRIM(text, ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)), '[ \t\n\r\f\x0B]+') AS toks
+             {TX.tokens_sql('text')} AS toks
       FROM corpus WHERE text IS NOT NULL
     ),
     g AS (

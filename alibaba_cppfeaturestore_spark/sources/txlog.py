@@ -25,8 +25,7 @@ reader lists ONE small log directory and then opens exactly the data
 files named by the manifest — no O(files) object-store LIST per query;
 data files are immutable, so caches/replicas never invalidate; an
 ``overwrite`` is a logical pointer swap, leaving old files in place for
-readers pinned to older versions (``vacuum`` reclaims groups outside
-the retention window, Delta-style). The log grows O(commits), so like
+readers pinned to older versions. The log grows O(commits), so like
 Delta the table CHECKPOINTS it: every ``checkpoint_interval`` commits a
 ``<version>.checkpoint.json`` snapshot of the folded state (live file
 set + per-app txn watermarks) is written and ``_last_checkpoint``
@@ -261,10 +260,10 @@ class TxTable:
 
     def _schema_as_of(self, as_of: int | None = None) -> str | None:
         """Newest logged schema at or below ``as_of`` (Delta's metaData
-        resolution). Commit records are tiny and never deleted (vacuum
-        reclaims data groups, not log entries), so walking down from the
-        snapshot version is O(1) in practice — the newest commit carries
-        it. None for pre-schema logs (reads fall back to inference)."""
+        resolution). Commit records are tiny and never deleted, so
+        walking down from the snapshot version is O(1) in practice — the
+        newest commit carries it. None for pre-schema logs (reads fall
+        back to inference)."""
         for v in reversed(self._versions()):
             if as_of is not None and v > as_of:
                 continue
@@ -334,47 +333,6 @@ class TxTable:
         if latest is None:
             return None
         return self._fold_txn(as_of=latest).get(app_id)
-
-    def vacuum(self, retain_last: int = 1) -> list[str]:
-        """Delete data-file groups unreferenced by the live sets of the
-        last ``retain_last`` versions (Delta ``VACUUM``). Returns the
-        removed group names. Time travel to versions older than the
-        retained window stops working — the same contract as Delta's
-        retention period; immutable groups still referenced by ANY
-        retained version are kept, so concurrent readers of retained
-        snapshots are never broken. Also collects orphans (data written
-        by a crashed, never-published commit)."""
-        import shutil
-
-        referenced: set[str] = set()
-        for v in self._versions()[-retain_last:]:
-            referenced.update(self._live_files(as_of=v))
-        removed = []
-        for g in os.listdir(self.path):
-            if g.startswith("part-") and g not in referenced:
-                shutil.rmtree(os.path.join(self.path, g))
-                removed.append(g)
-        return sorted(removed)
-
-    def optimize(
-        self,
-        spark: SparkSession,
-        sort_by: list[str] | None = None,
-        num_files: int = 1,
-    ) -> int:
-        """OPTIMIZE: rewrite the current snapshot's (possibly many,
-        small) file groups into ``num_files`` compacted files —
-        optionally ``sortWithinPartitions`` on ``sort_by`` so min/max
-        footer stats prune reads (bin-packing + clustering, the Delta
-        OPTIMIZE / ZORDER verb for this table format). Data is
-        byte-identical to the pre-OPTIMIZE snapshot (it commits as an
-        ``overwrite`` of the same rows); old file groups stay
-        addressable for time travel until ``vacuum``."""
-        current = self.read(spark)
-        compacted = current.repartition(num_files)
-        if sort_by:
-            compacted = compacted.sortWithinPartitions(*sort_by)
-        return self.commit(compacted, mode="overwrite")
 
     def merge_upsert(
         self,

@@ -5,8 +5,8 @@ helpers and their DuckDB twins must give the same value on every edge
 input.
 
 If a DuckDB or Spark upgrade changes any of these, the finite-domain
-rationale in functions/finite.py, functions/vectors.py,
-plans/catalog._EMB_FINITE_WHERE and SCALING.md must be re-derived —
+rationale in functions/finite.py, functions/vectors.py (with its
+is_finite_vector_sql twin) and SCALING.md must be re-derived —
 these tests fail first.
 """
 
@@ -108,15 +108,19 @@ def test_duckdb_list_filter_drops_null_elements(spark, con):
     # component while Spark's forall (NULL result) would DROP it. The
     # oracle spelling adds `x IS NULL OR`, the Spark predicate adds
     # isNotNull — aligned by construction, asserted here.
+    from alibaba_cppfeaturestore_spark.functions.vectors import (
+        is_finite_vector,
+        is_finite_vector_sql,
+    )
+
     (kept,) = con.execute(
         "SELECT len(list_filter([1.0, NULL]::DOUBLE[], x -> NOT isfinite(x))) = 0"
     ).fetchone()
     assert kept is True  # the NULL element vanished from the filter
     (excluded,) = con.execute(
-        "SELECT len(list_filter([1.0, NULL]::DOUBLE[], x -> x IS NULL OR NOT isfinite(x))) = 0"
+        f"SELECT {is_finite_vector_sql('[1.0, NULL]::DOUBLE[]')}"
     ).fetchone()
     assert excluded is False  # the aligned spelling catches it
-    from alibaba_cppfeaturestore_spark.functions.vectors import is_finite_vector
 
     row = (
         spark.createDataFrame([([1.0, None],)], "v array<double>")

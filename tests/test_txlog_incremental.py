@@ -227,26 +227,6 @@ def test_merge_upsert_null_keys_and_null_delete_flag(spark, tx):
     ]
 
 
-def test_vacuum_removes_unreferenced_keeps_retained(spark, tx):
-    tx.commit(_df(spark, [("a", 1)]), "append")      # v0 group: dead after v2
-    tx.commit(_df(spark, [("b", 2)]), "append")      # v1 group: dead after v2
-    tx.commit(_df(spark, [("c", 3)]), "overwrite")   # v2 group: live
-    orphan = os.path.join(tx.path, "part-orphan")
-    _df(spark, [("z", 9)]).write.parquet(orphan)     # crashed-commit garbage
-    removed = tx.vacuum(retain_last=1)
-    assert len(removed) == 3  # v0 + v1 groups + orphan
-    assert {r["k"] for r in tx.read(spark).collect()} == {"c"}  # latest intact
-    with pytest.raises(Exception):
-        tx.read(spark, version=1).collect()  # pre-retention time travel gone
-
-
-def test_vacuum_retains_multi_version_window(spark, tx):
-    tx.commit(_df(spark, [("a", 1)]), "append")
-    tx.commit(_df(spark, [("b", 2)]), "append")
-    assert tx.vacuum(retain_last=2) == []  # both groups still referenced
-    assert {r["k"] for r in tx.read(spark).collect()} == {"a", "b"}
-
-
 def test_idempotent_commit_dedupes_replayed_epochs(spark, tx):
     """Delta txnAppId/txnVersion semantics: a replayed epoch (same app,
     same or older version) must not land twice; a new epoch must."""
@@ -349,40 +329,6 @@ def test_pagerank_fixedpoint_semantics(spark):
     assert r[9] > max(r[1], r[2], r[3])
     assert r[2] == r[3]  # symmetric leaves (no in-links) tie
     assert sum(r.values()) <= 10**12
-
-
-def test_txlog_optimize_compacts_preserving_rows_and_history(spark, tmp_path):
-    import glob
-    import os
-
-    from alibaba_cppfeaturestore_spark.sources.txlog import TxTable
-
-    t = TxTable(str(tmp_path / "opt"))
-    for i in range(5):
-        t.commit(
-            spark.createDataFrame([(i * 10 + j, f"v{i}") for j in range(4)], "k long, v string"),
-            mode="append",
-        )
-    before_rows = sorted(map(tuple, t.read(spark).collect()))
-    before_version = t.latest_version()
-    files_before = len(t._live_files())
-
-    v = t.optimize(spark, sort_by=["k"], num_files=1)
-    assert v == before_version + 1
-    after = sorted(map(tuple, t.read(spark).collect()))
-    assert after == before_rows
-    assert len(t._live_files()) < files_before
-    # time travel still sees the pre-OPTIMIZE snapshot
-    assert sorted(map(tuple, t.read(spark, version=before_version).collect())) == before_rows
-    # the compacted file is sorted on k (footer-stat clustering)
-    import pandas as pd
-
-    pq = []
-    for group in t._live_files():
-        pq += glob.glob(os.path.join(t.path, group, "*.parquet"))
-    assert pq, "no live parquet files resolved"
-    ks = pd.concat([pd.read_parquet(p) for p in pq]).k.tolist()
-    assert ks == sorted(ks) and len(ks) == 20
 
 
 # -- checkpoint protocol (round 4) -------------------------------------------

@@ -9,6 +9,8 @@ strips only ASCII space. These tests pin the portable spellings
 corpus seeded with every character either engine could treat specially:
 vertical tab, form feed, CR, NBSP, ideographic space, zero-width space,
 ASCII controls, and leading/trailing separators (empty-edge tokens).
+The DuckDB side of each pair is the ``*_sql`` twin the catalog's oracles
+call, so the spelling checked here is the one every oracle uses.
 """
 
 from __future__ import annotations
@@ -48,9 +50,6 @@ EXOTIC_DOCS = [
     "😀 non-BMP emoji 𐒰",
 ]
 
-WS_SQL_SET = TX.WS_TRIM_SQL
-
-
 @pytest.fixture(scope="module")
 def docs_df(spark):
     return spark.createDataFrame(
@@ -77,23 +76,19 @@ def _spark_vals(docs_df, col):
 
 def test_tokens_match_duckdb(docs_df):
     got = _spark_vals(docs_df, TX.tokens("text"))
-    want = _duck(
-        f"regexp_split_to_array(TRIM(text, {WS_SQL_SET}), '{TX.TOKEN_SPLIT_REGEX}')"
-    )["v"].tolist()
+    want = _duck(TX.tokens_sql("text"))["v"].tolist()
     assert [list(g) for g in got] == [list(w) for w in want]
 
 
 def test_token_count_matches_duckdb(docs_df):
     got = _spark_vals(docs_df, TX.token_count("text"))
-    want = _duck(
-        f"LEN(regexp_split_to_array(TRIM(text, {WS_SQL_SET}), '{TX.TOKEN_SPLIT_REGEX}'))"
-    )["v"].tolist()
+    want = _duck(f"LEN({TX.tokens_sql('text')})")["v"].tolist()
     assert got == want
 
 
 def test_ws_trim_matches_duckdb(docs_df):
     got = _spark_vals(docs_df, TX.ws_trim("text"))
-    want = _duck(f"TRIM(text, {WS_SQL_SET})")["v"].tolist()
+    want = _duck(TX.ws_trim_sql("text"))["v"].tolist()
     assert got == want
 
 
@@ -103,17 +98,58 @@ def test_nonws_length_matches_duckdb(docs_df):
         F.length(F.regexp_replace(TX.ws_trim("text"), TX.WS_CLASS, "")),
     )
     want = _duck(
-        f"LENGTH(regexp_replace(TRIM(text, {WS_SQL_SET}), '{TX.WS_CLASS}', '', 'g'))"
+        f"LENGTH(regexp_replace({TX.ws_trim_sql('text')}, '{TX.WS_CLASS}', '', 'g'))"
     )["v"].tolist()
     assert got == want
 
 
 def test_fingerprint_md5_matches_duckdb(docs_df):
     got = _spark_vals(docs_df, TX.fingerprint_md5("text"))
-    norm = TX.portable_lower_sql(
-        f"regexp_replace(TRIM(text, {WS_SQL_SET}), '{TX.TOKEN_SPLIT_REGEX}', ' ', 'g')"
-    )
-    want = _duck(f"md5({norm})")["v"].tolist()
+    want = _duck(TX.fingerprint_md5_sql("text"))["v"].tolist()
+    assert got == want
+
+
+# Text functions whose oracle spelling is a twin call run on the exotic
+# corpus plus PII carriers (pii_counts' phone count sees the text after
+# the email and IPv4 redaction) and one document per lang_id label.
+TEXT_DOCS = EXOTIC_DOCS + [
+    "mail a.b+c@example.co.uk or ops@x.io now",
+    "hosts 10.0.0.1 and 192.168.1.255, not 1.2.3",
+    "call +1 555-0123 9 or (555) 123\x0b4567",
+    "the cat and the hat, in a box; is it? yes!",
+    "alpha beta gamma delta epsilon zeta eta theta iota the",
+]
+
+
+@pytest.mark.parametrize(
+    "spark_fn, sql_fn",
+    [
+        pytest.param(TX.stopword_ratio, TX.stopword_ratio_sql, id="stopword_ratio"),
+        pytest.param(TX.quality_score, TX.quality_score_sql, id="quality_score"),
+        pytest.param(TX.redact_pii, TX.redact_pii_sql, id="redact_pii"),
+        pytest.param(TX.bpe_pretokens, TX.bpe_pretokens_sql, id="bpe_pretokens"),
+        *[
+            pytest.param(
+                lambda c, i=i: TX.pii_counts(c)[i],
+                lambda e, i=i: TX.pii_counts_sql(e)[i],
+                id=f"pii_counts[{i}]",
+            )
+            for i in range(3)
+        ],
+        pytest.param(
+            TX.lang_id, lambda e: TX.lang_id_sql(f"({TX.stopword_ratio_sql(e)})"), id="lang_id"
+        ),
+    ],
+)
+def test_text_twins_match_duckdb(spark, spark_fn, sql_fn):
+    rows = list(enumerate(TEXT_DOCS))
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    got = [r.v for r in df.orderBy("doc_id").select(spark_fn("text").alias("v")).collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (doc_id INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", rows)
+    sql = f"SELECT {sql_fn('text')} FROM d ORDER BY doc_id"
+    want = [r[0] for r in con.execute(sql).fetchall()]
     assert got == want
 
 
