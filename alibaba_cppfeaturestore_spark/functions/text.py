@@ -120,11 +120,10 @@ def punct_ratio_sql(expr: str) -> str:
     )
 
 
-def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:
-    """Fraction of tokens that are (English) stopwords."""
+def stopword_ratio(text: Column | str) -> Column:
+    """Fraction of tokens that are ``STOPWORDS_EN`` stopwords."""
     toks = tokens(text)
-    sw = stopwords or STOPWORDS_EN
-    hits = F.size(F.filter(toks, lambda x: x.isin(sw)))
+    hits = F.size(F.filter(toks, lambda x: x.isin(STOPWORDS_EN)))
     return hits / F.greatest(F.size(toks), F.lit(1))
 
 
@@ -240,17 +239,34 @@ def fingerprint_md5_sql(expr: str) -> str:
     return f"md5({fingerprint_text_sql(expr)})"
 
 
+# clean_text's regexes. The unicode spaces (NBSP, en/em/zero-width,
+# ideographic) are a character-class body: Java reads the characters
+# themselves, DuckDB's twin the same class as RE2 ``\x{....}`` escapes.
+MARKUP_REGEX = r"<[^>]*>"
+CONTROL_CHAR_REGEX = r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]"
+UNICODE_SPACES = "\u00a0\u2000-\u200b\u3000"
+UNICODE_SPACES_SQL = "".join(
+    ch if ch == "-" else f"\\x{{{ord(ch):04X}}}" for ch in UNICODE_SPACES
+)
+
+
 def clean_text(text: Column | str) -> Column:
     """LLM-corpus text normalization, all in the scan stage: strip markup
-    tags, drop ASCII control characters, map exotic unicode spaces
-    (NBSP, en/em/zero-width, ideographic) to plain space, collapse
-    whitespace runs, trim. Order matters: tags → controls → unicode
-    spaces → collapse."""
+    tags, drop ASCII control characters, map exotic unicode spaces to
+    plain space, collapse whitespace runs, trim. Order matters: tags →
+    controls → unicode spaces → collapse."""
     c = F.col(text) if isinstance(text, str) else text
-    c = F.regexp_replace(c, r"<[^>]*>", " ")
-    c = F.regexp_replace(c, r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]", "")
-    c = F.regexp_replace(c, "[  -​　]", " ")
+    c = F.regexp_replace(c, MARKUP_REGEX, " ")
+    c = F.regexp_replace(c, CONTROL_CHAR_REGEX, "")
+    c = F.regexp_replace(c, f"[{UNICODE_SPACES}]", " ")
     return ws_trim(F.regexp_replace(c, TOKEN_SPLIT_REGEX, " "))
+
+
+def clean_text_sql(expr: str) -> str:
+    c = f"regexp_replace({expr}, '{MARKUP_REGEX}', ' ', 'g')"
+    c = f"regexp_replace({c}, '{CONTROL_CHAR_REGEX}', '', 'g')"
+    c = f"regexp_replace({c}, '[{UNICODE_SPACES_SQL}]', ' ', 'g')"
+    return ws_trim_sql(f"regexp_replace({c}, '{TOKEN_SPLIT_REGEX}', ' ', 'g')")
 
 
 def _let(value: Column, body) -> Column:

@@ -63,16 +63,12 @@ def latest_per_key_window(
     )
 
 
-def vocab_sizes(df: DataFrame, columns: list[str], exact: bool = True) -> DataFrame:
-    """Distinct count per column, one aggregation pass (reference ran one
-    job per column, ``batch_process_Silver_to_Gold.py:155-158``).
-
-    ``exact=False`` switches to ``approx_count_distinct`` (HLL) — the 100 TB
-    path where exact multi-column distinct is a fan-out of full shuffles.
+def vocab_sizes(df: DataFrame, columns: list[str]) -> DataFrame:
+    """Exact distinct count per column, one aggregation pass (reference
+    ran one job per column, ``batch_process_Silver_to_Gold.py:155-158``).
     Returns a single row with one column per input column.
     """
-    fn = F.countDistinct if exact else F.approx_count_distinct
-    return df.agg(*[fn(c).alias(c) for c in columns])
+    return df.agg(*[F.countDistinct(c).alias(c) for c in columns])
 
 
 def top_k_per_group(
@@ -83,7 +79,12 @@ def top_k_per_group(
     descending: bool = True,
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
-    """Top-k rows per group — window rank with deterministic tie-break."""
+    """Top-k rows per group — window rank with deterministic tie-break.
+
+    Hot keys are already bounded: Spark (3.5+) plans a
+    ``WindowGroupLimit … Partial`` ahead of the exchange, so each map
+    task sorts its own rows and ships at most k per group; a hot group
+    reaches its reducer as ≤ k × map-task rows, not |group|."""
     order = [
         F.col(order_col).desc() if descending else F.col(order_col).asc(),
         *[F.col(c).asc() for c in (tiebreak or [])],
@@ -101,18 +102,18 @@ def top_k_per_group_salted(
     group_cols: list[str],
     order_col: str,
     k: int,
-    descending: bool = True,
     tiebreak: list[str] | None = None,
     salt_buckets: int = 16,
 ) -> DataFrame:
-    """Hot-key-robust top-k per group: two-phase with a salt shard.
+    """Top-k per group in two phases: rank within (group, salt) shards,
+    cutting each to ≤ k rows, then merge the ≤ k×salt_buckets survivors
+    per group with ``top_k_per_group``.
 
-    The plain window puts ALL rows of a group in ONE task — a power-law
-    key (one user with 10⁹ events) serializes the job on a single sort.
-    Phase 1 here ranks within (group, salt) shards, cutting each to ≤ k
-    rows; phase 2 merges the ≤ k×salt_buckets survivors per group with
-    the ordinary window. Peak per-task state drops from |hot group| to
-    |hot group|/salt_buckets.
+    It buys nothing over ``top_k_per_group`` on Spark 3.5+: that plan's
+    ``WindowGroupLimit … Partial`` already caps every group at k rows per
+    map task before the exchange (explain() of
+    ``topk_orders_per_priority``), so a hot group never reaches one
+    reducer whole. This path only adds a second exchange and sort.
 
     The salt hashes (order_col, *tiebreak) — values that VARY within a
     group — so shards are deterministic (same data → same result, no
@@ -122,10 +123,7 @@ def top_k_per_group_salted(
     """
     salt_src = [F.col(order_col)] + [F.col(c) for c in (tiebreak or [])]
     salt = F.pmod(F.xxhash64(*salt_src), F.lit(salt_buckets))
-    order = [
-        F.col(order_col).desc() if descending else F.col(order_col).asc(),
-        *[F.col(c).asc() for c in (tiebreak or [])],
-    ]
+    order = [F.col(order_col).desc(), *[F.col(c).asc() for c in (tiebreak or [])]]
     w1 = Window.partitionBy(*group_cols, "__salt").orderBy(*order)
     sharded = (
         df.withColumn("__salt", salt)
@@ -133,7 +131,7 @@ def top_k_per_group_salted(
         .filter(F.col("__rn") <= k)
         .drop("__rn", "__salt")
     )
-    return top_k_per_group(sharded, group_cols, order_col, k, descending, tiebreak)
+    return top_k_per_group(sharded, group_cols, order_col, k, tiebreak=tiebreak)
 
 
 def scd2_history(

@@ -60,21 +60,20 @@ from ..resources import own
 
 
 def exact_dedup(
-    df: DataFrame, cols: list[str], id_col: str, keep: str = "min",
-    tiebreak: list[str] | None = None,
+    df: DataFrame, cols: list[str], id_col: str, tiebreak: list[str] | None = None
 ) -> DataFrame:
-    """Exact dedup on ``cols`` content: keep one row per distinct content
-    (smallest ``id_col`` by default — deterministic).
+    """Exact dedup on ``cols`` content: keep one row per distinct content,
+    the one with the smallest ``id_col`` (deterministic).
 
     Shuffles on a 256-bit content hash rather than raw content, so shuffle
     keys stay 32 bytes regardless of document size.
 
-    A NULL id NEVER wins representative selection (NULLS LAST in both
-    keep modes): "keep smallest id" means the smallest IDENTIFIED
-    document — Spark's bare ``asc()`` is nulls-first, which would elect
-    the one row nobody can reference as the survivor of its duplicate
-    group, while SQL engines' bare ``ASC`` elects the smallest real id
-    (``driver_sim --perturb-nulls`` find on NULL-seeded ids).
+    A NULL id NEVER wins representative selection (NULLS LAST): "keep
+    smallest id" means the smallest IDENTIFIED document — Spark's bare
+    ``asc()`` is nulls-first, which would elect the one row nobody can
+    reference as the survivor of its duplicate group, while SQL engines'
+    bare ``ASC`` elects the smallest real id (``driver_sim
+    --perturb-nulls`` find on NULL-seeded ids).
 
     ``tiebreak`` (r11, seed-349 stack find): under DUPLICATED ids two
     rows can tie on (content, id) while differing in a carried-along
@@ -83,7 +82,7 @@ def exact_dedup(
     order over them (ASC NULLS FIRST, the house tie convention)."""
     content_hash = F.sha2(F.concat_ws("\x00", *[F.col(c).cast("string") for c in cols]), 256)
     w = Window.partitionBy(content_hash).orderBy(
-        F.col(id_col).asc_nulls_last() if keep == "min" else F.col(id_col).desc_nulls_last(),
+        F.col(id_col).asc_nulls_last(),
         *[F.asc_nulls_first(c) for c in (tiebreak or [])],
     )
     return (
@@ -653,28 +652,16 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     block_cols: list[str] | None = None,
     threshold: float = 0.5,
-    shingle_n: int | None = None,
 ) -> DataFrame:
     """Token-set Jaccard similarity pairs, blocked by ``block_cols`` to
     bound the pair space (at scale ALWAYS block — unblocked is |corpus|²;
-    the LSH variants above are the unblocked-scale path).
-
-    ``shingle_n``: compare distinct word n-gram SHINGLES instead of
-    distinct tokens. Order-sensitive, so it still discriminates where
-    token-set Jaccard saturates — under a small vocabulary any two long
-    documents share nearly all distinct tokens (measured on the synthetic
-    corpus: 31-word vocab, 444 of ~125k unrelated doc pairs at token-set
-    J ≥ 0.98), while their 5-gram shingle overlap stays ≈ 0."""
+    the LSH variants above are the unblocked-scale path). Word-shingle
+    sets are ``ngram_jaccard_pairs_indexed``'s ``shingle_n``."""
     df = _spread(df)
-    elems = (
-        token_shingles(F.col(text_col), shingle_n)
-        if shingle_n
-        else tokens(F.col(text_col))
-    )
     base = df.select(
         F.col(id_col).alias("id"),
         *[F.col(c) for c in (block_cols or [])],
-        F.array_distinct(elems).alias("tokset"),
+        F.array_distinct(tokens(F.col(text_col))).alias("tokset"),
     ).withColumn("sz", F.size("tokset"))
     a, b = base.alias("a"), base.alias("b")
     cond = F.col("a.id") < F.col("b.id")
@@ -711,6 +698,13 @@ def ngram_jaccard_pairs_indexed(
     """EXACT token-set Jaccard pairs ≥ threshold with NO blocking column
     and no quadratic pair space — the prefix-filtering set-similarity
     join (PPJoin family, Xiao et al., WWW'08), on DataFrames.
+
+    ``shingle_n``: compare distinct word n-gram SHINGLES instead of
+    distinct tokens. Order-sensitive, so it still discriminates where
+    token-set Jaccard saturates — under a small vocabulary any two long
+    documents share nearly all distinct tokens (measured on the synthetic
+    corpus: 31-word vocab, 444 of ~125k unrelated doc pairs at token-set
+    J ≥ 0.98), while their 5-gram shingle overlap stays ≈ 0.
 
     Guarantee (with the size filter min ≥ t·max): any qualifying pair
     overlaps in ≥ ⌈t·|a|⌉ tokens, so the two sets MUST share a token in
@@ -909,6 +903,11 @@ def _ppjoin_candidates(
     return cand
 
 
+# winnow_containment_pairs' hot-fingerprint cap: a hash posted by more
+# docs than this is boilerplate, and its C(m, 2) pairs are dropped.
+_MAX_POSTINGS = 1_000
+
+
 def winnow_containment_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -916,7 +915,6 @@ def winnow_containment_pairs(
     k: int = 12,
     window: int = 8,
     threshold: float = 0.5,
-    max_postings: int | None = 1_000,
     portable: bool = False,
 ) -> DataFrame:
     """Containment pairs via winnowing (rolling-hash) fingerprints: the
@@ -930,8 +928,8 @@ def winnow_containment_pairs(
     postings — winnowing selects ~2/(window+1) of the k-gram hashes, so
     the posting volume is a fraction of a shingle-level index. The
     per-pair overlap count is a groupBy with map-side partial
-    aggregation. ``max_postings`` drops degenerate hashes shared by more
-    than that many docs (boilerplate guard — one hot fingerprint would
+    aggregation. Hashes shared by more than ``_MAX_POSTINGS`` docs are
+    dropped (boilerplate guard — one hot fingerprint would
     otherwise contribute |docs|² join rows); affected docs still pair
     through their other fingerprints.
 
@@ -969,7 +967,7 @@ def winnow_containment_pairs(
     # groupBy shuffle and emit the C(m,2) pairs from higher-order
     # expressions — a postings SELF-JOIN would shuffle the 5M-row index
     # twice more and re-partition it. The cap bounds the worst per-row
-    # expansion at C(max_postings, 2) structs.
+    # expansion at C(_MAX_POSTINGS, 2) structs.
     #
     # The parallelism pin sits BEFORE the groupBy, as the groupBy's own
     # exchange: collect_list partials don't shrink data, so an explicit
@@ -993,9 +991,7 @@ def winnow_containment_pairs(
     lists = posted.groupBy("h").agg(F.collect_list(F.struct("id", "n")).alias("ps"))
     # singleton posting lists generate no pairs — drop them before the
     # combo expansion (~30% of hashes on a typical corpus)
-    lists = lists.filter(F.size("ps") >= 2)
-    if max_postings is not None:
-        lists = lists.filter(F.size("ps") <= max_postings)
+    lists = lists.filter(F.size("ps") >= 2).filter(F.size("ps") <= _MAX_POSTINGS)
 
     combos = _pairs(
         F.col("ps"),
@@ -1065,7 +1061,7 @@ def bottomk_sketch_pairs(
     a bottom hash ever meet — no |corpus|² pair space), count shared
     hashes per pair with map-side combine. ``max_bucket_size`` caps
     degenerate hash buckets (boilerplate guard, same lever as winnow's
-    ``max_postings``); leave None when the output must match the
+    ``_MAX_POSTINGS``); leave None when the output must match the
     capless oracle.
     """
     sk = _spread(df).select(

@@ -21,9 +21,7 @@ Scale notes:
   2-4 iterations is typical even at corpus scale.
 - ``localCheckpoint`` after every round truncates the lineage (otherwise
   plan depth grows linearly and the driver re-optimizes an ever-growing
-  tree). On a real cluster with executor loss concerns, set a reliable
-  checkpoint dir (``spark.sparkContext.setCheckpointDir``) and pass
-  ``reliable=True``.
+  tree).
 - Convergence is detected WITHOUT a labels↔labels join when ids are
   numeric: labels only ever decrease, so the (count, sum) pair is a
   fixpoint witness — one scalar action per round. Non-numeric ids fall
@@ -45,7 +43,6 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iterations: int = 25,
-    reliable: bool = False,
 ) -> DataFrame:
     """Label every node that appears in ``edges`` with the minimum node id
     reachable from it. Returns ``(id, component)`` — one row per distinct
@@ -74,11 +71,11 @@ def connected_components(
 
     numeric = isinstance(e.schema["src"].dataType, NumericType)
 
-    def _checkpoint(df: DataFrame) -> DataFrame:
-        return own(df.checkpoint() if reliable else df.localCheckpoint())
-
-    labels = _checkpoint(
-        sym.select(F.col("src").alias("id")).distinct().withColumn("lbl", F.col("id"))
+    labels = own(
+        sym.select(F.col("src").alias("id"))
+        .distinct()
+        .withColumn("lbl", F.col("id"))
+        .localCheckpoint()
     )
 
     prev_witness = None
@@ -90,8 +87,11 @@ def connected_components(
         msgs = sym.join(labels.withColumnRenamed("id", "src"), "src").select(
             F.col("dst").alias("id"), "lbl"
         )
-        new_labels = _checkpoint(
-            msgs.unionByName(labels).groupBy("id").agg(F.min("lbl").alias("lbl"))
+        new_labels = own(
+            msgs.unionByName(labels)
+            .groupBy("id")
+            .agg(F.min("lbl").alias("lbl"))
+            .localCheckpoint()
         )
 
         if numeric:

@@ -18,8 +18,6 @@ Scale notes:
   predicate is applied post-join, and the window partitions by
   (entity, event_ts) — state per partition is bounded by rows-per-key
   within the TTL, not table size.
-- For feature tables small enough, pass ``broadcast_features=True`` to skip
-  the shuffle entirely.
 - Skewed entity keys are handled by AQE skew-join splitting (enabled in the
   session factory). For pathological skew, pre-aggregate the feature side
   to latest-per-(key, bucket) first.
@@ -39,8 +37,6 @@ def asof_join(
     feature_ts: str = "datetime",
     ttl: str | None = None,
     features: list[str] | None = None,
-    how: str = "left",
-    broadcast_features: bool = False,
 ) -> DataFrame:
     """Point-in-time join: latest feature row at-or-before each event.
 
@@ -68,8 +64,6 @@ def asof_join(
         F.col(feature_ts).alias("__feat_ts"),
         *feat_cols,
     )
-    if broadcast_features:
-        feat = F.broadcast(feat)
 
     # Tag entity rows so we can restore exactly-one-row-per-input.
     ent = entity_df.withColumn(
@@ -83,7 +77,7 @@ def asof_join(
             feat["__feat_ts"] >= ent[event_ts] - F.expr(f"INTERVAL {ttl}")
         )
 
-    joined = ent.join(feat, [*cond, range_pred], "left" if how == "left" else how)
+    joined = ent.join(feat, [*cond, range_pred], "left")
 
     # Latest feature row per entity row; deterministic tie-break on the
     # full feature struct after the timestamp.
@@ -302,7 +296,6 @@ def interval_overlap_join(
     r_hi: str,
     on: list[str] | None = None,
     bin_width: float = 3600.0,
-    salt: int = 1,
 ) -> DataFrame:
     """Interval×interval OVERLAP join (``l.lo ≤ r.hi AND r.lo ≤ l.hi``,
     bounds inclusive) executed as an equi-join on coarse bins — the
@@ -319,25 +312,13 @@ def interval_overlap_join(
 
     Sides come back aliased ``l`` / ``r`` — select with qualified names.
     ``bin_width`` near the typical interval length keeps replication ~2×.
-
-    ``salt`` (r11, the hot-bin worst case): when one bin holds most
-    intervals — a flash-crowd hour — the grid degrades to within-bin
-    all-pairs and, worse, ONE reducer owns the whole m_l×m_r product
-    (the join key is the bin). Intervals crowded into one bin genuinely
-    all overlap, so the OUTPUT is inherently ~m² — no exact algorithm
-    beats that — but the stall is fixable: ``salt > 1`` splits the left
-    side of every bin into ``salt`` deterministic sub-groups
-    (xxhash64 of the row) and replicates the right side once per salt
-    value, so the hot bin's product spreads across ``salt`` tasks.
-    EXACT — each left row carries one salt value and meets every right
-    replica exactly once, so the pair set is identical to ``salt=1``
-    (contract-pinned). Cost: right-side rows shuffle ×salt; leave at 1
-    unless bin-occupancy stats (tools/scale_probe.py --overlap) show a
-    hot bin.
+    A bin crowded with intervals (a flash-crowd hour) is one reducer's
+    m_l×m_r product; those intervals all overlap, so the output is that
+    large anyway (``tools/scale_probe.py --overlap`` reports bin
+    occupancy).
     """
     on = on or []
     w = float(bin_width)
-    salt = max(1, int(salt))
 
     def _binned(df: DataFrame, lo: str, hi: str, alias: str) -> DataFrame:
         lo_num = _as_number(df, lo)
@@ -362,26 +343,7 @@ def interval_overlap_join(
 
     l = _binned(left, l_lo, l_hi, "l")
     r = _binned(right, r_lo, r_hi, "r")
-    drop_cols = ["__bin", "__lo_num"]
-    if salt > 1:
-        # deterministic left-side split (xxhash64 over the input row —
-        # not monotonically_increasing_id/rand, which are
-        # nondeterministic under task retry) + right-side replication
-        l = l.withColumn(
-            "__salt",
-            F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salt)),
-        ).alias("l")
-        r = (
-            r.withColumn(
-                "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-            )
-            .withColumn("__salt", F.col("__salt").cast("bigint"))
-            .alias("r")
-        )
-        drop_cols.append("__salt")
     cond = F.col("l.__bin") == F.col("r.__bin")
-    if salt > 1:
-        cond = cond & (F.col("l.__salt") == F.col("r.__salt"))
     for k in on:
         cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
     cond = cond & (F.col(f"l.{l_lo}") <= F.col(f"r.{r_hi}"))
@@ -391,7 +353,7 @@ def interval_overlap_join(
         F.col("l.__bin")
         == F.floor(F.greatest(F.col("l.__lo_num"), F.col("r.__lo_num")) / F.lit(w)).cast("bigint")
     )
-    return l.join(r, cond).drop(*drop_cols)
+    return l.join(r, cond).drop("__bin", "__lo_num")
 
 
 def salted_join(

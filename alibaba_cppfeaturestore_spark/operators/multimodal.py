@@ -2,10 +2,10 @@
 
 Treats media as opaque ``binary`` columns with typed metadata structs, and
 implements decode / feature-extract / frame-sample as Arrow-batched
-``mapInPandas`` operators. The actual codec calls are STUBBED (the image/
-audio libraries are not in this container): ``decode_fn=None`` uses a
-deterministic fake decoder so the Spark-side contract — schema, batch
-shape, partitioning, null handling — is real and tested; pass a real
+``mapInPandas`` operators. The actual codec calls are STUBBED: the default
+``decode_fn`` is a deterministic fake decoder, so the Spark-side contract —
+schema, batch shape, partitioning, null handling — is real and tested, and
+the catalog's DuckDB oracles replay its values; pass a real
 ``decode_fn(payload: bytes) -> dict`` to swap in PIL/ffmpeg/etc.
 
 Scale notes: media payloads dominate row size, so operators project the
@@ -71,60 +71,16 @@ def _fake_decode(payload: bytes) -> dict:
     }
 
 
-def codec_available() -> bool:
-    """True when Pillow is importable — the capability probe mirroring
-    the delta-jar ``Class.forName`` pattern in ``sources/readers.py``:
-    detect at call time, never hard-import, so the module loads (and the
-    stub path runs) in codec-less containers."""
-    try:
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def pil_decode(payload: bytes) -> dict:
-    """Real-codec decode via Pillow: width/height from the image header,
-    n_frames from multi-frame formats (GIF/TIFF; 1 otherwise). Raises on
-    non-image bytes like any decoder — callers' per-object try/except
-    turns that into null decode fields."""
-    import io
-
-    from PIL import Image
-
-    with Image.open(io.BytesIO(payload)) as im:
-        return {
-            "width": im.width,
-            "height": im.height,
-            "n_frames": int(getattr(im, "n_frames", 1)),
-        }
-
-
-def default_decode_fn() -> Callable[[bytes], dict]:
-    """The decode kernel the operators use when the caller passes none:
-    the real Pillow codec when importable, else the deterministic stub.
-    NOTE for differential-checked pipelines: the CATALOG entries pin
-    ``decode_fn=_fake_decode`` explicitly — their DuckDB oracles replay
-    the hash-chained stub, which must not silently change value when a
-    codec library appears in the environment."""
-    return pil_decode if codec_available() else _fake_decode
-
-
 def decode_media_metadata(
     media: DataFrame,
-    decode_fn: Callable[[bytes], dict] | None = None,
+    decode_fn: Callable[[bytes], dict] = _fake_decode,
 ) -> DataFrame:
     """Decode payloads → typed metadata via mapInPandas (Arrow batches).
 
     Output schema is fixed (``MEDIA_META_SCHEMA``); corrupt/null payloads
     yield a row with null decode fields rather than failing the batch —
     at 100 TB a single bad object must not kill the job.
-
-    ``decode_fn=None`` selects by capability: the real Pillow codec when
-    importable, else the deterministic stub (``default_decode_fn``).
     """
-    fn = decode_fn or default_decode_fn()
 
     def decode_one(payload) -> tuple:
         # (n_bytes, width, height, n_frames, sha256) for one object; the
@@ -139,7 +95,7 @@ def decode_media_metadata(
         # only the decode fields, never the content hash
         sha = hashlib.sha256(b).hexdigest()
         try:
-            meta = fn(b)
+            meta = decode_fn(b)
             return (
                 len(b),
                 meta.get("width"),
@@ -147,13 +103,6 @@ def decode_media_metadata(
                 meta.get("n_frames"),
                 sha,
             )
-        except ImportError:
-            # environment mismatch, NOT data corruption: codec_available()
-            # probed the DRIVER, but this import ran on an EXECUTOR. A
-            # driver-only Pillow install would otherwise null every row's
-            # decode fields — indistinguishable from 100% corrupt payloads
-            # (r08 ADVICE find). Fail the task loudly instead.
-            raise
         except Exception:
             return (len(b), None, None, None, sha)  # corrupt -> null decode fields
 
@@ -188,14 +137,13 @@ def decode_media_metadata(
 def extract_features(
     media: DataFrame,
     dim: int = 64,
-    embed_fn: Callable[[bytes], list] | None = None,
 ) -> DataFrame:
     """Feature extraction contract: payload → dense float embedding
     (``media_id, embedding array<float>``) — the bridge from media columns
     into the similarity operators (``operators/similarity.py``). The stub
-    derives a deterministic pseudo-embedding from the payload hash; pass
-    ``embed_fn(payload) -> list[float]`` to plug a real model runtime.
-    Output vectors are L2-normalized so cosine = dot downstream."""
+    derives a deterministic pseudo-embedding from the payload hash (a
+    real model runtime would replace ``fake_embed``). Output vectors are
+    L2-normalized so cosine = dot downstream."""
     schema = T.StructType(
         [
             T.StructField("media_id", T.LongType(), False),
@@ -215,21 +163,14 @@ def extract_features(
             raw += bytes.fromhex(seed)
         return [raw[i] / 127.5 - 1.0 for i in range(dim)]
 
-    fn = embed_fn or fake_embed
-
     def embed_one(payload):
         import math
 
         if payload is None:
             return None
-        try:
-            v = [float(x) for x in fn(bytes(payload))]
-            norm = math.sqrt(sum(x * x for x in v)) or 1.0
-            return [x / norm for x in v]
-        except ImportError:
-            raise  # executor-side codec missing: env mismatch, not corruption
-        except Exception:
-            return None
+        v = fake_embed(bytes(payload))
+        norm = math.sqrt(sum(x * x for x in v)) or 1.0
+        return [x / norm for x in v]
 
     def gen(batches: Iterator) -> Iterator:
         import pandas as pd
@@ -251,7 +192,7 @@ def extract_features(
 def sample_frames(
     media: DataFrame,
     every_nth: int = 10,
-    decode_fn: Callable[[bytes], dict] | None = None,
+    decode_fn: Callable[[bytes], dict] = _fake_decode,
 ) -> DataFrame:
     """Frame sampling contract: one output row per sampled frame index.
     Uses the (stubbed) decoder's n_frames; real impl would emit frame
@@ -263,8 +204,6 @@ def sample_frames(
             T.StructField("frame_idx", T.IntegerType(), False),
         ]
     )
-    fn = decode_fn or default_decode_fn()
-
     def gen(batches: Iterator) -> Iterator:
         import pandas as pd
 
@@ -283,7 +222,7 @@ def sample_frames(
                 # column to pandas as float64 with NaN)
                 if payload is None or pd.isna(mid):
                     continue
-                n = fn(bytes(payload))["n_frames"]
+                n = decode_fn(bytes(payload))["n_frames"]
                 sampled = range(0, n, every_nth)
                 ids.extend([mid] * len(sampled))
                 idxs.extend(sampled)

@@ -73,7 +73,6 @@ def heavy_hitters(
     tokens: DataFrame,
     token_col: str = "token",
     phi: tuple[int, int] = (1, 500),
-    capacity: int | None = None,
 ) -> DataFrame:
     """All tokens whose exact count exceeds ``phi[0]/phi[1]`` × total,
     with exact counts — computed without ever shuffling the full
@@ -82,16 +81,14 @@ def heavy_hitters(
     ``tokens`` is one row per token occurrence. ``phi`` is an exact
     integer fraction so the threshold compare is pure integer arithmetic
     (``cnt·den > total·num`` — a float φ×total can land on either side
-    of an integer across engines). ``capacity`` defaults to twice the
-    minimum ``den/num`` for slack. Output: ``token, cnt`` —
+    of an integer across engines). The summary keeps ``2·den/num + 1``
+    counters per partition, twice the minimum for slack, so the MG
+    guarantee always holds. Output: ``token, cnt`` —
     deterministic and partition-invariant (candidates are a superset of
     the answer by the MG guarantee; the exact recount + exact threshold
     make the final set independent of how the data was partitioned)."""
     num, den = phi
-    if capacity is None:
-        capacity = 2 * den // num + 1
-    if num * (capacity + 1) < den:
-        raise ValueError(f"phi={num}/{den} below MG guarantee 1/(capacity+1)")
+    capacity = 2 * den // num + 1
     toks = tokens.select(F.col(token_col).alias("token"))
     # ONE sketch scan yields both the candidate union and the exact total
     # (marker rows), then ONE recount scan — the two-pass structural floor

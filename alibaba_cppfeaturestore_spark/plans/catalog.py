@@ -4718,14 +4718,11 @@ def multimodal_decode_metadata(spark, sf_dir):
     Payloads are utf-8 text bytes (deterministic stand-in); n_bytes and
     sha256 are decoder-independent and oracle-checked, the stubbed
     width/height/n_frames fields are covered by unit tests."""
-    from ..operators.multimodal import _fake_decode, attach_binary_payload, decode_media_metadata
+    from ..operators.multimodal import attach_binary_payload, decode_media_metadata
 
     docs = _t(spark, sf_dir, "documents")
     media = attach_binary_payload(docs, source_col="text", id_col="doc_id")
-    # decode_fn PINNED to the stub: this entry's DuckDB oracle replays
-    # the hash-chained fake, which must not change value when a codec
-    # library appears in the environment (default_decode_fn would).
-    meta = decode_media_metadata(media, decode_fn=_fake_decode)
+    meta = decode_media_metadata(media)
     return meta.select("media_id", "media_type", "n_bytes", "sha256")
 
 
@@ -5069,18 +5066,15 @@ def sample_stratified(spark, sf_dir):
     )
 
 
+# text_clean_normalize's dirty input: the corpus wrapped in markup.
+_DIRTY_TEXT_SQL = """'<p class="x">' || text || '</p>' || chr(9) || ' trailing'"""
+
+
 @_q(
     "text_clean_normalize",
-    rf"""
+    f"""
     SELECT doc_id,
-           TRIM(regexp_replace(
-             regexp_replace(
-               regexp_replace(
-                 regexp_replace('<p class="x">' || text || '</p>' || chr(9) || ' trailing',
-                                '<[^>]*>', ' ', 'g'),
-                 '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-               '[\x{{00A0}}\x{{2000}}-\x{{200B}}\x{{3000}}]', ' ', 'g'),
-             '{TX.TOKEN_SPLIT_REGEX}', ' ', 'g'), {TX.WS_TRIM_SQL}) AS text
+           {TX.clean_text_sql(_DIRTY_TEXT_SQL)} AS text
     FROM documents
     """,
 )
@@ -5164,13 +5158,11 @@ def multimodal_frame_sample(spark, sf_dir):
     derives n_frames from byte 2 of sha256(payload), which DuckDB can
     reproduce from the hex digest — a full value oracle for the
     explosion contract despite the stubbed codec."""
-    from ..operators.multimodal import _fake_decode, attach_binary_payload, sample_frames
+    from ..operators.multimodal import attach_binary_payload, sample_frames
 
     docs = _t(spark, sf_dir, "documents")
     media = attach_binary_payload(docs, source_col="text", id_col="doc_id")
-    # decode_fn pinned to the stub (oracle replays it; see
-    # multimodal_decode_metadata)
-    return sample_frames(media, every_nth=10, decode_fn=_fake_decode)
+    return sample_frames(media, every_nth=10)
 
 
 @_q(

@@ -97,15 +97,13 @@ class TxTable:
         with open(path) as f:
             return json.load(f)
 
-    def _latest_checkpoint_at_or_below(
-        self, as_of: int | None, ceiling: int | None = None
-    ) -> int | None:
+    def _latest_checkpoint_at_or_below(self, as_of: int | None) -> int | None:
         """Newest checkpoint usable for a read as of ``as_of``. The
         ``_last_checkpoint`` pointer is the fast path (one read instead
         of a directory list); the list is the fallback for time travel
         below the pointer and for a crash that lost the pointer write."""
         pointer = os.path.join(self.log_dir, "_last_checkpoint")
-        if as_of is None and ceiling is None and os.path.exists(pointer):
+        if as_of is None and os.path.exists(pointer):
             try:
                 with open(pointer) as f:
                     v = json.load(f)["version"]
@@ -116,9 +114,7 @@ class TxTable:
             except (ValueError, KeyError, OSError):
                 pass  # torn/missing pointer -> fall back to listing
         usable = [
-            v for v in self._checkpoint_versions()
-            if (as_of is None or v <= as_of)
-            and (ceiling is None or v <= ceiling)
+            v for v in self._checkpoint_versions() if as_of is None or v <= as_of
         ]
         return usable[-1] if usable else None
 
@@ -128,14 +124,10 @@ class TxTable:
         crash-safe: a lost checkpoint file just means the fold stays
         linear until the next interval; a lost pointer is recovered by
         directory listing."""
-        # seed only from checkpoints STRICTLY below `version`: when
-        # commit_idempotent regenerates checkpoint v after annotating the
-        # commit record, seeding from the stale checkpoint v itself would
-        # skip the annotated commit and drop its txn watermark.
         state = {
             "version": version,
-            "live": self._fold_live(as_of=version, ckpt_ceiling=version - 1),
-            "txn": self._fold_txn(as_of=version, ckpt_ceiling=version - 1),
+            "live": self._fold_live(as_of=version),
+            "txn": self._fold_txn(as_of=version),
         }
         path = os.path.join(self.log_dir, f"{version:020d}.checkpoint.json")
         tmp = path + f".tmp-{uuid.uuid4().hex}"
@@ -154,12 +146,10 @@ class TxTable:
         ):
             self._write_checkpoint(version)
 
-    def _fold_txn(
-        self, as_of: int, ckpt_ceiling: int | None = None
-    ) -> dict[str, int]:
+    def _fold_txn(self, as_of: int) -> dict[str, int]:
         """Per-app txn watermarks through ``as_of``, seeded from the
-        newest checkpoint below it."""
-        ckpt_v = self._latest_checkpoint_at_or_below(as_of, ceiling=ckpt_ceiling)
+        newest checkpoint at or below it."""
+        ckpt_v = self._latest_checkpoint_at_or_below(as_of)
         txn: dict[str, int] = {}
         start = -1
         if ckpt_v is not None:
@@ -181,7 +171,6 @@ class TxTable:
         self,
         as_of: int | None = None,
         use_checkpoint: bool = True,
-        ckpt_ceiling: int | None = None,
     ) -> list[str]:
         """Fold the log into the live file set: ``overwrite`` resets,
         ``append`` extends. Seeded from the newest checkpoint at or
@@ -190,7 +179,7 @@ class TxTable:
         live: list[str] = []
         start = -1
         if use_checkpoint:
-            ckpt_v = self._latest_checkpoint_at_or_below(as_of, ceiling=ckpt_ceiling)
+            ckpt_v = self._latest_checkpoint_at_or_below(as_of)
             if ckpt_v is not None:
                 live = list(self._read_checkpoint(ckpt_v)["live"])
                 start = ckpt_v
@@ -211,10 +200,14 @@ class TxTable:
 
     # -- writes -------------------------------------------------------------
 
-    def commit(self, df: DataFrame, mode: str = "append") -> int | None:
+    def commit(
+        self, df: DataFrame, mode: str = "append", txn: dict | None = None
+    ) -> int | None:
         """Write ``df`` as a new immutable file group, then publish it
         with one atomic log-file create. Returns the committed version,
-        or None for a skipped ``ignore`` write.
+        or None for a skipped ``ignore`` write. ``txn`` is
+        ``commit_idempotent``'s (app_id, version) marker; it rides in the
+        same create, so the commit and its marker land together.
 
         ``ignore`` short-circuits BEFORE writing data (the reference's
         idempotent-load semantics: if the table exists, the load already
@@ -244,6 +237,8 @@ class TxTable:
             # (driver_sim --perturb-empty find)
             "schema": df.schema.json(),
         }
+        if txn:
+            record["txn"] = txn
         # O_EXCL create = the atomic commit point; a concurrent writer
         # that claimed this version first makes this raise (caller may
         # re-resolve and retry — optimistic concurrency).
@@ -310,21 +305,7 @@ class TxTable:
         latest = self.last_txn_version(app_id)
         if latest is not None and txn_version <= latest:
             return None
-        v = self.commit(df, mode)
-        if v is None:
-            return None
-        # annotate the just-published commit record with the txn marker;
-        # the log file is the commit point and already exists, so this
-        # rewrite is metadata-only and single-writer (we hold version v)
-        path = os.path.join(self.log_dir, f"{v:020d}.json")
-        record = self._read_commit(v)
-        record["txn"] = {"app_id": app_id, "version": txn_version}
-        with open(path, "w") as f:
-            json.dump(record, f)
-        # regenerate any checkpoint commit() just wrote at v: it folded
-        # the pre-annotation record, so its txn map would miss this marker
-        self._maybe_checkpoint(v)
-        return v
+        return self.commit(df, mode, txn={"app_id": app_id, "version": txn_version})
 
     def last_txn_version(self, app_id: str) -> int | None:
         """Highest committed ``txn_version`` for ``app_id`` (None if the

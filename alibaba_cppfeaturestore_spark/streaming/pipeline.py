@@ -57,7 +57,6 @@ def _run_bounded(writer: DataStreamWriter) -> None:
 def run_bounded_to_memory(
     stream_df: DataFrame,
     output_mode: str = "complete",
-    name: str | None = None,
     state_partitions: int | None = None,
 ) -> DataFrame:
     """Run a bounded streaming query to a memory sink and return the result
@@ -80,7 +79,7 @@ def run_bounded_to_memory(
     partition count. Callers are single-threaded here (bench/driver_sim
     run queries serially); a concurrent caller should pass a cloned
     session (``spark.newSession()``) so the conf stays private."""
-    qname = name or f"mem_{uuid.uuid4().hex[:12]}"
+    qname = f"mem_{uuid.uuid4().hex[:12]}"
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions") if state_partitions else None
     if state_partitions:

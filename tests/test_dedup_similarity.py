@@ -601,16 +601,39 @@ def test_prefix_indexed_jaccard_equals_quadratic(spark, docs):
         assert len(idx) >= 30  # the planted mutants are found
 
 
+def _quadratic_shingle_pairs(corpus, n, threshold, block_col):
+    """Blocked all-pairs Jaccard over distinct word n-gram shingles: the
+    reference the prefix-indexed join must reproduce."""
+    from alibaba_cppfeaturestore_spark.functions.text import token_shingles
+    from alibaba_cppfeaturestore_spark.operators.dedup import jaccard
+
+    base = corpus.select(
+        F.col("doc_id").alias("id"),
+        block_col,
+        F.array_distinct(token_shingles(F.col("text"), n)).alias("s"),
+    )
+    a, b = base.alias("a"), base.alias("b")
+    cond = (F.col("a.id") < F.col("b.id")) & (
+        F.col(f"a.{block_col}") == F.col(f"b.{block_col}")
+    )
+    return (
+        a.join(b, cond)
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.round(jaccard(F.col("a.s"), F.col("b.s")), 6).alias("jaccard_sim"),
+        )
+        .filter(F.col("jaccard_sim") >= threshold)
+    )
+
+
 def test_prefix_indexed_jaccard_blocked_shingles_equals_quadratic(spark, docs):
     """Round-6 parameters: the indexed join with shingle_n (word-shingle
     sets) and block_cols (pairs must agree on the block) must reproduce
     the blocked quadratic join exactly — including the NULL-block rows,
     which pair with nobody under equality on both paths. This is the
     configuration the curation pipeline's oracle near-dup stage runs."""
-    from alibaba_cppfeaturestore_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_indexed,
-    )
+    from alibaba_cppfeaturestore_spark.operators.dedup import ngram_jaccard_pairs_indexed
 
     base = docs.limit(60).withColumn(
         "blk",
@@ -624,13 +647,7 @@ def test_prefix_indexed_jaccard_blocked_shingles_equals_quadratic(spark, docs):
         "blk",
     )
     corpus = base.unionByName(mutants)
-    quad = {
-        tuple(r)
-        for r in ngram_jaccard_pairs(
-            corpus, text_col="text", id_col="doc_id",
-            block_cols=["blk"], threshold=0.8, shingle_n=5,
-        ).collect()
-    }
+    quad = {tuple(r) for r in _quadratic_shingle_pairs(corpus, 5, 0.8, "blk").collect()}
     idx = {
         tuple(r)
         for r in ngram_jaccard_pairs_indexed(
@@ -898,7 +915,7 @@ def test_shingle_jaccard_discriminates_where_tokenset_saturates(spark, docs):
     """shingle_n pairs: a one-token-PREFIXED copy scores ≈(N-4)/(N-3) ≥ 0.9
     while unrelated small-vocabulary docs stay below threshold — the
     measured failure of token-set Jaccard on a 31-word vocabulary."""
-    from alibaba_cppfeaturestore_spark.operators.dedup import ngram_jaccard_pairs
+    from alibaba_cppfeaturestore_spark.operators.dedup import ngram_jaccard_pairs_indexed
 
     from alibaba_cppfeaturestore_spark.functions.text import tokens as _toks
 
@@ -913,7 +930,7 @@ def test_shingle_jaccard_discriminates_where_tokenset_saturates(spark, docs):
             F.concat(F.lit("zz9 "), F.col("text")).alias("text"),
         )
     )
-    pairs = ngram_jaccard_pairs(
+    pairs = ngram_jaccard_pairs_indexed(
         corpus, text_col="text", id_col="doc_id", threshold=0.9, shingle_n=5
     ).collect()
     found = {(r.id_a, r.id_b) for r in pairs}

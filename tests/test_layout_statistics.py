@@ -146,59 +146,6 @@ def test_interval_overlap_join_matches_naive(spark):
     assert got == naive
 
 
-def test_interval_overlap_join_salt_is_exact_and_splits_the_hot_bin(spark):
-    # r10 verdict item 6: a flash-crowd hour — every interval in ONE
-    # hourly bin — degrades the grid to within-bin all-pairs owned by a
-    # single reducer. salt>1 must (a) return the EXACT same pair set,
-    # and (b) actually split the hot bin's left side across salt groups.
-    hot = [(i, 3600.0 + float(i), 3600.0 + 30.0 + float(i)) for i in range(40)]
-    cold = [(100, 99000.0, 99010.0), (101, 99005.0, 99020.0)]
-    rows = hot + cold
-    df = spark.createDataFrame(rows, "iid long, lo double, hi double")
-
-    def pairs(salt):
-        return {
-            (x["a"], x["b"])
-            for x in interval_overlap_join(
-                df, df, "lo", "hi", "lo", "hi", bin_width=3600.0, salt=salt
-            )
-            .filter(F.col("l.iid") < F.col("r.iid"))
-            .select(F.col("l.iid").alias("a"), F.col("r.iid").alias("b"))
-            .collect()
-        }
-
-    unsalted = pairs(1)
-    assert pairs(4) == unsalted
-    naive = {
-        (a, b)
-        for a, alo, ahi in rows
-        for b, blo, bhi in rows
-        if a < b and alo <= bhi and blo <= ahi
-    }
-    assert unsalted == naive
-    # the hot bin's 40 left rows spread over >1 salt groups (xxhash64 of
-    # distinct rows — a 1-in-4^39 fluke otherwise)
-    salted_plan = interval_overlap_join(
-        df, df, "lo", "hi", "lo", "hi", bin_width=3600.0, salt=4
-    )
-    n_groups = (
-        salted_plan.select(F.col("l.iid"))
-        .distinct()
-        .count()
-    )
-    assert n_groups == len(rows)  # every left row still participates
-    from pyspark.sql import functions as SF
-
-    salts = (
-        df.select(
-            F.pmod(F.xxhash64(*[SF.col(c) for c in df.columns]), F.lit(4)).alias("s")
-        )
-        .distinct()
-        .count()
-    )
-    assert salts > 1
-
-
 def test_interval_overlap_join_is_hash_join(spark):
     l = spark.range(10).select(
         F.col("id").alias("lid"),
@@ -232,14 +179,6 @@ def test_heavy_hitters_exact_and_partition_invariant(spark):
             for r in heavy_hitters(df.repartition(parts), "token", phi=(1, 50)).collect()
         }
         assert got == exact, f"partitioning {parts} changed the answer"
-
-
-def test_heavy_hitters_rejects_unguaranteed_phi(spark):
-    from alibaba_cppfeaturestore_spark.operators.sketches import heavy_hitters
-
-    df = spark.createDataFrame([("a",)], "token string")
-    with pytest.raises(ValueError):
-        heavy_hitters(df, "token", phi=(1, 1000), capacity=10)
 
 
 def test_salted_join_equals_plain_join(spark):

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -34,64 +33,6 @@ def test_decode_metadata_deterministic(spark):
     assert out == again
 
 
-def _make_png(w: int, h: int) -> bytes:
-    """A valid minimal RGB PNG built with the stdlib (spec-conformant:
-    signature, IHDR, one IDAT of zlib'd filter-0 scanlines, IEND)."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # 8-bit RGB
-    raw = b"".join(b"\x00" + b"\x7f" * (3 * w) for _ in range(h))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_codec_capability_detection():
-    # The default decode tier follows what imports: the real Pillow codec
-    # where installed, else the stub that reproduces the catalog oracle
-    # values. The Pillow tier's own decode is test_pillow_decode_true_dimensions.
-    from alibaba_cppfeaturestore_spark.operators import multimodal as MM
-
-    if not MM.codec_available():
-        assert MM.default_decode_fn() is MM._fake_decode
-    else:
-        assert MM.default_decode_fn() is MM.pil_decode
-
-
-def test_pillow_decode_true_dimensions(spark):
-    # True dimensions from actual image bytes, also through
-    # decode_media_metadata's default decoder.
-    pytest.importorskip("PIL")
-    from alibaba_cppfeaturestore_spark.operators import multimodal as MM
-
-    png = _make_png(37, 21)
-    meta = MM.pil_decode(png)
-    assert (meta["width"], meta["height"], meta["n_frames"]) == (37, 21, 1)
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("media_type", T.StringType()),
-        ]
-    )
-    row = decode_media_metadata(
-        spark.createDataFrame([(1, bytearray(png), "image/png")], schema)
-    ).collect()[0]
-    assert (row["width"], row["height"]) == (37, 21)
-
-
 def test_decode_tolerates_null_and_corrupt(spark):
     schema = T.StructType(
         [
@@ -116,8 +57,8 @@ def test_decode_tolerates_null_and_corrupt(spark):
     assert out[1]["width"] == 1 and out[1]["n_frames"] == 3
     assert out[2]["n_bytes"] is None and out[2]["width"] is None  # row survives
     # decode failure nulls ONLY the decode fields: n_bytes and sha256
-    # are decoder-independent (r08 review find — the real-codec default
-    # makes this path routine on non-image payloads)
+    # are decoder-independent (r08 review find — a real codec makes
+    # this path routine on non-image payloads)
     assert out[3]["width"] is None and out[3]["n_frames"] is None
     assert out[3]["n_bytes"] == len(b"garbage")
     assert out[3]["sha256"] == hashlib.sha256(b"garbage").hexdigest()

@@ -34,7 +34,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from alibaba_cppfeaturestore_spark.plans.catalog import QUERIES
-from tools.driver_sim import TABLES, perturb
+from tools.driver_sim import canon, duckdb_views, perturb
 
 # The entries whose plans carry explicit null-discipline decisions (see
 # module docstring), plus the dictionary/text/statistics neighbours that
@@ -85,26 +85,9 @@ def null_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def ddb(null_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{null_sf}/{t}.parquet')"
-        )
+    con = duckdb_views(null_sf)
     yield con
     con.close()
-
-
-def canonicalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1).copy()
-    for c in df.columns:
-        if pd.api.types.is_float_dtype(df[c]):
-            df[c] = df[c].round(6)
-        elif pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].astype("datetime64[us]")
-        elif df[c].dtype == object:
-            df[c] = df[c].apply(lambda v: str(v) if v is not None else None)
-    df = df.sort_values(by=list(df.columns), na_position="last").reset_index(drop=True)
-    return df
 
 
 def test_perturbation_actually_injects_nulls(null_sf):
@@ -120,8 +103,8 @@ def test_perturbation_actually_injects_nulls(null_sf):
 @pytest.mark.parametrize("name", NULL_SENSITIVE)
 def test_null_fuzz_matches_oracle(spark, ddb, null_sf, name):
     qd = QUERIES[name]
-    spark_pd = canonicalize(qd.spark(spark, null_sf).toPandas())
-    oracle_pd = canonicalize(ddb.execute(qd.oracle).fetchdf())
+    spark_pd = canon(qd.spark(spark, null_sf).toPandas())
+    oracle_pd = canon(ddb.execute(qd.oracle).fetchdf())
     assert list(spark_pd.columns) == list(oracle_pd.columns), (
         f"{name}: column mismatch {list(spark_pd.columns)} vs "
         f"{list(oracle_pd.columns)}"

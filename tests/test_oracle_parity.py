@@ -2,47 +2,31 @@
 
 Mimics the driver's correctness gate (CORRECTNESS_r{N}.json): run the Spark
 query and the oracle SQL at sf0.01, sort columns by name, sort rows, compare
-values. Queries without an oracle get a rows-only sanity check.
+values. Queries without an oracle get a rows-only sanity check. The
+DuckDB views and the compared form are ``tools/driver_sim.py``'s.
 """
 
 from __future__ import annotations
 
-import duckdb
+import os
+import sys
+
 import pandas as pd
 import pytest
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 from alibaba_cppfeaturestore_spark.plans.catalog import QUERIES
+from tools.driver_sim import canon, duckdb_views
 
 SF_DIR = "/root/testdata/sf0.01"
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 @pytest.fixture(scope="module")
 def ddb():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duckdb_views(SF_DIR)
     yield con
     con.close()
-
-
-def canonicalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1).copy()
-    for c in df.columns:
-        if pd.api.types.is_float_dtype(df[c]):
-            df[c] = df[c].round(6)
-        elif pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].astype("datetime64[us]")
-        elif df[c].dtype == object:
-            df[c] = df[c].apply(lambda v: str(v) if v is not None else None)
-    df = df.sort_values(by=list(df.columns), na_position="last").reset_index(drop=True)
-    return df
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
@@ -71,6 +55,6 @@ def test_query_matches_oracle(spark, ddb, name):
         f"{name}: columns {sorted(spark_pd.columns)} != {sorted(oracle_pd.columns)}"
     )
 
-    a = canonicalize(spark_pd)
-    b = canonicalize(oracle_pd)
+    a = canon(spark_pd)
+    b = canon(oracle_pd)
     pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=False, rtol=1e-6, atol=1e-6)

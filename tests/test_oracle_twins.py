@@ -122,16 +122,25 @@ def _twin_outputs() -> dict[str, str]:
         "kv separator": KV.KV_SPLIT_SQL,
         "kv int regex": KV.KV_INT_REGEX,
         "finite-vector predicate": V.is_finite_vector_sql("v").split(", ", 1)[1],
+        "control-char regex": TX.CONTROL_CHAR_REGEX,
+        "unicode-space class": TX.UNICODE_SPACES_SQL,
     }
 
 
 def hand_spelled_twins(source: str) -> list[str]:
-    """The twin outputs ``source`` spells literally, as a raw string or
-    with its backslashes escaped."""
+    """The twin outputs ``source`` spells literally, as a raw string,
+    with its backslashes escaped, or with its braces doubled (f-string)."""
     return [
         name
         for name, text in _twin_outputs().items()
-        if text in source or text.replace("\\", "\\\\") in source
+        if any(
+            spelling in source
+            for spelling in (
+                text,
+                text.replace("\\", "\\\\"),
+                text.replace("{", "{{").replace("}", "}}"),
+            )
+        )
     ]
 
 
@@ -145,3 +154,5 @@ def test_twin_scan_sees_both_spellings():
     escaped = KV.KV_INT_REGEX.replace("\\", "\\\\")
     assert hand_spelled_twins(f"'{escaped}'") == ["kv int regex"]
     assert hand_spelled_twins(V.is_finite_vector_sql("embedding")) == ["finite-vector predicate"]
+    doubled = TX.UNICODE_SPACES_SQL.replace("{", "{{").replace("}", "}}")
+    assert hand_spelled_twins(f"'[{doubled}]'") == ["unicode-space class"]

@@ -244,6 +244,23 @@ def test_idempotent_commit_dedupes_replayed_epochs(spark, tx):
     assert tx.last_txn_version("nobody") is None
 
 
+def test_idempotent_commit_marker_lands_with_the_commit(spark, tx, monkeypatch):
+    """A crash right after the commit's log-file create (the checkpoint
+    step raising once) leaves the batch committed WITH its txn marker,
+    so replaying the same epoch is skipped instead of committing twice."""
+
+    def crash_once(self, version):
+        monkeypatch.undo()
+        raise RuntimeError("crash after the commit create")
+
+    monkeypatch.setattr(TxTable, "_maybe_checkpoint", crash_once)
+    with pytest.raises(RuntimeError):
+        tx.commit_idempotent(_df(spark, [("a", 1)]), "app", 0)
+    assert tx.commit_idempotent(_df(spark, [("a", 1)]), "app", 0) is None
+    assert tx.latest_version() == 0
+    assert tx.read(spark).count() == 1
+
+
 def test_foreachbatch_sink_exactly_once_via_txn(spark, tx, tmp_path):
     """End-to-end: a checkpointed foreachBatch stream commits each
     micro-batch idempotently; restarting the SAME stream from the same
@@ -396,8 +413,8 @@ def test_checkpoint_with_real_commits_and_idempotent_annotation(spark, tmp_path)
     t = TxTable(str(tmp_path / "t"), checkpoint_interval=5)
     for i in range(4):
         t.commit(_df(spark, [(i, float(i))]))
-    # version 5 lands via commit_idempotent -> triggers checkpoint AND
-    # annotates; the regenerated checkpoint must carry the txn watermark
+    # version 5 lands via commit_idempotent and triggers a checkpoint,
+    # which must carry the txn watermark of the commit it folds
     assert t.commit_idempotent(_df(spark, [(99, 9.9)]), "sink", 7) == 4
     assert t.commit_idempotent(_df(spark, [(5, 5.0)]), "sink", 8) == 5
     assert 5 in t._checkpoint_versions()

@@ -118,6 +118,7 @@ TEXT_DOCS = EXOTIC_DOCS + [
     "call +1 555-0123 9 or (555) 123\x0b4567",
     "the cat and the hat, in a box; is it? yes!",
     "alpha beta gamma delta epsilon zeta eta theta iota the",
+    '<p class="x">tagged\x01 text</p>\t trailing',
 ]
 
 
@@ -128,6 +129,7 @@ TEXT_DOCS = EXOTIC_DOCS + [
         pytest.param(TX.quality_score, TX.quality_score_sql, id="quality_score"),
         pytest.param(TX.redact_pii, TX.redact_pii_sql, id="redact_pii"),
         pytest.param(TX.bpe_pretokens, TX.bpe_pretokens_sql, id="bpe_pretokens"),
+        pytest.param(TX.clean_text, TX.clean_text_sql, id="clean_text"),
         *[
             pytest.param(
                 lambda c, i=i: TX.pii_counts(c)[i],

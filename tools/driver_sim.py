@@ -61,7 +61,18 @@ def _src_tag(sf: str) -> str:
     return f"x{zlib.crc32(base.encode()):08x}_{base[-60:]}"
 
 
+def duckdb_views(sf: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table of ``sf``: the
+    oracles' FROM clauses name the tables."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    return con
+
+
 def canon(df: pd.DataFrame) -> pd.DataFrame:
+    """Columns sorted by name, floats rounded to 6 places, timestamps at
+    microseconds, objects as strings, rows sorted: the compared form."""
     df = df.reindex(sorted(df.columns), axis=1).copy()
     for c in df.columns:
         if pd.api.types.is_float_dtype(df[c]):
@@ -959,11 +970,7 @@ def main() -> int:
         .getOrCreate()
     )
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
-        )
+    con = duckdb_views(args.sf)
 
     # Engine versions in every artifact: cross-engine entries (regex
     # classes, window tie semantics, TRIM behavior) can diverge on a

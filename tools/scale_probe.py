@@ -181,11 +181,9 @@ def overlap_probe(spark):
     NATURAL time distribution and on a flash-crowd variant (~30% of
     sessions re-based into one hour). Pair volumes are computed
     ARITHMETICALLY from the histogram (Σ m·(m−1)/2 within each hourly
-    bin), so the probe never materializes the m² pairs it measures; the
-    per-task column shows what ``salt`` buys — the hot bin's product
-    split across salt sub-groups (EXACT, unlike LSH's lossy cap: a
-    crowded hour's pairs genuinely all overlap, so the OUTPUT is ~m²
-    and only the single-reducer stall is fixable)."""
+    bin), so the probe never materializes the m² pairs it measures. The
+    hottest bin's C(m,2) is what one reducer owns (a crowded hour's
+    pairs genuinely all overlap, so the OUTPUT is ~m²)."""
     from pyspark.sql import Window
 
     ev = load_table(spark, "/root/testdata/sf0.1", "events")
@@ -229,20 +227,14 @@ def overlap_probe(spark):
             F.sum(F.col("m") * (F.col("m") - 1) / 2).alias("pairs"),
         ).collect()
         n = df.count()
-        for s in (1, 8, 32):
-            # C(m,2)-style per-task bound so the salt=1 row EQUALS the
-            # hottest bin's pair count and divides ~linearly with s —
-            # the old max_m * ceil(max_m/s) print was on a different
-            # scale than the Σ C(m,2) column and overstated what salt
-            # buys by ~2x (r11 advice)
-            per_task = math.ceil(row["max_m"] / s) * (row["max_m"] - 1) / 2
-            print(
-                f"| {label} | {n} | {row['n_bins']} | {row['max_m']} "
-                f"| {int(row['pairs'])} | salt={s}: ≤{int(per_task)} pairs per task |"
-            )
+        hot_pairs = row["max_m"] * (row["max_m"] - 1) // 2
+        print(
+            f"| {label} | {n} | {row['n_bins']} | {row['max_m']} "
+            f"| {int(row['pairs'])} | {hot_pairs} |"
+        )
         return row
 
-    print("| regime | n_sessions | bins touched | hottest bin m | Σ C(m,2) | hot-bin per-task bound |")
+    print("| regime | n_sessions | bins touched | hottest bin m | Σ C(m,2) | hot-bin C(m,2) |")
     print("|---|---|---|---|---|---|")
     nat = histo(spans, "natural sf0.1")
     # flash-crowd: re-base ~30% of sessions into one hour, preserving
@@ -271,10 +263,10 @@ def overlap_probe(spark):
     print(
         "# reading: the natural distribution's hottest hourly bin is tiny (events\n"
         "# spread over the generator's date range); the flash-crowd bin owns ~30%\n"
-        "# of sessions and C(m,2) of it is the REAL output size (they all overlap)\n"
-        "# — salt splits that one reducer's product into salt tasks.\n"
+        "# of sessions and C(m,2) of it is the REAL output size (they all overlap),\n"
+        "# owned by one reducer.\n"
         f"# hot-bin share of total pair volume: natural {nat_share:.1%} -> "
-        f"flash-crowd {hot_share:.1%} (one reducer owns it at salt=1)"
+        f"flash-crowd {hot_share:.1%}"
     )
 
 
